@@ -27,7 +27,7 @@ from concurrent.futures import ThreadPoolExecutor
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sparketl import registry
-from sparketl.session import get_spark
+from sparketl.session import get_spark, reset
 from sparketl.tables import load_tables
 
 
@@ -173,7 +173,7 @@ def main() -> None:
         "stream_static_enrich",
         # ANN evaluation trio (r14, VERDICT r13 #5): the two scored
         # paths run first and memoize their query-set-sized result
-        # frames (_ANN_EVAL_MEMO), the evaluation face then joins the
+        # frames (a session memo), the evaluation face then joins the
         # cached frames instead of re-running both corpus passes —
         # adjacency + skipped clearCache keep the cached data alive
         # exactly across the trio, same contract as DEDUP_TRIO.
@@ -225,8 +225,8 @@ def main() -> None:
         # the trio ADJACENT and skipping the per-query clearCache for
         # its first two members lets Spark's cache manager substitute
         # those frames — by analyzed-plan equality — inside the two
-        # downstream consumers; the CC memo (curation.clear_cc_memo
-        # docs) shares the propagation fixpoint with llm_dedup_apply.
+        # downstream consumers; the CC memo (llm_dedup_components)
+        # shares the propagation fixpoint with llm_dedup_apply.
         # The caches fill DURING the first timed trio query (nothing
         # is pre-warmed); clearing resumes after the trio's last
         # member.  Each timed pass clears both caches up front, so
@@ -237,17 +237,12 @@ def main() -> None:
             run_one(n, clear_cache=n not in keep_cache)
 
     def run_suite() -> float:
-        from sparketl.operators.curation import clear_cc_memo
-        from sparketl.operators.llm import clear_ann_eval_memo, clear_cen_cache
-
-        # every timed pass pays every shared subtree exactly once: CC
-        # labels, the IVF/PQ centroid codebook, the ANN evaluation
-        # component frames, and all cached frames (review round 6: a
-        # warm codebook let pass 2+ skip the collect job, understating
-        # the per-query min for the family)
-        clear_cc_memo()
-        clear_cen_cache()
-        clear_ann_eval_memo()
+        # every timed pass pays every shared subtree exactly once: the
+        # session's memos (CC labels, the IVF/PQ centroid codebook, the
+        # ANN evaluation frames, pinned frames) and all cached frames
+        # (review round 6: a warm codebook let pass 2+ skip the collect
+        # job, understating the per-query min for the family)
+        reset(spark)
         spark.catalog.clearCache()
         t_suite = time.perf_counter()
         if n_threads <= 1:

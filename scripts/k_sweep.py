@@ -40,7 +40,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from sparketl import session
 from sparketl.operators.llm import (
     _centroids,
-    clear_cen_cache,
     ivf_search_frame,
     kmeans_train,
     semantic_dedup_frame,
@@ -87,7 +86,7 @@ def main() -> None:
         sf_dir = os.path.join(REPO, ".scale", tag)
         n = load_tables(spark, sf_dir)["embeddings"].count()
         k = round(math.sqrt(n))
-        clear_cen_cache()
+        session.reset(spark)
         t0 = time.perf_counter()
         cens, iters_run = kmeans_train(spark, sf_dir, iters=3, k=k, np_assign=True)
         train_sec = round(time.perf_counter() - t0, 3)

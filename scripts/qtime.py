@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, ".")
 
 from sparketl import registry
-from sparketl.session import get_spark
+from sparketl.session import get_spark, reset
 from sparketl.tables import load_tables
 
 
@@ -51,15 +51,10 @@ def main() -> int:
         lambda it: it, schema="id long"
     ).collect()
 
-    from sparketl.operators.curation import clear_cc_memo
-    from sparketl.operators.llm import clear_ann_eval_memo, clear_cen_cache
-
     for name in names:
         times = []
         for _ in range(n):
-            clear_cc_memo()
-            clear_cen_cache()
-            clear_ann_eval_memo()
+            reset(spark)
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"qtime:{name}")
             t0 = time.perf_counter()

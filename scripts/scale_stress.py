@@ -233,19 +233,11 @@ def main() -> None:
             metrics = None
             for p in range(passes):
                 # every pass pays every shared subtree exactly once
-                # (same contract as bench.py): CC label memo, IVF/PQ
-                # centroid codebook, cached frames.  Without this the
-                # min-of-passes for llm_dedup_components / the ivf
-                # family is a memo hit, not a standalone measurement.
-                from sparketl.operators.curation import clear_cc_memo
-                from sparketl.operators.llm import (
-                    clear_ann_eval_memo,
-                    clear_cen_cache,
-                )
-
-                clear_cc_memo()
-                clear_cen_cache()
-                clear_ann_eval_memo()
+                # (same contract as bench.py): the session's memos and
+                # cached frames.  Without this the min-of-passes for
+                # llm_dedup_components / the ivf family is a memo hit,
+                # not a standalone measurement.
+                session.reset(spark)
                 spark.catalog.clearCache()
                 before = stage_totals(spark)
                 t0 = time.perf_counter()

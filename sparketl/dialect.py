@@ -280,9 +280,10 @@ double mantissa — beyond it the quotient quantizes before the cast).
 from __future__ import annotations
 
 import re
-import weakref as _weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from sparketl.session import CATALOG_LOCK, state, states
 
 # Spark timestampadd/timestampdiff unit keywords (SQL identifiers).
 _TIME_UNITS = {
@@ -4156,22 +4157,26 @@ def _rewrite_int_division(
             i += 1
 
 
-#: catalog-derived column classes, cached per live session (weakly —
-#: a GC'd session can never serve a new one via id reuse) by the
-#: sorted view-name tuple.  Add/remove invalidates; REPLACING a view
-#: with a different schema under the same name does NOT (the catalog
-#: has no version counter to observe) — the engine's own registration
-#: path (sparketl.tables.load_tables) clears the cache on every call,
-#: and external replacers must call clear_schema_cache() (documented
-#: at sql()).  A per-call rebuild would be sound but costs ~60 ms of
+#: The division classing keeps two per-session state dicts
+#: (``sparketl.session.state``).
+#:
+#: ``schema_classes["snapshot"]`` holds the catalog-derived column
+#: classes with the sorted view-name tuple they were built from.
+#: Add/remove invalidates; REPLACING a view with a different schema
+#: under the same name does NOT (the catalog has no version counter to
+#: observe) — the engine's own registration path
+#: (sparketl.tables.load_tables) clears the cache on every load, and
+#: external replacers must call clear_schema_cache() (documented at
+#: sql()).  A per-call rebuild would be sound but costs ~60 ms of
 #: catalog RPCs per sql() call — ~3 s across the benched suite.
-_COLCLS_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
-#: per-NAME schema cache behind the aggregated class map, PUSH-based
-#: (round 13 — the DML faces' bench inflation): the old design called
-#: spark.catalog.listTables() + a schema read per entry under
-#: CATALOG_LOCK on every catalog churn, and each listTables
+#: ``schema_classes["probe_names"]`` is the name set seen at the last
+#: classing rebuild — the probe-origin eviction trigger (distinct from
+#: the snapshot's, which every engine push also clears).
+#:
+#: ``schema_fields`` is the per-NAME schema cache behind the class map,
+#: PUSH-based (round 13 — the DML faces' bench inflation): the old
+#: design called spark.catalog.listTables() + a schema read per entry
+#: under CATALOG_LOCK on every catalog churn, and each listTables
 #: materializes a Dataset (~0.5s measured) — concurrent queries
 #: serialized behind it (5x wall on the 8-face probe).  Now the engine
 #: PUSHES each mutation's schema into the cache at mutation time (it
@@ -4186,15 +4191,6 @@ _COLCLS_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
 #: external create/drop (ADVICE r13) — a replace with NO name-set
 #: change ever remains invisible and keeps the documented
 #: clear_schema_cache() contract.
-_FIELDS_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
-#: name set seen at the last classing rebuild — the probe-origin
-#: eviction trigger (distinct from _COLCLS_CACHE's snapshot, which is
-#: also cleared by every engine push)
-_PROBE_NAMES_CACHE: "_weakref.WeakKeyDictionary" = (
-    _weakref.WeakKeyDictionary()
-)
 
 
 def _temp_view_names(spark) -> "list[str]":
@@ -4241,36 +4237,28 @@ def clear_schema_cache(name: str | None = None) -> None:
     call when many registrations changed at once (load_tables) or a
     same-named view was REPLACED outside the engine (a name-set probe
     cannot see an in-place schema change)."""
-    from sparketl.session import CATALOG_LOCK
-
     with CATALOG_LOCK:
-        _COLCLS_CACHE.clear()
-        if name is None:
-            _FIELDS_CACHE.clear()
-        else:
-            low = name.lower()
-            for d in _FIELDS_CACHE.values():
-                d.pop(low, None)
+        for classes in states("schema_classes"):
+            classes.pop("snapshot", None)
+        for fields in states("schema_fields"):
+            if name is None:
+                fields.clear()
+            else:
+                fields.pop(name.lower(), None)
 
 
 def update_schema_cache(spark, name: str, schema) -> None:
     """PUSH a table/view's schema into the classing cache at mutation
     time — the engine has the registered DataFrame's schema in hand, so
     no catalog round-trip is ever needed for its own objects."""
-    from sparketl.session import CATALOG_LOCK
-
     with CATALOG_LOCK:
-        fcache = _FIELDS_CACHE.get(spark)
-        if fcache is None:
-            fcache = {}
-            _FIELDS_CACHE[spark] = fcache
-        fcache[name.lower()] = (
+        state(spark, "schema_fields")[name.lower()] = (
             "push",
             tuple(
                 (f.name, f.dataType.simpleString()) for f in schema.fields
             ),
         )
-        _COLCLS_CACHE.clear()
+        state(spark, "schema_classes").pop("snapshot", None)
 
 
 def _catalog_column_classes(spark: SparkSession) -> dict[str, str]:
@@ -4297,18 +4285,14 @@ def _catalog_column_classes(spark: SparkSession) -> dict[str, str]:
     in-place external REPLACE (same name, new schema) is invisible to
     a name-set probe — those callers call clear_schema_cache(), the
     documented contract, unchanged since r10."""
-    from sparketl.session import CATALOG_LOCK
-
     with CATALOG_LOCK:
         names = tuple(_temp_view_names(spark))
-        hit = _COLCLS_CACHE.get(spark)
+        classes = state(spark, "schema_classes")
+        hit = classes.get("snapshot")
         if hit is not None and hit[0] == names:
             return hit[1]
-        fcache = _FIELDS_CACHE.get(spark)
-        if fcache is None:
-            fcache = {}
-            _FIELDS_CACHE[spark] = fcache
-        prev = _PROBE_NAMES_CACHE.get(spark)
+        fcache = state(spark, "schema_fields")
+        prev = classes.get("probe_names")
         if prev is not None and prev != names:
             # name-set CHANGE (external create/drop reached the probe):
             # evict probe-origin schemas so an externally REPLACED
@@ -4317,7 +4301,7 @@ def _catalog_column_classes(spark: SparkSession) -> dict[str, str]:
             # the engine re-pushes on every mutation of its own objects
             for k in [k for k, v in fcache.items() if v[0] == "probe"]:
                 del fcache[k]
-        _PROBE_NAMES_CACHE[spark] = names
+        classes["probe_names"] = names
         for name in names:
             if name in fcache:
                 # engine mutations pushed this schema (or a prior
@@ -4358,7 +4342,7 @@ def _catalog_column_classes(spark: SparkSession) -> dict[str, str]:
                     out[key] = cls
                 elif prev != cls:
                     out[key] = "ambig"
-        _COLCLS_CACHE[spark] = (names, out)
+        classes["snapshot"] = (names, out)
     return out
 
 

@@ -85,14 +85,13 @@ from __future__ import annotations
 
 import os
 import re
-import weakref
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparketl import dialect as _d
-from sparketl.session import CATALOG_LOCK
+from sparketl.session import CATALOG_LOCK, state
 from sparketl.dialect import (
     _catalog_column_classes,
     _depths,
@@ -139,17 +138,22 @@ class _Handle:
     declared: bool = False
 
 
-_WRITABLES: "weakref.WeakKeyDictionary[SparkSession, dict[str, _Handle]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _handles(spark: SparkSession) -> dict[str, _Handle]:
-    h = _WRITABLES.get(spark)
-    if h is None:
-        h = {}
-        _WRITABLES[spark] = h
-    return h
+#: The DML front door keeps its catalog in per-session state dicts
+#: (``sparketl.session.state``):
+#:
+#: * ``dml_tables``: name -> _Handle of every writable table.
+#: * ``dml_views``: flat view name -> ORIGINAL Presto query text.  Text,
+#:   not a DataFrame, so every re-registration re-runs the dialect
+#:   translation against the CURRENT table state — a DataFrame captured
+#:   at CREATE VIEW time would pin the file listing of the tables
+#:   underneath it and silently miss later DML.
+#: * ``dml_qviews`` (round 14): schema-QUALIFIED view "s.v" -> ORIGINAL
+#:   Presto body text, for SHOW CREATE round-trips.  The executable
+#:   definition lives in the Spark catalog (a real catalog view over the
+#:   schema's external tables — re-analyzed on every read, so it tracks
+#:   later DML without the flat views' re-registration fixpoint).
+#: * ``dml_prepared``: prepared statement name -> ORIGINAL statement text.
+#: * ``dml_base_dir``: ``{"path": ...}``, set by set_base_dir.
 
 
 def register_table(
@@ -160,49 +164,15 @@ def register_table(
 ) -> None:
     """Adopt an existing parquet directory as a writable DML target
     (and register/replace the same-named temp view over it)."""
-    _handles(spark)[name.lower()] = _Handle(path=path, part_col=part_col)
+    state(spark, "dml_tables")[name.lower()] = _Handle(
+        path=path, part_col=part_col
+    )
     _refresh(spark, name.lower())
 
 
 def table_path(spark: SparkSession, name: str) -> str:
     """The backing directory of a writable table (for tests/tools)."""
     return _resolve(spark, name).path
-
-
-#: per-session logical views: name -> ORIGINAL Presto query text.
-#: Stored as text (not a DataFrame) so every re-registration re-runs
-#: the dialect translation against the CURRENT table state — a
-#: DataFrame captured at CREATE VIEW time would pin the file listing
-#: of the tables underneath it and silently miss later DML.
-_VIEW_DEFS: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _views(spark: SparkSession) -> dict[str, str]:
-    v = _VIEW_DEFS.get(spark)
-    if v is None:
-        v = {}
-        _VIEW_DEFS[spark] = v
-    return v
-
-
-#: schema-QUALIFIED views (round 14): name "s.v" -> ORIGINAL Presto
-#: body text, for SHOW CREATE round-trips.  The executable definition
-#: lives in the Spark catalog (a real catalog view over the schema's
-#: external tables — re-analyzed on every read, so it tracks later
-#: DML without the flat views' re-registration fixpoint).
-_QVIEW_DEFS: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _qviews(spark: SparkSession) -> dict[str, str]:
-    v = _QVIEW_DEFS.get(spark)
-    if v is None:
-        v = {}
-        _QVIEW_DEFS[spark] = v
-    return v
 
 
 def _view_dependents(spark: SparkSession, name: str) -> list[str]:
@@ -214,7 +184,7 @@ def _view_dependents(spark: SparkSession, name: str) -> list[str]:
     pat = re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE)
     return sorted(
         v
-        for v, q in _views(spark).items()
+        for v, q in state(spark, "dml_views").items()
         if v != name and pat.search(_mask(q)[0])
     )
 
@@ -226,7 +196,8 @@ def _transitive_dependents(spark: SparkSession, name: str) -> list[str]:
     make an earlier-created view depend on a later one (round-12
     second review), so a one-directional walk would miss dependents.
     Order is not meaningful here; _refresh_order sorts topologically."""
-    bodies = {v: _mask(q)[0] for v, q in list(_views(spark).items())}
+    views = list(state(spark, "dml_views").items())
+    bodies = {v: _mask(q)[0] for v, q in views}
     hit = {name}
     changed = True
     while changed:
@@ -287,7 +258,7 @@ def _refresh_views(spark: SparkSession, changed: str) -> None:
     DML statement on unrelated tables.  Only analysis-class failures
     drop the definition — a transient execution/gateway error re-raises
     with the stored definition intact (round-12 second review)."""
-    views = _views(spark)
+    views = state(spark, "dml_views")
     if not views:
         return
     todo = _transitive_dependents(spark, changed)
@@ -328,7 +299,7 @@ def _refresh_views(spark: SparkSession, changed: str) -> None:
 
 
 def _resolve(spark: SparkSession, name: str) -> _Handle:
-    h = _handles(spark).get(name.lower())
+    h = state(spark, "dml_tables").get(name.lower())
     if h is None:
         raise ValueError(
             f"dml: '{name}' is not a writable table — DML targets must "
@@ -345,16 +316,16 @@ def _unpin_if_fixture(spark: SparkSession, *names: str) -> None:
     view whose name collides with a fixture view is the only way the
     fixture pins tracked by sparketl.tables can go stale — tell the
     loader so its same-sf fast path (r16 floor fix) re-pins next call."""
-    from sparketl.tables import TABLE_NAMES, invalidate_view_pins
+    from sparketl.tables import TABLE_NAMES
 
     for n in names:
         if n and "." not in n and n.lower() in TABLE_NAMES:
-            invalidate_view_pins(spark)
+            state(spark, "view_pin").clear()
             return
 
 
 def _refresh(spark: SparkSession, name: str) -> None:
-    h = _handles(spark)[name]
+    h = state(spark, "dml_tables")[name]
     if "." in name:
         _refresh_catalog_table(spark, name, h)
         _refresh_views(spark, changed=name)
@@ -625,7 +596,7 @@ def explain_analyze(spark: SparkSession, stmt: str) -> DataFrame:
             except ValueError:
                 canon = None  # execute() raises the proper refusal
             break
-    h_pre = _handles(spark).get(canon) if canon else None
+    h_pre = state(spark, "dml_tables").get(canon) if canon else None
     pre = _file_snapshot(h_pre.path) if h_pre else {}
     t0 = _time.perf_counter()
     res = execute(spark, stmt)
@@ -636,7 +607,7 @@ def explain_analyze(spark: SparkSession, stmt: str) -> DataFrame:
         lines.append(f"rows affected: {head[0][0]}")
     else:
         lines.append(f"result rows: {len(head)}")
-    h_post = _handles(spark).get(canon) if canon else None
+    h_post = state(spark, "dml_tables").get(canon) if canon else None
     if h_post is None:
         lines.append("no write-side metrics (statement has no table target)")
     else:
@@ -756,7 +727,7 @@ def _canon(spark: SparkSession, raw: str) -> str:
             )
         return f"{sch}.{tbl}"
     name = parts[0]
-    if name in _handles(spark) or name in _views(spark):
+    if name in state(spark, "dml_tables") or name in state(spark, "dml_views"):
         # hot path: known flat objects skip the currentDatabase py4j
         # round-trip entirely (one JVM call per statement otherwise)
         return name
@@ -1051,19 +1022,14 @@ _CTAS_RE = re.compile(
 )
 
 
-_BASE_DIRS: "weakref.WeakKeyDictionary[SparkSession, str]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def set_base_dir(spark: SparkSession, path: str) -> None:
     """Session-scoped directory under which CTAS creates tables
     (overrides the SPARK_GRAFT_DML_DIR env / warehouse default)."""
-    _BASE_DIRS[spark] = path
+    state(spark, "dml_base_dir")["path"] = path
 
 
 def _dml_base_dir(spark: SparkSession) -> str:
-    base = _BASE_DIRS.get(spark) or os.environ.get(
+    base = state(spark, "dml_base_dir").get("path") or os.environ.get(
         "SPARK_GRAFT_DML_DIR",
         os.path.join(
             spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
@@ -1139,7 +1105,7 @@ def _create_catalog_view(
                 "REPLACE VIEW"
             ) from e
         raise
-    _qviews(spark)[name] = query
+    state(spark, "dml_qviews")[name] = query
     return _rows_frame(spark, 0)
 
 
@@ -1159,8 +1125,8 @@ def _create_view(
         return _create_catalog_view(spark, name, or_replace, query)
     if is_dml(query):
         raise ValueError("dml: a view body must be a SELECT-shaped query")
-    views = _views(spark)
-    if name in _handles(spark):
+    views = state(spark, "dml_views")
+    if name in state(spark, "dml_tables"):
         raise ValueError(
             f"dml: '{name}' is a table — a view cannot shadow it; "
             "DROP TABLE first or pick another name"
@@ -1304,17 +1270,17 @@ def _drop_schema(
             return _rows_frame(spark, 0)
         raise ValueError(f"dml: schema '{sch}' does not exist")
     members = sorted(
-        n for n in _handles(spark) if n.startswith(f"{sch}.")
+        n for n in state(spark, "dml_tables") if n.startswith(f"{sch}.")
     )
     vmembers = sorted(
-        n for n in _qviews(spark) if n.startswith(f"{sch}.")
+        n for n in state(spark, "dml_qviews") if n.startswith(f"{sch}.")
     )
     if mode != "cascade":
         # RESTRICT must also see objects registered in the schema
         # OUTSIDE the DML route (ADVICE r14 #4 — the engine registries
         # alone would let `drop database ... cascade` silently delete
         # a saveAsTable the user created directly): probe the Spark
-        # catalog listing too, not just _handles/_qviews.
+        # catalog listing too, not just dml_tables/dml_qviews.
         known = {n.split(".", 1)[1] for n in members + vmembers}
         strays = [
             f"{sch}.{t}"
@@ -1465,7 +1431,7 @@ def _create(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     if nm:
         no_data = nm.group(1) is not None
         query = query[: nm.start()].rstrip()
-    if name in _handles(spark):
+    if name in state(spark, "dml_tables"):
         if if_not_exists:
             return _rows_frame(spark, 0)
         raise ValueError(
@@ -1536,7 +1502,7 @@ def _create(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
             spark.createDataFrame([], df.schema).write.mode(
                 "overwrite"
             ).parquet(path)
-    _handles(spark)[name] = h
+    state(spark, "dml_tables")[name] = h
     _refresh(spark, name)
     return _rows_frame(spark, n)
 
@@ -1575,7 +1541,7 @@ def _create_declared(
     from pyspark.sql.types import StructField, StructType
     from pyspark.sql.types import _parse_datatype_string
 
-    if name in _handles(spark):
+    if name in state(spark, "dml_tables"):
         if if_not_exists:
             return _rows_frame(spark, 0)
         raise ValueError(
@@ -1607,7 +1573,7 @@ def _create_declared(
                 for f in src_schema.fields
             )
             if (lm.group(2) or "").lower() == "including":
-                src_h = _handles(spark).get(src)
+                src_h = state(spark, "dml_tables").get(src)
                 if src_h is not None and src_h.part_col:
                     like_part = src_h.part_col
             continue
@@ -1661,7 +1627,7 @@ def _create_declared(
     # write (partition directories appear at the first INSERT, which
     # clears the root file — the _insert empty-table branch)
     spark.createDataFrame([], schema).write.mode("overwrite").parquet(path)
-    _handles(spark)[name] = _Handle(
+    state(spark, "dml_tables")[name] = _Handle(
         path=path, part_col=part_col, schema=schema, declared=True
     )
     _refresh(spark, name)
@@ -1758,7 +1724,7 @@ def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         if name is None:
             return _rows_frame(spark, 0)
         if "." in name:
-            qv = _qviews(spark)
+            qv = state(spark, "dml_qviews")
             if name not in qv:
                 if vm.group(1):
                     return _rows_frame(spark, 0)
@@ -1767,7 +1733,7 @@ def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                 spark.sql(f"drop view if exists {_qident_sql(name)}")
             qv.pop(name, None)
             return _rows_frame(spark, 0)
-        views = _views(spark)
+        views = state(spark, "dml_views")
         if name not in views:
             if vm.group(1):
                 return _rows_frame(spark, 0)
@@ -1797,14 +1763,14 @@ def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     name = _canon_drop(spark, m.group(2), m.group(1) is not None)
     if name is None:
         return _rows_frame(spark, 0)
-    if name in _handles(spark):
+    if name in state(spark, "dml_tables"):
         dep = _view_dependents(spark, name)
         if dep:
             raise ValueError(
                 f"dml: cannot DROP TABLE '{name}' — view(s) "
                 f"{', '.join(dep)} reference it; DROP VIEW first"
             )
-    h = _handles(spark).pop(name, None)
+    h = state(spark, "dml_tables").pop(name, None)
     if h is None:
         if m.group(1):
             return _rows_frame(spark, 0)
@@ -2455,12 +2421,12 @@ def _alter_view_rename(
     stored body moves to the new name and re-registers; dependent
     views reference the OLD name in their body text, so the rename
     refuses while any exist (same guard as ALTER TABLE RENAME)."""
-    views = _views(spark)
+    views = state(spark, "dml_views")
     if name not in views:
         raise ValueError(
             f"dml: '{name}' is not a DML-catalog view"
             + (" (it is a table — use ALTER TABLE RENAME TO)"
-               if name in _handles(spark) else "")
+               if name in state(spark, "dml_tables") else "")
         )
     dep = _view_dependents(spark, name)
     if dep:
@@ -2470,7 +2436,7 @@ def _alter_view_rename(
             "first"
         )
     if (
-        new in _handles(spark)
+        new in state(spark, "dml_tables")
         or new in views
         or spark.catalog.tableExists(new)
     ):
@@ -2548,9 +2514,10 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                 f"dml: cannot rename '{name}' — view(s) {', '.join(dep)} "
                 "reference it; drop or redefine those first"
             )
-        if new in _handles(spark) or spark.catalog.tableExists(new):
+        tables = state(spark, "dml_tables")
+        if new in tables or spark.catalog.tableExists(new):
             raise ValueError(f"dml: '{new}' already exists")
-        _handles(spark)[new] = _handles(spark).pop(name)
+        tables[new] = tables.pop(name)
         with CATALOG_LOCK:
             if "." in name:
                 spark.sql(f"drop table if exists {_qident_sql(name)}")
@@ -2584,7 +2551,7 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
             for v in _view_dependents(spark, name)
             if re.search(
                 r"(?:\bselect|,)\s*(?:[\w`]+\s*\.\s*)?\*|\.\s*\*",
-                _mask(_views(spark)[v])[0],
+                _mask(state(spark, "dml_views")[v])[0],
                 re.IGNORECASE,
             )
         ]
@@ -2740,7 +2707,7 @@ def _columns_frame(spark: SparkSession, name: str) -> DataFrame:
     this column)."""
     if not spark.catalog.tableExists(name):
         raise ValueError(f"dml: table or view '{name}' does not exist")
-    h = _handles(spark).get(name)
+    h = state(spark, "dml_tables").get(name)
     part = h.part_col.lower() if h and h.part_col else None
     rows = []
     for f in spark.table(name).schema.fields:
@@ -2778,7 +2745,10 @@ def _show(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
             else:
                 names = sorted(
                     n.rsplit(".", 1)[-1]
-                    for reg in (_handles(spark), _qviews(spark))
+                    for reg in (
+                        state(spark, "dml_tables"),
+                        state(spark, "dml_qviews"),
+                    )
                     for n in reg
                     if n.startswith(f"{sch}.")
                 )
@@ -2821,9 +2791,9 @@ def _show_create(spark: SparkSession, kind: str, name: str) -> DataFrame:
     schema plus the partitioned_by property — informational (this
     engine's CREATE TABLE is CTAS-only, stated in the emitted
     comment)."""
-    views = _views(spark)
+    views = state(spark, "dml_views")
     if kind == "view":
-        vq = views.get(name) or _qviews(spark).get(name)
+        vq = views.get(name) or state(spark, "dml_qviews").get(name)
         if vq is None:
             raise ValueError(f"dml: '{name}' is not a DML-created view")
         stmt = f"CREATE VIEW {name} AS\n{vq}"
@@ -2889,7 +2859,7 @@ def _describe_prepared(
     are engine-internal); aliased is true (every projected column).  A
     DML statement reports Trino's DML result shape — the single
     bigint 'rows' column — without running anything."""
-    stmt = _prepared(spark).get(name)
+    stmt = state(spark, "dml_prepared").get(name)
     if stmt is None:
         raise ValueError(f"dml: no prepared statement '{name}'")
     pmasked, plits = _mask(stmt)
@@ -2924,20 +2894,6 @@ def _describe_prepared(
 # PREPARE / EXECUTE / DEALLOCATE
 # ---------------------------------------------------------------------------
 
-#: per-session prepared statements: name -> ORIGINAL statement text.
-_PREPARED_DEFS: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _prepared(spark: SparkSession) -> dict[str, str]:
-    p = _PREPARED_DEFS.get(spark)
-    if p is None:
-        p = {}
-        _PREPARED_DEFS[spark] = p
-    return p
-
-
 def _prepare(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     """Trino ``PREPARE name FROM statement`` — stores the statement
     TEXT (re-translated at each EXECUTE, so it sees the table state of
@@ -2951,7 +2907,7 @@ def _prepare(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     )
     if not m:
         raise ValueError("dml: expected PREPARE <name> FROM <statement>")
-    _prepared(spark)[m.group(1).lower()] = _unmask_raw(
+    state(spark, "dml_prepared")[m.group(1).lower()] = _unmask_raw(
         m.group(2), lits
     ).strip()
     return _rows_frame(spark, 0)
@@ -2987,7 +2943,7 @@ def _execute(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                 "EXECUTE IMMEDIATE '<statement>' [USING ...]"
             )
         name = m.group(1).lower()
-        stmt = _prepared(spark).get(name)
+        stmt = state(spark, "dml_prepared").get(name)
         if stmt is None:
             raise ValueError(f"dml: no prepared statement '{name}'")
         using_text = m.group(2)
@@ -3019,7 +2975,7 @@ def _deallocate(
     if not m:
         raise ValueError("dml: expected DEALLOCATE [PREPARE] <name>")
     name = m.group(1).lower()
-    if _prepared(spark).pop(name, None) is None:
+    if state(spark, "dml_prepared").pop(name, None) is None:
         raise ValueError(f"dml: no prepared statement '{name}'")
     return _rows_frame(spark, 0)
 

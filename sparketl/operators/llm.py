@@ -43,7 +43,6 @@ from sparketl.operators.llm_common import (  # noqa: F401
     _NORM2_S,
     _PAIR_ROWS_PER_PART,
     _PARALLEL_MAX_BYTES,
-    _PINNED,
     _PIN_KEEP,
     _SHINGLES_D,
     _SHINGLES_S,
@@ -73,7 +72,6 @@ from sparketl.operators.llm_dedup import (  # noqa: F401
     llm_dedup_simhash,
 )
 from sparketl.operators.llm_ann import (  # noqa: F401
-    _CEN_CACHE,
     _SEMDEDUP_TAU,
     _ann_oracle_sql,
     _assign_expr,
@@ -87,8 +85,6 @@ from sparketl.operators.llm_ann import (  # noqa: F401
     _np_assign,
     _register_similarity_eval_and_quantize,
     _semdedup_drops,
-    clear_ann_eval_memo,
-    clear_cen_cache,
     ivf_search_frame,
     kmeans_train,
     llm_embed_cosine_neardup,

@@ -7,8 +7,6 @@ quantization.  Split out of llm.py in round 8 — registry names and the
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import functions as F
 
 from sparketl.operators.llm_common import (  # noqa: F401
@@ -22,7 +20,6 @@ from sparketl.operators.llm_common import (  # noqa: F401
     _NORM2_S,
     _PAIR_ROWS_PER_PART,
     _PARALLEL_MAX_BYTES,
-    _PINNED,
     _PIN_KEEP,
     _SHINGLES_D,
     _SHINGLES_S,
@@ -36,6 +33,7 @@ from sparketl.operators.llm_common import (  # noqa: F401
     _scan_bytes
 )
 from sparketl.registry import query
+from sparketl.session import memo
 from sparketl.tables import table
 
 
@@ -199,7 +197,7 @@ def llm_similarity_topk(spark, sf_dir):
     side; top-k per query is a bounded window.  This is the exact
     baseline; llm_similarity_ann_lsh is the sublinear path.  The
     query-set-sized RESULT frame is memoized per (session, sf_dir)
-    (`_ANN_EVAL_MEMO`) so the evaluation face scores it without
+    (`_eval_component`) so the evaluation face scores it without
     re-running the corpus pass (VERDICT r13 #5).
     """
     return _eval_component(
@@ -312,7 +310,7 @@ def llm_similarity_ann_lsh(spark, sf_dir):
     approximation itself is deterministic (sign of exact double dots
     against literal hyperplanes), so the oracle replays it exactly and
     this query IS hash-graded.  Result frame memoized like
-    llm_similarity_topk's (`_ANN_EVAL_MEMO`, VERDICT r13 #5).
+    llm_similarity_topk's (`_eval_component`, VERDICT r13 #5).
     """
     return _eval_component(
         spark, sf_dir, "ann_lsh", lambda: _ann_lsh_build(spark, sf_dir)
@@ -542,52 +540,17 @@ def llm_ivf_centroids(spark, sf_dir):
     )
 
 
-#: collected codebook cache for the IVF/PQ family — a
-#: WeakKeyDictionary keyed on the SparkSession (inner dict keyed by
-#: sf_dir) so entries die with their session; a plain id(spark) key
-#: would both pin dead sessions and, worse, collide on id reuse after
-#: GC (ADVICE r14 #5) — see _centroids().  Contract (shared with
-#: curation._CC_MEMO and tables._CATALOG_CACHE): sf_dir contents are
-#: immutable for the life of the session; bench clears it per timed
-#: pass so every pass pays the codebook build exactly once.
-_CEN_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def clear_cen_cache() -> None:
-    """Drop memoized centroid codebooks (bench calls this per pass)."""
-    _CEN_CACHE.clear()
-
-
-#: Spark-cached RESULT frames of the two ANN paths the evaluation face
-#: scores (round 14, VERDICT r13 #5): `llm_ann_recall_eval` composes
-#: llm_similarity_topk and llm_similarity_ann_lsh verbatim, so without
-#: reuse it re-ran both full paths every time (3.4s sequential).  The
-#: memoized frames are QUERY-SET-sized (|Q| x k rows — ~4k at sf0.1),
-#: so `.cache()` holds a few hundred KB; the expensive corpus work runs
-#: exactly once per (session, sf_dir) and every consumer — the faces
-#: themselves and the evaluation — reads the same materialization.
-#: Same immutable-sf_dir contract as _CEN_CACHE, same
-#: WeakKeyDictionary-on-the-session shape (ADVICE r14 #5 — outside
-#: bench, which clears per pass, a plain dict pinned cached frames of
-#: dead sessions forever); bench clears it per timed pass so each
-#: pass pays the full build exactly once.
-_ANN_EVAL_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def clear_ann_eval_memo() -> None:
-    """Unpersist + drop the memoized ANN component frames (bench calls
-    this per pass; plan tests call it to see the pre-cache plan)."""
-    for per in _ANN_EVAL_MEMO.values():
-        for df in per.values():
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 - session may be gone
-                pass
-    _ANN_EVAL_MEMO.clear()
-
-
 def _eval_component(spark, sf_dir, name: str, build):
-    per = _ANN_EVAL_MEMO.setdefault(spark, {})
+    """Spark-cached RESULT frames of the two ANN paths the evaluation
+    face scores (round 14, VERDICT r13 #5): `llm_ann_recall_eval`
+    composes llm_similarity_topk and llm_similarity_ann_lsh verbatim, so
+    without reuse it re-ran both full paths every time (3.4s
+    sequential).  The memoized frames are QUERY-SET-sized (|Q| x k rows
+    — ~4k at sf0.1), so `.cache()` holds a few hundred KB; the expensive
+    corpus work runs once per (session, sf_dir) and every consumer — the
+    faces themselves and the evaluation — reads the same
+    materialization.  session.reset unpersists and drops them."""
+    per = memo(spark, "ann_eval")
     key = (sf_dir.rstrip("/"), name)
     if key not in per:
         per[key] = build().cache()
@@ -612,7 +575,7 @@ def _centroids(spark, sf_dir):
     a literal codebook in every consumer.  At 100 TB the centroid
     aggregation still runs distributed exactly as llm_ivf_centroids
     does; only its k x 64-scalar RESULT ever touches the driver."""
-    per = _CEN_CACHE.setdefault(spark, {})
+    per = memo(spark, "centroids")
     if sf_dir not in per:
         emb = _parallel(table(spark, sf_dir, "embeddings"))
         cen = (
@@ -1692,7 +1655,7 @@ def kmeans_train(
     [(cluster, [dim doubles])] list in _centroids' format, directly
     inlinable by every IVF/PQ consumer.  Always a FRESH copy — when
     the seed is already a fixed point the naive return value would be
-    the _CEN_CACHE-owned list, and a caller mutating it (editing a
+    the memoized list, and a caller mutating it (editing a
     centroid before re-inlining) would silently corrupt the session
     codebook every IVF/PQ declared query inlines from (round-7
     review).

@@ -16,20 +16,26 @@ import os
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-
-_PINNED: list = []
+from sparketl.session import memo
 
 
 _PIN_KEEP = 4
 
 
 def _pin(df):
-    """persist(MEMORY_AND_DISK) with a bounded module-level registry:
-    at most _PIN_KEEP frames stay pinned; older ones are unpersisted."""
+    """persist(MEMORY_AND_DISK) with a bounded per-session registry: at
+    most _PIN_KEEP of a session's frames stay pinned; older ones are
+    unpersisted.  The registry is a session memo, so session.reset
+    unpersists them all and a new session never touches an old one's."""
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PINNED.append(df)
-    while len(_PINNED) > _PIN_KEEP:
-        _PINNED.pop(0).unpersist()
+    # keyed by id(df): the entry holds the frame, so its id stays unique
+    pins = memo(df.sparkSession, "pins")
+    pins[id(df)] = df
+    while len(pins) > _PIN_KEEP:
+        # pop(..., None): a concurrent _pin may evict the same oldest entry
+        oldest = pins.pop(list(pins)[0], None)
+        if oldest is not None:
+            oldest.unpersist()
     return df
 
 

@@ -20,7 +20,6 @@ from sparketl.operators.llm_common import (  # noqa: F401
     _NORM2_S,
     _PAIR_ROWS_PER_PART,
     _PARALLEL_MAX_BYTES,
-    _PINNED,
     _PIN_KEEP,
     _SHINGLES_D,
     _SHINGLES_S,
@@ -626,7 +625,7 @@ def llm_dedup_ngram_dfcap(spark, sf_dir):
     # per consumer.  Measured at sf0.1 steady-state: 2.88s cached vs
     # 2.97s recomputed — a wash locally, but the cache also removes the
     # 3x recompute landmine (SURVEY.md §8 #4), so keep it.  Pinned via
-    # _pin(): the module keeps at most _PIN_KEEP live cache entries, so
+    # _pin(): a session keeps at most _PIN_KEEP live cache entries, so
     # repeated invocations in a long-lived session (pytest, a notebook)
     # cannot leak blocks even if the caller never clearCache()s —
     # bench.py's per-query clearCache remains a belt on top.  At 100 TB

@@ -19,7 +19,6 @@ from sparketl.operators.llm_common import (  # noqa: F401
     _NORM2_S,
     _PAIR_ROWS_PER_PART,
     _PARALLEL_MAX_BYTES,
-    _PINNED,
     _PIN_KEEP,
     _SHINGLES_D,
     _SHINGLES_S,

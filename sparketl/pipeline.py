@@ -65,14 +65,15 @@ class Pipeline:
         temp views named after the step."""
 
         def fn(spark: SparkSession, ctx: dict[str, DataFrame]) -> DataFrame:
-            from sparketl.tables import TABLE_NAMES, invalidate_view_pins
+            from sparketl.session import state
+            from sparketl.tables import TABLE_NAMES
 
             for k, df in ctx.items():
                 df.createOrReplaceTempView(k)
                 if k.lower() in TABLE_NAMES:
                     # a step named like a fixture view repoints it —
                     # tell the loader's same-sf fast path (r16)
-                    invalidate_view_pins(spark)
+                    state(spark, "view_pin").clear()
             return spark.sql(statement)
 
         self.steps.append(Step(name, fn))

@@ -23,8 +23,9 @@ from __future__ import annotations
 
 import os
 import threading
+import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Process-wide catalog mutation/enumeration lock (round 13, VERDICT
 #: r12 #7).  Spark's temp-view catalog is shared by every thread on a
@@ -38,6 +39,61 @@ from pyspark.sql import SparkSession
 #: catalog call only — query execution never runs under it.  RLock:
 #: a mutation path may enumerate (dml._refresh → schema classing).
 CATALOG_LOCK = threading.RLock()
+
+#: Everything the engine keeps for one session: session ->
+#: {"state": {name: dict}, "memo": {name: dict}}.  A session is found by
+#: identity, so a new session after ``stop()`` starts empty and never
+#: sees an old session's frames.  Memos assume that the files under an
+#: ``sf_dir`` do not change for the life of the session.
+_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _named(spark: SparkSession, kind: str, name: str) -> dict:
+    per = _SESSIONS.get(spark)
+    if per is None:
+        per = _SESSIONS.setdefault(spark, {"state": {}, "memo": {}})
+    d = per[kind].get(name)
+    if d is None:
+        d = per[kind].setdefault(name, {})
+    return d
+
+
+def state(spark: SparkSession, name: str) -> dict:
+    """The session's dict ``name`` of state: what the engine registered
+    on it (catalog frames, DML tables, views...).  ``reset`` keeps it."""
+    return _named(spark, "state", name)
+
+
+def memo(spark: SparkSession, name: str) -> dict:
+    """The session's dict ``name`` of memoized results, which can be
+    recomputed at any time.  ``reset`` drops it."""
+    return _named(spark, "memo", name)
+
+
+def states(name: str) -> list[dict]:
+    """The state dict ``name`` of every session that has one."""
+    return [
+        per["state"][name]
+        for per in list(_SESSIONS.values())
+        if name in per["state"]
+    ]
+
+
+def reset(spark: SparkSession) -> None:
+    """Drop the session's memos and unpersist the frames they hold, so
+    the next query pays every shared subtree again."""
+    per = _SESSIONS.get(spark)
+    if per is None:
+        return
+    memos = list(per["memo"].values())
+    per["memo"].clear()
+    for d in memos:
+        for v in list(d.values()):
+            if isinstance(v, DataFrame):
+                v.unpersist()
+
 
 #: Runtime-settable confs applied to ANY session this engine touches.
 SESSION_CONFS: dict[str, str] = {

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sparketl.session import configure_session
+from sparketl.session import CATALOG_LOCK, configure_session, state, states
 
 TABLE_NAMES: tuple[str, ...] = (
     "region",
@@ -36,25 +36,6 @@ TABLE_NAMES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
-
-#: (session id, sf_dir) -> {table: DataFrame}
-_CATALOG_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-#: session id -> sf_dir the fixture views currently point at.  The
-#: re-pin in load_tables exists only because ANOTHER sf_dir may have
-#: repointed the plain-named views; tracking the last pin lets the
-#: same-dir case (every call but the first in a bench/check run) skip
-#: ten createOrReplaceTempView round trips (~0.13 s of py4j per query
-#: — a third of the cheap-query floor, optimization round 16).
-_VIEW_PIN: dict[int, str] = {}
-
-
-def invalidate_view_pins(spark: SparkSession) -> None:
-    """Force the next load_tables to re-pin the fixture views.  Called
-    by the DML front door when a statement registers or drops a FLAT
-    table whose name collides with a fixture view — the only way the
-    views can change under load_tables' feet."""
-    _VIEW_PIN.pop(id(spark), None)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -82,22 +63,22 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     names (``lineitem`` etc.) gives the SQL entry point (E2) the same
     catalog the DataFrame entry point (E1) uses.
     """
-    key = (id(spark), sf_dir.rstrip("/"))
-    cached = _CATALOG_CACHE.get(key)
+    sf = sf_dir.rstrip("/")
+    cached = state(spark, "catalog").get(sf)
+    # The views are plain-named (`lineitem`), so loading ANOTHER sf_dir on
+    # the same session points them elsewhere, and SQL-path queries would
+    # silently read the other scale factor.  "view_pin" records where
+    # they point; only a mismatch re-pins (ten createOrReplaceTempView
+    # round trips, ~0.13 s of py4j per query, optimization round 16).
+    # DML and pipeline steps that replace a fixture view clear it.
+    pin = state(spark, "view_pin")
     if cached is not None:
-        # Views are plain-named (`lineitem`), so loading ANOTHER sf_dir on
-        # the same session points them elsewhere.  The DataFrames stay
-        # valid, but SQL-path queries would silently read the other scale
-        # factor — so re-pin the views on every call (ms-cheap, no re-plan
-        # of the scans themselves).
-        from sparketl.session import CATALOG_LOCK
-
-        if _VIEW_PIN.get(id(spark)) == key[1]:
+        if pin.get("sf_dir") == sf:
             return cached  # views already point here — nothing to do
         with CATALOG_LOCK:
             for name, df in cached.items():
                 df.createOrReplaceTempView(name)
-            _VIEW_PIN[id(spark)] = key[1]
+            pin["sf_dir"] = sf
         return cached
 
     configure_session(spark)
@@ -107,11 +88,10 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     from sparketl import dialect
 
     dialect.clear_schema_cache()
-    from sparketl.session import CATALOG_LOCK
 
     dfs: dict[str, DataFrame] = {}
     for name in TABLE_NAMES:
-        df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+        df = spark.read.parquet(f"{sf}/{name}.parquet")
         if name == "events":
             df = normalize_events_ts(df)
         dfs[name] = df
@@ -124,8 +104,8 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         # schemas on the next classing rebuild
         dialect.update_schema_cache(spark, name, df.schema)
 
-    _CATALOG_CACHE[key] = dfs
-    _VIEW_PIN[id(spark)] = key[1]
+    state(spark, "catalog")[sf] = dfs
+    pin["sf_dir"] = sf
     return dfs
 
 
@@ -135,4 +115,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def clear_cache() -> None:
-    _CATALOG_CACHE.clear()
+    """Forget every session's loaded frames: the next load_tables reads
+    and registers all ten tables again."""
+    for cat in states("catalog"):
+        cat.clear()

@@ -15,7 +15,7 @@ import os
 
 import pytest
 
-from sparketl import dialect, dml
+from sparketl import dialect, dml, session
 
 
 @pytest.fixture()
@@ -634,7 +634,7 @@ def test_view_refusals_and_drop(spark, wh):
     # eager validation: a typo fails at CREATE VIEW time
     with pytest.raises(Exception):
         dialect.sql(spark, "create view v_typo as select nope from t_vr")
-    assert "v_typo" not in dml._views(spark)
+    assert "v_typo" not in session.state(spark, "dml_views")
     # drop in dependency order, then the table
     dialect.sql(spark, "drop view v_r2")
     dialect.sql(spark, "drop view v_r")
@@ -950,7 +950,7 @@ def test_review3_view_alter_guards(spark, wh):
     with pytest.raises(ValueError, match="DROPPED"):
         dml.register_table(spark, "t_rv", newdir)
     # the broken view is gone; unrelated DML proceeds
-    assert "v_rv" not in dml._views(spark)
+    assert "v_rv" not in session.state(spark, "dml_views")
     dialect.sql(spark, "create table t_rv2 as select 1 as one")
     assert dialect.sql(spark, "select * from t_rv2").count() == 1
 
@@ -1291,12 +1291,12 @@ def test_create_table_like(spark, wh):
     dialect.sql(spark, "create table t_l1 (like t_src)")
     df = dialect.sql(spark, "select * from t_l1")
     assert df.columns == ["k", "g", "v"] and df.count() == 0
-    assert dml._handles(spark)["t_l1"].part_col is None
+    assert session.state(spark, "dml_tables")["t_l1"].part_col is None
     # INCLUDING PROPERTIES carries partitioned_by
     dialect.sql(
         spark, "create table t_l2 (like t_src including properties)"
     )
-    assert dml._handles(spark)["t_l2"].part_col == "g"
+    assert session.state(spark, "dml_tables")["t_l2"].part_col == "g"
     dialect.sql(spark, "insert into t_l2 select k, g, v from dml_fx")
     assert os.path.isdir(os.path.join(dml.table_path(spark, "t_l2"), "g=a"))
     # mixed with plain definitions, and an explicit partitioned_by wins
@@ -1307,7 +1307,7 @@ def test_create_table_like(spark, wh):
     )
     df = dialect.sql(spark, "select * from t_l3")
     assert df.columns == ["id", "k", "g", "v", "note"]
-    assert dml._handles(spark)["t_l3"].part_col == "note"
+    assert session.state(spark, "dml_tables")["t_l3"].part_col == "note"
     # duplicate column via LIKE refuses
     with pytest.raises(ValueError, match="duplicate column"):
         dialect.sql(spark, "create table t_l4 (k bigint, like t_src)")
@@ -1392,10 +1392,8 @@ def test_scphema_cache_push_and_discovery(spark, wh):
     dialect.sql(spark, "alter table t_scpp_a rename to t_scpp_b")
     cls = dialect._catalog_column_classes(spark)
     assert cls.get("ren_sc") == "int"
-    from sparketl.dialect import _FIELDS_CACHE
-
-    assert "t_scpp_a" not in _FIELDS_CACHE.get(spark, {})
-    assert "t_scpp_b" in _FIELDS_CACHE.get(spark, {})
+    fields = session.state(spark, "schema_fields")
+    assert "t_scpp_a" not in fields and "t_scpp_b" in fields
     dialect.sql(spark, "drop table t_scpp_b")
 
 
@@ -1438,9 +1436,8 @@ def test_alter_view_rename_broken_body_leaves_catalogs_untouched(spark, wh):
     spark.catalog.dropTempView("t_avrb")
     with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND|not found"):
         dialect.sql(spark, "alter view v_avrb rename to v_avrb2")
-    from sparketl.dml import _views
-
-    assert "v_avrb" in _views(spark) and "v_avrb2" not in _views(spark)
+    views = session.state(spark, "dml_views")
+    assert "v_avrb" in views and "v_avrb2" not in views
     assert spark.catalog.tableExists("v_avrb")
     assert not spark.catalog.tableExists("v_avrb2")
     # restore the base and confirm the old name still works end-to-end
@@ -1536,7 +1533,7 @@ def test_schema_namespace_lifecycle(spark, wh):
         dialect.sql(spark, "drop schema nsl2")
     dialect.sql(spark, "drop schema nsl2 cascade")
     assert not spark.catalog.databaseExists("nsl2")
-    assert "nsl2.u2" not in dml._handles(spark)
+    assert "nsl2.u2" not in session.state(spark, "dml_tables")
     with pytest.raises(ValueError, match="cannot be dropped"):
         dialect.sql(spark, "drop schema default")
     dialect.sql(spark, "drop table nsl.t")
@@ -1834,7 +1831,7 @@ def test_namespace_lifecycle_edge_matrix(spark, wh):
     assert dialect.sql(
         spark, "select count(*) as c from eb.moved"
     ).collect()[0].c == 1
-    assert "ea.b1" not in dml._handles(spark)
+    assert "ea.b1" not in session.state(spark, "dml_tables")
     with pytest.raises(Exception):
         dialect.sql(spark, "select * from ea.b1").collect()
     # ... but refuses toward a MISSING schema

@@ -82,16 +82,16 @@ def test_flagship_is_codegen_hash_agg(q):
     assert "isFinalPlan=true" in final and "*(1)" in final, final
 
 
-def test_similarity_topk_broadcasts_queries(q):
+def test_similarity_topk_broadcasts_queries(spark, q):
     # query set broadcast => corpus streams once, no corpus shuffle
-    # (memo cleared so the plan under test is the build, not a cached
+    # (memos reset so the plan under test is the build, not a cached
     # InMemoryRelation from an earlier test's run)
-    from sparketl.operators.llm import clear_ann_eval_memo
+    from sparketl.session import reset
 
-    clear_ann_eval_memo()
+    reset(spark)
     plan = plan_str(q("llm_similarity_topk"))
     assert "BroadcastNestedLoopJoin" in plan, plan
-    clear_ann_eval_memo()
+    reset(spark)
 
 
 def test_no_cartesian_outside_declared_cross(spark):
@@ -288,20 +288,3 @@ def test_round7_operator_plan_shapes(q):
     p = plan_str(q("llm_quality_classifier"))
     assert "Join" not in p and "Window" not in p, p
     assert "ROUND_ROBIN" in p or "RoundRobin" in p, p
-
-
-def test_ann_session_caches_are_weak(spark):
-    """ADVICE r14 #5: the ANN memo/codebook caches key a
-    WeakKeyDictionary on the SparkSession so entries die with their
-    session — a plain id(spark) dict both pinned dead sessions and
-    risked id-reuse collisions."""
-    import weakref
-
-    from sparketl.operators import llm_ann
-
-    assert isinstance(llm_ann._ANN_EVAL_MEMO, weakref.WeakKeyDictionary)
-    assert isinstance(llm_ann._CEN_CACHE, weakref.WeakKeyDictionary)
-    # the session in use is a valid weak key and round-trips
-    llm_ann._ANN_EVAL_MEMO.setdefault(spark, {})["probe"] = None
-    assert "probe" in llm_ann._ANN_EVAL_MEMO[spark]
-    del llm_ann._ANN_EVAL_MEMO[spark]["probe"]
