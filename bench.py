@@ -6,7 +6,7 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Per BASELINE.md the 2× gate at sf0.1 is dominated by fixed overhead,
 not throughput — so: one shared SparkSession, views registered once,
-AQE on, and the suite runs $SPARK_GRAFT_BENCH_THREADS (default 8)
+AQE on, and the suite runs $SPARK_GRAFT_BENCH_THREADS (default 5)
 queries CONCURRENTLY, exactly as an ETL tool submits independent
 pipeline stages: Spark's scheduler interleaves jobs, so per-query
 driver/planning latency (~0.3-0.5s each, the dominant cost at this

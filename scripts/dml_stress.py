@@ -2,22 +2,26 @@
 """DML STATEMENT-path cost at a scale decade (round 13, VERDICT r12
 #6): run sql_delete / sql_update / sql_merge_into STATEMENT shapes —
 the full front-door path (masked-text parse → predicate splice →
-``overwrite_pruned`` copy-on-write) — against a partitioned target
+copy-on-write into new partition directories and a manifest publish,
+``sparketl.manifest``) — against a partitioned target
 built from the x-tier orders and record BYTES WRITTEN vs table size,
 proving pruned-CoW IO ∝ touched partitions at a decade up.
 
 merge_apply (the engine face under MERGE) was measured in r9
 (merge_batch1/2 lanes); this measures the STATEMENT route on top of
 it: statement parsing, the DELETE/UPDATE predicate→touched-partition
-derivation, and the extracted overwrite_pruned — i.e. everything a
-pasted Trino script actually pays.
+derivation, and the versioned write-back — i.e. everything a pasted
+Trino script actually pays.
 
 Each statement's predicate confines affected rows to ONE of the five
 o_orderpriority partitions, so the honest-pruning claim is
 bytes_written ≈ that partition's size (plus the parquet rewrite
 delta), NOT the table's.  Bytes are measured by snapshotting
-{file: (mtime, size)} under the warehouse before/after each statement
-and summing new/changed file sizes.
+{data file: (mtime, size)} under the table root before/after each
+statement and summing new/changed file sizes; table and partition
+sizes count the current version's live files (the table manifest),
+not the superseded directories kept beside them until the next
+publish.
 
 Results merge into SCALE_STRESS.json under ``sql_delete_stmt`` /
 ``sql_update_stmt`` / ``sql_merge_stmt`` and print markdown rows for
@@ -62,6 +66,8 @@ def _snapshot(root: str) -> dict[str, tuple[float, int]]:
     out = {}
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
+            if f.startswith(("_", ".")):
+                continue  # manifest, markers, checksums: not data
             p = os.path.join(dirpath, f)
             st = os.stat(p)
             out[p] = (st.st_mtime_ns, st.st_size)
@@ -75,13 +81,13 @@ def _bytes_written(before: dict, after: dict) -> int:
 
 
 def _partition_bytes(root: str) -> dict[str, int]:
+    """Bytes of the current version's data files per partition."""
+    from sparketl import manifest
+
     out: dict[str, int] = {}
-    for dirpath, _dirs, files in os.walk(root):
-        part = os.path.relpath(dirpath, root)
-        for f in files:
-            out[part] = out.get(part, 0) + os.path.getsize(
-                os.path.join(dirpath, f)
-            )
+    for rel, (size, _mtime) in manifest.files(manifest.load(root)).items():
+        part = os.path.dirname(rel) or "."
+        out[part] = out.get(part, 0) + size
     return out
 
 

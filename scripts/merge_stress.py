@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from sparketl import session
+from sparketl import manifest, session
 from sparketl.operators.etl import build_merge_feed, merge_apply
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -65,20 +65,15 @@ def main() -> None:
     fixed_point = True
     for _ in range(passes):
         shutil.rmtree(path, ignore_errors=True)
-        (
-            orders.where(F.col("o_orderstatus") == "F")
-            .write.mode("overwrite")
-            .partitionBy("o_orderpriority")
-            .parquet(path)
-        )
-        t0 = spark.read.parquet(path)
+        t0 = orders.where(F.col("o_orderstatus") == "F")
+        t0.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
         feed1 = build_merge_feed(t0, orders).localCheckpoint(eager=True)
         n_feed1 = feed1.count()
         w0 = time.perf_counter()
         merge_apply(spark, path, feed1, "o_orderkey", "o_orderpriority")
         walls["batch1"].append(round(time.perf_counter() - w0, 3))
 
-        t1 = spark.read.parquet(path)
+        t1 = manifest.read(spark, path)
         feed2 = _feed2(t1, orders).localCheckpoint(eager=True)
         n_feed2 = feed2.count()
         w0 = time.perf_counter()
@@ -87,7 +82,7 @@ def main() -> None:
 
         # fixed point at scale: re-apply feed2, table must not change
         before = (
-            spark.read.parquet(path)
+            manifest.read(spark, path)
             .agg(
                 F.count("*").alias("n"),
                 F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("s"),
@@ -96,7 +91,7 @@ def main() -> None:
         )
         merge_apply(spark, path, feed2, "o_orderkey", "o_orderpriority")
         after = (
-            spark.read.parquet(path)
+            manifest.read(spark, path)
             .agg(
                 F.count("*").alias("n"),
                 F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("s"),

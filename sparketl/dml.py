@@ -5,25 +5,27 @@ VERDICT r11 #1).
 while a presto-ETL-tool user's scripts *lead* with ``INSERT INTO`` /
 ``CREATE TABLE AS`` / ``DELETE`` / ``UPDATE`` / ``MERGE INTO``.  This
 module parses that Trino statement-grammar subset and routes each
-statement to the engine machinery that already exists: parquet sinks
-(`sparketl.sources.connectors`) and pruned copy-on-write rewrite
-(`sparketl.operators.etl.overwrite_pruned` — the write-back extracted
-from ``merge_apply``).
+statement to Spark DataFrame work whose every write goes through one
+on-disk format, the versioned parquet table of ``sparketl.manifest``.
 
 Storage model
 =============
-DML targets are PARQUET-BACKED tables tracked in a per-session
-*writable catalog* (name → directory path [+ partition column]).
-``CREATE TABLE ... AS`` creates them, plain schema-only ``CREATE TABLE
-t (col type, ...)`` creates them EMPTY with the declared schema pinned
-(both optionally partitioned via the Trino/Hive ``WITH
-(partitioned_by = ARRAY['col'])`` property, and CTAS also takes the
-Trino column-NAME list ``CREATE TABLE t (a, b) AS <query>``);
-``register_table()`` adopts an existing parquet directory.  After
-every mutation the target is re-registered as a temp view (and the
-dialect schema cache cleared — the catalog exposes no version counter
-to observe), so subsequent statements and plain SELECTs through
-``dialect.sql()`` see the new state.
+DML targets are versioned parquet tables tracked in a per-session
+*writable catalog* (name → the table's published version).  ``CREATE
+TABLE ... AS`` creates them, plain schema-only ``CREATE TABLE t (col
+type, ...)`` creates them EMPTY with the declared schema (both
+optionally partitioned via the Trino/Hive ``WITH (partitioned_by =
+ARRAY['col'])`` property, and CTAS also takes the Trino column-NAME
+list ``CREATE TABLE t (a, b) AS <query>``); ``register_table()`` adopts
+an existing parquet directory, or a table from its manifest after a
+restart.  Every statement writes only new files and publishes the next
+version with one ``os.replace`` of the manifest: a process death
+mid-statement leaves the old version whole, and since new files never
+alias the ones a statement reads, no write-back materializes its input
+first.  After every publish the target is re-registered as a temp view
+(and the dialect schema cache updated — the catalog exposes no version
+counter to observe), so subsequent statements and plain SELECTs
+through ``dialect.sql()`` see the new state.
 
 Namespaces (round 14, VERDICT r13 #2): ``CREATE SCHEMA`` creates a
 real Spark in-memory-catalog database, and every statement arm accepts
@@ -68,17 +70,28 @@ Semantics notes (each pinned by tests / the declared-face oracles):
 
 Scale
 =====
-Row-level DML on plain parquet is copy-on-write, exactly the
-Iceberg/Delta CoW shape at directory granularity: DELETE / UPDATE /
-MERGE against a PARTITIONED target rewrite only the partitions that
-contain touched rows (``overwrite_pruned`` — dynamic partition
-overwrite plus the emptied-partition/escaping guards merge_apply
-carries), while untouched directories are never read or rewritten.
+Row-level DML is copy-on-write at directory granularity, the
+Iceberg/Delta CoW shape: DELETE / UPDATE / MERGE against a PARTITIONED
+target write new directories for only the partitions that contain
+touched rows; untouched directories are never read or rewritten.
 Unpartitioned targets pay a full rewrite — the honest cost of
-row-level DML without a table format, stated loudly here rather than
-hidden.  INSERT is a pure append (new part files; no rewrite).
-Statement parsing is a driver-side string pass over the masked text —
-O(statement length), zero executor cost.
+row-level DML without file-level deletes, stated loudly here rather
+than hidden.  INSERT rewrites no row (new part files, plus hard links
+to a touched partition's existing files).  Replaced directories are
+deleted at the publish after next: disk holds up to two versions of
+the touched partitions.  Statement parsing is a driver-side string
+pass over the masked text — O(statement length), zero executor cost.
+
+The refresh after a statement is not bounded by the touched partitions:
+the view is re-read from one path per live partition directory (above
+32 paths Spark lists them in a job), and a qualified table is
+redeclared with one ADD PARTITION per live partition.  Measured on a
+4-core host, single-partition statements on a 1,000-partition table of
+10k rows (medians of 3, two runs each, in-place overwrite before →
+this layout): a full-table ``count(*)`` 3.4-4.6 s → 3.4-4.2 s
+(qualified) and 3.1-3.8 s → 2.7-3.1 s (flat); UPDATE 8.2-13.5 s →
+1.7-3.1 s (qualified) and 11.1-16.0 s → 6.6-8.6 s (flat); INSERT 1.3-1.5
+s → 1.5-1.8 s (qualified) and 6.1-8.6 s → 5.8-6.7 s (flat).
 """
 
 from __future__ import annotations
@@ -91,6 +104,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparketl import dialect as _d
+from sparketl import manifest as _m
 from sparketl.session import CATALOG_LOCK, state
 from sparketl.dialect import (
     _catalog_column_classes,
@@ -119,23 +133,19 @@ __all__ = [
 
 @dataclass
 class _Handle:
-    path: str
-    part_col: str | None = None
-    #: declared schema — a partitioned parquet re-read appends the
-    #: partition column LAST (reordering the table after CTAS and
-    #: shifting INSERT's positional matching) AND re-infers the
-    #: partition column's TYPE from the directory strings (a string
-    #: partition column with numeric-looking values silently comes
-    #: back int; '01' would come back 1 — lossy).  _refresh reads with
-    #: this schema, which fixes both: Spark parses partition values as
-    #: the DECLARED type and emits columns in the declared order
-    #: (round-12 reviews 1 + 2).
-    schema: "object | None" = None
+    #: the published version; its schema is pinned, so a partitioned
+    #: read keeps the declared column order and partition-column TYPE
+    #: (round-12 reviews 1 + 2)
+    v: _m.Version
     #: True when the table came from schema-only ``CREATE TABLE (col
     #: type, ...)`` DDL — SHOW CREATE TABLE then round-trips the
     #: declared statement instead of printing the reconstructed-from-
     #: CTAS caveat (round 13, VERDICT r12 #1).
     declared: bool = False
+
+    @property
+    def part_col(self) -> str | None:
+        return self.v.part_col
 
 
 #: The DML front door keeps its catalog in per-session state dicts
@@ -162,17 +172,19 @@ def register_table(
     path: str,
     part_col: str | None = None,
 ) -> None:
-    """Adopt an existing parquet directory as a writable DML target
-    (and register/replace the same-named temp view over it)."""
+    """Adopt a parquet directory as a writable DML target (and
+    register/replace the same-named temp view over it): a table this
+    engine wrote resumes from its manifest, a plain Spark-written
+    directory becomes its version 1 in place."""
     state(spark, "dml_tables")[name.lower()] = _Handle(
-        path=path, part_col=part_col
+        _m.adopt(spark, path, part_col)
     )
     _refresh(spark, name.lower())
 
 
 def table_path(spark: SparkSession, name: str) -> str:
     """The backing directory of a writable table (for tests/tools)."""
-    return _resolve(spark, name).path
+    return _resolve(spark, name).v.root
 
 
 def _view_dependents(spark: SparkSession, name: str) -> list[str]:
@@ -330,15 +342,7 @@ def _refresh(spark: SparkSession, name: str) -> None:
         _refresh_catalog_table(spark, name, h)
         _refresh_views(spark, changed=name)
         return
-    reader = spark.read
-    if h.schema is not None:
-        # the user schema pins the partition column's TYPE (otherwise
-        # re-inferred from directory strings); the ORDER still needs
-        # the select — Spark appends partition columns last regardless
-        reader = reader.schema(h.schema)
-    df = reader.parquet(h.path)
-    if h.schema is not None:
-        df = df.select(*[f.name for f in h.schema.fields])
+    df = _m.read(spark, h.v)
     with CATALOG_LOCK:
         df.createOrReplaceTempView(name)
     _unpin_if_fixture(spark, name)
@@ -362,66 +366,44 @@ def _qident_sql(name: str) -> str:
 def _refresh_catalog_table(spark: SparkSession, name: str, h: _Handle) -> None:
     """Register/refresh a SCHEMA-QUALIFIED table (round 14, VERDICT
     r13 #2) as a real Spark in-memory-catalog EXTERNAL table over the
-    handle's parquet directory — qualified SELECT references then
-    resolve natively (zero text rewriting, full pushdown/pruning, the
-    plan is the same parquet scan the flat temp views get).
+    current version's directories — qualified SELECT references then
+    resolve natively (zero text rewriting, full pushdown/pruning).
 
-    The catalog entry is DROPPED AND REDECLARED on every refresh:
-    schema changes (ALTER ADD/DROP/RENAME COLUMN rewrites the pinned
-    handle schema) must reach the catalog definition, and the
-    in-memory catalog's create+repair is microseconds of driver-side
-    map updates.  On a production metastore this would be an
-    incremental ALTER + ADD/DROP PARTITION feed instead — the
-    per-statement MSCK (a filesystem listing of the table root) is the
-    local-mode trade, same class as the copy-on-write rewrite itself.
+    The catalog entry is DROPPED AND REDECLARED on every refresh (a new
+    version may change the schema and moves partitions), each live
+    partition directory added with its own LOCATION — in-memory map
+    updates, no filesystem listing.  The partition column is declared
+    last (the catalog convention)."""
+    from pyspark.sql.types import StructType
 
-    Partitioned tables follow the catalog convention: the partition
-    column is declared last (Spark moves it there regardless — unlike
-    the flat path, whose temp-view re-read pins the declared order via
-    h.schema)."""
+    v = h.v
+    part = v.part_col.lower() if v.part_col else None
+    data_cols = [f for f in v.schema.fields if f.name.lower() != part]
+    part_fields = [f for f in v.schema.fields if f.name.lower() == part]
+    ordered = data_cols + part_fields
+    if [f.name for f in v.schema.fields] != [f.name for f in ordered]:
+        # catalog tables keep partition keys LAST — realign the
+        # published schema (ALTER ADD COLUMN appends after the part
+        # col) so SHOW CREATE / INSERT positional order and SELECT *
+        # can never disagree
+        h.v = v = _m.set_schema(v, StructType(ordered))
+    ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in ordered)
+    loc, parts = _m.catalog_locations(spark, v)
+    clause = f" partitioned by (`{part_fields[0].name}`)" if part_fields else ""
+    adds = [
+        f"partition (`{part_fields[0].name}` = "
+        + ("null" if val is None else "'" + val.replace("\\", "\\\\").replace("'", "\\'") + "'")
+        + f") location '{path}'"
+        for val, path in parts
+    ]
     with CATALOG_LOCK:
         spark.sql(f"drop table if exists {_qident_sql(name)}")
-        schema = h.schema
-        if schema is None:
-            schema = spark.read.parquet(h.path).schema
-        data_cols = [
-            f for f in schema.fields
-            if not (h.part_col and f.name.lower() == h.part_col.lower())
-        ]
-        part_fields = [
-            f for f in schema.fields
-            if h.part_col and f.name.lower() == h.part_col.lower()
-        ]
-        from pyspark.sql.types import StructType
-
-        ordered = data_cols + part_fields
-        if h.schema is not None and [f.name for f in h.schema.fields] != [
-            f.name for f in ordered
-        ]:
-            # catalog tables keep partition keys LAST — realign the
-            # pinned handle schema (ALTER ADD COLUMN appends after the
-            # part col) so SHOW CREATE / INSERT positional order and
-            # SELECT * can never disagree
-            h.schema = StructType(ordered)
-        ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in ordered
-        )
-        part = (
-            f" partitioned by (`{part_fields[0].name}`)"
-            if part_fields
-            else ""
-        )
         spark.sql(
             f"create table {_qident_sql(name)} ({ddl}) using parquet"
-            f"{part} location '{h.path}'"
+            f"{clause} location '{loc}'"
         )
-        if part_fields:
-            # SYNC both ADDS new partition directories and DROPS
-            # emptied ones (overwrite_pruned deletes emptied dirs)
-            spark.sql(
-                f"msck repair table {_qident_sql(name)} sync partitions"
-            )
+        if adds:
+            spark.sql(f"alter table {_qident_sql(name)} add {' '.join(adds)}")
         spark.catalog.refreshTable(name)
     # qualified tables participate in `/` classing exactly like flat
     # ones: the name-set probe lists catalog tables of non-default
@@ -515,7 +497,7 @@ def execute(spark: SparkSession, stmt: str) -> DataFrame:
     return handler(spark, masked, lits)
 
 
-#: statement leaders with a WRITABLE TARGET whose directory diff is
+#: statement leaders with a WRITABLE TARGET whose live-file diff is
 #: the write-side story EXPLAIN ANALYZE reports
 _EA_TARGET_RES: "list[tuple[re.Pattern, str]]" = []
 
@@ -542,30 +524,6 @@ def _ea_target_res():
     return _EA_TARGET_RES
 
 
-def _file_snapshot(path: str) -> dict[str, tuple[int, int]]:
-    """relpath -> (size, mtime_ns) of every data file under a table
-    root (marker/hidden files skipped) — the before/after halves of
-    the write-side diff.  Walks the LOCAL filesystem: the engine's
-    writable warehouse is a local directory by contract (set_base_dir);
-    a missing root (pre-CTAS) is an empty snapshot."""
-    out: dict[str, tuple[int, int]] = {}
-    root_path = path[len("file:") :] if path.startswith("file:") else path
-    for root, _dirs, files in os.walk(root_path):
-        for f in files:
-            if f.startswith(("_", ".")):
-                continue
-            p = os.path.join(root, f)
-            try:
-                st = os.stat(p)
-            except OSError:
-                continue
-            out[os.path.relpath(p, root_path)] = (
-                st.st_size,
-                st.st_mtime_ns,
-            )
-    return out
-
-
 def explain_analyze(spark: SparkSession, stmt: str) -> DataFrame:
     """Trino ``EXPLAIN ANALYZE`` of a DML/DDL statement (round 15,
     VERDICT r14 #7 — was a loud refusal): EXECUTE the statement and
@@ -575,8 +533,9 @@ def explain_analyze(spark: SparkSession, stmt: str) -> DataFrame:
     chose (append / pruned copy-on-write / full overwrite / initial
     write).  A DML statement has no single Spark plan to annotate
     (the front door composes scans, anti/semi joins, and a write per
-    statement), so the honest analyze artifact is the observed
-    directory diff of the target table — exactly what the
+    statement), so the honest analyze artifact is the diff of the
+    target table's live data files between the version before and the
+    version after (``sparketl.manifest.files``) — exactly what the
     scale-stress harness measures externally (scripts/dml_stress),
     now surfaced in-band.  Statements without a writable target
     (CREATE VIEW, DROP, USE, ...) report kind, wall time, and result
@@ -597,7 +556,7 @@ def explain_analyze(spark: SparkSession, stmt: str) -> DataFrame:
                 canon = None  # execute() raises the proper refusal
             break
     h_pre = state(spark, "dml_tables").get(canon) if canon else None
-    pre = _file_snapshot(h_pre.path) if h_pre else {}
+    pre = _m.files(h_pre.v) if h_pre else {}
     t0 = _time.perf_counter()
     res = execute(spark, stmt)
     head = res.collect()
@@ -611,7 +570,7 @@ def explain_analyze(spark: SparkSession, stmt: str) -> DataFrame:
     if h_post is None:
         lines.append("no write-side metrics (statement has no table target)")
     else:
-        post = _file_snapshot(h_post.path)
+        post = _m.files(h_post.v)
         written = {
             r: sz
             for r, (sz, mt) in post.items()
@@ -752,55 +711,6 @@ def _canon_drop(spark: SparkSession, raw: str, if_exists: bool) -> str | None:
         raise
 
 
-def _display_name(name: str) -> str:
-    """The logical (Trino-shaped) spelling of a canonical key — the
-    canonical form already IS the logical name; kept as a seam so
-    result shapes never leak a physical spelling."""
-    return name
-
-
-def _checkpointed(df: DataFrame) -> DataFrame:
-    """Materialize before overwriting the directory the plan reads
-    from (same contract as merge_apply's rewrite frame)."""
-    return df.localCheckpoint(eager=True)
-
-
-def _reads_path(df: DataFrame, path: str) -> bool:
-    """True when ``df``'s plan scans any file under ``path`` —
-    driver-side metadata via ``inputFiles()`` (the analyzed plan's
-    file-source scans), no Spark job.  Conservative: returns True when
-    the file set cannot be determined."""
-    p = path[len("file:") :] if path.startswith("file:") else path
-    p = os.path.abspath(p)
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 - unknown source => assume it reads
-        return True
-    for f in files:
-        fp = f[len("file:") :] if f.startswith("file:") else f
-        fp = os.path.abspath(fp)
-        if fp == p or fp.startswith(p + os.sep):
-            return True
-    return False
-
-
-def _parquet_rows(path: str) -> int:
-    """Exact row count of the parquet table at ``path`` from the file
-    FOOTERS (pyarrow metadata read) — driver-side, no Spark job.  Used
-    by the write-first CTAS route, where the count job over a
-    checkpoint used to be the only reason the result was materialized
-    twice."""
-    import pyarrow.parquet as pq
-
-    p = path[len("file:") :] if path.startswith("file:") else path
-    total = 0
-    for r, _, fs in os.walk(p):
-        for f in fs:
-            if f.endswith(".parquet"):
-                total += pq.read_metadata(os.path.join(r, f)).num_rows
-    return total
-
-
 def _count_and_parts(
     df: DataFrame, part_col: str | None
 ) -> tuple[int, set | None]:
@@ -817,76 +727,31 @@ def _count_and_parts(
     return sum(r["__n"] for r in rows), {r[0] for r in rows}
 
 
-def _write_full(spark: SparkSession, h: _Handle, final: DataFrame) -> None:
-    """Static full-table overwrite for UNPARTITIONED targets (every
-    partitioned write-back goes through overwrite_pruned — a
-    partitionBy arm here would be dead code implying safety it does
-    not have), preserving the readable-empty-table contract (an empty
-    partitioned write emits no schema file)."""
-    assert h.part_col is None, "partitioned targets use overwrite_pruned"
-    if not final.head(1):
-        spark.createDataFrame([], final.schema).write.mode(
-            "overwrite"
-        ).parquet(h.path)
-        return
-    final.write.mode("overwrite").parquet(h.path)
-
-
 def _write_back(
     spark: SparkSession,
     name: str,
     h: _Handle,
     final: DataFrame,
-    touched_parts: DataFrame | set | None,
-    materialized: bool = False,
+    touched_parts: set | None,
 ) -> None:
-    """Copy-on-write write-back: pruned to the touched partitions when
-    the target is partitioned (overwrite_pruned — the merge_apply
-    write-back), full static overwrite otherwise.  ``materialized``
-    skips the checkpoint when ``final`` is already a pure projection
-    of checkpoints (MERGE) — re-materializing would copy the whole
-    result a second time.  ``touched_parts`` may be a pre-collected
-    SET of partition values (r15 job consolidation: the statement arms
-    fold the touched-partition derivation into the affected-row-count
-    job they already run, so the write-back does not pay a second
-    collect over the same frame)."""
-    from sparketl.operators.etl import _part_membership, overwrite_pruned
+    """Copy-on-write write-back of ``final``, the table's complete new
+    state: a partitioned target writes only the ``touched_parts``
+    partitions (collected with the affected-row count — r15 job
+    consolidation), any other target is rewritten whole."""
+    from sparketl.operators.etl import _part_membership
 
     if h.part_col is None or touched_parts is None:
-        if not materialized:
-            final = _checkpointed(final)
-        _write_full(spark, h, final)
-    else:
-        target = spark.read.parquet(h.path)
-        affected_vals = (
-            set(touched_parts)
-            if isinstance(touched_parts, set)
-            else {r[0] for r in touched_parts.collect()}
-        )
-        if not affected_vals:
-            _refresh(spark, name)
-            return
-        # membership by LITERAL predicate over the collected values —
-        # a semi-join on the partition column is null-BLIND, so a
-        # statement touching the NULL partition would silently drop
-        # that partition's surviving rows (round-12 review); the
-        # values are driver-side already, and the filter keeps the
-        # checkpointed rewrite the only scan in the plan (the
-        # overwrite_pruned materialization contract).  The filter
-        # applies BEFORE the checkpoint (round 15, VERDICT r14 #6):
-        # the literal partition predicate prunes the materializing
-        # scan to the TOUCHED partitions, so a single-partition UPDATE
-        # on a 1,000-partition table checkpoints one partition's rows,
-        # not the whole table (measured 7.1s → flat; SCALING.md).
-        # bare membership, no coalesce(.., false): under WHERE a NULL
-        # predicate already drops the row (identical semantics), and
-        # the bare conjunct is what the partition pruner can read — a
-        # coalesce wrapper blanked PartitionFilters (round 15)
-        rewrite = final.where(_part_membership(h.part_col, affected_vals))
-        if not materialized:
-            rewrite = _checkpointed(rewrite)
-        overwrite_pruned(
-            spark, h.path, target, rewrite, affected_vals, h.part_col
+        h.v = _m.replace(spark, h.v, final)
+    elif touched_parts:
+        # LITERAL membership: a semi-join on the partition column is
+        # null-BLIND and would drop the NULL partition's survivors
+        # (round-12 review); bare, with no coalesce, so the partition
+        # pruner reads it (round 15, VERDICT r14 #6)
+        h.v = _m.replace(
+            spark,
+            h.v,
+            final.where(_part_membership(h.part_col, touched_parts)),
+            touched_parts,
         )
     _refresh(spark, name)
 
@@ -909,21 +774,6 @@ def _match_scan(spark: SparkSession, name: str, pred: str | None):
     tests/test_dml.py::test_partitioned_statement_scans_prune)."""
     where = f" where {pred}" if pred else ""
     return _d.sql(spark, f"select * from {name}{where}")
-
-
-def _has_partition_dirs(path: str) -> bool:
-    """True when the table root holds at least one ``col=value``
-    partition directory — the non-empty state of a partitioned table
-    (its empty state is a schema-bearing root FILE, the TRUNCATE
-    contract).  One driver-side listdir; never reads data."""
-    root = path[len("file:") :] if path.startswith("file:") else path
-    try:
-        return any(
-            "=" in e and not e.startswith((".", "_"))
-            for e in os.listdir(root)
-        )
-    except OSError:
-        return False
 
 
 def _insert(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
@@ -985,30 +835,11 @@ def _insert(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         .alias(f.name)
         for f in tgt_schema.fields
     ]
-    out = _checkpointed(src.select(*proj))
-    n = out.count()
-    if n == 0:
-        # empty incremental load: skip the write entirely — on an
-        # EMPTY partitioned table the overwrite branch below would
-        # delete the schema-bearing root file and write nothing,
-        # leaving the directory unreadable (round-12 review 2)
-        return _rows_frame(spark, 0)
-    w = out.write.mode("append")
-    if h.part_col:
-        w = w.partitionBy(h.part_col)
-        if not _has_partition_dirs(h.path):
-            # the empty state of a partitioned table is a schema-bearing
-            # ROOT file (the readable-empty contract from TRUNCATE /
-            # whole-table DELETE); appending partition directories next
-            # to it creates the mixed layout spark.read rejects —
-            # overwrite clears the root file first.  The probe is ONE
-            # driver-side listdir of the root — the old
-            # spark.table(name).head(1) built the full partition file
-            # index per INSERT, measured 2.4s at 1,000 partitions
-            # (round 15, VERDICT r14 #6) vs microseconds here
-            w = out.write.mode("overwrite").partitionBy(h.part_col)
-    w.parquet(h.path)
-    _refresh(spark, name)
+    # the count comes from the written footers; an empty load
+    # publishes nothing
+    h.v, n = _m.append(spark, h.v, src.select(*proj))
+    if n:
+        _refresh(spark, name)
     return _rows_frame(spark, n)
 
 
@@ -1463,46 +1294,13 @@ def _create(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
             "schema-qualified table (Trino hive: 'Partition keys must "
             "be the last columns'); reorder the CTAS select list"
         )
-    if no_data:
-        df = df.limit(0)
-    path = _table_dir(spark, name)
-    h = _Handle(path=path, part_col=part_col, schema=df.schema)
-    if _reads_path(df, path):
-        # a source plan scanning the target path cannot happen through
-        # the front door (TABLE_ALREADY_EXISTS above) but CAN through a
-        # register_table alias — keep the materialize-first route there
-        df = _checkpointed(df)
-        n = df.count()
-        if n == 0:
-            spark.createDataFrame([], df.schema).write.mode(
-                "overwrite"
-            ).parquet(path)
-        else:
-            w = df.write.mode("overwrite")
-            if part_col:
-                w = w.partitionBy(part_col)
-            w.parquet(path)
-    else:
-        # write-first CTAS (optimization r16, guide §1.2): the target
-        # cannot pre-exist, so the old checkpoint → count → write
-        # pipeline (three driver-blocking actions, the whole result
-        # materialized TWICE) guarded nothing; evaluate the query ONCE
-        # straight into the table files and take the affected-row
-        # count from the written parquet footers (driver-side
-        # metadata, no job).  An all-rows-pruned / WITH NO DATA result
-        # is rewritten as the schema-bearing empty ROOT file — an
-        # empty partitionBy write leaves a bare directory no reader
-        # can schema-infer (the readable-empty-table contract).
-        w = df.write.mode("overwrite")
-        if part_col:
-            w = w.partitionBy(part_col)
-        w.parquet(path)
-        n = _parquet_rows(path)
-        if n == 0:
-            spark.createDataFrame([], df.schema).write.mode(
-                "overwrite"
-            ).parquet(path)
-    state(spark, "dml_tables")[name] = h
+    # evaluated ONCE straight into the table files; the row count comes
+    # from the written footers (no job)
+    v, n = _m.create(
+        spark, _table_dir(spark, name), None if no_data else df, part_col,
+        df.schema,
+    )
+    state(spark, "dml_tables")[name] = _Handle(v)
     _refresh(spark, name)
     return _rows_frame(spark, n)
 
@@ -1535,8 +1333,8 @@ def _create_declared(
     statement names none itself (the only table property this engine
     stores).
 
-    Scale: O(1) driver-side — one empty schema-bearing parquet write,
-    no executor data path.
+    Scale: O(1) driver-side — a manifest with the schema and no data
+    directory, no Spark job.
     """
     from pyspark.sql.types import StructField, StructType
     from pyspark.sql.types import _parse_datatype_string
@@ -1621,15 +1419,10 @@ def _create_declared(
             "schema-qualified table (Trino hive: 'Partition keys must "
             "be the last columns')"
         )
-    schema = StructType(fields)
-    path = _table_dir(spark, name)
-    # the readable-empty contract: one schema-bearing root parquet
-    # write (partition directories appear at the first INSERT, which
-    # clears the root file — the _insert empty-table branch)
-    spark.createDataFrame([], schema).write.mode("overwrite").parquet(path)
-    state(spark, "dml_tables")[name] = _Handle(
-        path=path, part_col=part_col, schema=schema, declared=True
+    v, _ = _m.create(
+        spark, _table_dir(spark, name), None, part_col, StructType(fields)
     )
+    state(spark, "dml_tables")[name] = _Handle(v, declared=True)
     _refresh(spark, name)
     return _rows_frame(spark, 0)
 
@@ -1680,8 +1473,8 @@ def _parse_table_props(props_text: str, lits: list[str]) -> str | None:
 
 
 def _truncate(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    """Trino TRUNCATE TABLE — delete all rows, keep the table (the
-    readable schema-bearing empty-table contract)."""
+    """Trino TRUNCATE TABLE — delete all rows, keep the table: the next
+    version lists no data directory."""
     m = re.match(
         rf"^truncate\s+table\s+({_QIDENT})\s*$", masked, re.IGNORECASE
     )
@@ -1689,8 +1482,7 @@ def _truncate(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         raise ValueError("dml: expected TRUNCATE TABLE <name>")
     name = _canon(spark, m.group(1))
     h = _resolve(spark, name)
-    schema = spark.table(name).schema
-    spark.createDataFrame([], schema).write.mode("overwrite").parquet(h.path)
+    h.v = _m.replace(spark, h.v, None)
     _refresh(spark, name)
     return _rows_frame(spark, 0)
 
@@ -1782,9 +1574,7 @@ def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
             spark.catalog.dropTempView(name)
     _unpin_if_fixture(spark, name)
     _d.clear_schema_cache(name)
-    jvm = spark._jvm  # noqa: SLF001 - Hadoop FS, same JVM as the writes
-    p = jvm.org.apache.hadoop.fs.Path(h.path)
-    p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)  # noqa: SLF001
+    _m.drop(h.v.root)
     return _rows_frame(spark, 0)
 
 
@@ -1808,12 +1598,9 @@ def _delete(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     h = _resolve(spark, name)
     pred = (m.group(2) or "").strip()
     if not pred:
-        # whole-table delete → readable empty table
-        schema = spark.table(name).schema
+        # whole-table delete → a version with no data directory
         n = spark.table(name).count()
-        spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-            h.path
-        )
+        h.v = _m.replace(spark, h.v, None)
         _refresh(spark, name)
         return _rows_frame(spark, n)
     pred = _unmask_raw(pred, lits)
@@ -2181,8 +1968,7 @@ def _merge_apply_clauses(
     # ONE materialization of the join: the guard, the survivors, the
     # delete count and the touched partitions all derive from this
     # checkpoint instead of re-running the join per consumer (round-12
-    # review 2); it also breaks the self-merge lineage (USING the
-    # target itself) before the overwrite.
+    # review 2).
     staged = joined.withColumn("__act", act).localCheckpoint(eager=True)
     delete_ids = {
         i for i, c in enumerate(matched_clauses) if c["kind"] == "delete"
@@ -2263,13 +2049,11 @@ def _merge_apply_clauses(
         else F.lit(True)
     ).select(*proj, F.col("__act").isNotNull().alias("__touched"))
     # NOT MATCHED inserts: source rows with no target match
-    # (checkpointed too: with a self-merge the source reads the
-    # directory being overwritten)
     inserts = None
     if insert_clauses:
         unmatched = src_df.alias(salias).join(
             t.alias(talias), F.expr(tx(on_cond)), "left_anti"
-        ).localCheckpoint(eager=True)
+        )
         iact = F.lit(None).cast("int")
         for i in reversed(range(len(insert_clauses))):
             c = insert_clauses[i]
@@ -2314,8 +2098,6 @@ def _merge_apply_clauses(
         inserts = frames[0]
         for fr in frames[1:]:
             inserts = inserts.unionByName(fr)
-    # every input below is a projection of a checkpoint — no further
-    # materialization needed (the write-back is told so)
     final_tagged = (
         survivors.unionByName(inserts) if inserts is not None else survivors
     )
@@ -2343,20 +2125,17 @@ def _merge_apply_clauses(
         # (their partition value comes from the INSERT expressions,
         # not the ON condition); those partitions will be rewritten —
         # their surviving rows must re-enter the rewrite frame or the
-        # partition overwrite would drop them.  `keep` is checkpointed
-        # so `final` remains a pure projection of materialized frames.
+        # new version would drop them.
         extra = ins_parts - probe_parts
         if extra:
             from sparketl.operators.etl import _part_membership
 
             # bare membership: prunable, and WHERE(NULL) == WHERE(false)
-            keep = tgt_df.where(
-                _part_membership(h.part_col, extra)
-            ).localCheckpoint(eager=True)
+            keep = tgt_df.where(_part_membership(h.part_col, extra))
             final = final.unionByName(keep.select(*tgt_cols))
     if touched_vals is not None:
         touched_vals |= ins_parts
-    _write_back(spark, name, h, final, touched_vals, materialized=True)
+    _write_back(spark, name, h, final, touched_vals)
     return _rows_frame(spark, n_updated + n_inserted + n_deleted)
 
 
@@ -2404,14 +2183,6 @@ def _spark_type_for(trino_type: str) -> str:
     if base == "decimal":
         return f"decimal{m.group(2) or '(10,0)'}"
     return base
-
-
-def _declared_schema(spark: SparkSession, h: _Handle, name: str):
-    """The handle's pinned schema, inferring (and pinning) it from the
-    current table when the handle was adopted without one."""
-    if h.schema is None:
-        h.schema = spark.table(name).schema
-    return h.schema
 
 
 def _alter_view_rename(
@@ -2463,8 +2234,9 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
 
     - ``RENAME TO``: catalog-only (the backing directory keeps its
       original name — the handle carries the path).
-    - ``ADD COLUMN [IF NOT EXISTS] c type``: metadata-only — the pinned
-      schema grows and parquet readers null-fill columns absent from
+    - ``ADD COLUMN [IF NOT EXISTS] c type``: metadata-only — the next
+      version publishes the grown schema over the same directories, and
+      parquet readers null-fill columns absent from
       data files.  Re-adding a name still present in the FILES (from an
       earlier DROP COLUMN) refuses: name-matched reads would resurrect
       the old values; CTAS-rewrite the table to really shed a column.
@@ -2502,7 +2274,7 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     name = _canon(spark, m.group(1))
     action = m.group(2).strip()
     h = _resolve(spark, name)
-    schema = _declared_schema(spark, h, name)
+    schema = h.v.schema
     cols = {f.name.lower() for f in schema.fields}
 
     rm = re.match(rf"^rename\s+to\s+({_QIDENT})\s*$", action, re.IGNORECASE)
@@ -2563,15 +2335,9 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                 "columns at creation); drop or redefine those views "
                 "first"
             )
-        # mergeSchema: the default schema inference reads ONE footer,
-        # which would miss a column present only in later part files
-        file_cols = {
-            f.name.lower()
-            for f in spark.read.option("mergeSchema", "true")
-            .parquet(h.path)
-            .schema.fields
-        }
-        if col in file_cols:
+        # every live file's footer: a column present only in later
+        # part files counts too
+        if col in _m.file_columns(h.v):
             raise ValueError(
                 f"dml: column '{col}' still exists in '{name}''s data "
                 "files (dropped earlier?) — re-adding it would resurrect "
@@ -2584,8 +2350,11 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         dtype = _parse_datatype_string(
             _spark_type_for(_unmask_raw(am.group(3), lits))
         )
-        h.schema = StructType(
-            list(schema.fields) + [StructField(am.group(2), dtype, True)]
+        h.v = _m.set_schema(
+            h.v,
+            StructType(
+                list(schema.fields) + [StructField(am.group(2), dtype, True)]
+            ),
         )
         _refresh(spark, name)
         return _rows_frame(spark, 0)
@@ -2621,8 +2390,8 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
             raise ValueError("dml: cannot drop the only column")
         from pyspark.sql.types import StructType
 
-        h.schema = StructType(
-            [f for f in schema.fields if f.name.lower() != col]
+        h.v = _m.set_schema(
+            h.v, StructType([f for f in schema.fields if f.name.lower() != col])
         )
         _refresh(spark, name)
         return _rows_frame(spark, 0)
@@ -2654,28 +2423,22 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         actual_old = next(
             f.name for f in schema.fields if f.name.lower() == old
         )
-        df = _checkpointed(
-            spark.table(name).withColumnRenamed(actual_old, rc.group(2))
-        )
+        df = spark.table(name).withColumnRenamed(actual_old, rc.group(2))
         from pyspark.sql.types import StructField, StructType
 
-        h.schema = StructType(
-            [
-                StructField(rc.group(2), f.dataType, f.nullable)
-                if f.name.lower() == old
-                else f
-                for f in schema.fields
-            ]
+        h.v = _m.replace(
+            spark,
+            h.v,
+            df,
+            schema=StructType(
+                [
+                    StructField(rc.group(2), f.dataType, f.nullable)
+                    if f.name.lower() == old
+                    else f
+                    for f in schema.fields
+                ]
+            ),
         )
-        if not df.head(1):
-            spark.createDataFrame([], h.schema).write.mode(
-                "overwrite"
-            ).parquet(h.path)
-        else:
-            w = df.write.mode("overwrite")
-            if h.part_col:
-                w = w.partitionBy(h.part_col)
-            w.parquet(h.path)
         _refresh(spark, name)
         return _rows_frame(spark, 0)
 
@@ -2804,7 +2567,7 @@ def _show_create(spark: SparkSession, kind: str, name: str) -> DataFrame:
             + _SPARK_TO_TRINO_TYPE.get(
                 f.dataType.simpleString(), f.dataType.simpleString()
             )
-            for f in _declared_schema(spark, h, name).fields
+            for f in h.v.schema.fields
         )
         props = ["format = 'PARQUET'"]
         if h.part_col:

@@ -18,9 +18,10 @@ clashes under the concurrent bench pool.
 
 Scale: the engine-side costs are the ones the module docstring of
 sparketl.dml states — INSERT appends part files, DELETE / UPDATE /
-MERGE rewrite only the partitions containing touched rows when the
-target is partitioned (overwrite_pruned, the merge_apply write-back),
-and pay a full rewrite on unpartitioned targets.  The faces cover
+MERGE write new directories for only the partitions containing
+touched rows when the target is partitioned and publish the table's
+next version (``sparketl.manifest``, the format merge_apply writes
+too), and pay a full rewrite on unpartitioned targets.  The faces cover
 both: sql_delete/sql_merge_into run against partitioned targets (the
 pruned path incl. emptied-partition handling), sql_insert_into and
 sql_update against unpartitioned ones.
@@ -123,8 +124,9 @@ def sql_insert_into(spark, sf_dir):
     returns the table re-read from disk.
 
     Scale: INSERT is a pure append — new part files only, no rewrite
-    of existing data; the insert frame is checkpointed so a
-    self-referencing INSERT cannot race its own scan.
+    of existing data; the new files are published as the next
+    version, so a self-referencing INSERT reads the version it
+    extends.
     """
     _setup(spark, sf_dir, "ins")
     _run(
@@ -218,11 +220,12 @@ def sql_create_table(spark, sf_dir):
     DECLARED types, including the partition column) and a named-column
     insert (unnamed columns NULL).  The face aggregates the final
     state re-read from the partitioned directory layout, proving the
-    declared-schema pin survives the empty-root → partition-directory
+    declared schema survives the empty-table → partition-directory
     transition and keeps the declared column order and types.
 
-    Scale: the DDL is one O(1) driver-side empty schema-bearing write;
-    the INSERTs are pure appends — no rewrite of existing data.
+    Scale: the DDL is one O(1) driver-side manifest write with the
+    schema and no data; the INSERTs are pure appends — no rewrite of
+    existing data.
     """
     _setup(spark, sf_dir, "ct")
     _run(
@@ -278,9 +281,9 @@ def sql_delete(spark, sf_dir):
     """#2.9 Trino ``DELETE FROM ... WHERE`` against a PARTITIONED
     parquet table: rows where the predicate evaluates NULL (here via
     nullif on the first line number) survive — Presto deletes only
-    where it IS TRUE.  The write-back is the pruned copy-on-write
-    (overwrite_pruned): only partitions containing deleted rows are
-    rewritten, and a fully-emptied partition's directory is dropped.
+    where it IS TRUE.  The write-back is the pruned copy-on-write:
+    only partitions containing deleted rows get new directories, and a
+    fully-emptied partition drops out of the table's next version.
 
     Scale: at 100 TB the rewrite cost is bounded by the touched
     partitions, not the table — the same directory-granular CoW shape
@@ -700,7 +703,7 @@ def sql_schema_namespace(spark, sf_dir):
     """#2.9 two-level namespace through the statement front door
     (round 14, VERDICT r13 #2): ``CREATE SCHEMA`` → CTAS into two
     schemas (one of them partitioned, exercising the catalog-table
-    MSCK path) → DML against a qualified name → ``DROP SCHEMA``
+    path: one partition LOCATION per live directory) → DML against a qualified name → ``DROP SCHEMA``
     refusing while non-empty (Trino SCHEMA_NOT_EMPTY, asserted
     in-face) → a cross-schema join read back through a
     catalog-qualified spelling.  Schemas are REAL Spark
@@ -712,10 +715,10 @@ def sql_schema_namespace(spark, sf_dir):
     tests/test_dml.py rather than here: the bench runs faces
     CONCURRENTLY on one session, and USE mutates session-global state.
 
-    Scale: CREATE/DROP SCHEMA are O(1) driver-side catalog edits; the
-    per-statement MSCK partition sync is a filesystem listing of the
-    one table's root (the local-mode stand-in for a metastore's
-    incremental partition feed, stated at _refresh_catalog_table).
+    Scale: CREATE/DROP SCHEMA are O(1) driver-side catalog edits;
+    after each statement the qualified table is redeclared from its
+    manifest, one ADD PARTITION ... LOCATION per live partition — no
+    filesystem listing (_refresh_catalog_table).
     """
     _setup(spark, sf_dir, "ns")
     _run(

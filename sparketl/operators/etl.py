@@ -5,9 +5,10 @@ plain batch SQL doesn't name: MERGE INTO (row-level upsert/delete
 against a stored table) and the type-2 slowly-changing-dimension
 build (attribute history with validity intervals).  Presto/Trino
 expose MERGE as DML against Iceberg/Delta connectors; here the same
-copy-on-write semantics are expressed on plain partitioned parquet —
-anti-join + union + dynamic partition overwrite — so the plan shape
-is visible and oracle-checkable.
+copy-on-write semantics are expressed on partitioned parquet with a
+per-table manifest (``sparketl.manifest``) — anti-join + union, written
+as new partition directories and published as the table's next
+version — so the plan shape is visible and oracle-checkable.
 
 Determinism: the change feed is derived from the fixture tables by
 pure key arithmetic (no rand/now), so Spark and the DuckDB oracle
@@ -27,17 +28,20 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from sparketl import manifest
 from sparketl.registry import query
-from sparketl.sources.connectors import _partition_overwrite_dynamic, _scratch_dir
+from sparketl.sources.connectors import _scratch_dir
 from sparketl.tables import table
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
-def merge_apply(spark, path: str, feed, key_col: str, part_col: str) -> None:
+def merge_apply(spark, path: str, feed, key_col: str, part_col: str):
     """Apply ONE MERGE change feed to the stored partitioned table at
-    ``path`` — the reusable engine behind ``sink_merge_upsert``.
+    ``path`` — the reusable engine behind ``sink_merge_upsert`` — and
+    return the table's new version as a DataFrame.  A plain
+    Spark-written directory is adopted as version 1 on first use.
 
     ``feed`` carries the target's columns plus ``__op`` ∈ {'D','U','I'}
     (one op per key — MERGE's standard well-formedness precondition).
@@ -48,41 +52,19 @@ def merge_apply(spark, path: str, feed, key_col: str, part_col: str) -> None:
     anti-join, re-upserting replaces a row with itself.  The nightly
     rerun after a half-failed orchestration is therefore safe —
     tests/test_etl.py::test_merge_apply_idempotent_fixed_point asserts
-    byte-identical table state after a double apply.
+    identical table state after a double apply.
 
     Plan (unchanged from the declared query's docstring): affected
     partitions = partition values of target rows semi-joined to the
     BROADCAST feed keys plus upsert partition values; rewrite = those
-    partitions anti-joined to feed keys, unioned with the upserts;
-    dynamic partition overwrite writes back only them.  Per-batch cost
-    is O(feed + touched partitions), independent of how many feeds
-    were applied before — measured two-batch walls in SCALING.md.
-
-    EMPTIED-partition guard (round-9 review): dynamic overwrite only
-    replaces partitions the rewrite WRITES — a partition whose every
-    row is deleted produces zero rewrite rows, so dynamic mode would
-    silently leave its old files (and the deleted rows) in place.
-    Both partition lists are driver-sized (distinct partition values,
-    already the broadcast side), so the guard is two tiny collects.
-    When partitions empty, the apply stays on the pruned path (ADVICE
-    r9 — a routine purge-shaped feed must not pay a whole-table
-    rewrite): the surviving touched partitions go through the same
-    dynamic overwrite, then the emptied partitions' DIRECTORIES are
-    dropped via the Hadoop FileSystem API — the Hive/Iceberg DROP
-    PARTITION shape, and the only way to express "this partition is
-    now empty" to a path-based dynamic overwrite (an empty frame
-    writes no directory at all).  A mid-apply failure between the two
-    steps leaves deleted rows present-but-stale, which the fixed-point
-    re-apply repairs — same recovery contract as the write itself.
-    The pruned delete runs only for partition values whose Python
-    rendering provably equals Spark's directory name (non-bool ints,
-    dates, plain-charset strings — an ALLOWLIST, not an escape
-    deny-set); everything else, including NULL, falls back to the
-    static full-table overwrite rather than guessing the encoding.
-    tests/test_etl.py::test_merge_apply_delete_empties_partition pins
-    the row loss, the fixed point, AND that untouched partitions' data
-    files are not rewritten on the purge path."""
-    target = spark.read.parquet(path)
+    partitions anti-joined to feed keys, unioned with the upserts,
+    written as new directories for those partitions only.  A partition
+    the feed empties is left out of the new version, and a crash before
+    the publish leaves the previous version whole.  Per-batch cost is
+    O(feed + touched partitions), independent of how many feeds were
+    applied before — measured two-batch walls in SCALING.md."""
+    v = manifest.adopt(spark, path, part_col)
+    target = manifest.read(spark, v)
     keys = feed.select(key_col).distinct()
     upserts = feed.where(F.col("__op").isin("U", "I")).drop("__op")
     affected = (
@@ -92,21 +74,21 @@ def merge_apply(spark, path: str, feed, key_col: str, part_col: str) -> None:
         .distinct()
     )
     affected_vals = {r[0] for r in affected.collect()}
+    if not affected_vals:
+        return target
     # membership by LITERAL predicate, not a semi-join: the join form
     # is null-BLIND, so a feed touching the NULL partition would drop
     # that partition's SURVIVORS from the rewrite (round-12 review)
     # positive filter: bare membership — WHERE(NULL) == WHERE(false),
     # and only the bare conjunct partition-prunes the scan (round 15).
-    # The NEGATED keep-filter in overwrite_pruned's static path MUST
-    # keep its coalesce: there ~NULL would drop NULL-partition
-    # survivors.
     rewrite = (
         target.where(_part_membership(part_col, affected_vals))
         .join(F.broadcast(keys), key_col, "left_anti")
         .unionByName(upserts.select(*target.columns))
-        .localCheckpoint(eager=True)
     )
-    overwrite_pruned(spark, path, target, rewrite, affected_vals, part_col)
+    return manifest.read(
+        spark, manifest.replace(spark, v, rewrite, affected_vals)
+    )
 
 
 def _part_membership(part_col: str, vals: set):
@@ -120,135 +102,6 @@ def _part_membership(part_col: str, vals: set):
     if None in vals:
         cond = cond | F.col(part_col).isNull()
     return cond
-
-
-def overwrite_pruned(
-    spark, path: str, target, rewrite, affected_vals: set, part_col: str
-) -> None:
-    """Write ``rewrite`` back over ONLY the affected partitions of the
-    parquet table at ``path`` — the merge_apply write-back, extracted
-    (round 12) so statement-level DML (sparketl.dml DELETE / UPDATE /
-    MERGE INTO) reuses the exact same guards instead of reimplementing
-    them.
-
-    Contract: ``target`` is the PRE-write frame read from ``path``;
-    ``rewrite`` holds the complete new contents of the partitions in
-    ``affected_vals`` and MUST already be materialized
-    (``localCheckpoint(eager=True)``) so its plan no longer reads the
-    directory being overwritten; partitions outside ``affected_vals``
-    are untouched.  All driver-side collects here are partition-value
-    sized.  The guard lattice (each pinned by tests/test_etl.py):
-
-    - every partition empties → schema-bearing empty-table write
-      (a bare root no reader can schema-infer otherwise);
-    - root-level data files, or an emptied partition whose value's
-      Python rendering is not provably Spark's directory name
-      (ALLOWLIST: non-bool ints, dates, plain-charset strings) →
-      STATIC full overwrite (unaffected partitions ∪ rewrite);
-    - otherwise dynamic partition overwrite of the rewrite, then the
-      emptied partitions' directories dropped via the Hadoop FS API.
-    """
-    surviving_vals = {r[0] for r in rewrite.select(part_col).distinct().collect()}
-    emptied = affected_vals - surviving_vals
-    if not surviving_vals and emptied:
-        remaining = {
-            r[0] for r in target.select(part_col).distinct().collect()
-        } - affected_vals
-        if not remaining:
-            # ADVICE r10: EVERY partition of the table empties.  Both
-            # normal paths would leave a bare table root no reader can
-            # schema-infer (dynamic overwrite writes nothing before the
-            # directory drops; the static fallback's partitionBy write
-            # of an empty frame emits no data file either), breaking
-            # the next read AND the fixed-point re-apply recovery.
-            # Write a schema-bearing empty table instead: a plain
-            # static overwrite of an empty frame emits one 0-row part
-            # file carrying the full schema, partition column included
-            # as a data column (probed live: the read-back returns 0
-            # rows with the original schema).  The collect is
-            # partition-value-sized and runs only on this rare path.
-            spark.createDataFrame([], target.schema).write.mode(
-                "overwrite"
-            ).parquet(path)
-            return
-    # ALLOWLIST gate for the pruned delete (review r10 — a deny-set of
-    # escaped characters misses whole classes where Python's str(v) is
-    # not Spark's directory name: bool True/'true', float repr
-    # '1e-07'/'1.0E-7', %-escaped control chars).  The pruned path
-    # runs only for values whose rendering provably matches Spark's:
-    # non-bool ints, dates (ISO on both sides), and strings made of
-    # characters Spark never escapes; everything else — including
-    # NULL (__HIVE_DEFAULT_PARTITION__) — takes the safe full
-    # overwrite.
-    import datetime as _dt
-
-    _SAFE_CHARS = frozenset(
-        "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789._-+@"
-    )
-
-    def _dir_safe(v) -> bool:
-        if isinstance(v, bool) or v is None:
-            return False
-        if isinstance(v, int):
-            return True
-        # date yes (ISO on both sides); datetime no (space + colons
-        # are %-escaped in the directory name)
-        if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-            return True
-        return (
-            isinstance(v, str) and v != "" and set(v) <= _SAFE_CHARS
-        )
-
-    # Root-level data files (the schema-bearing empty table the guard
-    # above writes) force the STATIC path: a dynamic overwrite would
-    # add partition directories NEXT TO the root file, a mixed layout
-    # spark.read.parquet rejects ("conflicting directory structures" —
-    # round-11 review).  The static overwrite clears the whole root
-    # first.  One driver-side FS listing per apply.
-    jvm = spark._jvm  # noqa: SLF001 - Hadoop FS, same JVM the write used
-    hconf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    root_has_data = any(
-        not st.isDirectory()
-        and not st.getPath().getName().startswith(("_", "."))
-        for st in root.getFileSystem(hconf).listStatus(root)
-    )
-    if root_has_data or (emptied and not all(_dir_safe(v) for v in emptied)):
-        # unaffected partitions ∪ rewrite ≡ the final table (for the
-        # merge feed this equals the old keys-anti-join ∪ upserts form:
-        # untouched partitions carry no feed keys and no upserts).
-        # The affected set is already a driver-side value list, so the
-        # membership test is a LITERAL predicate — crucially NULL-SAFE
-        # where a left_anti join on the partition column is not: the
-        # NULL partition is exactly where this static path lands
-        # (round-12 review — the join form silently RESURRECTED
-        # feed-deleted NULL-partition rows).
-        keep = ~F.coalesce(
-            _part_membership(part_col, affected_vals), F.lit(False)
-        )
-        full = (
-            target.where(keep)
-            .unionByName(rewrite.select(*target.columns))
-            .localCheckpoint(eager=True)
-        )
-        if not full.head(1):
-            # all rows gone AND the static partitionBy write of an
-            # empty frame would emit no data file — same readable-
-            # empty-table contract as the guard above
-            spark.createDataFrame([], target.schema).write.mode(
-                "overwrite"
-            ).parquet(path)
-            return
-        full.write.mode("overwrite").partitionBy(part_col).parquet(path)
-        return
-    with _partition_overwrite_dynamic(spark):
-        rewrite.write.mode("overwrite").partitionBy(part_col).parquet(path)
-    if emptied:
-        jvm = spark._jvm  # noqa: SLF001 - Hadoop FS, same JVM the write used
-        hconf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-        for v in sorted(str(v) for v in emptied):
-            p = jvm.org.apache.hadoop.fs.Path(f"{path}/{part_col}={v}")
-            p.getFileSystem(hconf).delete(p, True)
 
 
 def build_merge_feed(
@@ -314,8 +167,9 @@ def sink_merge_upsert(spark, sf_dir):
     joined to the broadcast changed-key set, plus insert priorities;
     (2) rewrite = target rows in affected partitions, anti-joined to
     broadcast changed keys, unioned with updates and inserts;
-    (3) ``partitionOverwriteMode=dynamic`` writes back ONLY those
-    partitions — untouched directories are never read or rewritten.
+    (3) the rewrite lands in new directories for ONLY those partitions
+    and the table's next version is published — untouched directories
+    are never read or rewritten.
 
     Scale: the change feed is ≪ target (the nightly-upsert shape), so
     both the semi- and anti-join broadcast — zero shuffle of the
@@ -324,10 +178,9 @@ def sink_merge_upsert(spark, sf_dir):
     file granularity.  If the feed outgrows the broadcast budget the
     hints drop and both joins degrade to shuffle joins keyed on
     o_orderkey — correct, just no longer target-shuffle-free.  The
-    ``localCheckpoint`` cuts lineage so the rewrite can target the
-    directory it read (at cluster scale: stage-dir + commit protocol
-    instead; the checkpoint holds only the rewritten partitions, not
-    the table).  Fixture note: 5 coarse priorities make every
+    rewrite reads the files of the version it replaces, which stay in
+    place until the publish after next, so nothing is materialized
+    first.  Fixture note: 5 coarse priorities make every
     partition "affected" at sf0.1 — at production granularity
     (e.g. daily date partitions × bounded-key feeds) pruning bites;
     the plan, not the fixture, is the claim.
@@ -339,21 +192,12 @@ def sink_merge_upsert(spark, sf_dir):
     cost stays O(feed) across batches (measured walls in SCALING.md)."""
     orders = table(spark, sf_dir, "orders")
     path = _scratch_dir(sf_dir, "merge_target")
-    key = F.col("o_orderkey")
-    # Snapshot write stays under the static (session-default) mode so it
-    # truly truncates a stale scratch dir; only the merge rewrite below
-    # needs dynamic overwrite, scoped so the setting can't leak into
-    # later partitioned overwrites in a shared session.
-    (
-        orders.where(F.col("o_orderstatus") == "F")
-        .write.mode("overwrite")
-        .partitionBy("o_orderpriority")
-        .parquet(path)
-    )
-    target = spark.read.parquet(path)
-    feed = build_merge_feed(target, orders)
-    merge_apply(spark, path, feed, "o_orderkey", "o_orderpriority")
-    merged = spark.read.parquet(path)
+    # the snapshot's static overwrite truncates a stale scratch dir
+    # (manifest included), so merge_apply adopts a fresh version 1
+    snapshot = orders.where(F.col("o_orderstatus") == "F")
+    snapshot.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
+    feed = build_merge_feed(snapshot, orders)
+    merged = merge_apply(spark, path, feed, "o_orderkey", "o_orderpriority")
     return merged.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_rows"),
         F.round(

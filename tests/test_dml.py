@@ -15,7 +15,7 @@ import os
 
 import pytest
 
-from sparketl import dialect, dml, session
+from sparketl import dialect, dml, manifest, session
 
 
 @pytest.fixture()
@@ -137,30 +137,37 @@ def test_update_partition_column_refused(spark, wh):
         dialect.sql(spark, "update t_up set g = 'z' where k = 1")
 
 
+def _live_dirs(spark, name: str, part: str) -> list[str]:
+    """The live data directories of one partition of a DML table, read
+    from its manifest."""
+    v = manifest.load(dml.table_path(spark, name))
+    return [os.path.join(v.root, d) for d in v.dirs if d.split("/")[0] == part]
+
+
 def test_pruned_write_leaves_untouched_partitions(spark, wh):
     dialect.sql(
         spark,
         "create table t_pr with (partitioned_by = array['g']) as "
         "select k, g, v from dml_fx",
     )
-    path = dml.table_path(spark, "t_pr")
-    c_dir = os.path.join(path, "g=c")
-    before = {
-        f: os.path.getmtime(os.path.join(c_dir, f))
-        for f in os.listdir(c_dir)
-        if f.endswith(".parquet")
-    }
+
+    def c_files():
+        return {
+            f: os.path.getmtime(os.path.join(d, f))
+            for d in _live_dirs(spark, "t_pr", "g=c")
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        }
+
+    before = c_files()
+    assert before
     dialect.sql(spark, "delete from t_pr where g = 'a' and k = 1")
-    after = {
-        f: os.path.getmtime(os.path.join(c_dir, f))
-        for f in os.listdir(c_dir)
-        if f.endswith(".parquet")
-    }
+    after = c_files()
     assert before == after  # partition g=c was never rewritten
     assert [r[0] for r in _state(spark, "t_pr")] == [2, 3, 4, 5]
-    # emptying a partition drops its directory
+    # emptying a partition drops it from the table's next version
     dialect.sql(spark, "delete from t_pr where g = 'c'")
-    assert not os.path.exists(c_dir)
+    assert _live_dirs(spark, "t_pr", "g=c") == []
     assert [r[0] for r in _state(spark, "t_pr")] == [2, 3, 4]
 
 
@@ -406,8 +413,7 @@ def test_null_partition_delete_and_survivors(spark, wh):
 def test_merge_apply_null_partition_feed(spark, tmp_path):
     """merge_apply itself with a NULL-partition feed: the doomed row
     leaves, the NULL-partition survivor stays, other partitions
-    untouched (the static fallback path — NULL fails the dir-name
-    allowlist)."""
+    untouched."""
     from pyspark.sql import functions as F
 
     from sparketl.operators.etl import merge_apply
@@ -422,7 +428,7 @@ def test_merge_apply_null_partition_feed(spark, tmp_path):
     )
     merge_apply(spark, path, feed, "k", "g")
     got = sorted(
-        (r.k, r.g) for r in spark.read.parquet(path).select("k", "g").collect()
+        (r.k, r.g) for r in manifest.read(spark, path).select("k", "g").collect()
     )
     assert got == [(2, "b"), (3, None)]
 
@@ -495,23 +501,22 @@ def test_merge_probe_prune_insert_into_pruned_partition(spark, wh):
 def test_delete_update_zero_match_is_noop(spark, wh):
     dialect.sql(spark, "create table t_zm as select k, g from dml_fx")
     path = dml.table_path(spark, "t_zm")
-    before = sorted(os.listdir(path))
+    before = manifest.load(path)
     assert dialect.sql(
         spark, "delete from t_zm where k > 999"
     ).collect()[0][0] == 0
     assert dialect.sql(
         spark, "update t_zm set g = 'x' where k > 999"
     ).collect()[0][0] == 0
-    assert sorted(os.listdir(path)) == before  # no rewrite happened
+    assert manifest.load(path) == before  # no rewrite happened
 
 
 def test_partitioned_column_order_and_truncate_insert_cycle(spark, wh):
     """Round-12 review follow-ups: (a) a partitioned re-read puts the
     partition column LAST — the handle pins the DECLARED order so CTAS
     column order survives and INSERT's positional matching stays
-    stable; (b) INSERT into a truncated partitioned table must clear
-    the schema-bearing root file before writing partition dirs (mixed
-    layouts are unreadable)."""
+    stable; (b) INSERT into a truncated partitioned table reads back
+    exactly the inserted row."""
     dialect.sql(
         spark,
         "create table t_ord with (partitioned_by = array['g']) as "
@@ -528,8 +533,8 @@ def test_partitioned_column_order_and_truncate_insert_cycle(spark, wh):
 
 def test_review2_regressions(spark, wh):
     """Round-12 review, pass 2 (each confirmed live pre-fix):
-    (a) a zero-row INSERT into an EMPTY partitioned table must not
-        destroy the schema-bearing root file;
+    (a) a zero-row INSERT into an EMPTY partitioned table must leave
+        it readable;
     (b) INSERT matches source columns BY POSITION even when the query
         produces duplicate output names (`select k, g as k`);
     (c) a string partition column with numeric-looking values keeps
@@ -1298,7 +1303,7 @@ def test_create_table_like(spark, wh):
     )
     assert session.state(spark, "dml_tables")["t_l2"].part_col == "g"
     dialect.sql(spark, "insert into t_l2 select k, g, v from dml_fx")
-    assert os.path.isdir(os.path.join(dml.table_path(spark, "t_l2"), "g=a"))
+    assert _live_dirs(spark, "t_l2", "g=a")
     # mixed with plain definitions, and an explicit partitioned_by wins
     dialect.sql(
         spark,
@@ -1548,7 +1553,7 @@ def test_schema_namespace_lifecycle(spark, wh):
 
 def test_schema_namespace_partitioned_and_classing(spark, wh):
     """Qualified PARTITIONED tables: partition-last rule (Trino hive
-    parity), pruned copy-on-write via the catalog-table MSCK path, and
+    parity), pruned copy-on-write via per-partition catalog locations, and
     the `/` classing probe seeing qualified columns."""
     dialect.sql(spark, "drop schema if exists nsp cascade")
     dialect.sql(spark, "create schema nsp")

@@ -13,7 +13,7 @@ import os
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from sparketl import registry
+from sparketl import manifest, registry
 from sparketl.tables import TABLE_NAMES, table
 
 from .conftest import SF_DIR, SF_SMOKE_DIR
@@ -46,7 +46,7 @@ def test_merge_upsert_row_semantics(spark):
     from sparketl.sources.connectors import _scratch_dir
 
     registry.QUERIES["sink_merge_upsert"](spark, SF_DIR).collect()
-    merged = spark.read.parquet(_scratch_dir(SF_DIR, "merge_target"))
+    merged = manifest.read(spark, _scratch_dir(SF_DIR, "merge_target"))
     orders = table(spark, SF_DIR, "orders")
     key = F.col("o_orderkey")
 
@@ -203,7 +203,7 @@ def test_range_interval_brute_force(spark):
 
 def _table_state(spark, path):
     return sorted(
-        tuple(r) for r in spark.read.parquet(path).collect()
+        tuple(r) for r in manifest.read(spark, path).collect()
     )
 
 
@@ -216,14 +216,9 @@ def test_merge_apply_idempotent_fixed_point(spark, tmp_path):
 
     orders = table(spark, SF_DIR, "orders")
     path = str(tmp_path / "merge_target")
-    (
-        orders.where(F.col("o_orderstatus") == "F")
-        .write.mode("overwrite")
-        .partitionBy("o_orderpriority")
-        .parquet(path)
-    )
-    target = spark.read.parquet(path)
-    n_snapshot = target.count()  # before the files are rewritten
+    target = orders.where(F.col("o_orderstatus") == "F")
+    target.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
+    n_snapshot = target.count()
     feed = build_merge_feed(target, orders).localCheckpoint(eager=True)
 
     merge_apply(spark, path, feed, "o_orderkey", "o_orderpriority")
@@ -270,7 +265,7 @@ def test_merge_apply_second_batch_applies_on_top(spark, tmp_path):
     merge_apply(spark, path, feed2, "o_orderkey", "o_orderpriority")
     got = {
         r.o_orderkey: (r.o_totalprice, r.o_orderpriority)
-        for r in spark.read.parquet(path).collect()
+        for r in manifest.read(spark, path).collect()
     }
     assert got == {
         1: (10.0, "1-URGENT"),
@@ -281,12 +276,11 @@ def test_merge_apply_second_batch_applies_on_top(spark, tmp_path):
 
 def test_merge_apply_delete_empties_partition(spark, tmp_path):
     """A feed that deletes EVERY row of a partition must really remove
-    those rows: dynamic overwrite never touches a partition the
-    rewrite writes zero rows for, so merge_apply drops the emptied
-    partitions' directories explicitly (round-9 review found the
-    silent row loss; ADVICE r9 replaced the full-table-overwrite
-    fallback with the pruned DROP PARTITION path — asserted here via
-    the untouched partition's data files surviving byte-identical)."""
+    those rows: the emptied partition drops out of the table's next
+    version, and its directory is deleted at the publish after that
+    (round-9 review found the silent row loss; ADVICE r9 kept the path
+    pruned — asserted here via the untouched partition's data files
+    surviving byte-identical)."""
     import os
 
     from sparketl.operators.etl import merge_apply
@@ -308,36 +302,44 @@ def test_merge_apply_delete_empties_partition(spark, tmp_path):
         schema + ", __op string",
     )
 
+    def live(part):
+        v = manifest.load(path)
+        return [
+            os.path.join(path, d)
+            for d in (v.dirs if v else [f"o_orderpriority={part}"])
+            if d.split("/")[0] == f"o_orderpriority={part}"
+        ]
+
     def files(part):
-        d = os.path.join(path, f"o_orderpriority={part}")
         return {
             (f, os.path.getmtime(os.path.join(d, f)))
+            for d in live(part)
             for f in os.listdir(d)
             if f.endswith(".parquet")
         }
 
     untouched_before = files("3-MEDIUM")
+    assert untouched_before
     merge_apply(spark, path, feed, "o_orderkey", "o_orderpriority")
     got = {(r.o_orderkey, r.o_orderpriority)
-           for r in spark.read.parquet(path).collect()}
+           for r in manifest.read(spark, path).collect()}
     assert got == {(3, "2-HIGH"), (4, "3-MEDIUM")}
-    # the emptied partition's directory is gone, not just empty
-    assert not os.path.exists(os.path.join(path, "o_orderpriority=1-URGENT"))
+    # the emptied partition has no live directory any more
+    assert live("1-URGENT") == []
     # the untouched partition was NOT rewritten (pruned path held)
     assert files("3-MEDIUM") == untouched_before
     # and re-applying the purge is still a fixed point
     merge_apply(spark, path, feed, "o_orderkey", "o_orderpriority")
     got2 = {(r.o_orderkey, r.o_orderpriority)
-            for r in spark.read.parquet(path).collect()}
+            for r in manifest.read(spark, path).collect()}
     assert got2 == got
+    # that publish deleted the emptied partition's directory
+    assert not os.path.exists(os.path.join(path, "o_orderpriority=1-URGENT"))
 
 
 def test_merge_apply_escaped_partition_value_falls_back(spark, tmp_path):
-    """A partition value Hive path-escapes (here a space) must not be
-    string-formatted into a directory name — the purge takes the safe
-    static full overwrite and still truncates correctly."""
-    import os
-
+    """A partition value Hive path-escapes (here a space) is purged
+    like any other: its rows are gone after the merge."""
     from sparketl.operators.etl import merge_apply
 
     schema = "o_orderkey long, o_orderstatus string, o_totalprice double, o_orderpriority string"
@@ -350,19 +352,15 @@ def test_merge_apply_escaped_partition_value_falls_back(spark, tmp_path):
     )
     merge_apply(spark, path, feed, "o_orderkey", "o_orderpriority")
     got = {(r.o_orderkey, r.o_orderpriority)
-           for r in spark.read.parquet(path).collect()}
+           for r in manifest.read(spark, path).collect()}
     assert got == {(2, "2-HIGH")}
-    assert not any(
-        "LOW" in d for d in os.listdir(path) if os.path.isdir(os.path.join(path, d))
-    )
 
 
 def test_merge_apply_delete_empties_whole_table(spark, tmp_path):
     """ADVICE r10: a feed that deletes EVERY row of EVERY partition must
-    leave a READABLE empty table — the pruned path's directory drops
-    (or the static fallback's empty partitionBy write) would otherwise
-    leave a bare root that spark.read.parquet cannot schema-infer,
-    breaking both the next read and the fixed-point re-apply."""
+    leave a READABLE empty table — a version with no data directory
+    still carries the schema — so both the next read and the
+    fixed-point re-apply work."""
     from sparketl.operators.etl import merge_apply
 
     rows = [
@@ -382,21 +380,19 @@ def test_merge_apply_delete_empties_whole_table(spark, tmp_path):
         schema + ", __op string",
     )
     merge_apply(spark, path, feed, "o_orderkey", "o_orderpriority")
-    back = spark.read.parquet(path)  # must not raise schema-inference
+    back = manifest.read(spark, path)  # must not raise schema-inference
     assert back.count() == 0
     assert set(back.columns) == {
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     }
     # fixed point: re-applying the purge against the empty table works
     merge_apply(spark, path, feed, "o_orderkey", "o_orderpriority")
-    assert spark.read.parquet(path).count() == 0
+    assert manifest.read(spark, path).count() == 0
 
 
 def test_merge_apply_insert_after_whole_table_purge(spark, tmp_path):
-    """round-11 review: after the whole-table purge writes the
-    schema-bearing root file, a later INSERT merge must not leave a
-    mixed root-file + partition-directory layout — merge_apply detects
-    root-level data files and takes the static overwrite."""
+    """round-11 review: a table purged to zero rows takes inserts
+    again, and a purge of the re-populated table still round-trips."""
     from sparketl.operators.etl import merge_apply
 
     schema = (
@@ -411,13 +407,13 @@ def test_merge_apply_insert_after_whole_table_purge(spark, tmp_path):
         [(1, "F", 0.0, "1-URGENT", "D")], schema + ", __op string"
     )
     merge_apply(spark, path, purge, "o_orderkey", "o_orderpriority")
-    assert spark.read.parquet(path).count() == 0
+    assert manifest.read(spark, path).count() == 0
     ins = spark.createDataFrame(
         [(7, "O", 70.0, "2-HIGH", "I"), (8, "O", 80.0, "3-MEDIUM", "I")],
         schema + ", __op string",
     )
     merge_apply(spark, path, ins, "o_orderkey", "o_orderpriority")
-    back = spark.read.parquet(path)  # mixed layout would raise here
+    back = manifest.read(spark, path)
     assert {(r.o_orderkey, r.o_orderpriority) for r in back.collect()} == {
         (7, "2-HIGH"), (8, "3-MEDIUM")
     }
@@ -427,4 +423,4 @@ def test_merge_apply_insert_after_whole_table_purge(spark, tmp_path):
         schema + ", __op string",
     )
     merge_apply(spark, path, purge2, "o_orderkey", "o_orderpriority")
-    assert spark.read.parquet(path).count() == 0
+    assert manifest.read(spark, path).count() == 0

@@ -2,8 +2,8 @@
 change feeds against a Python dict model of MERGE semantics.
 
 The round-9 review found a real silent-row-loss bug here (a feed that
-deletes every row of a partition left the old files in place under
-dynamic overwrite), so this family gets randomized coverage: feeds
+deletes every row of a partition left the old files in place), so
+this family gets randomized coverage: feeds
 drawn by hypothesis over a small keyspace with clustered partitions —
 guaranteeing partition-emptying deletes, upserts that move a key's
 partition value, inserts into brand-new partitions, and empty feeds —
@@ -25,6 +25,7 @@ try:
 except ImportError:  # pragma: no cover
     pytest.skip("hypothesis unavailable", allow_module_level=True)
 
+from sparketl import manifest
 from sparketl.operators.etl import merge_apply
 
 _SCHEMA = (
@@ -77,7 +78,7 @@ def _apply_model(table: dict, feed: dict) -> dict:
 def _read(spark, path) -> dict:
     return {
         r.o_orderkey: (int(r.o_totalprice), r.o_orderpriority)
-        for r in spark.read.parquet(path).collect()
+        for r in manifest.read(spark, path).collect()
     }
 
 
