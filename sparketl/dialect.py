@@ -283,7 +283,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sparketl.session import CATALOG_LOCK, state, states
+from sparketl.session import CATALOG_LOCK, local_frame, state, states
 
 # Spark timestampadd/timestampdiff unit keywords (SQL identifiers).
 _TIME_UNITS = {
@@ -4918,7 +4918,7 @@ def _explain_analyze(spark: SparkSession, query_sql: str) -> DataFrame:
         f"Query executed in {wall:.3f}s, {n} output row(s)\n"
         + "\n".join(lines)
     )
-    return spark.createDataFrame([(text,)], "query_plan string")
+    return local_frame(spark, [(text,)], "query_plan string")
 
 
 def sql(spark: SparkSession, presto_sql: str) -> DataFrame:

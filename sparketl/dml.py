@@ -82,6 +82,14 @@ deleted at the publish after next: disk holds up to two versions of
 the touched partitions.  Statement parsing is a driver-side string
 pass over the masked text — O(statement length), zero executor cost.
 
+Spark jobs per statement on a partitioned target (traced ``dml_rw``,
+4 cores, AQE): INSERT 1 (the write); UPDATE and DELETE 3 (a two-job
+count-and-partitions aggregate, then the write); MERGE 10 (the probe
+3, the staged checkpoint 3 with its two broadcasts, one aggregate
+over it 3, the write 1; 12 on 1.5M orders).  None runs for the
+``rows`` result frame (a local relation), TRUNCATE, or a whole-table
+DELETE (it counts the live files' footers).
+
 The refresh after a statement is not bounded by the touched partitions:
 the view is re-read from one path per live partition directory (above
 32 paths Spark lists them in a job), and a qualified table is
@@ -105,7 +113,7 @@ from pyspark.sql import functions as F
 
 from sparketl import dialect as _d
 from sparketl import manifest as _m
-from sparketl.session import CATALOG_LOCK, state
+from sparketl.session import CATALOG_LOCK, local_frame, state
 from sparketl.dialect import (
     _catalog_column_classes,
     _depths,
@@ -615,9 +623,7 @@ def explain_analyze(spark: SparkSession, stmt: str) -> DataFrame:
         else:
             strat = "full copy-on-write overwrite"
         lines.append(f"write strategy: {strat}")
-    return spark.createDataFrame(
-        [("\n".join(lines),)], "query_plan string"
-    )
+    return local_frame(spark, [("\n".join(lines),)], "query_plan string")
 
 
 def _unmask_raw(masked: str, lits: list[str]) -> str:
@@ -628,7 +634,7 @@ def _unmask_raw(masked: str, lits: list[str]) -> str:
 
 
 def _rows_frame(spark: SparkSession, n: int) -> DataFrame:
-    return spark.createDataFrame([(int(n),)], "rows bigint")
+    return local_frame(spark, [(int(n),)], "rows bigint")
 
 
 _IDENT = r"[A-Za-z_][A-Za-z_0-9$]*"
@@ -1598,8 +1604,9 @@ def _delete(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     h = _resolve(spark, name)
     pred = (m.group(2) or "").strip()
     if not pred:
-        # whole-table delete → a version with no data directory
-        n = spark.table(name).count()
+        # whole-table delete → a version with no data directory; the
+        # count comes from the live files' footers, as CTAS and INSERT do
+        n = _m.rows(h.v)
         h.v = _m.replace(spark, h.v, None)
         _refresh(spark, name)
         return _rows_frame(spark, n)
@@ -1876,10 +1883,11 @@ def _merge_apply_clauses(
 
     Shape: target ⟕ source on the raw ON condition; per target row the
     FIRST satisfied WHEN MATCHED clause applies (CASE over the clause
-    conditions, in statement order); NOT MATCHED source rows (anti-join)
-    take the first satisfied INSERT clause.  The multi-source-match
-    guard is Trino's runtime error, computed as one tiny aggregate over
-    the join before any write."""
+    conditions, in statement order); NOT MATCHED source rows (the
+    source side of target ⟖ source) take the first satisfied INSERT
+    clause.  The multi-source-match guard is Trino's runtime error,
+    computed as one tiny aggregate over the staged rows before any
+    write."""
     tgt_df = spark.table(name)
     # MERGE expressions resolve against the target and source frames
     # first — overlay their column classes onto the catalog's (a
@@ -1902,22 +1910,22 @@ def _merge_apply_clauses(
         return translate(_unmask_raw(fragment, lits), schema=colcls)
 
     tgt_cols = tgt_df.columns
+    typ = {f.name: f.dataType for f in tgt_df.schema.fields}
     s = src_df.withColumn("__sm", F.lit(1)).alias(salias)
     scan = tgt_df
     probe_parts: set | None = None
     if h.part_col is not None:
-        # probe-side partition pruning (VERDICT r13 #1): the matched
-        # probe below MATERIALIZES the target twice (the __tid
-        # checkpoint and the staged-join checkpoint) — at x100 that
-        # made MERGE's x10→x100 wall ratio 8.4 vs DELETE's 3.1
-        # (SCALING.md round-13 table).  A matched target row can only
-        # live in a partition holding at least one source match, so
-        # ONE semi-join SCAN (aggregate-only — no checkpoint, no wide
-        # result) derives that partition set and prunes the probe's
-        # target scan to it; untouched partitions never enter the
-        # join, the checkpoints, or the rewrite frame.  The collect is
+        # probe-side partition pruning (VERDICT r13 #1): the staged
+        # checkpoint below MATERIALIZES the probed target — unpruned,
+        # at x100 that made MERGE's x10→x100 wall ratio 8.4 vs
+        # DELETE's 3.1 (SCALING.md round-13 table).  A matched target
+        # row can only live in a partition holding at least one source
+        # match, so ONE semi-join SCAN (aggregate-only — no checkpoint,
+        # no wide result) derives that partition set and prunes the
+        # probe's target scan to it; untouched partitions never enter
+        # the join, the checkpoint, or the rewrite frame.  The collect is
         # partition-value-sized (the _write_back contract).  The NOT
-        # MATCHED anti-join below stays equivalent against the pruned
+        # MATCHED side below stays equivalent against the pruned
         # frame: any source row's matches lie in probe_parts
         # partitions by construction.
         probe_parts = {
@@ -1936,10 +1944,8 @@ def _merge_apply_clauses(
         # wrapper blanked PartitionFilters, so the probe-pruned scan
         # still LISTED/READ every partition (round 15, VERDICT r14 #6)
         scan = tgt_df.where(_part_membership(h.part_col, probe_parts))
-    t = scan.withColumn(
-        "__tid", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=True)
-    joined = t.alias(talias).join(s, F.expr(tx(on_cond)), "left")
+    t = scan.withColumn("__tid", F.monotonically_increasing_id()).alias(talias)
+    joined = t.join(s, F.expr(tx(on_cond)), "left")
     matched_clauses = [c for c in clauses if c["kind"] in ("update", "delete")]
     insert_clauses = [c for c in clauses if c["kind"] == "insert"]
     # an UPDATE SET on the partition column would move rows between
@@ -1965,95 +1971,30 @@ def _merge_apply_clauses(
         if c["cond"]:
             cond = cond & F.expr(tx(c["cond"])).eqNullSafe(F.lit(True))
         act = F.when(cond, F.lit(i)).otherwise(act)
-    # ONE materialization of the join: the guard, the survivors, the
-    # delete count and the touched partitions all derive from this
-    # checkpoint instead of re-running the join per consumer (round-12
-    # review 2).
-    staged = joined.withColumn("__act", act).localCheckpoint(eager=True)
-    delete_ids = {
+    delete_ids = [
         i for i, c in enumerate(matched_clauses) if c["kind"] == "delete"
-    }
-    # ONE stats job over the staged checkpoint (r15 job consolidation):
-    # the multi-source-match guard, the deleted/updated row counts, and
-    # the touched target-side partition values previously ran as THREE
-    # separate driver-blocking actions (guard count, n_deleted count,
-    # and the write-back's touched-partition collect) — at statement
-    # granularity those sequential small jobs are most of the MERGE
-    # wall (measured sf0.1: the statement spent ~2.9 s across ~10
-    # blocking actions of ~0.25 s each).  A NULL touched partition
-    # value is carried by an explicit flag because collect_set drops
-    # NULLs (the round-12 null-partition contract).
-    is_del = (
-        F.col("__act").isin(*delete_ids) if delete_ids else F.lit(False)
-    )
-    is_upd = F.col("__act").isNotNull() & ~is_del
-    per_tid_aggs = [
-        F.count(F.when(F.col("__sm").isNotNull(), 1)).alias("__m"),
-        F.count(F.when(is_del, 1)).alias("__d"),
-        F.count(F.when(is_upd, 1)).alias("__u"),
     ]
-    if h.part_col is not None:
-        # touched partitions from the PRE-update value only — correct
-        # solely because UPDATE SET on the partition column is refused
-        # above (ADVICE r15: were that guard ever relaxed, rows moving
-        # between partitions would be written back to their OLD
-        # partition and silently lost; extend this to collect both
-        # old and new values before relaxing it)
-        per_tid_aggs.append(
-            F.first(F.expr(f"{talias}.{h.part_col}")).alias("__p")
-        )
-    top_aggs = [
-        F.max("__m").alias("__mx"),
-        F.sum("__d").alias("__nd"),
-        F.sum("__u").alias("__nu"),
-    ]
-    if h.part_col is not None:
-        hit = (F.col("__d") + F.col("__u")) > 0
-        top_aggs += [
-            F.collect_set(F.when(hit, F.col("__p"))).alias("__tp"),
-            F.max(
-                F.when(hit & F.col("__p").isNull(), 1).otherwise(0)
-            ).alias("__tpn"),
-        ]
-    stats = staged.groupBy("__tid").agg(*per_tid_aggs).agg(*top_aggs).collect()[0]
-    if (stats["__mx"] or 0) > 1:
-        raise ValueError(
-            "dml: MERGE failed — a target row matches more than one "
-            "source row (Trino's one-source-row rule); deduplicate the "
-            "source or tighten the ON condition"
-        )
-    n_deleted = int(stats["__nd"] or 0)
-    n_updated = int(stats["__nu"] or 0)
-    touched_vals: set | None = None
-    if h.part_col is not None:
-        touched_vals = set(stats["__tp"] or [])
-        if stats["__tpn"]:
-            touched_vals.add(None)
-    # surviving target rows with per-clause update CASEs applied
+    # every probed target row with the per-clause update CASEs applied,
+    # tagged: __tid (its row), __m (matched), __op (d/u, or NULL: kept)
     proj = []
     for col in tgt_cols:
         e = F.expr(f"{talias}.{col}")
         for i, c in enumerate(matched_clauses):
-            if c["kind"] != "update":
-                continue
-            rhs = dict(c["assigns"]).get(col.lower())
+            rhs = dict(c.get("assigns", ())).get(col.lower())
             if rhs is not None:
                 e = F.when(
                     F.col("__act") == i, F.expr(tx(rhs))
                 ).otherwise(e)
-        proj.append(e.cast(tgt_df.schema[col].dataType).alias(col))
-    survivors = staged.where(
-        F.col("__act").isNull()
-        | ~F.col("__act").isin(*delete_ids)
-        if delete_ids
-        else F.lit(True)
-    ).select(*proj, F.col("__act").isNotNull().alias("__touched"))
-    # NOT MATCHED inserts: source rows with no target match
-    inserts = None
+        proj.append(e.cast(typ[col]).alias(col))
+    op = F.when(F.col("__act").isin(*delete_ids), "d").when(
+        F.col("__act").isNotNull(), "u"
+    )
+    staged = joined.withColumn("__act", act).select(
+        *proj, "__tid", F.col("__sm").alias("__m"), op.alias("__op")
+    )
     if insert_clauses:
-        unmatched = src_df.alias(salias).join(
-            t.alias(talias), F.expr(tx(on_cond)), "left_anti"
-        )
+        # NOT MATCHED inserts: source rows with no target match, each
+        # valued by its first satisfied INSERT clause
         iact = F.lit(None).cast("int")
         for i in reversed(range(len(insert_clauses))):
             c = insert_clauses[i]
@@ -2063,10 +2004,7 @@ def _merge_apply_clauses(
                 else F.lit(True)
             )
             iact = F.when(cond, F.lit(i)).otherwise(iact)
-        tagged = unmatched.withColumn("__iact", iact).where(
-            F.col("__iact").isNotNull()
-        )
-        frames = []
+        sel = {c: F.lit(None).cast(typ[c]) for c in tgt_cols}
         for i, c in enumerate(insert_clauses):
             cols = c["cols"] or [x.lower() for x in tgt_cols]
             if len(cols) != len(c["vals"]):
@@ -2080,63 +2018,77 @@ def _merge_apply_clauses(
                     f"dml: MERGE INSERT column(s) {sorted(unknown)} not "
                     f"in {name}"
                 )
-            sel = [
-                (
-                    F.expr(tx(vmap[col.lower()]))
-                    if col.lower() in vmap
-                    else F.lit(None)
-                )
-                .cast(tgt_df.schema[col].dataType)
-                .alias(col)
-                for col in tgt_cols
-            ]
-            frames.append(
-                tagged.where(F.col("__iact") == i).select(
-                    *sel, F.lit(True).alias("__touched")
-                )
+            for col in tgt_cols:
+                if col.lower() in vmap:
+                    sel[col] = F.when(
+                        F.col("__iact") == i,
+                        F.expr(tx(vmap[col.lower()])).cast(typ[col]),
+                    ).otherwise(sel[col])
+        # the source side of an outer join rather than a left_anti
+        # join, which the optimizer would copy into each branch of a
+        # UNION ALL source, one broadcast of the target per branch; the
+        # re-aliased source columns resolve the INSERT expressions
+        inserts = (
+            t.join(src_df.alias(salias), F.expr(tx(on_cond)), "right")
+            .where(F.col("__tid").isNull())
+            .select(f"{salias}.*")
+            .alias(salias)
+            .withColumn("__iact", iact)
+            .where(F.col("__iact").isNotNull())
+            .select(
+                *[e.alias(col) for col, e in sel.items()],
+                F.lit(None).cast("bigint").alias("__tid"),
+                F.lit(None).cast("int").alias("__m"),
+                F.lit("i").alias("__op"),
             )
-        inserts = frames[0]
-        for fr in frames[1:]:
-            inserts = inserts.unionByName(fr)
-    final_tagged = (
-        survivors.unionByName(inserts) if inserts is not None else survivors
+        )
+        staged = staged.unionByName(inserts)
+    # ONE materialization holds the matched and the inserted rows; one
+    # aggregate over it yields the multi-source-match guard, the
+    # deleted/updated/inserted counts and the touched partitions of
+    # both sides, and the write reads only it, so each join runs once.
+    # Partition values are the pre-update ones, correct solely because
+    # UPDATE SET on the partition column is refused above.  A NULL
+    # touched partition is carried by an explicit flag because
+    # collect_set drops NULLs (the round-12 null-partition contract).
+    staged = staged.localCheckpoint(eager=True)
+    pcol = [h.part_col] if h.part_col is not None else []
+    per = staged.groupBy("__tid", *pcol).agg(
+        F.count("__m").alias("__m"),
+        *[F.count(F.when(F.col("__op") == k, 1)).alias(k) for k in "dui"],
     )
-    final = final_tagged.select(*tgt_cols)
-    # insert-side stats in ONE job (r15 consolidation): the per-
-    # partition counts give the inserted-row total AND the insert
-    # partition values the write-back and the probe-prune escape both
-    # need — previously a distinct-collect and a separate n_touched
-    # count.  groupBy keeps a NULL partition value as a group key.
-    n_inserted = 0
-    ins_parts: set = set()
-    if inserts is not None:
-        if h.part_col is not None:
-            rows = (
-                inserts.groupBy(h.part_col)
-                .agg(F.count("*").alias("__c"))
-                .collect()
-            )
-            n_inserted = sum(r["__c"] for r in rows)
-            ins_parts = {r[0] for r in rows}
-        else:
-            n_inserted = inserts.count()
-    if probe_parts is not None and inserts is not None:
+    top = [F.max("__m"), F.sum("d"), F.sum("u"), F.sum("i")]
+    if pcol:
+        hit = (F.col("d") + F.col("u") + F.col("i")) > 0
+        p = F.col(h.part_col)
+        top += [
+            F.collect_set(F.when(hit, p)),
+            F.max(F.when(hit & p.isNull(), 1).otherwise(0)),
+        ]
+    stats = per.agg(*top).collect()[0]
+    if (stats[0] or 0) > 1:
+        raise ValueError(
+            "dml: MERGE failed — a target row matches more than one "
+            "source row (Trino's one-source-row rule); deduplicate the "
+            "source or tighten the ON condition"
+        )
+    n_changed = sum(int(x or 0) for x in stats[1:4])
+    final = staged.where(~F.col("__op").eqNullSafe("d")).select(*tgt_cols)
+    touched_vals: set | None = None
+    if pcol:
+        touched_vals = set(stats[4] or []) | ({None} if stats[5] else set())
         # INSERT rows may land in partitions the probe pruned OUT
         # (their partition value comes from the INSERT expressions,
         # not the ON condition); those partitions will be rewritten —
         # their surviving rows must re-enter the rewrite frame or the
         # new version would drop them.
-        extra = ins_parts - probe_parts
+        extra = touched_vals - probe_parts
         if extra:
-            from sparketl.operators.etl import _part_membership
-
             # bare membership: prunable, and WHERE(NULL) == WHERE(false)
             keep = tgt_df.where(_part_membership(h.part_col, extra))
             final = final.unionByName(keep.select(*tgt_cols))
-    if touched_vals is not None:
-        touched_vals |= ins_parts
     _write_back(spark, name, h, final, touched_vals)
-    return _rows_frame(spark, n_updated + n_inserted + n_deleted)
+    return _rows_frame(spark, n_changed)
 
 
 # ---------------------------------------------------------------------------
@@ -2478,8 +2430,8 @@ def _columns_frame(spark: SparkSession, name: str) -> DataFrame:
         t = _SPARK_TO_TRINO_TYPE.get(s, s)
         extra = "partition key" if f.name.lower() == part else ""
         rows.append((f.name, t, extra, ""))
-    return spark.createDataFrame(
-        rows, "column string, type string, extra string, comment string"
+    return local_frame(
+        spark, rows, "column string, type string, extra string, comment string"
     )
 
 
@@ -2489,7 +2441,7 @@ def _show(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         # databases, Trino's one-column result shape
         with CATALOG_LOCK:
             names = sorted(d.name.lower() for d in spark.catalog.listDatabases())
-        return spark.createDataFrame([(n,) for n in names], "schema string")
+        return local_frame(spark, [(n,) for n in names], "schema string")
     tm = re.match(
         rf"^show\s+tables(?:\s+(?:from|in)\s+({_QIDENT}))?\s*$",
         masked,
@@ -2515,17 +2467,13 @@ def _show(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                     for n in reg
                     if n.startswith(f"{sch}.")
                 )
-            return spark.createDataFrame(
-                [(n,) for n in names], "table string"
-            )
+            return local_frame(spark, [(n,) for n in names], "table string")
         # under CATALOG_LOCK: the same mid-mutation listing race the
         # schema classing had (ADVICE r12 — SHOW TABLES lacked even
         # the old retry)
         with CATALOG_LOCK:
             names = sorted(t.name for t in spark.catalog.listTables())
-        return spark.createDataFrame(
-            [(n,) for n in names], "table string"
-        )
+        return local_frame(spark, [(n,) for n in names], "table string")
     m = re.match(
         rf"^show\s+columns\s+from\s+({_QIDENT})\s*$", masked, re.IGNORECASE
     )
@@ -2580,7 +2528,7 @@ def _show_create(spark: SparkSession, kind: str, name: str) -> DataFrame:
                 "\n-- reconstructed from the pinned schema (table was "
                 "created with CREATE TABLE ... AS <query>)"
             )
-    return spark.createDataFrame([(stmt,)], "create_statement string")
+    return local_frame(spark, [(stmt,)], "create_statement string")
 
 
 def _describe(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
@@ -2628,7 +2576,8 @@ def _describe_prepared(
     pmasked, plits = _mask(stmt)
     slots = [i for i, c in enumerate(pmasked) if c == "?"]
     if kind == "input":
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(i, "unknown") for i in range(len(slots))],
             "position int, type string",
         )
@@ -2637,8 +2586,8 @@ def _describe_prepared(
         "table string, type string, type_size int, aliased boolean"
     )
     if is_dml(stmt):
-        return spark.createDataFrame(
-            [("rows", "sparketl", "", "", "bigint", 0, True)], out_schema
+        return local_frame(
+            spark, [("rows", "sparketl", "", "", "bigint", 0, True)], out_schema
         )
     for i in reversed(slots):
         pmasked = f"{pmasked[:i]}(null){pmasked[i + 1:]}"
@@ -2650,7 +2599,7 @@ def _describe_prepared(
         if t == "void":
             t = "unknown"
         rows.append((f.name, "sparketl", "", "", t, 0, True))
-    return spark.createDataFrame(rows, out_schema)
+    return local_frame(spark, rows, out_schema)
 
 
 # ---------------------------------------------------------------------------

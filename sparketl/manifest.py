@@ -255,6 +255,11 @@ def _footer_rows(path: str) -> int:
     return sum(pq.read_metadata(p).num_rows for p in _data_files(path))
 
 
+def rows(v: Version) -> int:
+    """The row count of ``v``, from the footers of its live files."""
+    return sum(_footer_rows(_path(v, d)) for d in v.dirs)
+
+
 def create(
     spark: SparkSession, root: str, df: DataFrame | None,
     part_col: str | None, schema: StructType,

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparketl.registry import query
+from sparketl.session import local_frame
 from sparketl.tables import table
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -288,7 +289,8 @@ def stream_static_enrich(spark, sf_dir):
     broadcast — on a real stream this is a map-side join per
     micro-batch, no shuffle of the stream."""
     ev = table(spark, sf_dir, "events")
-    dim = ev.sparkSession.createDataFrame(
+    dim = local_frame(
+        ev.sparkSession,
         [
             ("click", "engagement"),
             ("view", "engagement"),

@@ -33,7 +33,7 @@ from sparketl.operators.llm_common import (  # noqa: F401
     _scan_bytes
 )
 from sparketl.registry import query
-from sparketl.session import memo
+from sparketl.session import local_frame, memo
 from sparketl.tables import table
 
 
@@ -617,9 +617,9 @@ def _cens_expr(cens) -> str:
 
 
 def _cen_frame(spark, cens):
-    """The codebook as a (c_label, cvec) LOCAL relation — for consumers
-    that need it as a joinable frame (broadcast of a LocalTableScan:
-    no corpus scan, no aggregation job)."""
+    """The codebook as a (c_label, cvec) local relation built from
+    Arrow (``local_frame``) — for consumers that need it as a joinable
+    frame (broadcast of a LocalTableScan: no corpus scan, no job)."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -634,7 +634,7 @@ def _cen_frame(spark, cens):
             StructField("cvec", ArrayType(DoubleType(), False), False),
         ]
     )
-    return spark.createDataFrame(list(cens), schema)
+    return local_frame(spark, cens, schema)
 
 
 @query(

@@ -95,6 +95,22 @@ def reset(spark: SparkSession) -> None:
                 v.unpersist()
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order; a DDL string or StructType)
+    as a LocalRelation built from an Arrow table on the driver: collecting
+    it runs no Spark job and starts no Python worker, with or without
+    ``spark.sql.execution.arrow.pyspark.enabled``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.table([list(c) for c in cols], schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 #: Runtime-settable confs applied to ANY session this engine touches.
 SESSION_CONFS: dict[str, str] = {
     "spark.sql.ansi.enabled": "true",

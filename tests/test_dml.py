@@ -498,6 +498,179 @@ def test_merge_probe_prune_insert_into_pruned_partition(spark, wh):
     assert got[(4, None)] == -1.0
 
 
+def _jobs(spark, fn):
+    """``fn()``'s result and the Spark jobs it ran, counted in a job
+    group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the bus
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dml_job_budget(spark, wh):
+    """Spark jobs per statement on a partitioned table: the result frame
+    is a local relation (collecting it runs none), INSERT writes in one
+    job, UPDATE/DELETE add the count-and-partitions aggregate, MERGE
+    stages its matched and inserted rows once, and a whole-table DELETE
+    counts from the parquet footers."""
+    dialect.sql(
+        spark,
+        "create table t_jb with (partitioned_by = array['g']) as "
+        "select k, g, v from dml_fx",
+    )
+    budget = [
+        ("insert into t_jb values (6, 'a', 60.0), (7, 'b', 70.0)", 2, 1),
+        ("update t_jb set v = v + 1 where g = 'a'", 3, 3),
+        ("delete from t_jb where g = 'b' and k = 2", 1, 3),
+        (
+            "merge into t_jb as t using (select 1 as sk, 5.0 as sv "
+            "union all select 8, 8.0) as s on t.k = s.sk "
+            "when matched then update set v = s.sv "
+            "when not matched then insert (k, g, v) values (s.sk, 'c', s.sv)",
+            2,
+            10,
+        ),
+    ]
+    for stmt, rows, jobs in budget:
+        res, n = _jobs(spark, lambda: dialect.sql(spark, stmt))
+        got, m = _jobs(spark, res.collect)
+        assert (got[0][0], m) == (rows, 0), stmt
+        if stmt.startswith("merge"):
+            assert n <= jobs, stmt
+        else:
+            assert n == jobs, stmt
+    res, n = _jobs(spark, lambda: dialect.sql(spark, "delete from t_jb"))
+    assert (res.collect()[0][0], n) == (7, 0)
+    assert _state(spark, "t_jb") == []
+
+
+def test_local_frame_without_arrow_conf(spark, wh):
+    """``session.local_frame`` does not depend on the arrow conf: with it
+    off, the codebook keeps its declared types and non-null fields, an
+    empty SHOW TABLES keeps its schema, and EXPLAIN ANALYZE text with
+    quotes, backslashes and newlines comes back byte for byte as the
+    list path gives it; collecting any of them runs no job."""
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        StructField,
+        StructType,
+    )
+
+    from sparketl.operators.llm_ann import _cen_frame
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        cens = [(0, [0.5, -1.25]), (1, [2.0, 1e-300])]
+        cb = _cen_frame(spark, cens)
+        assert cb.schema == StructType(
+            [
+                StructField("c_label", IntegerType(), False),
+                StructField("cvec", ArrayType(DoubleType(), False), False),
+            ]
+        )
+        got, n = _jobs(spark, cb.collect)
+        assert ([tuple(r) for r in got], n) == (cens, 0)
+        dialect.sql(spark, "create schema lf_empty")
+        res = dialect.sql(spark, "show tables from lf_empty")
+        got, n = _jobs(spark, res.collect)
+        assert (res.schema.simpleString(), got, n) == (
+            "struct<table:string>", [], 0
+        )
+        res = dialect.sql(
+            spark, "explain analyze select k from dml_fx where g <> 'b'"
+        )
+        (text,), n = _jobs(spark, lambda: res.collect()[0])
+        assert n == 0 and "\n" in text
+        text += "\n-- it's \"q\" \\ C:\\tmp\\n \\\\ \t é\r\n"
+        listed = spark.createDataFrame([(text,)], "query_plan string")
+        local = session.local_frame(spark, [(text,)], "query_plan string")
+        assert local.schema == listed.schema == res.schema
+        assert local.collect()[0][0] == listed.collect()[0][0] == text
+    finally:
+        spark.conf.set(key, old)
+        dialect.sql(spark, "drop schema if exists lf_empty")
+
+
+def test_merge_partition_edges_match_duckdb(spark, wh):
+    """MERGE on a partitioned target against DuckDB applying the same
+    change as its DELETE/UPDATE + INSERT (DuckDB 1.0 has no MERGE):
+    INSERT rows landing in partitions the probe pruned out (an existing
+    one, and the NULL partition) keep those partitions' rows; a
+    NULL-partition match is deleted while an insert lands in a pruned
+    partition; a source that matches one target row twice raises and
+    leaves the table at its version."""
+    import duckdb
+
+    dialect.sql(
+        spark,
+        "create table t_me with (partitioned_by = array['g']) as "
+        "select k, g, v from dml_fx",
+    )
+    con = duckdb.connect()
+    con.sql(
+        "create table t_me as select * from (values "
+        "(1, 'a', cast(10.0 as double)), (2, 'b', 20.0), (3, 'a', 30.0), "
+        "(4, cast(null as varchar), 40.0), (5, 'c', 50.0)) t(k, g, v)"
+    )
+
+    def both(src, clauses, duck):
+        n = dialect.sql(
+            spark,
+            f"merge into t_me as t using ({src}) as s on t.k = s.sk "
+            + clauses,
+        ).collect()[0][0]
+        con.sql(
+            "create or replace temp table ins as select s.sk, s.sg, s.sv "
+            f"from ({src}) s where not exists "
+            "(select 1 from t_me where t_me.k = s.sk)"
+        )
+        changed = con.execute(duck.format(src=src)).fetchone()[0]
+        changed += con.execute("insert into t_me select * from ins").fetchone()[0]
+        want = sorted(con.sql("select * from t_me").fetchall())
+        assert (n, _state(spark, "t_me")) == (changed, want)
+
+    # matches only in 'a'; inserts into 'b' and the NULL partition,
+    # both pruned out of the probe, and into a new partition 'd'
+    both(
+        "select 1 as sk, cast(null as varchar) as sg, 1.5 as sv "
+        "union all select 20, 'b', 2.5 union all select 21, null, 3.5 "
+        "union all select 22, 'd', 4.5",
+        "when matched then update set v = t.v + s.sv "
+        "when not matched then insert (k, g, v) values (s.sk, s.sg, s.sv)",
+        "update t_me set v = t_me.v + s.sv from ({src}) s "
+        "where t_me.k = s.sk",
+    )
+    # the NULL partition's match is deleted; the insert lands in 'c'
+    both(
+        "select 4 as sk, 'x' as sg, 0.0 as sv union all select 30, 'c', 9.0",
+        "when matched then delete "
+        "when not matched then insert (k, g, v) values (s.sk, s.sg, s.sv)",
+        "delete from t_me where k in (select sk from ({src}))",
+    )
+    path = dml.table_path(spark, "t_me")
+    before = (manifest.load(path), _state(spark, "t_me"))
+    with pytest.raises(ValueError, match="more than one source row"):
+        dialect.sql(
+            spark,
+            "merge into t_me as t using (select 1 as sk, 1.0 as sv "
+            "union all select 1, 2.0 union all select 40, 3.0) as s "
+            "on t.k = s.sk when matched then update set v = s.sv "
+            "when not matched then insert (k, g, v) values (s.sk, 'a', s.sv)",
+        )
+    assert (manifest.load(path), _state(spark, "t_me")) == before
+
+
 def test_delete_update_zero_match_is_noop(spark, wh):
     dialect.sql(spark, "create table t_zm as select k, g from dml_fx")
     path = dml.table_path(spark, "t_zm")
