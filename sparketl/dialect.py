@@ -4316,19 +4316,28 @@ def _catalog_column_classes(spark: SparkSession) -> dict[str, str]:
                     ),
                 )
             except Exception as e:  # noqa: BLE001 - narrowed below
-                # An entry that VANISHED between the name listing and
-                # the read (an unlocked external thread's DROP/RENAME)
-                # is equivalent to never having been listed: skip it;
-                # a statement that still references it fails loudly in
-                # Spark's own analysis.  Anything else (a BROKEN but
-                # extant view) keeps raising — it must not silently
+                # A SQL view re-analyzes its body on every read, so one
+                # whose base was dropped or reshaped fails to read; its
+                # columns stay pinned in the catalog, which lists them
+                # without analysis — a broken view must not silently
                 # drop a schema that would have forced 'ambig'
-                # (round-11 review).
-                if "TABLE_OR_VIEW_NOT_FOUND" in str(
-                    e
-                ) or "PARSE_EMPTY_STATEMENT" in str(e):
-                    continue
-                raise
+                # (round-11 review).  An entry that VANISHED between
+                # the name listing and the read (an unlocked external
+                # thread's DROP/RENAME) is equivalent to never having
+                # been listed: skip it; a statement that still
+                # references it fails loudly in Spark's own analysis.
+                try:
+                    cols = spark.catalog.listColumns(name)
+                except Exception:  # noqa: BLE001 - classified below
+                    if "TABLE_OR_VIEW_NOT_FOUND" in str(
+                        e
+                    ) or "PARSE_EMPTY_STATEMENT" in str(e):
+                        continue
+                    raise e from None
+                fcache[name] = (
+                    "probe",
+                    tuple((c.name, c.dataType) for c in cols),
+                )
         # names dropped OUTSIDE the engine must not linger
         for stale in set(fcache) - set(names):
             del fcache[stale]
@@ -4931,8 +4940,9 @@ def sql(spark: SparkSession, presto_sql: str) -> DataFrame:
     copy-on-write); ``EXPLAIN <query>`` returns Spark's FORMATTED plan
     for the translated query, and ``EXPLAIN ANALYZE <query>`` (round
     14) EXECUTES it and returns the final adaptive plan annotated with
-    per-operator runtime metrics (`_explain_analyze`; DML statements
-    still refuse — they run without one Spark plan to annotate).
+    per-operator runtime metrics (`_explain_analyze`; a DML statement
+    has no one Spark plan to annotate, so it executes and reports its
+    write-side metrics instead — `sparketl.dml.explain_analyze`).
 
     Schema note: the integer-division resolver reads the catalog
     schemas once per (session, view-name set) — the engine's own

@@ -39,19 +39,24 @@ then current-schema (Spark's analyzer order, kept identical between
 the DML route and the SELECT route — see ``_use``).  ``DROP SCHEMA``
 is RESTRICT by default (Trino SCHEMA_NOT_EMPTY) with CASCADE routed
 through the engine's own DROP TABLE/VIEW paths.  ``CREATE VIEW s.v``
-creates a real Spark CATALOG view (re-analyzed per read, so it tracks
-later DML natively); its body may reference only catalog objects —
-the flat namespace is session temp views, which a catalog view cannot
-capture — and its dependent tracking is lazy (a base drop breaks it
-at next read, Trino's own behavior), both stated at
-``_create_catalog_view``.
+creates a Spark CATALOG view; its body may reference only catalog
+objects — the flat namespace is session temp views, which a catalog
+view cannot capture — and its dependent tracking is lazy (a base drop
+breaks it at next read, Trino's own behavior).
 
-``CREATE [OR REPLACE] VIEW`` stores the body TEXT and re-translates it
-after every table mutation (Spark temp views pin an analyzed plan, so
-a view registered once would keep serving pre-INSERT file listings) —
-the logical-view contract a catalog gives.  DROP of a table or view
-with dependent views refuses loudly rather than leaving the dependents
-broken; CREATE MATERIALIZED VIEW refuses with a pointer to CTAS.
+``CREATE [OR REPLACE] VIEW`` translates the body once and creates a
+Spark SQL view from it: a TEMPORARY view for a flat name, a catalog
+view for a qualified one (``_create_view``).  Spark stores the view's
+SQL text and resolves its references by name on every read — the
+Presto view model — so a view shows every later INSERT, ``load_tables``
+re-point or replaced base view, and no DML statement touches a view
+body.  Its output columns are pinned at creation (Trino's semantics):
+a base that gains a column does not grow a ``select *`` view, and a
+base that loses or retypes a column the view reads fails the view at
+its next read.  DROP TABLE/VIEW, ALTER TABLE RENAME TO / DROP COLUMN
+/ RENAME COLUMN and ALTER VIEW RENAME refuse loudly while a FLAT view
+names the object; CREATE MATERIALIZED VIEW refuses with a pointer to
+CTAS.
 
 Semantics notes (each pinned by tests / the declared-face oracles):
 - ``DELETE ... WHERE p`` removes rows where ``p`` IS TRUE — rows where
@@ -160,16 +165,10 @@ class _Handle:
 #: (``sparketl.session.state``):
 #:
 #: * ``dml_tables``: name -> _Handle of every writable table.
-#: * ``dml_views``: flat view name -> ORIGINAL Presto query text.  Text,
-#:   not a DataFrame, so every re-registration re-runs the dialect
-#:   translation against the CURRENT table state — a DataFrame captured
-#:   at CREATE VIEW time would pin the file listing of the tables
-#:   underneath it and silently miss later DML.
-#: * ``dml_qviews`` (round 14): schema-QUALIFIED view "s.v" -> ORIGINAL
-#:   Presto body text, for SHOW CREATE round-trips.  The executable
-#:   definition lives in the Spark catalog (a real catalog view over the
-#:   schema's external tables — re-analyzed on every read, so it tracks
-#:   later DML without the flat views' re-registration fixpoint).
+#: * ``dml_views``: canonical view name (flat ``v`` or qualified
+#:   ``s.v``) -> ORIGINAL Presto body text, for SHOW CREATE, ALTER VIEW
+#:   RENAME and the dependents scan.  The executable definition is the
+#:   Spark view itself (its translated SQL text, re-analyzed per read).
 #: * ``dml_prepared``: prepared statement name -> ORIGINAL statement text.
 #: * ``dml_base_dir``: ``{"path": ...}``, set by set_base_dir.
 
@@ -196,126 +195,17 @@ def table_path(spark: SparkSession, name: str) -> str:
 
 
 def _view_dependents(spark: SparkSession, name: str) -> list[str]:
-    """Views whose body mentions ``name`` as a bare word (scanned on
-    the MASKED text so string literals don't count).  Word-level
+    """FLAT views whose body mentions ``name`` as a bare word (scanned
+    on the MASKED text so string literals don't count).  Word-level
     over-collection (a column spelled like the table) is accepted:
     refusing a DROP loudly beats letting the view break at its next
-    re-registration."""
+    read.  Qualified views are lazy dependents (``_create_view``)."""
     pat = re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE)
     return sorted(
         v
         for v, q in state(spark, "dml_views").items()
-        if v != name and pat.search(_mask(q)[0])
+        if v != name and "." not in v and pat.search(_mask(q)[0])
     )
-
-
-def _transitive_dependents(spark: SparkSession, name: str) -> list[str]:
-    """Views that (directly or through other views) reference ``name``
-    — the set a mutation of ``name`` must re-register.  Discovery is a
-    FIXPOINT, not a single creation-order pass: CREATE OR REPLACE can
-    make an earlier-created view depend on a later one (round-12
-    second review), so a one-directional walk would miss dependents.
-    Order is not meaningful here; _refresh_order sorts topologically."""
-    views = list(state(spark, "dml_views").items())
-    bodies = {v: _mask(q)[0] for v, q in views}
-    hit = {name}
-    changed = True
-    while changed:
-        changed = False
-        for v, mq in bodies.items():
-            if v not in hit and any(
-                re.search(rf"\b{re.escape(h)}\b", mq, re.IGNORECASE)
-                for h in hit
-            ):
-                hit.add(v)
-                changed = True
-    return [v for v in bodies if v in hit]
-
-
-def _refresh_order(views: dict[str, str], todo: list[str]) -> list[str]:
-    """Topological refresh order over ``todo`` — bases before the
-    views that mention them, so each re-analysis sees its dependencies'
-    FRESH registrations regardless of creation order (CREATE OR
-    REPLACE can invert it).  A cycle (only creatable via replace swaps
-    that individually analyze fine) raises loudly."""
-    deps: dict[str, set] = {}
-    for v in todo:
-        mq = _mask(views[v])[0]
-        deps[v] = {
-            o
-            for o in todo
-            if o != v and re.search(rf"\b{re.escape(o)}\b", mq, re.IGNORECASE)
-        }
-    out: list[str] = []
-    while deps:
-        ready = sorted(v for v, d in deps.items() if not d)
-        if not ready:
-            raise ValueError(
-                "dml: cyclic view definitions detected among "
-                + ", ".join(sorted(deps))
-                + " — DROP VIEW one of them to break the cycle"
-            )
-        for v in ready:
-            out.append(v)
-            deps.pop(v)
-        for d in deps.values():
-            d.difference_update(ready)
-    return out
-
-
-def _refresh_views(spark: SparkSession, changed: str) -> None:
-    """Re-register the logical views a mutation of ``changed``
-    invalidates, bases first.  Spark temp views hold an ANALYZED plan,
-    so a view registered before an INSERT would keep serving the old
-    file listing without this; narrowing to the transitive dependents
-    keeps a DML statement from paying N re-translations for N
-    unrelated views (round-12 review).
-
-    A view that no longer ANALYZES (its base changed shape underneath
-    it — reachable despite the ALTER/DROP dependency refusals, e.g.
-    via register_table swapping a schema) is DROPPED from the catalog
-    and reported in one loud error, rather than wedging every later
-    DML statement on unrelated tables.  Only analysis-class failures
-    drop the definition — a transient execution/gateway error re-raises
-    with the stored definition intact (round-12 second review)."""
-    views = state(spark, "dml_views")
-    if not views:
-        return
-    todo = _transitive_dependents(spark, changed)
-    if not todo:
-        return
-    broken: list[tuple[str, str]] = []
-    for vname in _refresh_order(dict(views), todo):
-        vq = views.get(vname)
-        if vq is None:
-            continue  # concurrently dropped
-        try:
-            vdf = _d.sql(spark, vq)
-            with CATALOG_LOCK:
-                vdf.createOrReplaceTempView(vname)
-            _unpin_if_fixture(spark, vname)
-            _d.update_schema_cache(spark, vname, vdf.schema)
-        except Exception as e:  # noqa: BLE001 - classified below
-            from pyspark.errors import AnalysisException
-
-            if not isinstance(e, (AnalysisException, ValueError)):
-                raise
-            broken.append((vname, str(e).split("\n", 1)[0][:200]))
-            views.pop(vname, None)
-            try:
-                with CATALOG_LOCK:
-                    spark.catalog.dropTempView(vname)
-            except Exception:  # noqa: BLE001 - already gone
-                pass
-            _d.clear_schema_cache(vname)
-    if broken:
-        raise ValueError(
-            "dml: the statement's mutation itself COMMITTED (rows are "
-            "written — do NOT retry it), but view(s) no longer analyze "
-            "against the mutated base and were DROPPED: "
-            + "; ".join(f"'{v}' ({err})" for v, err in broken)
-            + " — recreate them with CREATE VIEW against the new shape"
-        )
 
 
 def _resolve(spark: SparkSession, name: str) -> _Handle:
@@ -348,7 +238,6 @@ def _refresh(spark: SparkSession, name: str) -> None:
     h = state(spark, "dml_tables")[name]
     if "." in name:
         _refresh_catalog_table(spark, name, h)
-        _refresh_views(spark, changed=name)
         return
     df = _m.read(spark, h.v)
     with CATALOG_LOCK:
@@ -358,7 +247,6 @@ def _refresh(spark: SparkSession, name: str) -> None:
     # (no version counter) — push the fresh schema explicitly, as
     # documented at sql()
     _d.update_schema_cache(spark, name, df.schema)
-    _refresh_views(spark, changed=name)
 
 
 def _qparts(name: str) -> tuple[str, str]:
@@ -896,39 +784,45 @@ _VIEW_RE = re.compile(
 )
 
 
-def _create_catalog_view(
-    spark: SparkSession, name: str, or_replace: bool, query: str
-) -> DataFrame:
-    """CREATE [OR REPLACE] VIEW <schema>.<v> (round 14): a real Spark
-    catalog view.  The TRANSLATED body is stored in the in-memory
-    catalog and RE-ANALYZED on every read, so the view tracks later
-    DML like the flat logical views do — without the re-registration
-    fixpoint, because the catalog does it natively.
+def _define_view(
+    spark: SparkSession, name: str, query: str, or_replace: bool
+) -> None:
+    """CREATE [OR REPLACE] a Spark SQL view ``name`` over the Presto
+    ``query``, translated once here (its `/` classing included): a
+    TEMPORARY view for a flat name, a catalog view for a qualified one.
+    Spark analyzes the body now, so a typo fails at CREATE VIEW (Trino
+    validates at creation), and again on every read, so the view
+    resolves its bases by name each time.  A self-reference or a cycle
+    through other views raises Spark's RECURSIVE_VIEW here.
 
-    Two documented divergences from the flat-view contract:
-    - the body may reference only CATALOG objects (schema-qualified
-      tables / other catalog views) — Spark refuses a permanent view
-      over a TEMP view, which is the entire flat namespace; the
-      refusal is re-raised with that guidance;
-    - dependent tracking is LAZY (a base drop breaks the view at its
-      next read — Trino's own behavior), not the flat views' eager
-      refusal.
-    The dialect translation (and its `/` classing) is applied ONCE at
-    creation; the stored text is Spark SQL."""
-    if is_dml(query):
-        raise ValueError("dml: a view body must be a SELECT-shaped query")
-    translated = _d.translate(
-        query, schema=_d._catalog_column_classes(spark)
-    )
+    A qualified view's body may reference only CATALOG objects: Spark
+    refuses a permanent view over a TEMP view, which the entire flat
+    namespace is, and the refusal is re-raised with that guidance."""
+    flat = "." not in name
+    target = f"temporary view `{name}`" if flat else f"view {_qident_sql(name)}"
+    translated = _d.translate(query, schema=_d._catalog_column_classes(spark))
     rep = "or replace " if or_replace else ""
     try:
         with CATALOG_LOCK:
-            spark.sql(
-                f"create {rep}view {_qident_sql(name)} as {translated}"
-            )
+            spark.sql(f"create {rep}{target} as {translated}")
     except Exception as e:  # noqa: BLE001 - narrowed below
         msg = str(e)
-        if "INVALID_TEMP_OBJ_REFERENCE" in msg or "temporary" in msg:
+        if "RECURSIVE_VIEW" in msg:
+            # Spark names the loop as "(cycle: `v` -> `w` -> `v`)"
+            cycle = msg.split("cycle:", 1)[-1].split(")", 1)[0].strip()
+            if len({hop.strip() for hop in cycle.split("->")}) == 1:
+                raise ValueError(
+                    f"dml: view '{name}' references itself — recursive "
+                    "views are not supported; SELECT from the base "
+                    "table instead"
+                ) from e
+            raise ValueError(
+                f"dml: cyclic view definitions detected ({cycle}) — "
+                "DROP VIEW one of them to break the cycle"
+            ) from e
+        if not flat and (
+            "INVALID_TEMP_OBJ_REFERENCE" in msg or "temporary" in msg
+        ):
             raise ValueError(
                 f"dml: CREATE VIEW {name} — a schema-qualified view "
                 "can only reference schema-qualified tables/views "
@@ -942,82 +836,39 @@ def _create_catalog_view(
                 "REPLACE VIEW"
             ) from e
         raise
-    state(spark, "dml_qviews")[name] = query
-    return _rows_frame(spark, 0)
+    if flat:
+        _d.update_schema_cache(spark, name, spark.table(f"`{name}`").schema)
 
 
 def _create_view(
     spark: SparkSession, m: "re.Match", masked: str, lits: list[str]
 ) -> DataFrame:
-    """Trino CREATE [OR REPLACE] VIEW — a LOGICAL view: the body text
-    is stored and re-translated against the current table state after
-    every mutation (_refresh_views), so the view always reflects the
-    latest DML, exactly as a catalog view would.  Validation is eager
-    (Trino validates the body at creation): the body is analyzed once
-    here, so a typo fails at CREATE VIEW, not first use."""
+    """Trino CREATE [OR REPLACE] VIEW through ``_define_view``.  A flat
+    view may not shadow a table or a fixture view.  Its bases refuse
+    DROP and the ALTERs that would break it while it exists
+    (``_view_dependents``); a qualified view's dependents are LAZY — a
+    base drop breaks it at its next read, Trino's own behavior."""
     or_replace = m.group(1) is not None
     name = _canon(spark, m.group(2))
     query = _unmask_raw(masked[m.end() :], lits).strip()
-    if "." in name:
-        return _create_catalog_view(spark, name, or_replace, query)
     if is_dml(query):
         raise ValueError("dml: a view body must be a SELECT-shaped query")
     views = state(spark, "dml_views")
-    if name in state(spark, "dml_tables"):
-        raise ValueError(
-            f"dml: '{name}' is a table — a view cannot shadow it; "
-            "DROP TABLE first or pick another name"
-        )
-    if name not in views and spark.catalog.tableExists(name):
-        raise ValueError(
-            f"dml: '{name}' already exists as a fixture view/table "
-            "outside the DML catalog — shadowing it is refused; pick "
-            "another name"
-        )
-    if name in views and not or_replace:
-        raise ValueError(
-            f"dml: view '{name}' already exists — use CREATE OR "
-            "REPLACE VIEW"
-        )
-    if name in views:
-        # self-reference check, EXACTLY: analyze the new body with the
-        # OLD registration temporarily dropped — a body selecting from
-        # the view itself fails with not-found on this very name
-        # (word-level matching false-refused a same-named output alias
-        # or column; round-12 second review).  A self-referencing
-        # replace accepted here would silently re-compose over its
-        # previous self on every refresh, compounding per mutation.
-        with CATALOG_LOCK:
-            spark.catalog.dropTempView(name)
-        try:
-            _d.sql(spark, query)
-        except Exception as e:  # noqa: BLE001 - restore, classify below
-            old_df = _d.sql(spark, views[name])
-            with CATALOG_LOCK:
-                old_df.createOrReplaceTempView(name)
-            _d.update_schema_cache(spark, name, old_df.schema)
-            msg = str(e)
-            if "TABLE_OR_VIEW_NOT_FOUND" in msg and re.search(
-                rf"`{re.escape(name)}`", msg
-            ):
-                raise ValueError(
-                    f"dml: view '{name}' references itself — recursive "
-                    "views are not supported; SELECT from the base "
-                    "table instead"
-                ) from e
-            raise
-    new_df = _d.sql(spark, query)
-    with CATALOG_LOCK:
-        new_df.createOrReplaceTempView(name)
+    if "." not in name:
+        if name in state(spark, "dml_tables"):
+            raise ValueError(
+                f"dml: '{name}' is a table — a view cannot shadow it; "
+                "DROP TABLE first or pick another name"
+            )
+        if name not in views and spark.catalog.tableExists(name):
+            raise ValueError(
+                f"dml: '{name}' already exists as a fixture view/table "
+                "outside the DML catalog — shadowing it is refused; pick "
+                "another name"
+            )
+    _define_view(spark, name, query, or_replace)
     _unpin_if_fixture(spark, name)
-    replacing = name in views
     views[name] = query
-    _d.update_schema_cache(spark, name, new_df.schema)
-    if replacing:
-        # views OVER the replaced one pinned its old analyzed plan —
-        # re-register them now (round-12 second review); a mutual
-        # cycle created by the swap surfaces loudly in _refresh_order
-        _refresh_views(spark, changed=name)
     return _rows_frame(spark, 0)
 
 
@@ -1110,14 +961,14 @@ def _drop_schema(
         n for n in state(spark, "dml_tables") if n.startswith(f"{sch}.")
     )
     vmembers = sorted(
-        n for n in state(spark, "dml_qviews") if n.startswith(f"{sch}.")
+        n for n in state(spark, "dml_views") if n.startswith(f"{sch}.")
     )
     if mode != "cascade":
         # RESTRICT must also see objects registered in the schema
         # OUTSIDE the DML route (ADVICE r14 #4 — the engine registries
         # alone would let `drop database ... cascade` silently delete
         # a saveAsTable the user created directly): probe the Spark
-        # catalog listing too, not just dml_tables/dml_qviews.
+        # catalog listing too, not just dml_tables/dml_views.
         known = {n.split(".", 1)[1] for n in members + vmembers}
         strays = [
             f"{sch}.{t}"
@@ -1131,16 +982,14 @@ def _drop_schema(
                 "(Trino SCHEMA_NOT_EMPTY); DROP them first or use "
                 "DROP SCHEMA ... CASCADE"
             )
-    # atomicity (round 15): a FLAT view referencing a member table
-    # would refuse mid-cascade inside _drop, leaving the schema
+    # atomicity (round 15): a FLAT view referencing a member table or
+    # view would refuse mid-cascade inside _drop, leaving the schema
     # half-dropped — pre-check every member so the statement either
     # refuses before touching anything or completes.  (QUALIFIED views
     # in other schemas are documented-lazy dependents — they break at
     # their next read, Trino-style, and do not block the drop.)
     blocked = {
-        n: dep
-        for n in members
-        if (dep := [d for d in _view_dependents(spark, n)])
+        n: dep for n in members + vmembers if (dep := _view_dependents(spark, n))
     }
     if blocked:
         raise ValueError(
@@ -1521,16 +1370,6 @@ def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         name = _canon_drop(spark, vm.group(2), vm.group(1) is not None)
         if name is None:
             return _rows_frame(spark, 0)
-        if "." in name:
-            qv = state(spark, "dml_qviews")
-            if name not in qv:
-                if vm.group(1):
-                    return _rows_frame(spark, 0)
-                raise ValueError(f"dml: '{name}' is not a DML-created view")
-            with CATALOG_LOCK:
-                spark.sql(f"drop view if exists {_qident_sql(name)}")
-            qv.pop(name, None)
-            return _rows_frame(spark, 0)
         views = state(spark, "dml_views")
         if name not in views:
             if vm.group(1):
@@ -1542,9 +1381,12 @@ def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                 f"dml: cannot DROP VIEW '{name}' — view(s) "
                 f"{', '.join(dep)} reference it; drop those first"
             )
-        views.pop(name)
         with CATALOG_LOCK:
-            spark.catalog.dropTempView(name)
+            if "." in name:
+                spark.sql(f"drop view if exists {_qident_sql(name)}")
+            else:
+                spark.catalog.dropTempView(name)
+        views.pop(name)
         _unpin_if_fixture(spark, name)
         _d.clear_schema_cache(name)
         return _rows_frame(spark, 0)
@@ -2141,7 +1983,7 @@ def _alter_view_rename(
     spark: SparkSession, name: str, new: str
 ) -> DataFrame:
     """Trino ALTER VIEW RENAME TO (round 13): catalog-only — the
-    stored body moves to the new name and re-registers; dependent
+    stored body moves to the new name and is re-created there; dependent
     views reference the OLD name in their body text, so the rename
     refuses while any exist (same guard as ALTER TABLE RENAME)."""
     views = state(spark, "dml_views")
@@ -2164,20 +2006,16 @@ def _alter_view_rename(
         or spark.catalog.tableExists(new)
     ):
         raise ValueError(f"dml: '{new}' already exists")
-    body = views[name]
-    # analyze BEFORE mutating either catalog (ADVICE r13): if the body
-    # no longer analyzes (a base table dropped externally), the rename
-    # must leave both the DML view dict and the Spark temp view
-    # untouched — the same restore-on-failure care _create_view takes
-    df = _d.sql(spark, body)
-    views.pop(name)
-    views[new] = body
+    # create the new view BEFORE dropping the old one (ADVICE r13): a
+    # body that no longer analyzes (a base table dropped externally)
+    # raises here and leaves the DML view dict and the Spark catalog
+    # untouched
+    _define_view(spark, new, views[name], or_replace=False)
+    views[new] = views.pop(name)
     with CATALOG_LOCK:
         spark.catalog.dropTempView(name)
-        df.createOrReplaceTempView(new)
     _unpin_if_fixture(spark, name, new)
     _d.clear_schema_cache(name)
-    _d.update_schema_cache(spark, new, df.schema)
     return _rows_frame(spark, 0)
 
 
@@ -2264,28 +2102,6 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                 return _rows_frame(spark, 0)
             raise ValueError(
                 f"dml: column '{col}' already exists in '{name}'"
-            )
-        # a dependent view whose select list EXPANDS a star would
-        # silently grow the new column at its next re-registration —
-        # Trino views pin their output columns at creation, so that
-        # divergence is refused like the other ALTER arms (ADVICE r12).
-        # Views naming explicit columns are unaffected and stay allowed.
-        star_dep = [
-            v
-            for v in _view_dependents(spark, name)
-            if re.search(
-                r"(?:\bselect|,)\s*(?:[\w`]+\s*\.\s*)?\*|\.\s*\*",
-                _mask(state(spark, "dml_views")[v])[0],
-                re.IGNORECASE,
-            )
-        ]
-        if star_dep:
-            raise ValueError(
-                f"dml: cannot ADD COLUMN on '{name}' — view(s) "
-                f"{', '.join(star_dep)} expand a `*` over it and would "
-                "silently grow the new column (Trino views pin their "
-                "columns at creation); drop or redefine those views "
-                "first"
             )
         # every live file's footer: a column present only in later
         # part files counts too
@@ -2462,7 +2278,7 @@ def _show(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                     n.rsplit(".", 1)[-1]
                     for reg in (
                         state(spark, "dml_tables"),
-                        state(spark, "dml_qviews"),
+                        state(spark, "dml_views"),
                     )
                     for n in reg
                     if n.startswith(f"{sch}.")
@@ -2497,14 +2313,13 @@ def _show(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
 
 def _show_create(spark: SparkSession, kind: str, name: str) -> DataFrame:
     """Trino SHOW CREATE TABLE/VIEW shape: one (create_statement) row.
-    Views print their STORED body (the text every refresh re-runs);
+    Views print their STORED Presto body;
     tables print a column-definition DDL reconstructed from the pinned
     schema plus the partitioned_by property — informational (this
     engine's CREATE TABLE is CTAS-only, stated in the emitted
     comment)."""
-    views = state(spark, "dml_views")
     if kind == "view":
-        vq = views.get(name) or state(spark, "dml_qviews").get(name)
+        vq = state(spark, "dml_views").get(name)
         if vq is None:
             raise ValueError(f"dml: '{name}' is not a DML-created view")
         stmt = f"CREATE VIEW {name} AS\n{vq}"

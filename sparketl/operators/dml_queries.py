@@ -573,16 +573,16 @@ def sql_update_subquery(spark, sf_dir):
 )
 def sql_create_view(spark, sf_dir):
     """#2.9 Trino ``CREATE [OR REPLACE] VIEW`` through the statement
-    front door: a LOGICAL view over a DML table — the body re-analyzes
-    after every mutation, so the INSERT issued *after* CREATE VIEW
+    front door: a LOGICAL view over a DML table — Spark re-analyzes
+    the body on every read, so the INSERT issued *after* CREATE VIEW
     shows through it (the oracle pins that), and CREATE OR REPLACE
     swaps the definition in place.  The face selects through the
     replaced view re-reading the post-INSERT table state.
 
-    Scale: a view is statement-text plus a driver-side re-translation
-    per mutation — zero executor cost, no materialization; the read
-    plan is the body's plan with full pushdown/pruning, identical to
-    pasting the body inline.
+    Scale: a view is a Spark SQL temp view over the body translated
+    once at CREATE — no DML statement touches it, zero executor cost,
+    no materialization; the read plan is the body's plan with full
+    pushdown/pruning, identical to pasting the body inline.
     """
     _setup(spark, sf_dir, "view")
     _run(

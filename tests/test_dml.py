@@ -755,8 +755,8 @@ def test_review2_regressions(spark, wh):
 
 
 def test_create_view_reflects_later_dml(spark, wh):
-    """A view is LOGICAL: it re-translates after every table mutation,
-    so INSERT/UPDATE on the base table show through; CREATE OR REPLACE
+    """A view is LOGICAL: Spark re-analyzes it on every read, so
+    INSERT/UPDATE on the base table show through; CREATE OR REPLACE
     swaps the definition in place."""
     dialect.sql(spark, "create table t_vb as select k, g, v from dml_fx")
     dialect.sql(
@@ -775,7 +775,7 @@ def test_create_view_reflects_later_dml(spark, wh):
         "select k, v from t_vb where k % 2 = 1",
     )
     assert (1, 10.0) in _state(spark, "v_even")
-    # view over view, creation-order re-registration
+    # view over view
     dialect.sql(
         spark, "create view v_top as select max(k) as mk from v_even"
     )
@@ -1100,11 +1100,10 @@ def test_execute_immediate_and_explain_dml_refusal(spark, wh):
 
 def test_review3_view_alter_guards(spark, wh):
     """Round-12 review: (a) ALTER DROP/RENAME COLUMN under a dependent
-    view refuses (a half-applied ALTER would break the view and wedge
-    later DML); (b) a self-referencing CREATE OR REPLACE VIEW refuses
-    (it would re-compose over its previous self on every mutation);
-    (c) a view whose base is swapped underneath it (register_table) is
-    dropped with one loud error instead of wedging unrelated DML."""
+    view refuses (a half-applied ALTER would break the view); (b) a
+    self-referencing CREATE OR REPLACE VIEW refuses; (c) a view whose
+    base is swapped underneath it (register_table) fails at its next
+    read without wedging unrelated DML."""
     dialect.sql(spark, "create table t_rv as select k, g, v from dml_fx")
     dialect.sql(spark, "create view v_rv as select g from t_rv")
     with pytest.raises(ValueError, match="v_rv"):
@@ -1125,12 +1124,20 @@ def test_review3_view_alter_guards(spark, wh):
 
     newdir = _os.path.join(_os.path.dirname(path), "t_rv_swap")
     other.write.mode("overwrite").parquet(newdir)
-    with pytest.raises(ValueError, match="DROPPED"):
-        dml.register_table(spark, "t_rv", newdir)
-    # the broken view is gone; unrelated DML proceeds
-    assert "v_rv" not in session.state(spark, "dml_views")
+    dml.register_table(spark, "t_rv", newdir)
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException):
+        dialect.sql(spark, "select * from v_rv").collect()
+    # unrelated DML proceeds, also after the `/` classing re-reads every
+    # schema (the broken view's columns stay pinned in the catalog)
+    dialect.clear_schema_cache()
     dialect.sql(spark, "create table t_rv2 as select 1 as one")
     assert dialect.sql(spark, "select * from t_rv2").count() == 1
+    # Presto integer division: the `/` classing still sees `one` as int
+    got = dialect.sql(spark, "select one / 2 as h from t_rv2").collect()
+    assert got[0].h == 0
+    dialect.sql(spark, "drop view v_rv")
 
 
 def test_review3_window_inheritance_executes(spark, wh):
@@ -1180,12 +1187,12 @@ def test_review3_offset_limit_order_and_spliced_params(spark, wh):
 
 
 def test_review4_view_replace_semantics(spark, wh):
-    """Round-12 second review: (a) a replaced view's DEPENDENTS
-    re-register immediately; (b) a view replaced to depend on a
-    LATER-created view still refreshes after base DML (fixpoint
-    discovery + topological order, not creation order); (c) an output
-    alias sharing the view's name is NOT a self-reference; (d) a
-    mutual cycle created by replace swaps errors loudly."""
+    """Round-12 second review: (a) a replaced view's DEPENDENTS see
+    the replacement immediately; (b) a view replaced to depend on a
+    LATER-created view still shows base DML (resolution by name at
+    read, not creation order); (c) an output alias sharing the view's
+    name is NOT a self-reference; (d) a mutual cycle created by
+    replace swaps errors loudly."""
     dialect.sql(spark, "create table t_r4 as select k, g, v from dml_fx")
     dialect.sql(spark, "create view v_r4a as select k, v from t_r4")
     dialect.sql(spark, "create view v_r4b as select k, v from t_r4")
@@ -1319,19 +1326,20 @@ def test_ctas_column_name_list(spark, wh):
 
 
 def test_alter_add_column_star_view_guard(spark, wh):
-    """ADVICE r12: ADD COLUMN under a dependent `select *` view would
-    silently grow the view (Trino views pin their columns)."""
+    """ADVICE r12: ADD COLUMN under a dependent `select *` view must
+    not grow the view — Trino views pin their columns at creation, and
+    so do Spark SQL views."""
     dialect.sql(spark, "create table t_ag as select k, g from dml_fx")
     dialect.sql(spark, "create view v_ag_star as select * from t_ag")
-    with pytest.raises(ValueError, match="expand a `\\*`"):
-        dialect.sql(spark, "alter table t_ag add column extra bigint")
-    dialect.sql(spark, "drop view v_ag_star")
-    # a view naming explicit columns does NOT block ADD COLUMN
     dialect.sql(spark, "create view v_ag_cols as select k from t_ag")
     dialect.sql(spark, "alter table t_ag add column extra bigint")
     assert spark.table("t_ag").columns == ["k", "g", "extra"]
+    star = dialect.sql(spark, "select * from v_ag_star")
+    assert star.columns == ["k", "g"]
+    assert star.count() == 5
+    dialect.sql(spark, "drop view v_ag_star")
     assert dialect.sql(spark, "select k from v_ag_cols").count() == 5
-    # count(*) in a dependent view is NOT an expanding star
+    # and under an aggregate view
     dialect.sql(spark, "create view v_ag_cnt as select count(*) as n from t_ag")
     dialect.sql(spark, "alter table t_ag add column extra2 bigint")
     assert "extra2" in spark.table("t_ag").columns
@@ -1600,6 +1608,64 @@ def test_schema_cache_probe_eviction_self_heals_external_replace(spark, wh):
     assert dialect._catalog_column_classes(spark).get("heal_col") == "frac"
     spark.catalog.dropTempView("t_heal_ext")
     spark.catalog.dropTempView("t_heal_trigger")
+
+
+def test_flat_view_follows_fixture_reload(spark, wh):
+    """A flat view over a fixture resolves it by name at every read, so
+    ``load_tables`` re-pointing the fixtures at another scale factor
+    shows through (a view pinned at creation kept counting the old
+    scale factor's rows)."""
+    from sparketl.tables import load_tables
+    from tests.conftest import SF_DIR, SF_SMOKE_DIR
+
+    load_tables(spark, SF_SMOKE_DIR)
+    try:
+        dialect.sql(spark, "create view v_fx_n as select count(*) as n from orders")
+        load_tables(spark, SF_DIR)
+        want = dialect.sql(spark, "select count(*) as n from orders").collect()
+        got = dialect.sql(spark, "select n from v_fx_n").collect()
+        assert got[0].n == want[0].n
+    finally:
+        load_tables(spark, SF_DIR)
+        dialect.sql(spark, "drop view if exists v_fx_n")
+
+
+def test_flat_view_over_qualified_view_sees_dml(spark, wh):
+    """A flat view over a qualified view shows DML on the qualified
+    view's base — the base is named only inside the qualified view."""
+    dialect.sql(spark, "drop schema if exists sqvv cascade")
+    dialect.sql(spark, "create schema sqvv")
+    dialect.sql(spark, "create table sqvv.t as select k from dml_fx")
+    dialect.sql(spark, "create view sqvv.v as select k from sqvv.t")
+    dialect.sql(spark, "create view fv_sqvv as select count(*) as n from sqvv.v")
+    dialect.sql(spark, "insert into sqvv.t select 99")
+    want = dialect.sql(spark, "select count(*) as n from sqvv.v").collect()
+    assert want[0].n == 6
+    assert dialect.sql(spark, "select n from fv_sqvv").collect() == want
+    dialect.sql(spark, "drop view fv_sqvv")
+    dialect.sql(spark, "drop schema sqvv cascade")
+
+
+def test_drop_qualified_view_refuses_flat_dependents(spark, wh):
+    """DROP VIEW s.v refuses while a flat view names it, as DROP TABLE
+    and the flat DROP VIEW do, and DROP SCHEMA CASCADE refuses before
+    dropping anything; after the flat view goes, both succeed."""
+    dialect.sql(spark, "drop schema if exists sqdv cascade")
+    dialect.sql(spark, "create schema sqdv")
+    dialect.sql(spark, "create table sqdv.t as select k from dml_fx")
+    dialect.sql(spark, "create view sqdv.v as select k from sqdv.t")
+    dialect.sql(spark, "create view fv_sqdv as select k from sqdv.v")
+    with pytest.raises(ValueError, match="fv_sqdv"):
+        dialect.sql(spark, "drop view sqdv.v")
+    with pytest.raises(ValueError, match="CASCADE.*fv_sqdv"):
+        dialect.sql(spark, "drop schema sqdv cascade")
+    assert "sqdv.v" in session.state(spark, "dml_views")
+    assert "sqdv.t" in session.state(spark, "dml_tables")
+    assert _state(spark, "fv_sqdv") == [(1,), (2,), (3,), (4,), (5,)]
+    dialect.sql(spark, "drop view fv_sqdv")
+    dialect.sql(spark, "drop view sqdv.v")
+    assert not spark.catalog.tableExists("sqdv.v")
+    dialect.sql(spark, "drop schema sqdv cascade")
 
 
 def test_alter_view_rename_broken_body_leaves_catalogs_untouched(spark, wh):
