@@ -4,14 +4,21 @@ working on the new session."""
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import subprocess
 import sys
 import textwrap
 import threading
+import time
 from concurrent.futures import ThreadPoolExecutor
 
-from sparketl import session
+import pytest
+from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
+
+from sparketl import cds, session
 from sparketl.operators.llm_common import _PIN_KEEP, _pin
 from tests.conftest import SF_DIR
 
@@ -112,3 +119,216 @@ def test_engine_survives_session_restart():
     assert proc.returncode == 0 and "restart ok" in proc.stdout, (
         proc.stdout[-2000:] + proc.stderr[-4000:]
     )
+
+
+_CDS_CHILD = textwrap.dedent(
+    """
+    import json
+    from sparketl.session import get_spark
+
+    spark = get_spark("sparketl-cds")
+    jvm = spark.sparkContext._jvm
+    mx = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    args = [a for a in mx.getInputArguments() if "Archive" in a]
+    print("ARGS " + json.dumps(args))
+    print("CP " + jvm.java.lang.System.getProperty("java.class.path"))
+    print("SUM", spark.range(10).selectExpr("sum(id) as s").collect()[0].s)
+    print("CONF", spark.conf.get("spark.sparketl.conf_probe", "unset"))
+    """
+)
+
+
+def _cds_child(cache: str, **env: str) -> dict[str, str]:
+    """Run a fresh engine process on the class-data cache ``cache``; its
+    tagged output lines by tag."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _CDS_CHILD],
+        cwd=REPO,
+        env={
+            **os.environ,
+            "XDG_CACHE_HOME": cache,
+            "SPARK_GRAFT_CPUS": "2",
+            "SPARK_GRAFT_DRIVER_MEM": "1g",
+            "PYTHONPATH": REPO,
+            **env,
+        },
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-4000:]
+    assert "[cds" not in proc.stdout, proc.stdout[-2000:]
+    tagged = (line.split(" ", 1) for line in proc.stdout.splitlines() if " " in line)
+    return {tag: rest for tag, rest in tagged if tag in ("ARGS", "CP", "SUM", "CONF")}
+
+
+def _cds_dir(cache: str) -> str:
+    return os.path.join(cache, "sparketl", "cds")
+
+
+def _wait_for_recorder(cache: str) -> None:
+    """Wait until the JVM named by the recording lock has exited (it
+    writes the archive at exit, after its Python process is gone)."""
+    for lock in glob.glob(os.path.join(_cds_dir(cache), "*.lock")):
+        with open(lock) as f:
+            pid = int(f.readline())
+        deadline = time.monotonic() + 300
+        while True:
+            try:
+                os.kill(pid, 0)
+            except ProcessLookupError:
+                break
+            assert time.monotonic() < deadline, f"recording JVM {pid} still running"
+            time.sleep(0.2)
+
+
+def _dead_pid() -> int:
+    proc = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True)
+    return int(proc.stdout)
+
+
+def test_cds_one_recorder_per_key(tmp_path, monkeypatch):
+    """Whether a start records, uses or skips the archive, decided from
+    the cache alone (no JVM starts here)."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    options, _, stem, records = cds._plan()
+    assert records and f"-XX:ArchiveClassesAtExit={stem}.{os.getpid()}.part" in options
+    assert cds._plan() is None  # this live process holds the lock
+    with open(f"{stem}.lock", "w") as f:  # its JDK refused to record
+        f.write(f"{_dead_pid()}\nrefused")
+    assert cds._plan() is None  # so the key is not recorded again
+    with open(f"{stem}.lock", "w") as f:  # its recorder was killed before it wrote
+        f.write(f"{_dead_pid()}\nthe class path")
+    options, _, _, records = cds._plan()  # so the key is recorded again
+    assert records and f"-XX:ArchiveClassesAtExit={stem}.{os.getpid()}.part" in options
+    with open(f"{stem}.lock") as f:
+        assert f.read() == str(os.getpid())
+    os.unlink(f"{stem}.lock")
+    open(f"{stem}.jsa", "w").close()
+    options, conf, _, records = cds._plan()
+    assert not records and f"-XX:SharedArchiveFile={stem}.jsa" in options
+    assert os.listdir(conf) == []
+
+
+def _gateway_exited():
+    return PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED", messageParameters={})
+
+
+def test_cds_start_without_options(tmp_path, monkeypatch):
+    """A launch that fails with the CDS options is tried again without
+    them; only when that succeeds is the cache changed (fake launches,
+    no JVM starts here)."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+
+    def launcher(fails: int):
+        calls = []
+
+        def start(options: str):
+            calls.append(options)
+            if len(calls) <= fails:
+                raise _gateway_exited()
+            return "session"
+
+        return start, calls
+
+    _, _, stem, _ = cds._plan()  # the key's path; this process holds its lock
+    os.unlink(f"{stem}.lock")
+    open(f"{stem}.jsa", "w").close()
+    start, calls = launcher(fails=2)  # the JVM will not start at all
+    with pytest.raises(PySparkRuntimeError):
+        cds.start_driver(start)
+    assert "SharedArchiveFile" in calls[0] and calls[1] == ""
+    assert os.path.exists(f"{stem}.jsa")  # the archive was not the cause
+    start, calls = launcher(fails=1)  # the JVM refuses the archive only
+    assert cds.start_driver(start) == "session"
+    assert not os.path.exists(f"{stem}.jsa")
+
+    start, calls = launcher(fails=2)  # a recording whose JVM will not start
+    with pytest.raises(PySparkRuntimeError):
+        cds.start_driver(start)
+    assert "ArchiveClassesAtExit" in calls[0] and calls[1] == ""
+    with open(f"{stem}.lock") as f:  # unmarked: recorded again once this process is gone
+        assert f.read() == str(os.getpid())
+    os.unlink(f"{stem}.lock")
+    start, calls = launcher(fails=1)  # a JDK that refuses to record
+    assert cds.start_driver(start) == "session"
+    with open(f"{stem}.lock") as f:
+        assert f.read() == f"{os.getpid()}\nrefused"
+
+
+@pytest.fixture(scope="module")
+def cds_cache(tmp_path_factory):
+    """A cache whose archive was recorded by one process and then
+    promoted and used by the next; the two processes' outputs."""
+    cache = str(tmp_path_factory.mktemp("xdg"))
+    first = _cds_child(cache)
+    _wait_for_recorder(cache)
+    second = _cds_child(cache)
+    return cache, first, second
+
+
+def test_cds_archive_recorded_then_used(cds_cache):
+    cache, first, second = cds_cache
+    assert "ArchiveClassesAtExit" in first["ARGS"], first
+    assert first["SUM"] == "45"
+    (jsa,) = glob.glob(os.path.join(_cds_dir(cache), "*.jsa"))
+    assert os.path.getsize(jsa) > 50 << 20
+    assert json.loads(second["ARGS"]) == [f"-XX:SharedArchiveFile={jsa}"]
+    assert second["SUM"] == "45"
+    assert not glob.glob(os.path.join(_cds_dir(cache), "*.part"))
+    assert not glob.glob(os.path.join(_cds_dir(cache), "*.lock"))
+
+
+def test_cds_truncated_part_is_not_promoted(cds_cache, tmp_path):
+    """A recorder that died mid-dump left a truncated archive: mapping
+    it would abort the JVM, so the next start deletes it and starts."""
+    good_cache, _, used = cds_cache
+    (good,) = glob.glob(os.path.join(_cds_dir(good_cache), "*.jsa"))
+    stem = os.path.join(_cds_dir(str(tmp_path)), os.path.basename(good)[: -len(".jsa")])
+    os.makedirs(os.path.dirname(stem))
+    pid = _dead_pid()
+    with open(good, "rb") as src, open(f"{stem}.{pid}.part", "wb") as dst:
+        dst.write(src.read(os.path.getsize(good) // 3))
+    # the recorder's class path, on this cache's empty conf directory
+    class_path = used["CP"].replace(good_cache, str(tmp_path), 1)
+    with open(f"{stem}.lock", "w") as f:
+        f.write(f"{pid}\n{class_path}")
+
+    out = _cds_child(str(tmp_path))
+    assert out["SUM"] == "45"
+    assert "SharedArchiveFile" not in out["ARGS"], out
+    assert not os.path.exists(f"{stem}.{pid}.part")
+    assert not os.path.exists(f"{stem}.jsa")
+    _wait_for_recorder(str(tmp_path))  # this start took the lock and recorded
+
+
+def test_cds_host_that_cannot_record(tmp_path):
+    """Without a base CDS archive (``-Xshare:off`` stands in for a JDK
+    that has none) the JVM refuses to record: the session starts without
+    the archive, and the next one does not try again."""
+    cache = str(tmp_path)
+    for _ in range(2):
+        out = _cds_child(cache, JAVA_TOOL_OPTIONS="-Xshare:off")
+        assert json.loads(out["ARGS"]) == []
+        assert out["SUM"] == "45"
+    (lock,) = glob.glob(os.path.join(_cds_dir(cache), "*.lock"))
+    with open(lock) as f:
+        assert f.read().endswith("\nrefused")
+    assert not glob.glob(os.path.join(_cds_dir(cache), "*.jsa"))
+
+
+def test_cds_skipped_for_a_real_conf_dir(tmp_path):
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.sparketl.conf_probe 7\n")
+    cache = str(tmp_path / "xdg")
+    out = _cds_child(cache, SPARK_CONF_DIR=str(conf))
+    assert json.loads(out["ARGS"]) == []
+    assert out["CONF"] == "7"
+    assert out["SUM"] == "45"
+    assert not os.path.exists(cache)
