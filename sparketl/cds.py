@@ -53,8 +53,11 @@ launcher puts ``$SPARK_CONF_DIR`` there.  When that directory is missing
 or holds only ``*.template`` files (a stock install), the JVM starts
 with ``SPARK_CONF_DIR`` pointed at the empty ``<cache>/conf/``, which
 changes nothing Spark reads.  A conf directory holding any real file
-gets no archive.  ``-Xlog:cds*`` goes to ``<key>.log`` beside the
-archive, not to standard output.
+gets no archive.  ``-Xlog:cds*`` goes to a file beside the archive, not
+to standard output: ``<key>.record.log`` for the recording JVM (its
+dump errors included), ``<key>.log`` for the JVMs that use the archive.
+HotSpot truncates a log file each time a JVM opens it, so the two
+names keep the recording's log past the sessions that follow it.
 """
 
 from __future__ import annotations
@@ -214,14 +217,17 @@ def _plan() -> tuple[list[str], str, str, bool] | None:
     os.makedirs(cds, exist_ok=True)
     os.makedirs(conf, exist_ok=True)
     stem = os.path.join(cds, _key(java_home, spark_home))
-    log = [f"-Xlog:cds*=warning:file={stem}.log::filecount=0", "-Xlog:cds*=off:stdout"]
+
+    def log(path: str) -> list[str]:
+        return [f"-Xlog:cds*=warning:file={path}::filecount=0", "-Xlog:cds*=off:stdout"]
+
     if not os.path.exists(f"{stem}.jsa"):
         _promote(stem, os.path.join(java_home, "bin", "java"))
     if os.path.exists(f"{stem}.jsa"):
-        return [f"-XX:SharedArchiveFile={stem}.jsa", *log], conf, stem, False
+        return [f"-XX:SharedArchiveFile={stem}.jsa", *log(f"{stem}.log")], conf, stem, False
     if _take_lock(f"{stem}.lock"):
         part = f"{stem}.{os.getpid()}.part"
-        return [f"-XX:ArchiveClassesAtExit={part}", *log], conf, stem, True
+        return [f"-XX:ArchiveClassesAtExit={part}", *log(f"{stem}.record.log")], conf, stem, True
     return None  # another process records this key, or it cannot
 
 

@@ -28,7 +28,7 @@ extract(SECOND from x)       cast(extract(second from x) as bigint)
                              decimal(8,6); cast truncates toward zero —
                              valid for timestamp AND interval operands)
 extract(YOW|YEAR_OF_WEEK ..) extract(YEAROFWEEK from x)
-sign(x)  [x int-classified]  cast(sign(x) as bigint)    (front door only —
+sign(x)  [x integral]        cast(sign(x) as bigint)    (sql() only —
                              Spark sign() is always DOUBLE)
 day_of_month(x)              dayofmonth(x)
 day_of_year(x) / doy(x)      dayofyear(x)
@@ -243,34 +243,23 @@ text looks like JSON from a real array/object — Presto returns 0 for
 the scalar; verified divergence, so no rewrite), Joda patterns beyond
 the JDK-compatible subset.
 
-Integer ``/`` (round 11, VERDICT r10 #1 — the former documented
-SILENT DIVERGENCE, now resolved at the front door): Presto's ``/`` on
-two integer operands TRUNCATES toward zero (bigint/bigint → bigint,
-``7/2 = 3``, ``-7/2 = -3``) while Spark's ``/`` always returns DOUBLE
-(``3.5``).  The engine owns every registered view schema, so
-``sql()`` runs a TYPE-AWARE pass (``_rewrite_int_division``) that
-resolves each ``/``'s operand classes — column refs via the catalog
-schemas, literals lexically, casts by their target type, calls via a
-Presto-return-class table, CASE via its value branches, and full
-multiplicative chains on the left (``2.0 * a / b`` is double) — and:
+Integer ``/``: Presto's ``/`` on two integer operands TRUNCATES toward
+zero (bigint/bigint → bigint, ``7/2 = 3``, ``-7/2 = -3``) while Spark's
+``/`` always returns DOUBLE (``3.5``).  ``sql()`` lets Spark's analyzer
+type each ``/`` (see "Typing by probe"):
 
-  * both operands integral      → rewritten to Spark's ``div``
-                                   (verified: truncates toward zero,
-                                   BIGINT result, multiplicative
+  * both operands integral      → Spark's ``div`` (truncates toward
+                                   zero, BIGINT result, multiplicative
                                    precedence, DIVIDE_BY_ZERO under
                                    ANSI — all matching Presto)
-  * either operand fractional   → left as ``/`` (double semantics
-                                   agree; DECIMAL scale rules differ
-                                   between the engines but neither
-                                   truncates — documented residue)
-  * otherwise (subquery, param,
-    unresolvable name/function)  → LOUD refusal naming the expression
-                                   (never a silently-wrong number)
+  * either operand fractional   → left as ``/`` (DECIMAL scale rules
+                                   differ between the engines but
+                                   neither truncates — documented
+                                   residue)
+  * an operand Spark cannot
+    resolve                      → Spark's own analysis error
 
-Schema-free ``translate()`` (no ``schema=`` argument) skips the pass
-entirely and keeps the legacy pass-through — direct translate()
-callers see Spark's double semantics, as before; the refusal message
-names both remedies (``cast(x as double)`` / ``x div y``).
+``translate()`` alone has no types and keeps Spark's ``/``.
 ``TRY(a / b)`` over integers becomes
 ``try_cast(try_divide(a, b) as bigint)`` — NULL on zero-divide and on
 bigint overflow like Presto's TRY; exact while |a/b| < 2^53 (the
@@ -279,11 +268,15 @@ double mantissa — beyond it the quotient quantizes before the cast).
 
 from __future__ import annotations
 
+import functools
+import itertools
 import re
+from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from sparketl.session import CATALOG_LOCK, local_frame, state, states
+from sparketl.session import local_frame
 
 # Spark timestampadd/timestampdiff unit keywords (SQL identifiers).
 _TIME_UNITS = {
@@ -558,7 +551,6 @@ _TRY_BINOP = {
     "+": "try_add",
     "-": "try_subtract",
     "*": "try_multiply",
-    "/": "try_divide",
 }
 
 
@@ -632,10 +624,10 @@ def _try_fn(args: list[str]) -> str | None:
         return None
     ops = _top_level_arith_ops(a)
     # Guard (round-11 review): the single-op branch must not fire when
-    # an OPERAND carries the int-division pass's `div` — try(a div b +
-    # 1) as try_add(a div b, 1) would leave the division OUTSIDE the
-    # TRY protection (ANSI DIVIDE_BY_ZERO at runtime where Presto's
-    # TRY returns NULL).  Pass through loudly instead.
+    # an OPERAND carries a `div` — try(a div b + 1) as try_add(a div b,
+    # 1) would leave the division OUTSIDE the TRY protection (ANSI
+    # DIVIDE_BY_ZERO at runtime where Presto's TRY returns NULL).  Pass
+    # through loudly instead.
     has_div = bool(re.search(r"\bdiv\b", a, re.IGNORECASE))
     if len(ops) == 1 and "(" not in a and not has_div:
         i, op = ops[0]
@@ -645,26 +637,10 @@ def _try_fn(args: list[str]) -> str | None:
         # catch type errors), while Spark's try_add('x', 1) would
         # return a silent NULL.  Pass through loudly instead.
         if left and right and not (_SENT_RE.search(left) or _SENT_RE.search(right)):
-            return f"{_TRY_BINOP[op]}({left}, {right})"
-    # TRY over the int-division pass's output: `try(a div b)` — Presto
-    # TRY(int/int) is NULL on zero-divide/overflow, else the truncated
-    # BIGINT.  try_divide NULLs on zero; the try_cast truncates toward
-    # zero (matching Presto) and NULLs on overflow.  Exact while
-    # |a/b| < 2^53 (the double mantissa); beyond that the quotient
-    # quantizes before the cast — same class of limit as the
-    # random(m, n) span arithmetic documented above.
-    if not ops and "(" not in a:
-        mdiv = re.search(r"\bdiv\b", a, re.IGNORECASE)
-        if mdiv:
-            left = a[: mdiv.start()].strip()
-            right = a[mdiv.end() :].strip()
-            if (
-                left
-                and right
-                and not re.search(r"\bdiv\b", right, re.IGNORECASE)
-                and not (_SENT_RE.search(left) or _SENT_RE.search(right))
-            ):
-                return f"try_cast(try_divide({left}, {right}) as bigint)"
+            # TRY(a / b) is marked: over integers it is Presto's
+            # truncating division (``_STAND_INS``)
+            fn = "__sparketl_trydiv" if op == "/" else _TRY_BINOP[op]
+            return f"{fn}({left}, {right})"
     return None
 
 
@@ -1488,6 +1464,17 @@ def _split_top_commas(text: str) -> list[str]:
     return items
 
 
+#: SQL type words that follow CAST's AS — never read as an alias
+#: definition (that would take the cast OPERAND as its expression).
+_TYPE_WORDS = frozenset({
+    "boolean", "tinyint", "smallint", "int", "integer", "bigint",
+    "real", "double", "decimal", "numeric", "float", "varchar", "char",
+    "string", "varbinary", "binary", "date", "timestamp", "time",
+    "interval", "array", "map", "row", "struct", "json", "uuid",
+})
+_SETOP_RE = re.compile(r"\b(union|intersect|except)\b", re.IGNORECASE)
+
+
 def _rewrite_with_ties(masked: str) -> str:
     """``ORDER BY k FETCH FIRST n ROWS WITH TIES`` → a ``rank() <= n``
     subquery (VERDICT r12 #3).  Spark has no ties-aware limit, but the
@@ -1789,9 +1776,33 @@ _RANGE_HAS_CURRENT_RE = re.compile(
 )
 
 
-def _rewrite_frame_exclude(
-    masked: str, colcls: "dict[str, str] | None" = None
-) -> str:
+def _exclude_refusal(mode: str) -> str:
+    return (
+        f"dialect: window frame EXCLUDE {mode.upper()} is refused "
+        "for this aggregate/frame — count(*)/count(x)/integer-sum "
+        "auto-compose exactly (CURRENT ROW on any frame; "
+        "GROUP/TIES on RANGE frames containing the current row, "
+        "where the peer group provably sits inside the frame); "
+        "ROWS-frame GROUP/TIES and float/avg/distinct carriers "
+        "need the engine composition operators "
+        "(sparketl.operators.windows, the win_frame_exclude / "
+        "win_groups_exclude faces), which implement exclusion as "
+        "frame-sum differences"
+    )
+
+
+def _isum_mark(mode: str) -> str:
+    """The marker of a composed ``sum(x)``: exact only for integral x."""
+    return "__sparketl_isum_" + mode.replace(" ", "_")
+
+
+def _isum_refusal(mark: str) -> str:
+    return _exclude_refusal(
+        mark.removeprefix("__sparketl_isum_").replace("_", " ")
+    )
+
+
+def _rewrite_frame_exclude(masked: str) -> str:
     """SQL:2011 window frame exclusion (VERDICT r12 #5).  ``EXCLUDE NO
     OTHERS`` is the default semantics on every engine — strip it.
     ``EXCLUDE CURRENT ROW`` auto-composes for EXACT carriers, where
@@ -1800,11 +1811,11 @@ def _rewrite_frame_exclude(
 
     - ``count(*)`` → ``count(*) over (frame) - 1``
     - ``count(x)`` → minus 1 only when x is non-null on this row
-    - ``sum(x)`` with x classed integral (needs the catalog schema) →
-      ``sum - coalesce(x, 0)``, NULL-gated on the excluded frame's
-      non-null count (the same two edge repairs the engine face
-      win_frame_exclude documents: empty/all-null excluded frame →
-      NULL, NULL current row subtracts nothing)
+    - ``sum(x)`` with x integral (a marker the typed entry points
+      check, ``_STAND_INS``) → ``sum - coalesce(x, 0)``, NULL-gated on
+      the excluded frame's non-null count (the same two edge repairs
+      the engine face win_frame_exclude documents: empty/all-null
+      excluded frame → NULL, NULL current row subtracts nothing)
 
     ``EXCLUDE GROUP``/``TIES`` (round 14, VERDICT r13 #6) auto-compose
     for the same exact carriers when the frame is a RANGE frame
@@ -1831,18 +1842,7 @@ def _rewrite_frame_exclude(
     dep = _depths(masked)
 
     def refuse(mode: str) -> None:
-        raise ValueError(
-            f"dialect: window frame EXCLUDE {mode.upper()} is refused "
-            "for this aggregate/frame — count(*)/count(x)/integer-sum "
-            "auto-compose exactly (CURRENT ROW on any frame; "
-            "GROUP/TIES on RANGE frames containing the current row, "
-            "where the peer group provably sits inside the frame); "
-            "ROWS-frame GROUP/TIES and float/avg/distinct carriers "
-            "need the engine composition operators "
-            "(sparketl.operators.windows, the win_frame_exclude / "
-            "win_groups_exclude faces), which implement exclusion as "
-            "frame-sum differences"
-        )
+        raise ValueError(_exclude_refusal(mode))
 
     for m in reversed(matches):
         mode = " ".join(m.group(1).split()).lower()
@@ -1922,14 +1922,12 @@ def _rewrite_frame_exclude(
                     f"(count({arg}) over ({spec}) - "
                     f"(case when ({arg}) is null then 0 else 1 end))"
                 )
-            elif fn == "sum" and colcls is not None and (
-                _expr_class(arg, colcls) == "int"
-            ):
+            elif fn == "sum":
                 repl_expr = (
                     f"(case when count({arg}) over ({spec}) - "
                     f"(case when ({arg}) is null then 0 else 1 end) > 0 "
-                    f"then sum({arg}) over ({spec}) - coalesce({arg}, 0) "
-                    f"else null end)"
+                    f"then sum({_isum_mark(mode)}({arg})) over ({spec}) "
+                    f"- coalesce({arg}, 0) else null end)"
                 )
             else:
                 refuse(mode)
@@ -1964,15 +1962,13 @@ def _rewrite_frame_exclude(
                     if mode == "group"
                     else f"({rest} + {self_n})"
                 )
-            elif fn == "sum" and colcls is not None and (
-                _expr_class(arg, colcls) == "int"
-            ):
+            elif fn == "sum":
                 nv = (
                     f"count({arg}) over ({spec}) - "
                     f"count({arg}) over ({peer})"
                 )
                 tot = (
-                    f"sum({arg}) over ({spec}) - "
+                    f"sum({_isum_mark(mode)}({arg})) over ({spec}) - "
                     f"coalesce(sum({arg}) over ({peer}), 0)"
                 )
                 if mode == "ties":
@@ -3167,130 +3163,9 @@ def _rewrite_match_recognize(masked: str, lits: list[str]) -> str:
     return masked[: m.start()] + "from " + repl + masked[cp + 1 :]
 
 
-# ---------------------------------------------------------------------------
-# Type-aware integer division (round 11, VERDICT r10 #1).
-#
-# Presto `/` on two integral operands truncates toward zero; Spark's
-# returns double.  With the view schemas in hand the front door resolves
-# operand classes and rewrites int/int to Spark's `div` (verified
-# equivalent: truncation toward zero, BIGINT, multiplicative precedence,
-# DIVIDE_BY_ZERO under ANSI).  Classes are PRESTO return classes — e.g.
-# floor(double) is double in Presto (type-preserving) even though
-# Spark's floor returns BIGINT; classifying by Presto typing is what
-# decides which SEMANTICS the user's text carries, and the residual
-# Spark-value agreement holds either way (Presto 2.0/2 = Spark 2/2 via
-# `/` = 1.0).
-# ---------------------------------------------------------------------------
-
-_INT_TYPE_NAMES = frozenset({
-    "tinyint", "smallint", "int", "integer", "bigint",
-    "byte", "short", "long", "int2", "int4", "int8",
-})
-_FRAC_TYPE_NAMES = frozenset({
-    "float", "double", "real", "decimal", "numeric", "dec",
-})
-
-
-def _classify_type_name(type_name: str) -> str:
-    """Spark/ANSI type spelling → division class: 'int', 'frac' or
-    'other' (non-numeric: a division over it errors on both engines)."""
-    base = type_name.strip().lower().split("(")[0].strip()
-    if base in _INT_TYPE_NAMES:
-        return "int"
-    if base in _FRAC_TYPE_NAMES:
-        return "frac"
-    return "other"
-
-
-#: Presto return class is INTEGRAL regardless of argument types.  Both
-#: Presto and Spark spellings appear (the pass runs on raw input text)
-#: plus the DuckDB spellings the E2 parity sweep replays (epoch_us …).
-_INT_CLASS_FNS = frozenset({
-    "count", "count_if", "length", "char_length", "character_length",
-    "octet_length", "cardinality", "size", "instr", "strpos",
-    "position", "locate", "levenshtein", "levenshtein_distance",
-    "hamming_distance", "ascii", "codepoint", "unicode",
-    "year", "quarter", "month", "day", "dayofmonth", "day_of_month",
-    "dayofweek", "day_of_week", "dow", "weekday", "dayofyear",
-    "day_of_year", "doy", "weekofyear", "week_of_year", "week",
-    "hour", "minute", "second", "millisecond", "extract", "date_part",
-    "date_diff", "timestampdiff", "datediff",
-    "unix_micros", "unix_millis", "unix_seconds",
-    "epoch_us", "epoch_ms", "epoch_ns",
-    "bit_count", "bitwise_and", "bitwise_or", "bitwise_xor",
-    "bitwise_left_shift", "bitwise_right_shift", "shiftleft",
-    "shiftright", "shiftrightunsigned",
-    "row_number", "rank", "dense_rank", "ntile",
-    "array_position", "from_base", "crc32", "xxhash64", "hash",
-    "grouping", "grouping_id", "approx_distinct",
-    "approx_count_distinct", "width_bucket", "factorial",
-})
-
-#: Presto return class is FRACTIONAL regardless of argument types
-#: (truncate: Presto truncate(double)→double, (decimal,n)→decimal —
-#: fractional either way).
-_FRAC_CLASS_FNS = frozenset({
-    "avg", "mean", "geometric_mean", "stddev", "stddev_samp",
-    "stddev_pop", "std", "variance", "var_samp", "var_pop", "corr",
-    "covar_samp", "covar_pop", "regr_slope", "regr_intercept",
-    "regr_r2", "regr_avgx", "regr_avgy", "skewness", "kurtosis",
-    "rand", "random", "randn", "sqrt", "cbrt", "exp", "expm1", "ln",
-    "log", "log2", "log10", "log1p", "power", "pow", "sin", "cos",
-    "tan", "cot", "asin", "acos", "atan", "atan2", "sinh", "cosh",
-    "tanh", "asinh", "acosh", "atanh", "degrees", "radians", "pi",
-    "to_unixtime", "percent_rank", "cume_dist", "cosine_similarity",
-    "infinity", "nan", "truncate", "try_divide",
-})
-
-#: Presto return class FOLLOWS the (numeric) arguments: integral only
-#: when every argument resolves integral.  Functions whose class
-#: follows the FIRST argument alone are special-cased in _fn_class
-#: (min_by's second arg / lag's offset must not poison the class).
-_PRESERVING_FNS = frozenset({
-    "abs", "floor", "ceil", "ceiling", "round", "sign", "mod", "pmod",
-    "greatest", "least", "coalesce", "ifnull", "nvl", "nvl2", "try",
-    "min", "max", "sum", "any_value", "arbitrary", "first", "last",
-    "first_value", "last_value", "try_add", "try_subtract",
-    "try_multiply",
-})
-
-#: Keywords that can precede a '(' without forming a function call,
-#: and that never classify as column refs.
-_NONCALL_KEYWORDS = frozenset({
-    "in", "and", "or", "not", "when", "then", "else", "end", "on",
-    "where", "select", "from", "having", "group", "order", "by", "as",
-    "between", "over", "union", "all", "distinct", "values", "like",
-    "escape", "join", "case", "is", "interval", "partition", "rows",
-    "range", "limit", "offset", "with", "exists",
-})
-
-_NUM_LIT_RE = re.compile(r"(?:\d+(?:\.\d*)?|\.\d+)(?:[eE][+-]?\d+)?")
-_QUAL_IDENT_RE = re.compile(
-    r"[A-Za-z_$][A-Za-z_0-9$]*(?:\.[A-Za-z_$][A-Za-z_0-9$]*)*"
-)
 _POSTFIX_CLAUSE_RE = re.compile(
     r"(?:(?:ignore|respect)\s+nulls\s+)?(over|filter)\s*\(", re.IGNORECASE
 )
-
-
-def _combine_classes(classes) -> str | None:
-    """Class algebra for numeric promotion: any fractional operand makes
-    the whole expression fractional in Presto (even alongside an
-    unresolved one — if the unknown is numeric the promotion holds, and
-    if it isn't the query errors on both engines); otherwise any
-    unresolved operand leaves the class unknown; all-integral → int."""
-    got_int = False
-    got_none = False
-    for c in classes:
-        if c == "frac":
-            return "frac"
-        if c == "int":
-            got_int = True
-        else:
-            got_none = True
-    if got_none or not got_int:
-        return None
-    return "int"
 
 
 def _depths(expr: str) -> list[int]:
@@ -3308,221 +3183,6 @@ def _depths(expr: str) -> list[int]:
         else:
             out[i] = d
     return out
-
-
-def _top_level_numeric_ops(expr: str) -> list[tuple[int, int]]:
-    """(position, token length) of binary + - * / % and word `div` at
-    depth 0 — the arith scanner plus the two spellings it doesn't know."""
-    ops = [(i, 1) for (i, _c) in _top_level_arith_ops(expr)]
-    dep = _depths(expr)
-    for i, c in enumerate(expr):
-        if c == "%" and dep[i] == 0:
-            ops.append((i, 1))
-    for m in re.finditer(r"\bdiv\b", expr, re.IGNORECASE):
-        if dep[m.start()] == 0:
-            ops.append((m.start(), 3))
-    ops.sort()
-    return ops
-
-
-def _open_paren_back(s: str, cp: int) -> int | None:
-    """Index of the '(' matching the ')' at cp, scanning backward."""
-    depth, j = 1, cp - 1
-    while j >= 0:
-        if s[j] == ")":
-            depth += 1
-        elif s[j] == "(":
-            depth -= 1
-            if depth == 0:
-                return j
-        j -= 1
-    return None
-
-
-def _open_bracket_back(s: str, cb: int) -> int | None:
-    depth, j = 1, cb - 1
-    while j >= 0:
-        if s[j] == "]":
-            depth += 1
-        elif s[j] == "[":
-            depth -= 1
-            if depth == 0:
-                return j
-        j -= 1
-    return None
-
-
-def _skip_ws_back(s: str, k: int) -> int:
-    while k >= 0 and s[k].isspace():
-        k -= 1
-    return k
-
-
-def _ident_start_back(s: str, k: int) -> int:
-    j = k
-    while j >= 0 and (s[j].isalnum() or s[j] in "_$"):
-        j -= 1
-    return j + 1
-
-
-def _case_class(e: str, colcls) -> str | None:
-    """Class of a full `case ... end` block: combine over its THEN/ELSE
-    value expressions (the WHEN conditions never contribute)."""
-    dep = _depths(e)
-    toks = [
-        (m.start(), m.group(0).lower())
-        for m in re.finditer(r"\b(?:case|when|then|else|end)\b", e, re.IGNORECASE)
-        if dep[m.start()] == 0
-    ]
-    level = 0
-    vals: list[str] = []
-    collecting: int | None = None
-    for pos, w in toks:
-        if w == "case":
-            level += 1
-        elif w == "end":
-            level -= 1
-            if level == 0 and collecting is not None:
-                vals.append(e[collecting:pos])
-                collecting = None
-        elif level == 1:
-            if w in ("then", "else"):
-                if collecting is not None:
-                    vals.append(e[collecting:pos])
-                collecting = pos + len(w)
-            elif w == "when":
-                if collecting is not None:
-                    vals.append(e[collecting:pos])
-                collecting = None
-    if not vals:
-        return None
-    return _combine_classes(_expr_class(v, colcls) for v in vals)
-
-
-def _is_full_case_block(e: str) -> bool:
-    """True when e is exactly one `case ... end` whose trailing `end`
-    closes the leading `case` (not e.g. `case..end + case..end`)."""
-    if not re.match(r"(?is)^case\b.*\bend$", e):
-        return False
-    dep = _depths(e)
-    level = 0
-    for m in re.finditer(r"\b(?:case|end)\b", e, re.IGNORECASE):
-        if dep[m.start()] != 0:
-            continue
-        if m.group(0).lower() == "case":
-            level += 1
-        else:
-            level -= 1
-            if level == 0:
-                return m.end() == len(e)
-    return False
-
-
-def _cast_class(argtext: str) -> str | None:
-    """Class of cast/try_cast arguments by the LAST top-level `as TYPE`."""
-    dep = _depths(argtext)
-    last = None
-    for m in re.finditer(r"\bas\b", argtext, re.IGNORECASE):
-        if dep[m.start()] == 0:
-            last = m
-    if last is None:
-        return None
-    cls = _classify_type_name(argtext[last.end():])
-    return cls if cls in ("int", "frac") else None
-
-
-def _strip_postfix_clause(e: str) -> str | None:
-    """'X over (...)' / 'X [ignore nulls] filter (where ...)' → X."""
-    if not e.endswith(")"):
-        return None
-    ob = _open_paren_back(e, len(e) - 1)
-    if ob is None or ob == 0:
-        return None
-    head = e[:ob].rstrip()
-    m = re.search(r"\b(over|filter)$", head, re.IGNORECASE)
-    if not m:
-        return None
-    if (
-        m.group(1).lower() == "filter"
-        and not e[ob + 1 : -1].lstrip().lower().startswith("where")
-    ):
-        return None
-    rest = head[: m.start()].rstrip()
-    rest = re.sub(
-        r"\b(?:ignore|respect)\s+nulls$", "", rest, flags=re.IGNORECASE
-    ).rstrip()
-    return rest or None
-
-
-def _fn_class(name: str, args: list[str], colcls) -> str | None:
-    n = name.lower()
-    if n in _INT_CLASS_FNS:
-        return "int"
-    if n in _FRAC_CLASS_FNS:
-        return "frac"
-    if n in ("if", "iff"):
-        if len(args) < 2:
-            return None
-        return _combine_classes(_expr_class(a, colcls) for a in args[1:])
-    if n in ("nullif", "min_by", "max_by", "lag", "lead", "nth_value"):
-        return _expr_class(args[0], colcls) if args else None
-    if n in _PRESERVING_FNS:
-        if not args:
-            return None
-        return _combine_classes(_expr_class(a, colcls) for a in args)
-    return None
-
-
-def _expr_class(expr: str, colcls) -> str | None:
-    """Presto division class of a (masked) value expression: 'int',
-    'frac', or None (unresolvable — strict mode refuses)."""
-    e = expr.strip()
-    while e.startswith("(") and _match_paren(e, 0) == len(e) - 1:
-        e = e[1:-1].strip()
-    if not e:
-        return None
-    m = re.match(r"(?:distinct|all)\b\s*", e, re.IGNORECASE)
-    if m and m.end() < len(e):
-        e = e[m.end():]
-    if _is_full_case_block(e):
-        return _case_class(e, colcls)
-    ops = _top_level_numeric_ops(e)
-    if ops:
-        spans, prev = [], 0
-        for i, w in ops:
-            spans.append(e[prev:i])
-            prev = i + w
-        spans.append(e[prev:])
-        return _combine_classes(
-            _expr_class(s, colcls) for s in spans if s.strip()
-        )
-    if e[0] in "+-":
-        return _expr_class(e[1:], colcls)
-    if _NUM_LIT_RE.fullmatch(e):
-        return "frac" if re.search(r"[.eE]", e) else "int"
-    if _SENT_RE.fullmatch(e):
-        return None
-    stripped = _strip_postfix_clause(e)
-    if stripped is not None:
-        return _expr_class(stripped, colcls)
-    m = re.match(r"([A-Za-z_$][A-Za-z_0-9$]*)\s*\(", e)
-    if m and _match_paren(e, m.end() - 1) == len(e) - 1:
-        name = m.group(1).lower()
-        if name in ("cast", "try_cast"):
-            return _cast_class(e[m.end():-1])
-        if name in _NONCALL_KEYWORDS:
-            return None
-        return _fn_class(name, _split_args(e[m.end():-1]), colcls)
-    if e.startswith("`") and e.endswith("`") and e.count("`") == 2:
-        cls = (colcls or {}).get(e[1:-1].strip().lower())
-        return cls if cls in ("int", "frac") else None
-    if _QUAL_IDENT_RE.fullmatch(e):
-        last = e.rsplit(".", 1)[-1].lower()
-        if last in _NONCALL_KEYWORDS or last in ("null", "true", "false"):
-            return None
-        cls = (colcls or {}).get(last)
-        return cls if cls in ("int", "frac") else None
-    return None
 
 
 def _rewrite_mr_permute(
@@ -3703,216 +3363,6 @@ def _refuse_windowed_calls(masked: str, names: tuple[str, ...]) -> None:
             pos = m.end()
 
 
-def _case_start_back(masked: str, end_start: int) -> int | None:
-    """Start of the `case` matching the `end` whose token starts at
-    end_start (word-balance scan; `case`/`end` are reserved, so bare
-    occurrences are always the keywords in masked text)."""
-    level = 1
-    for m in reversed(
-        list(re.finditer(r"\b(?:case|end)\b", masked[:end_start], re.IGNORECASE))
-    ):
-        if m.group(0).lower() == "end":
-            level += 1
-        else:
-            level -= 1
-            if level == 0:
-                return m.start()
-    return None
-
-
-def _primary_start(masked: str, j: int) -> int | None:
-    """Start index of the value primary ENDING at masked[j], reading
-    backward: paren group (with optional call head / OVER / FILTER
-    postfix), subscript chain, backticked ident, literal sentinel,
-    qualified name / numeric literal, or a full CASE block."""
-    c = masked[j]
-    if c == ")":
-        ob = _open_paren_back(masked, j)
-        if ob is None:
-            return None
-        k = _skip_ws_back(masked, ob - 1)
-        if k >= 0 and (masked[k].isalnum() or masked[k] in "_$"):
-            s = _ident_start_back(masked, k)
-            word = masked[s : k + 1].lower()
-            inner = masked[ob + 1 : j].lstrip().lower()
-            if word == "over" or (
-                word == "filter" and inner.startswith("where")
-            ):
-                # postfix clause on a window/agg call: extend through
-                # the call itself (optionally via IGNORE/RESPECT NULLS)
-                p = _skip_ws_back(masked, s - 1)
-                for _ in range(2):
-                    if p >= 0 and (masked[p].isalnum() or masked[p] == "_"):
-                        ws = _ident_start_back(masked, p)
-                        if masked[ws : p + 1].lower() in (
-                            "nulls", "ignore", "respect",
-                        ):
-                            p = _skip_ws_back(masked, ws - 1)
-                            continue
-                    break
-                if p < 0:
-                    return None
-                return _primary_start(masked, p)
-            if word in _NONCALL_KEYWORDS:
-                return ob
-            return s
-        return ob
-    if c == "]":
-        ob = _open_bracket_back(masked, j)
-        if ob is None:
-            return None
-        k = _skip_ws_back(masked, ob - 1)
-        if k < 0:
-            return None
-        return _primary_start(masked, k)
-    if c == "`":
-        s = masked.rfind("`", 0, j)
-        return s if s >= 0 else None
-    if c == "\x00":
-        s = masked.rfind("\x00", 0, j)
-        return s if s >= 0 else None
-    if c == "?":
-        return j
-    if c.isalnum() or c in "_$.":
-        s = _ident_start_back(masked, j) if c != "." else j + 1
-        # absorb qualified-name / decimal-point segments leftward
-        while s >= 1 and masked[s - 1] == ".":
-            if s >= 2 and (masked[s - 2].isalnum() or masked[s - 2] in "_$"):
-                s = _ident_start_back(masked, s - 2)
-            else:
-                s -= 1  # leading '.5' decimal
-                break
-        # scientific-notation sign: '5' of '1e-5' — extend through the
-        # mantissa when the sign's 'e' tails a bare numeric literal
-        if s >= 2 and masked[s - 1] in "+-" and masked[s - 2] in "eE":
-            k = s - 3
-            while k >= 0 and (masked[k].isdigit() or masked[k] == "."):
-                k -= 1
-            if (k < 0 or not (masked[k].isalnum() or masked[k] in "_`")) and (
-                k + 1 <= s - 3
-            ):
-                s = k + 1
-        if masked[s : j + 1].lower() == "end":
-            return _case_start_back(masked, s)
-        return s
-    return None
-
-
-def _left_chain_class(
-    masked: str, i: int, colcls
-) -> tuple[str | None, int]:
-    """Class of the full multiplicative chain ending just before the
-    '/' at masked[i] (the LEFT operand of that division under
-    left-assoc * / % div), plus the chain's start offset (for error
-    snippets).  `2.0 * a / b` must read fractional even when a is int."""
-    classes: list[str | None] = []
-    start = i
-    j = _skip_ws_back(masked, i - 1)
-    while True:
-        if j < 0:
-            return None, start
-        s = _primary_start(masked, j)
-        if s is None:
-            return None, start
-        classes.append(_expr_class(masked[s : j + 1], colcls))
-        start = s
-        k = _skip_ws_back(masked, s - 1)
-        while k >= 0 and masked[k] in "+-":
-            p = _skip_ws_back(masked, k - 1)
-            if p >= 0 and (masked[p].isalnum() or masked[p] in ")]`\x00_$"):
-                return _combine_classes(classes), start  # binary +/-
-            start = k
-            k = p
-        if k >= 0 and masked[k] in "*%/":
-            j = _skip_ws_back(masked, k - 1)
-            continue
-        if (
-            k >= 2
-            and masked[k - 2 : k + 1].lower() == "div"
-            and not (k >= 3 and (masked[k - 3].isalnum() or masked[k - 3] in "_$"))
-        ):
-            j = _skip_ws_back(masked, k - 3)
-            continue
-        return _combine_classes(classes), start
-
-
-def _primary_end(masked: str, j: int) -> int | None:
-    """End index (inclusive) of the value primary STARTING at masked[j],
-    reading forward, including trailing subscripts and OVER/FILTER
-    postfix clauses."""
-    n = len(masked)
-    c = masked[j]
-    if c == "(":
-        e = _match_paren(masked, j)
-    elif c == "\x00":
-        k = masked.find("\x00", j + 1)
-        if k < 0:
-            return None
-        e = k
-    elif c == "`":
-        k = masked.find("`", j + 1)
-        if k < 0:
-            return None
-        e = k
-    elif c == "?":
-        e = j
-    elif c.isdigit() or c == ".":
-        m = _NUM_LIT_RE.match(masked, j)
-        if not m:
-            return None
-        e = m.end() - 1
-    elif c.isalpha() or c in "_$":
-        m = _QUAL_IDENT_RE.match(masked, j)
-        e = m.end() - 1
-        word = m.group(0).lower()
-        if word == "case":
-            level, last = 1, None
-            for t in re.finditer(r"\b(?:case|end)\b", masked[e + 1 :], re.IGNORECASE):
-                if t.group(0).lower() == "case":
-                    level += 1
-                else:
-                    level -= 1
-                    if level == 0:
-                        last = e + 1 + t.end() - 1
-                        break
-            if last is None:
-                return None
-            e = last
-        else:
-            k = e + 1
-            while k < n and masked[k].isspace():
-                k += 1
-            if k < n and masked[k] == "(" and word not in _NONCALL_KEYWORDS:
-                e = _match_paren(masked, k)
-    else:
-        return None
-    while True:
-        k = e + 1
-        while k < n and masked[k].isspace():
-            k += 1
-        if k < n and masked[k] == "[":
-            e = _match_bracket(masked, k)
-            continue
-        m2 = _POSTFIX_CLAUSE_RE.match(masked, k)
-        if m2:
-            cp = _match_paren(masked, m2.end() - 1)
-            if m2.group(1).lower() == "filter" and not (
-                masked[m2.end() : cp].lstrip().lower().startswith("where")
-            ):
-                break
-            e = cp
-            continue
-        break
-    return e
-
-
-_AS_ALIAS_RE = re.compile(r"\bas\s+([A-Za-z_][A-Za-z_0-9$]*)", re.IGNORECASE)
-_LAMBDA_PARAMS_RE = re.compile(
-    r"(?:\(\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\)|([A-Za-z_]\w*))"
-    r"\s*->"
-)
-
-
 #: Opt-in runtime assertion for the MATCH_RECOGNIZE rewrites' one
 #: uncheckable precondition (ADVICE r11): the windowed formulations
 #: assume MUTUALLY-EXCLUSIVE defines — a row satisfying two predicates
@@ -3961,410 +3411,10 @@ def _mr_sym_case(preds: dict[str, str], order: list[str], lits: list[str]) -> st
     return f"case{guard}{body} else '.' end"
 
 
-#: SQL type words that follow CAST's AS — never treated as alias
-#: definitions (they'd otherwise harvest the cast OPERAND as their
-#: defining expression).
-_TYPE_WORDS = frozenset({
-    "boolean", "tinyint", "smallint", "int", "integer", "bigint",
-    "real", "double", "decimal", "numeric", "float", "varchar", "char",
-    "string", "varbinary", "binary", "date", "timestamp", "time",
-    "interval", "array", "map", "row", "struct", "json", "uuid",
-})
-
-
-_SETOP_RE = re.compile(r"\b(union|intersect|except)\b", re.IGNORECASE)
-
-
-def _setop_in_scope(
-    masked: str, dep: list[int], pos: int, d: int
-) -> bool:
-    """True when the query scope enclosing ``pos`` (the span between
-    its enclosing parens at depth d-1, or the whole statement at
-    d == 0) contains a UNION/INTERSECT/EXCEPT at depth d — i.e. the
-    scope is one branch of a set operation, so an alias harvested here
-    describes only that branch's expression, not the unified column
-    type (ADVICE r12)."""
-    lo, hi = 0, len(masked)
-    if d > 0:
-        j = pos - 1
-        while j >= 0 and not (masked[j] == "(" and dep[j] == d - 1):
-            j -= 1
-        lo = j + 1
-        k = pos
-        while k < len(masked) and not (
-            masked[k] == ")" and dep[k] == d - 1
-        ):
-            k += 1
-        hi = k
-    return any(
-        dep[m.start()] == d
-        for m in _SETOP_RE.finditer(masked, lo, hi)
-    )
-
-
-def _alias_classes(masked: str, colcls: dict[str, str]) -> dict[str, str]:
-    """Division classes for names the statement REDEFINES (the ADVICE
-    r11 narrowing of the blunt shadow-to-ambiguous rule): each
-    ``<expr> AS name`` alias is classed from its DEFINING expression,
-    and a name whose candidate meanings — every definition in the
-    statement plus the same-named catalog column, if one exists — all
-    agree on a class gets that class.  Anything else (a disagreeing
-    pair, an unresolvable definition, a table/derived-table alias,
-    a lambda parameter) maps to 'ambig', which the strict resolver
-    refuses exactly as before.  This turns ``count(*) as cnt`` /
-    ``x*(1-y) as volume`` into typed operands of a later `/`, and lets
-    the same-name rename ``l_quantity / 2 as l_quantity`` through
-    (both meanings class fractional), while anything genuinely
-    two-faced still refuses loudly.
-
-    The defining expression is recovered textually: back from the AS
-    to the previous same-depth comma or the enclosing paren, then
-    leading SELECT/DISTINCT/ALL keywords stripped.  Spans that still
-    carry clause keywords (table aliases harvest ``from t``, set-op
-    branches harvest whole queries) simply fail _expr_class → 'ambig',
-    i.e. the pre-narrowing behavior.
-
-    Set-operation scopes (ADVICE r12): an ``AS name`` inside a scope
-    that also contains a same-depth UNION/INTERSECT/EXCEPT defines only
-    ONE branch of the name — the other branches may supply the column
-    positionally with no alias at all (``select count(*) as x from a
-    union all select price from b`` → x is DOUBLE by Trino's
-    set-operation type unification, not bigint).  Harvesting would see
-    only the aliased branch and silently agree on 'int'; instead every
-    alias whose scope carries a same-depth set-op keyword is forced to
-    'ambig' so strict mode keeps refusing loudly."""
-    dep = _depths(masked)
-    cand: dict[str, set] = {}
-    for m in _AS_ALIAS_RE.finditer(masked):
-        name = m.group(1).lower()
-        if name in _TYPE_WORDS:
-            continue
-        d = dep[m.start()]
-        if _setop_in_scope(masked, dep, m.start(), d):
-            cand.setdefault(name, set()).update({None, "setop"})
-            continue
-        j = m.start() - 1
-        start = 0
-        while j >= 0:
-            if dep[j] < d or (masked[j] == "," and dep[j] == d):
-                start = j + 1
-                break
-            j -= 1
-        expr = masked[start : m.start()].strip()
-        while True:
-            lm = re.match(r"(select|distinct|all)\b\s*", expr, re.IGNORECASE)
-            if not lm:
-                break
-            expr = expr[lm.end() :]
-        cand.setdefault(name, set()).add(
-            _expr_class(expr, colcls) if expr else None
-        )
-    for m in _LAMBDA_PARAMS_RE.finditer(masked):
-        group = m.group(1) or m.group(2)
-        for p in group.split(","):
-            cand.setdefault(p.strip().lower(), set()).add(None)
-    out: dict[str, str] = {}
-    for name, classes in cand.items():
-        if name in colcls:
-            classes = classes | {colcls[name]}
-        only = next(iter(classes)) if len(classes) == 1 else None
-        out[name] = only if only in ("int", "frac") else "ambig"
-    return out
-
-
-def _rewrite_int_division(
-    masked: str,
-    colcls: dict[str, str],
-    strict: bool,
-    adjusted: "dict[str, str] | None" = None,
-) -> str:
-    """Rewrite every int/int `/` to Spark `div`; leave fractional
-    divisions; refuse (strict) or leave (lenient) unresolvable ones.
-    ``adjusted`` takes a precomputed _alias_classes dict (the sign
-    pass already harvested the same statement — round-12 review)."""
-    if adjusted is None:
-        adjusted = _alias_classes(masked, colcls)
-    shadowed = {n for n, c in adjusted.items() if c == "ambig"}
-    if adjusted:
-        colcls = {**colcls, **adjusted}
-    i = 0
-    while True:
-        i = masked.find("/", i)
-        if i < 0:
-            return masked
-        if masked.count("`", 0, i) % 2 == 1:
-            i += 1  # inside a backticked identifier
-            continue
-        lcls, lstart = _left_chain_class(masked, i, colcls)
-        rstart = i + 1
-        while rstart < len(masked) and masked[rstart].isspace():
-            rstart += 1
-        rj = rstart
-        while rj < len(masked) and masked[rj] in "+-":
-            rj += 1
-            while rj < len(masked) and masked[rj].isspace():
-                rj += 1
-        rend = _primary_end(masked, rj) if rj < len(masked) else None
-        rcls = (
-            _expr_class(masked[rstart : rend + 1], colcls)
-            if rend is not None
-            else None
-        )
-        if lcls == "int" and rcls == "int":
-            masked = masked[:i] + " div " + masked[i + 1 :]
-            i += 5
-        elif lcls == "frac" or rcls == "frac":
-            i += 1
-        elif strict:
-            hi = (rend + 1) if rend is not None else min(len(masked), i + 30)
-            lo = lstart if lstart < i else max(0, i - 30)
-            span = masked[lo:hi].strip()
-            # ADVICE r11: when the unresolvable operand is a name the
-            # statement ALIASES somewhere (`... as <name>`, incl. the
-            # common same-name rename `l_quantity / 2 as l_quantity`),
-            # say so — the catalog class is deliberately not trusted
-            # because Spark's lateral-column-alias resolution and
-            # Presto's scoping can disagree on which definition a
-            # reference means.
-            hit = sorted(
-                n
-                for n in shadowed
-                if re.search(rf"\b{re.escape(n)}\b", span, re.IGNORECASE)
-            )
-            note = (
-                (
-                    "  Note: "
-                    + ", ".join(f"'{n}'" for n in hit)
-                    + " is (re)defined in this statement (`... as "
-                    "<name>` / lambda parameter) and its candidate "
-                    "meanings do not agree on one numeric class, so "
-                    "the name's type is ambiguous here — rename the "
-                    "alias or cast this operand explicitly."
-                )
-                if hit
-                else ""
-            )
-            raise ValueError(
-                "dialect: cannot resolve the operand types of `/` in "
-                f"'{span}' — Presto's integer `/` "
-                "TRUNCATES (7/2 = 3) while Spark's returns DOUBLE, so "
-                "the front door refuses to guess.  Cast an operand "
-                "(cast(x as double) for double division) or spell the "
-                "truncating division `x div y`; schema-free "
-                f"translate() keeps the legacy pass-through.{note}"
-            )
-        else:
-            i += 1
-
-
-#: The division classing keeps two per-session state dicts
-#: (``sparketl.session.state``).
-#:
-#: ``schema_classes["snapshot"]`` holds the catalog-derived column
-#: classes with the sorted view-name tuple they were built from.
-#: Add/remove invalidates; REPLACING a view with a different schema
-#: under the same name does NOT (the catalog has no version counter to
-#: observe) — the engine's own registration path
-#: (sparketl.tables.load_tables) clears the cache on every load, and
-#: external replacers must call clear_schema_cache() (documented at
-#: sql()).  A per-call rebuild would be sound but costs ~60 ms of
-#: catalog RPCs per sql() call — ~3 s across the benched suite.
-#: ``schema_classes["probe_names"]`` is the name set seen at the last
-#: classing rebuild — the probe-origin eviction trigger (distinct from
-#: the snapshot's, which every engine push also clears).
-#:
-#: ``schema_fields`` is the per-NAME schema cache behind the class map,
-#: PUSH-based (round 13 — the DML faces' bench inflation): the old
-#: design called spark.catalog.listTables() + a schema read per entry
-#: under CATALOG_LOCK on every catalog churn, and each listTables
-#: materializes a Dataset (~0.5s measured) — concurrent queries
-#: serialized behind it (5x wall on the 8-face probe).  Now the engine
-#: PUSHES each mutation's schema into the cache at mutation time (it
-#: has the DataFrame in hand — zero JVM re-reads), drops show up as
-#: per-name evictions, and freshness is probed per classing via the
-#: ~1ms listLocalTempViews name set, so external temp views are still
-#: auto-discovered.  Entries are ``(origin, fields)`` with origin
-#: 'push' (engine-registered — authoritative, re-pushed on every
-#: mutation) or 'probe' (externally created, schema read here); on a
-#: name-set CHANGE the probe-origin entries are evicted and re-read,
-#: so an externally REPLACED same-name view self-heals at the next
-#: external create/drop (ADVICE r13) — a replace with NO name-set
-#: change ever remains invisible and keeps the documented
-#: clear_schema_cache() contract.
-
-
-def _temp_view_names(spark) -> "list[str]":
-    """Lowercased local-temp-view names plus the schema-qualified
-    catalog tables of non-default databases (round 14 — the DML
-    engine's CREATE SCHEMA namespace) — together, the engine's entire
-    catalog namespace.  Uses the session catalog's listLocalTempViews
-    and the external catalog's listDatabases/listTables (plain Seqs of
-    identifiers over in-memory maps, ~1ms) instead of
-    spark.catalog.listTables(), which materializes a whole Dataset per
-    call (~0.2-0.5s measured — the round-13 concurrency regression);
-    falls back to the public temp-view-only listing if the internal
-    API moves (qualified tables then simply sit outside the `/`
-    classing namespace, the documented pre-r14 scope)."""
-    try:
-        cat = (
-            spark._jsparkSession.sessionState().catalog()  # noqa: SLF001
-        )
-        seq = cat.listLocalTempViews("*")
-        names = [seq.apply(i).table().lower() for i in range(seq.size())]
-        ext = cat.externalCatalog()
-        dbs = ext.listDatabases()
-        for i in range(dbs.size()):
-            db = dbs.apply(i).lower()
-            if db == "default":
-                continue
-            ts = ext.listTables(db)
-            names.extend(
-                f"{db}.{ts.apply(j).lower()}" for j in range(ts.size())
-            )
-        return sorted(names)
-    except Exception:  # noqa: BLE001 - internal API moved; public path
-        return sorted(
-            t.name.lower() for t in spark.catalog.listTables() if t.name
-        )
-
-
-def clear_schema_cache(name: str | None = None) -> None:
-    """Invalidate the division-class schema cache.  With ``name``, only
-    that table/view's cached fields are dropped (a DROP-shaped
-    eviction; the aggregated class map rebuilds from the remaining
-    cached fields — pure python, no catalog calls); with no argument
-    everything is dropped and re-read on the next classing, the right
-    call when many registrations changed at once (load_tables) or a
-    same-named view was REPLACED outside the engine (a name-set probe
-    cannot see an in-place schema change)."""
-    with CATALOG_LOCK:
-        for classes in states("schema_classes"):
-            classes.pop("snapshot", None)
-        for fields in states("schema_fields"):
-            if name is None:
-                fields.clear()
-            else:
-                fields.pop(name.lower(), None)
-
-
-def update_schema_cache(spark, name: str, schema) -> None:
-    """PUSH a table/view's schema into the classing cache at mutation
-    time — the engine has the registered DataFrame's schema in hand, so
-    no catalog round-trip is ever needed for its own objects."""
-    with CATALOG_LOCK:
-        state(spark, "schema_fields")[name.lower()] = (
-            "push",
-            tuple(
-                (f.name, f.dataType.simpleString()) for f in schema.fields
-            ),
-        )
-        state(spark, "schema_classes").pop("snapshot", None)
-
-
-def _catalog_column_classes(spark: SparkSession) -> dict[str, str]:
-    """column name (lowercased, unqualified) → division class over every
-    table/view the session catalog lists; a name carrying conflicting
-    classes across tables maps to 'ambig' (treated as unresolvable).
-    A catalog entry that fails to read raises — a broken view must not
-    silently drop the table whose schema would have forced 'ambig'
-    (round-11 review).
-
-    Freshness probe: the temp-view NAME SET, enumerated via the
-    session catalog's listLocalTempViews (~1ms — the public
-    listTables() materializes a Dataset per call, ~0.2-0.5s, which
-    under the round-13 CATALOG_LOCK serialized concurrent queries 5x
-    on the 8-face DML probe).  Schemas are PUSH-maintained: engine
-    mutations store the DataFrame schema they just registered
-    (``update_schema_cache``) and evict drops, so a name-set change
-    costs a schema read only for names the engine did not push
-    (external temp views — auto-discovered here, same semantics as the
-    original listTables design).  Probe + pushes share
-    ``session.CATALOG_LOCK``; the vanished-entry skip stays as a belt
-    for catalog mutations made OUTSIDE the engine (a user thread's own
-    createOrReplaceTempView is not obliged to take the lock).  An
-    in-place external REPLACE (same name, new schema) is invisible to
-    a name-set probe — those callers call clear_schema_cache(), the
-    documented contract, unchanged since r10."""
-    with CATALOG_LOCK:
-        names = tuple(_temp_view_names(spark))
-        classes = state(spark, "schema_classes")
-        hit = classes.get("snapshot")
-        if hit is not None and hit[0] == names:
-            return hit[1]
-        fcache = state(spark, "schema_fields")
-        prev = classes.get("probe_names")
-        if prev is not None and prev != names:
-            # name-set CHANGE (external create/drop reached the probe):
-            # evict probe-origin schemas so an externally REPLACED
-            # same-name view is re-read now rather than serving stale
-            # classes forever (ADVICE r13); push-origin entries stay —
-            # the engine re-pushes on every mutation of its own objects
-            for k in [k for k, v in fcache.items() if v[0] == "probe"]:
-                del fcache[k]
-        classes["probe_names"] = names
-        for name in names:
-            if name in fcache:
-                # engine mutations pushed this schema (or a prior
-                # classing read it) — no catalog round-trip
-                continue
-            try:
-                fcache[name] = (
-                    "probe",
-                    tuple(
-                        (f.name, f.dataType.simpleString())
-                        for f in spark.table(name).schema.fields
-                    ),
-                )
-            except Exception as e:  # noqa: BLE001 - narrowed below
-                # A SQL view re-analyzes its body on every read, so one
-                # whose base was dropped or reshaped fails to read; its
-                # columns stay pinned in the catalog, which lists them
-                # without analysis — a broken view must not silently
-                # drop a schema that would have forced 'ambig'
-                # (round-11 review).  An entry that VANISHED between
-                # the name listing and the read (an unlocked external
-                # thread's DROP/RENAME) is equivalent to never having
-                # been listed: skip it; a statement that still
-                # references it fails loudly in Spark's own analysis.
-                try:
-                    cols = spark.catalog.listColumns(name)
-                except Exception:  # noqa: BLE001 - classified below
-                    if "TABLE_OR_VIEW_NOT_FOUND" in str(
-                        e
-                    ) or "PARSE_EMPTY_STATEMENT" in str(e):
-                        continue
-                    raise e from None
-                fcache[name] = (
-                    "probe",
-                    tuple((c.name, c.dataType) for c in cols),
-                )
-        # names dropped OUTSIDE the engine must not linger
-        for stale in set(fcache) - set(names):
-            del fcache[stale]
-        out: dict[str, str] = {}
-        for _origin, fields in fcache.values():
-            for cname, tname in fields:
-                cls = _classify_type_name(tname)
-                key = cname.lower()
-                prev = out.get(key)
-                if prev is None:
-                    out[key] = cls
-                elif prev != cls:
-                    out[key] = "ambig"
-        classes["snapshot"] = (names, out)
-    return out
-
-
-def translate(presto_sql: str, schema: dict[str, str] | None = None) -> str:
-    """Presto-dialect SQL → Spark SQL (see module docstring table).
-
-    ``schema`` maps lowercased column names to Spark type spellings
-    (or pre-computed classes 'int'/'frac'/'other'/'ambig'); when given,
-    the type-aware integer-division pass runs in STRICT mode (int/int →
-    ``div``, unresolvable operands refuse loudly).  Without it the pass
-    is skipped entirely — direct translate() callers keep Spark's
-    double `/` (the legacy, docstring-documented behavior); the
-    ``sql()`` front door always passes the catalog schemas."""
+def _translate(presto_sql: str) -> tuple[str, str, "str | None"]:
+    """Presto-dialect SQL → (untyped Spark text, marked text, typing
+    probe) — see ``_translation``; the rewrites are the module
+    docstring's table."""
     masked, lits = _mask(presto_sql)
 
     # Trino catalog/default-schema table spellings (round 14, VERDICT
@@ -4392,45 +3442,13 @@ def translate(presto_sql: str, schema: dict[str, str] | None = None) -> str:
             flags=re.IGNORECASE,
         )
 
-    if schema is not None:
-        colcls = {
-            k.lower(): (
-                v if v in ("int", "frac", "other", "ambig")
-                else _classify_type_name(v)
-            )
-            for k, v in schema.items()
-        }
-        # Presto sign() PRESERVES its argument class (sign(bigint) →
-        # bigint) while Spark's sign() always returns DOUBLE, so an
-        # int-classified sign() must be cast back — both so the value
-        # type matches Presto standalone AND because the ` div ` this
-        # pass emits rejects a DOUBLE operand (DATATYPE_MISMATCH,
-        # probed live; ADVICE r11).  Placeholder name because
-        # _rewrite_calls re-scans its own replacement (a direct
-        # `sign(` would recurse on the still-int argument).  Uses the
-        # same alias-adjusted classes as the division pass, so an
-        # aliased name carries its agreed class (or degrades to
-        # 'ambig' → left as-is → a downstream `/` over it refuses
-        # rather than guesses).
-        shadow_cls = colcls
-        _adj = _alias_classes(masked, colcls)
-        if _adj:
-            shadow_cls = {**colcls, **_adj}
-        masked = _rewrite_calls(
-            masked, "sign",
-            lambda a: (
-                f"cast(__sparketl_sign({a[0]}) as bigint)"
-                if len(a) == 1 and _expr_class(a[0], shadow_cls) == "int"
-                else None
-            ),
-        )
-        # reuse the harvest: the sign rewrite only wraps calls (its
-        # inserted `as bigint` is a type word the harvest skips), so
-        # the alias map is unchanged
-        masked = _rewrite_int_division(
-            masked, colcls, strict=True, adjusted=_adj
-        )
-        masked = re.sub(r"\b__sparketl_sign\s*\(", "sign(", masked)
+    # A user's sign(): Presto's keeps its argument's type (sign(bigint)
+    # is bigint), Spark's is always DOUBLE — marked for typing.  Marked
+    # first, so a sign( that a later rewrite emits (truncate) is Spark's.
+    masked = _rewrite_calls(
+        masked, "sign",
+        lambda a: f"__sparketl_sign({a[0]})" if len(a) == 1 else None,
+    )
 
     masked = _rewrite_match_recognize(masked, lits)
     masked = _rewrite_fetch_first(masked)
@@ -4444,9 +3462,7 @@ def translate(presto_sql: str, schema: dict[str, str] | None = None) -> str:
     # through the same machinery (the rank-RANGE peer frame IS the
     # peer group).  Unhandleable shapes refuse loudly inside.
     masked = _rewrite_groups_frames(masked)
-    masked = _rewrite_frame_exclude(
-        masked, colcls if schema is not None else None
-    )
+    masked = _rewrite_frame_exclude(masked)
     masked = _rewrite_tablesample(masked)
     masked = _rewrite_row_constructor(masked)
     masked = _rewrite_unnest(masked)
@@ -4863,7 +3879,389 @@ def translate(presto_sql: str, schema: dict[str, str] | None = None) -> str:
         if len(a) == 1 else None,
     )
 
-    return _unmask(masked, lits)
+    return _translation(masked, lits)
+
+
+def translate(presto_sql: str) -> str:
+    """Presto-dialect SQL → Spark SQL (see module docstring table),
+    without types: every `/` stays Spark's (DOUBLE), sign() stays
+    Spark's, TRY(a / b) is ``try_divide(a, b)``, and an EXCLUDE that
+    composes only for an integral ``sum(x)`` refuses.  The typed entry
+    points (``sql``, EXPLAIN, ``dml``'s views and MERGE fragments)
+    decide each of those from Spark's types (see "Typing by probe")."""
+    text, marked, probe = _translate(presto_sql)
+    for _pos, site in _sites(marked, probe):
+        if site != "/" and _STAND_INS[site][1] is None:
+            raise ValueError(_isum_refusal(site))
+    return text
+
+
+# ---------------------------------------------------------------------------
+# Typing by probe.
+#
+# Presto's `/` truncates toward zero when both operands are integral
+# (bigint/bigint → bigint, 7/2 = 3, -7/2 = -3); Spark's always returns
+# DOUBLE.  Three more rewrites turn on a type: a user's sign() (Presto's
+# keeps its argument's type, Spark's is DOUBLE), TRY(a / b), and
+# EXCLUDE's composed sum(x) (exact only for integral x).  ``translate``
+# sees no types: it leaves every `/` as Spark's and puts a marker call
+# at each of the other sites.  The typed entry points (``_typed``) let
+# Spark's analyzer type them all with one PROBE, a text of the same
+# length that Spark analyzes but never runs:
+#
+#   * every `/` reads `%`: the same length, precedence and associativity
+#     (one grammar rule), and `a % b` is integral exactly when both
+#     operands are;
+#   * every marker name reads as a padded, type-preserving stand-in
+#     call (``_STAND_INS``);
+#   * a one-argument floor/ceil/ceiling reads as a padded abs: Presto's
+#     keep their argument's type, Spark's return BIGINT for a DOUBLE.
+#
+# The sites are where the probe differs from the text.  Each site is
+# CLAIMED by the node Spark typed for it: a stand-in by the call that
+# starts at its marker, a `%` by the Remainder whose operator sits at
+# it — the parsed probe gives each Remainder's span and where its right
+# operand starts (the analyzed plan keeps the spans, but its resolved
+# columns carry stray ones).  An integral `/` becomes Spark's ` div `
+# (truncates toward zero, BIGINT, DIVIDE_BY_ZERO under ANSI, as
+# Presto's); a fractional one stays `/` (DECIMAL scale rules differ
+# between the engines, but neither truncates).  Spark evaluates a
+# VALUES list while parsing or analyzing it, so its sites are claimed
+# by a second probe that reads the list as a SELECT of its rows, at
+# the same positions; an ORDER BY or HAVING term Spark replaced by a
+# reference to an equal selected one takes its same-text twin's
+# claims.  A site that no node claims, or whose operand Spark cast
+# implicitly from a STRING (Presto refuses varchar / integer; the cast
+# shares the site's span, where a written cast has its own), refuses:
+# a wrong guess is never made silently.
+# ---------------------------------------------------------------------------
+
+#: marker → (probe stand-in, Spark call when not integral, (head, tail)
+#: of the Spark call when integral).  An EXCLUDE marker has no
+#: non-integral call: it refuses.  TRY(int / int) is Presto's truncated
+#: BIGINT, NULL on zero-divide or overflow: try_divide NULLs on zero and
+#: the try_cast truncates toward zero and NULLs on overflow, exact while
+#: |a/b| < 2^53 (the double mantissa).
+_STAND_INS = {
+    "__sparketl_sign": ("coalesce", "sign", ("cast(sign", " as bigint)")),
+    "__sparketl_trydiv": (
+        "try_mod", "try_divide", ("try_cast(try_divide", " as bigint)")
+    ),
+    **{
+        _isum_mark(mode): ("coalesce", None, ("", ""))
+        for mode in ("current row", "group", "ties")
+    },
+}
+_MARK_RE = re.compile("(" + "|".join(_STAND_INS) + r")\(")
+_SITE_RE = re.compile("/|" + _MARK_RE.pattern)
+_FLOOR_RE = re.compile(r"\b(floor|ceiling|ceil)(\s*\()", re.IGNORECASE)
+_INTEGRAL = frozenset({"byte", "short", "integer", "long"})
+
+
+def _probe(masked: str) -> str:
+    """The same-length typing probe of a marked, masked text."""
+    parts = masked.split("`")
+    parts[::2] = [p.replace("/", "%") for p in parts[::2]]
+    probe = _MARK_RE.sub(
+        lambda m: _STAND_INS[m.group(1)][0].ljust(len(m.group(1))) + "(",
+        "`".join(parts),
+    )
+    if probe == masked:
+        return masked
+
+    def pad_abs(m: re.Match) -> str:
+        cp = _match_paren(probe, m.end() - 1)
+        if len(_split_args(probe[m.end() : cp])) != 1:
+            return m.group(0)
+        return "abs".ljust(len(m.group(1))) + m.group(2)
+
+    return _FLOOR_RE.sub(pad_abs, probe)
+
+
+def _translation(
+    masked: str, lits: list[str]
+) -> tuple[str, str, "str | None"]:
+    """(untyped Spark text, marked text, typing probe) of a rewritten,
+    masked text; the probe is None when the text has no site."""
+    text = _unmask(
+        _MARK_RE.sub(
+            lambda m: (_STAND_INS[m.group(1)][1] or "") + "(", masked
+        ),
+        lits,
+    )
+    probe = _probe(masked)
+    if probe == masked:
+        return text, text, None
+    return text, _unmask(masked, lits), _unmask(probe, lits)
+
+
+def _sites(marked: str, probe: "str | None") -> "list[tuple[int, str]]":
+    """(position, "/" or marker name) of every site of a marked text:
+    where its probe differs (a `/` or a marker name in a literal or a
+    quoted identifier reads the same in both)."""
+    if probe is None:
+        return []
+    return [
+        (m.start(), m.group(1) or "/")
+        for m in _SITE_RE.finditer(marked)
+        if probe[m.start()] != marked[m.start()]
+    ]
+
+
+def _analyzed(
+    spark: SparkSession, text: str, over: "Callable[[], DataFrame] | None"
+):
+    """Spark's analyzed plan of a statement, or of one expression over
+    the frame ``over()`` — parsed and analyzed, never run."""
+    if over is not None:
+        return over().selectExpr(text)._jdf.queryExecution().analyzed()  # noqa: SLF001
+    st = spark._jsparkSession.sessionState()  # noqa: SLF001
+    return _analyze(spark, st.sqlParser().parsePlan(text))
+
+
+def _analyze(spark: SparkSession, parsed):
+    """Spark's analyzed plan of a parsed statement."""
+    st = spark._jsparkSession.sessionState()  # noqa: SLF001
+    skip = _jvm_const(spark._jvm, "execution.CommandExecutionMode", "SKIP")  # noqa: SLF001
+    return st.executePlan(parsed, skip).analyzed()
+
+
+@functools.cache
+def _jvm_const(jvm, cls: str, name: str):
+    """A constant of ``org.apache.spark.sql.<cls>``, looked up once per
+    JVM (each package step of a lookup is a py4j round trip)."""
+    return getattr(getattr(jvm.org.apache.spark.sql, cls), name)()
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+_ORIGIN_RE = re.compile(
+    r"Origin\((?:None|Some\(\d+\)),(?:None|Some\(\d+\)),"
+    r"Some\((\d+)\),Some\((\d+)\)"
+)
+
+
+def _span(n) -> "tuple[int, int] | None":
+    """(start, stop) of a node's text, None when it has none — read from
+    the origin's string, one JVM call instead of five."""
+    m = _ORIGIN_RE.match(n.origin().toString())
+    return (int(m.group(1)), int(m.group(2))) if m else None
+
+
+_SUBQUERIES = ("ScalarSubquery", "Exists", "ListQuery", "LateralSubquery")
+
+
+def _nodes(spark: SparkSession, roots: list, patterns: "tuple[str, ...]"):
+    """Every (scope, node) under the (is a plan, node) ``roots`` whose
+    subtree holds one of the tree ``patterns``: plans, their
+    expressions, subquery plans and CTE bodies, but not views (their
+    text was typed when they were created).  A scope numbers a query
+    block: a derived table, CTE body or subquery starts a new one."""
+    kinds = [
+        _jvm_const(spark._jvm, "catalyst.trees.TreePattern", p)  # noqa: SLF001
+        for p in patterns
+    ]
+    scopes = itertools.count(1)
+    todo = [(0, is_plan, n) for is_plan, n in roots]
+    while todo:
+        scope, is_plan, n = todo.pop()
+        name = n.nodeName()
+        if name == "UnresolvedWith":  # its CTE bodies are not children
+            todo += [(scope, True, c) for c in _seq(n.innerChildren())]
+        if name == "View" or not any(n.containsPattern(k) for k in kinds):
+            continue
+        yield scope, n
+        if is_plan:
+            todo += [(scope, False, e) for e in _seq(n.expressions())]
+            if name == "SubqueryAlias":
+                scope = next(scopes)
+        elif name in _SUBQUERIES:
+            todo.append((next(scopes), True, n.plan()))
+        todo += [(scope, is_plan, c) for c in _seq(n.children())]
+
+
+def _casts_string(n, span: "tuple[int, int]") -> bool:
+    """Whether Spark cast a STRING to an operand of ``n``: an implicit
+    cast under ``n`` shares its span (a written one has its own)."""
+    todo = [n]
+    while todo:
+        for c in _seq(todo.pop().children()):
+            if _span(c) != span:
+                continue
+            if c.nodeName() != "Cast":
+                todo.append(c)
+            elif c.child().dataType().typeName().startswith("string"):
+                return True
+    return False
+
+
+def _claims(
+    spark: SparkSession,
+    probe: str,
+    over: "Callable[[], DataFrame] | None",
+    sites: "dict[int, str]",
+) -> "tuple[dict[int, set], list[tuple[int, int]]]":
+    """Site position → {(stop of the claiming node's span, typed
+    integral, has an operand cast from a STRING)}, from Spark's analysis
+    of ``probe``; and the spans of the probe's VALUES lists.  A site
+    whose node Spark replaced by a reference to an equal expression (an
+    ORDER BY or HAVING term that is also selected) takes the claims of
+    the sites with the same text in its query block.  Over a frame,
+    only the probe's own expression is walked."""
+    parser = spark._jsparkSession.sessionState().sqlParser()  # noqa: SLF001
+    if over is None:
+        parsed = [(True, parser.parsePlan(probe))]
+    else:
+        parsed = [(False, parser.parseExpression(probe))]
+    where: dict = {}  # site → (scope, span) in the parsed probe
+    lists = []
+    kinds = ("BINARY_ARITHMETIC", "LOCAL_RELATION")
+    if any(site != "/" for site in sites.values()):
+        kinds += ("UNRESOLVED_FUNCTION",)
+    for scope, n in _nodes(spark, parsed, kinds):
+        name = n.nodeName()
+        if name in ("LocalRelation", "UnresolvedInlineTable"):
+            span = _span(n)
+            if span and probe[span[0] : span[0] + 6].lower() == "values":
+                lists.append(span)
+            continue
+        if name == "Remainder":
+            span, right = _span(n), _span(n.right())
+            pos = span and right and probe.rfind("%", span[0], right[0])
+        elif name == "UnresolvedFunction":
+            span = _span(n)
+            pos = span and span[0]
+        else:
+            continue
+        if pos in sites:
+            where[pos] = (scope, span)
+    ops = {span: pos for pos, (_scope, span) in where.items()}
+    if over is None:
+        analyzed = [(True, _analyze(spark, parsed[0][1]))]
+    else:
+        plan = _analyzed(spark, probe, over)
+        analyzed = [(False, e) for e in _seq(plan.expressions())]
+    claims: dict = {}
+    for _scope, n in _nodes(spark, analyzed, ("BINARY_ARITHMETIC", "COALESCE")):
+        name = n.nodeName()
+        if name not in ("Remainder", "Coalesce", "TryMod"):
+            continue
+        span = _span(n)
+        pos = ops.get(span) if name == "Remainder" else span and span[0]
+        if pos in sites:
+            claims.setdefault(pos, set()).add((
+                span[1],
+                n.dataType().typeName() in _INTEGRAL,
+                _casts_string(n, span),
+            ))
+    for pos, (scope, (start, stop)) in where.items():
+        if pos not in claims:
+            text = probe[start : stop + 1]
+            for twin, (tscope, (ts, te)) in where.items():
+                if twin in claims and tscope == scope and probe[ts : te + 1] == text:
+                    claims.setdefault(pos, set()).update(claims[twin])
+    return claims, lists
+
+
+def _values_claims(
+    spark: SparkSession,
+    probe: str,
+    sites: "dict[int, str]",
+    claims: dict,
+    lists: "list[tuple[int, int]]",
+) -> None:
+    """Claim the sites inside the VALUES ``lists``: Spark evaluates a
+    list while parsing or analyzing it, so a second probe reads each
+    list that holds an unclaimed site as a SELECT of its rows, at the
+    same positions (a row of several values reads as a struct)."""
+    for start, stop in lists:
+        if all(p in claims for p in sites if start < p < stop):
+            continue
+        rows = (
+            " " * start + "select" + probe[start + 6 : stop + 1]
+            + " " * (len(probe) - stop - 1)
+        )
+        try:
+            more, _lists = _claims(spark, rows, None, sites)
+        except AnalysisException as e:
+            raise _cannot_type(
+                "Spark rejects the VALUES list read as a SELECT "
+                f"({str(e).splitlines()[0]})"
+            ) from e
+        for p, got in more.items():
+            claims.setdefault(p, set()).update(got)
+
+
+def _cannot_type(why: str) -> ValueError:
+    return ValueError(
+        f"dialect: cannot type the operands of `/` (or of sign/TRY/"
+        f"EXCLUDE): {why}.  Cast an operand (cast(x as double) for "
+        "double division) or spell the truncating division `x div y`"
+    )
+
+
+def _resolve(marked: str, sites: "dict[int, str]", claims: dict) -> str:
+    """``marked`` with every site decided by its ``claims``."""
+    edits = []
+    for pos, site in sites.items():
+        got = claims.get(pos)
+        at = repr(
+            _MARK_RE.sub(
+                lambda m: (_STAND_INS[m.group(1)][1] or "sum") + "(",
+                marked[max(0, pos - 24) : pos + 24],
+            )
+        )
+        if not got:
+            raise _cannot_type(f"Spark's analysis keeps no node for {at}")
+        if any(string for _stop, _int, string in got):
+            raise _cannot_type(
+                f"an operand in {at} is a string (Presto refuses varchar "
+                "arithmetic)"
+            )
+        integral = all(i for _stop, i, _string in got)
+        if site == "/":
+            if integral:
+                edits.append((pos, 1, " div "))
+            continue
+        _stand_in, plain, (head, tail) = _STAND_INS[site]
+        if integral:
+            stop = next(iter(got))[0]
+            edits += [(pos, len(site), head), (stop + 1, 0, tail)]
+        elif plain is None:
+            raise ValueError(_isum_refusal(site))
+        else:
+            edits.append((pos, len(site), plain))
+    out = marked
+    for pos, n, text in sorted(edits, reverse=True):
+        out = out[:pos] + text + out[pos + n :]
+    return out
+
+
+def _typed(
+    spark: SparkSession,
+    presto_sql: str,
+    over: "Callable[[], DataFrame] | None" = None,
+) -> str:
+    """Spark text of a Presto statement — or, with ``over``, of one
+    expression over the columns of the frame ``over()`` — with every
+    type-dependent site decided by Spark's types of its probe.  A text
+    without such a site costs no analysis (and no ``over()`` call)."""
+    text, marked, probe = _translate(presto_sql)
+    sites = dict(_sites(marked, probe))
+    if not sites:
+        return text
+    try:
+        claims, lists = _claims(spark, probe, over, sites)
+    except AnalysisException as e:
+        _analyzed(spark, text, over)  # the text's own error first
+        raise _cannot_type(
+            "Spark rejects the typing probe, which reads each `/` as `%` "
+            f"({str(e).splitlines()[0]})"
+        ) from e
+    _values_claims(spark, probe, sites, claims, lists)
+    return _resolve(marked, sites, claims)
 
 
 def _plan_with_metrics(node, depth: int = 0, out: "list[str] | None" = None):
@@ -4916,9 +4314,7 @@ def _explain_analyze(spark: SparkSession, query_sql: str) -> DataFrame:
     the artifact a 100-TB plan review wants."""
     import time as _time
 
-    df = spark.sql(
-        translate(query_sql, schema=_catalog_column_classes(spark))
-    )
+    df = spark.sql(_typed(spark, query_sql))
     t0 = _time.perf_counter()
     n = sum(1 for _ in df.toLocalIterator())
     wall = _time.perf_counter() - t0
@@ -4944,18 +4340,15 @@ def sql(spark: SparkSession, presto_sql: str) -> DataFrame:
     has no one Spark plan to annotate, so it executes and reports its
     write-side metrics instead — `sparketl.dml.explain_analyze`).
 
-    Schema note: the integer-division resolver reads the catalog
-    schemas once per (session, view-name set) — the engine's own
-    loader invalidates the cache, but code that REPLACES a temp view
-    with a different schema under the same name outside
-    sparketl.tables must call ``clear_schema_cache()`` (the catalog
-    exposes no version counter to observe; a later external
-    create/drop also self-heals it, since a name-set change re-reads
-    externally-discovered schemas).  Scope: the resolver's namespace
-    is the session's LOCAL temp views — the engine's entire catalog —
-    so columns living only in global temp views or external-catalog
-    tables do not participate in `/` classing (qualify or cast those
-    operands explicitly).
+    Types: a text holding a `/` (or a user's sign(), TRY(a / b), or an
+    EXCLUDE over sum(x)) is typed by Spark's analyzer through its probe
+    (see "Typing by probe"), against the catalog as it is at this call:
+    any table or view, however it was registered or replaced, types
+    its columns by its own schema.  An unknown column raises Spark's
+    own error (UNRESOLVED_COLUMN); a probe Spark rejects while the text
+    itself analyzes (e.g. an INTERVAL / number), a STRING operand (Spark
+    would cast it; Presto refuses varchar / integer), and a site no
+    analyzed node claims refuse instead of guessing.
 
     Requires the default ``spark.sql.parser.escapedStringLiterals=false``:
     ``_unmask``'s backslash doubling compensates for Spark's escaping
@@ -5006,14 +4399,9 @@ def sql(spark: SparkSession, presto_sql: str) -> DataFrame:
                 "plan to show; EXPLAIN the statement's SELECT body "
                 "instead"
             )
-        return spark.sql(
-            "EXPLAIN FORMATTED "
-            + translate(inner, schema=_catalog_column_classes(spark))
-        )
+        return spark.sql("EXPLAIN FORMATTED " + _typed(spark, inner))
     from sparketl import dml as _dml
 
     if _dml.is_dml(presto_sql):
         return _dml.execute(spark, presto_sql)
-    return spark.sql(
-        translate(presto_sql, schema=_catalog_column_classes(spark))
-    )
+    return spark.sql(_typed(spark, presto_sql))

@@ -120,13 +120,12 @@ from sparketl import dialect as _d
 from sparketl import manifest as _m
 from sparketl.session import CATALOG_LOCK, local_frame, state
 from sparketl.dialect import (
-    _catalog_column_classes,
     _depths,
     _mask,
     _match_paren,
     _SENT_RE,
     _split_args,
-    translate,
+    translate,  # noqa: F401 - perfbench's trace wraps dml.translate
 )
 
 __all__ = [
@@ -243,10 +242,6 @@ def _refresh(spark: SparkSession, name: str) -> None:
     with CATALOG_LOCK:
         df.createOrReplaceTempView(name)
     _unpin_if_fixture(spark, name)
-    # REPLACING a same-named view is invisible to the catalog cache
-    # (no version counter) — push the fresh schema explicitly, as
-    # documented at sql()
-    _d.update_schema_cache(spark, name, df.schema)
 
 
 def _qparts(name: str) -> tuple[str, str]:
@@ -301,10 +296,6 @@ def _refresh_catalog_table(spark: SparkSession, name: str, h: _Handle) -> None:
         if adds:
             spark.sql(f"alter table {_qident_sql(name)} add {' '.join(adds)}")
         spark.catalog.refreshTable(name)
-    # qualified tables participate in `/` classing exactly like flat
-    # ones: the name-set probe lists catalog tables of non-default
-    # schemas, so push the schema to keep the rebuild read-free
-    _d.update_schema_cache(spark, name, spark.table(name).schema)
 
 
 # ---------------------------------------------------------------------------
@@ -788,7 +779,7 @@ def _define_view(
     spark: SparkSession, name: str, query: str, or_replace: bool
 ) -> None:
     """CREATE [OR REPLACE] a Spark SQL view ``name`` over the Presto
-    ``query``, translated once here (its `/` classing included): a
+    ``query``, translated and typed once here (its `/` included): a
     TEMPORARY view for a flat name, a catalog view for a qualified one.
     Spark analyzes the body now, so a typo fails at CREATE VIEW (Trino
     validates at creation), and again on every read, so the view
@@ -800,7 +791,7 @@ def _define_view(
     namespace is, and the refusal is re-raised with that guidance."""
     flat = "." not in name
     target = f"temporary view `{name}`" if flat else f"view {_qident_sql(name)}"
-    translated = _d.translate(query, schema=_d._catalog_column_classes(spark))
+    translated = _d._typed(spark, query)
     rep = "or replace " if or_replace else ""
     try:
         with CATALOG_LOCK:
@@ -836,8 +827,6 @@ def _define_view(
                 "REPLACE VIEW"
             ) from e
         raise
-    if flat:
-        _d.update_schema_cache(spark, name, spark.table(f"`{name}`").schema)
 
 
 def _create_view(
@@ -1388,7 +1377,6 @@ def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                 spark.catalog.dropTempView(name)
         views.pop(name)
         _unpin_if_fixture(spark, name)
-        _d.clear_schema_cache(name)
         return _rows_frame(spark, 0)
     m = re.match(
         rf"^drop\s+table\s+(if\s+exists\s+)?({_QIDENT})\s*$",
@@ -1421,7 +1409,6 @@ def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
         else:
             spark.catalog.dropTempView(name)
     _unpin_if_fixture(spark, name)
-    _d.clear_schema_cache(name)
     _m.drop(h.v.root)
     return _rows_frame(spark, 0)
 
@@ -1731,29 +1718,21 @@ def _merge_apply_clauses(
     computed as one tiny aggregate over the staged rows before any
     write."""
     tgt_df = spark.table(name)
-    # MERGE expressions resolve against the target and source frames
-    # first — overlay their column classes onto the catalog's (a
-    # source-subquery alias like `o_totalprice as p` exists nowhere in
-    # the catalog); a name whose catalog class CONFLICTS with the local
-    # one degrades to 'ambig' (a scalar subquery inside an expression
-    # could mean the catalog's) → the int-division pass refuses rather
-    # than guesses.
-    from sparketl.dialect import _classify_type_name
+    s = src_df.withColumn("__sm", F.lit(1)).alias(salias)
 
-    colcls = dict(_catalog_column_classes(spark))
-    for f in list(tgt_df.schema.fields) + list(src_df.schema.fields):
-        cls = _classify_type_name(f.dataType.simpleString())
-        prev = colcls.get(f.name.lower())
-        colcls[f.name.lower()] = (
-            cls if prev is None or prev == cls else "ambig"
-        )
+    def matched() -> DataFrame:
+        # the names the ON condition and the WHEN MATCHED clauses see
+        return tgt_df.alias(talias).crossJoin(s)
 
-    def tx(fragment: str) -> str:
-        return translate(_unmask_raw(fragment, lits), schema=colcls)
+    def source() -> DataFrame:
+        # the names the NOT MATCHED clauses see
+        return src_df.alias(salias)
+
+    def tx(fragment: str, over=matched) -> str:
+        return _d._typed(spark, _unmask_raw(fragment, lits), over)
 
     tgt_cols = tgt_df.columns
     typ = {f.name: f.dataType for f in tgt_df.schema.fields}
-    s = src_df.withColumn("__sm", F.lit(1)).alias(salias)
     scan = tgt_df
     probe_parts: set | None = None
     if h.part_col is not None:
@@ -1841,7 +1820,7 @@ def _merge_apply_clauses(
         for i in reversed(range(len(insert_clauses))):
             c = insert_clauses[i]
             cond = (
-                F.expr(tx(c["cond"])).eqNullSafe(F.lit(True))
+                F.expr(tx(c["cond"], source)).eqNullSafe(F.lit(True))
                 if c["cond"]
                 else F.lit(True)
             )
@@ -1864,7 +1843,7 @@ def _merge_apply_clauses(
                 if col.lower() in vmap:
                     sel[col] = F.when(
                         F.col("__iact") == i,
-                        F.expr(tx(vmap[col.lower()])).cast(typ[col]),
+                        F.expr(tx(vmap[col.lower()], source)).cast(typ[col]),
                     ).otherwise(sel[col])
         # the source side of an outer join rather than a left_anti
         # join, which the optimizer would copy into each branch of a
@@ -2015,7 +1994,6 @@ def _alter_view_rename(
     with CATALOG_LOCK:
         spark.catalog.dropTempView(name)
     _unpin_if_fixture(spark, name, new)
-    _d.clear_schema_cache(name)
     return _rows_frame(spark, 0)
 
 
@@ -2086,7 +2064,6 @@ def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
             else:
                 spark.catalog.dropTempView(name)
         _unpin_if_fixture(spark, name)
-        _d.clear_schema_cache(name)
         _refresh(spark, new)
         return _rows_frame(spark, 0)
 
@@ -2284,9 +2261,8 @@ def _show(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
                     if n.startswith(f"{sch}.")
                 )
             return local_frame(spark, [(n,) for n in names], "table string")
-        # under CATALOG_LOCK: the same mid-mutation listing race the
-        # schema classing had (ADVICE r12 — SHOW TABLES lacked even
-        # the old retry)
+        # under CATALOG_LOCK: a listing raced by a mutation dies with
+        # PARSE_EMPTY_STATEMENT (ADVICE r12)
         with CATALOG_LOCK:
             names = sorted(t.name for t in spark.catalog.listTables())
         return local_frame(spark, [(n,) for n in names], "table string")

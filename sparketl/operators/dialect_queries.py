@@ -76,13 +76,12 @@ def sql_presto_dialect(spark, sf_dir):
 
 # Presto-dialect text exercising INTEGER `/` (round 11, VERDICT r10
 # #1): Presto truncates int/int toward zero where Spark's `/` returns
-# double — the former documented silent divergence, now resolved by
-# the schema-aware pass (dialect._rewrite_int_division).  Every
-# truncating face below also proves a resolver path: literal, column
-# pair, unary-minus chain, multiplicative chain, left-assoc double
-# division, %-chain, CASE typing, int-class function typing, and
-# TRY(int/int) (NULL on zero-divide).  The fractional faces prove the
-# pass leaves genuine double division alone (8e0 spelling, not 8.0 —
+# double — resolved at the front door by Spark's own types of each
+# operand (dialect "Typing by probe").  The truncating faces cover a
+# literal, a column pair, a unary-minus chain, a multiplicative chain,
+# left-assoc double division, a %-chain, CASE typing, an integral
+# function, and TRY(int/int) (NULL on zero-divide).  The fractional
+# faces prove genuine double division stays `/` (8e0 spelling, not 8.0 —
 # Spark parses the dotted literal as DECIMAL, whose canonical
 # rendering differs from DuckDB's DOUBLE: the tpch_q22 note).
 _INTDIV_TEXT = """
@@ -127,15 +126,16 @@ _INTDIV_TEXT = """
     """,
 )
 def sql_int_division(spark, sf_dir):
-    """Presto integer `/` through the schema-aware front door (round
-    11, VERDICT r10 #1).  DuckDB grades with its `//` operator —
+    """Presto integer `/` through the typed front door (round 11,
+    VERDICT r10 #1).  DuckDB grades with its `//` operator —
     verified truncating-toward-zero over integers ((-7)//2 = -3), an
     independent implementation of Presto's semantics — while the
     fractional faces keep `/` on both engines.  TRY(int/int) grades
     the NULL-on-zero-divide contract (`try_cast(try_divide(..) as
-    bigint)` — dialect._try_fn's div branch).
+    bigint)` — dialect's TRY(a / b) marker typed integral).
 
-    Scale: translation is a driver-side string pass; the translated
+    Scale: translation is a driver-side string pass plus one analysis
+    of the typing probe (never run); the translated
     text plans identically to hand-written Spark SQL (`div` is a
     codegen'd JVM integral divide — one scan, zero shuffles here)."""
     load_tables(spark, sf_dir)

@@ -48,10 +48,10 @@ from sparketl import cds
 #: mid-listing (the concurrent-bench DML faces do this constantly).
 #: Rounds 11-12 papered over it with a 3-attempt retry; serializing the
 #: engine's own catalog MUTATIONS (dml registers/drops, load_tables
-#: re-pins) against its catalog ENUMERATIONS (schema classing, SHOW
-#: TABLES) deletes the race class instead.  Mutations hold it for the
-#: catalog call only — query execution never runs under it.  RLock:
-#: a mutation path may enumerate (dml._refresh → schema classing).
+#: re-pins) against its catalog ENUMERATIONS (SHOW TABLES/SCHEMAS)
+#: deletes the race class instead.  Mutations hold it for the catalog
+#: call only — query execution never runs under it.  RLock, so a
+#: holder may re-enter it.
 CATALOG_LOCK = threading.RLock()
 
 #: Everything the engine keeps for one session: session ->

@@ -82,12 +82,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         return cached
 
     configure_session(spark)
-    # registering/re-pointing views changes what the dialect's
-    # integer-division resolver should see — drop its schema cache
-    # (cheap; it rebuilds lazily on the next dialect.sql call)
-    from sparketl import dialect
-
-    dialect.clear_schema_cache()
 
     dfs: dict[str, DataFrame] = {}
     for name in TABLE_NAMES:
@@ -97,12 +91,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         dfs[name] = df
         with CATALOG_LOCK:
             df.createOrReplaceTempView(name)
-        # PUSH the schema (round 14): push-origin entries are
-        # authoritative and survive the probe-origin eviction the
-        # classing cache performs on name-set changes — without this,
-        # every external create/drop would re-read all base-table
-        # schemas on the next classing rebuild
-        dialect.update_schema_cache(spark, name, df.schema)
 
     state(spark, "catalog")[sf] = dfs
     pin["sf_dir"] = sf

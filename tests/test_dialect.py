@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from sparketl.dialect import _typed
 from sparketl.dialect import sql as presto_sql
 from sparketl.dialect import translate
 from sparketl.tables import load_tables
@@ -1654,57 +1655,166 @@ def test_exec_array_histogram(spark):
 # type-aware integer division (round 11, VERDICT r10 #1)
 # ---------------------------------------------------------------------------
 
-_INTDIV_SCHEMA = {"a": "bigint", "b": "int", "x": "double", "s": "string"}
+@pytest.fixture()
+def typed(spark):
+    """Presto text → the Spark text ``sql()`` runs, typed against the
+    view ``idiv``: a bigint, b int, x double, s string, arr array<int>."""
+    spark.sql(
+        "select cast(1 as bigint) as a, 2 as b, 1.5d as x, 'q' as s, "
+        "array(1, 2) as arr"
+    ).createOrReplaceTempView("idiv")
+    return lambda q: _norm(_typed(spark, q))
 
 
-def test_int_division_rewrites_and_passthroughs():
-    def tr(q):
-        return _norm(translate(q, schema=_INTDIV_SCHEMA))
-
+def test_int_division_rewrites_and_passthroughs(typed):
+    tr = typed
     # int/int → div, across literals, columns, chains, case, functions
-    assert tr("select a / b from t") == "select a div b from t"
+    assert tr("select a / b from idiv") == "select a div b from idiv"
     assert tr("select 7/2") == "select 7 div 2"
-    assert tr("select a * 3 / b from t") == "select a * 3 div b from t"
-    assert tr("select a / 2 / 3 from t") == "select a div 2 div 3 from t"
-    assert tr("select a % 5 / 2 from t") == "select a % 5 div 2 from t"
-    assert tr("select sum(a) / count(*) from t") == (
-        "select sum(a) div count(*) from t"
+    assert tr("select a * 3 / b from idiv") == "select a * 3 div b from idiv"
+    assert tr("select a / 2 / 3 from idiv") == (
+        "select a div 2 div 3 from idiv"
     )
-    assert tr("select length(s) / 3 from t") == "select length(s) div 3 from t"
+    assert tr("select a % 5 / 2 from idiv") == "select a % 5 div 2 from idiv"
+    assert tr("select sum(a) / count(*) from idiv") == (
+        "select sum(a) div count(*) from idiv"
+    )
+    assert tr("select length(s) / 3 from idiv") == (
+        "select length(s) div 3 from idiv"
+    )
     assert (
-        tr("select case when x > 0 then a else b end / 2 from t")
-        == "select case when x > 0 then a else b end div 2 from t"
+        tr("select case when x > 0 then a else b end / 2 from idiv")
+        == "select case when x > 0 then a else b end div 2 from idiv"
+    )
+    assert tr("select (b + 1) / (2) from idiv") == (
+        "select (b + 1) div (2) from idiv"
+    )
+    # a left-assoc chain: inner int/int, outer over a double
+    assert tr("select a / 2 / 2.0 from idiv") == (
+        "select a div 2 / 2.0 from idiv"
     )
     # fractional on either side (or anywhere in the left chain) → `/`
-    assert "/" in tr("select a / 2.0 from t")
-    assert "/" in tr("select x / a from t")
-    assert "/" in tr("select 2.0 * a / b from t")
-    assert "/" in tr("select cast(a as double) / b from t")
-    assert "/" in tr("select 1e-3 / a from t")  # exponent sign ≠ binary minus
-    assert "/" in tr("select avg(a) / 2 from t")
+    assert "/" in tr("select a / 2.0 from idiv")
+    assert "/" in tr("select x / a from idiv")
+    assert "/" in tr("select 2.0 * a / b from idiv")
+    assert "/" in tr("select cast(a as double) / b from idiv")
+    assert "/" in tr("select 1e-3 / a from idiv")  # exponent sign ≠ binary minus
+    assert "/" in tr("select avg(a) / 2 from idiv")
+    # Presto's floor/ceil keep their argument's type (Spark's floor of
+    # a DOUBLE is BIGINT)
+    assert "/" in tr("select floor(x) / 2 from idiv")
+    assert " div " in tr("select ceil(b) / 2 from idiv")
     # window/filter postfix resolve through to the call's class
-    assert "div" in tr("select count(*) filter (where x > 0) / 2 from t")
-    assert "/" in tr("select avg(a) over (partition by b) / 2 from t")
+    assert " div " in tr("select count(*) filter (where x > 0) / 2 from idiv")
+    assert "/" in tr("select avg(a) over (partition by b) / 2 from idiv")
+    # CTEs, scalar subqueries and subquery predicates type in place
+    assert tr(
+        "with c as (select a / 2 as h from idiv) select h / 3 from c"
+    ) == "with c as (select a div 2 as h from idiv) select h div 3 from c"
+    assert tr("select (select max(a) from idiv) / 2") == (
+        "select (select max(a) from idiv) div 2"
+    )
+    assert tr("select (select max(b) / 2 from idiv) from idiv") == (
+        "select (select max(b) div 2 from idiv) from idiv"
+    )
+    assert "b div 2" in tr(
+        "select a from idiv where a in (select b / 2 from idiv)"
+    )
+    # a `/` inside a literal or a quoted identifier is not an operator
+    assert tr("select 'a/b', `a/b` from (select 1 as `a/b`)") == (
+        "select 'a/b', `a/b` from (select 1 as `a/b`)"
+    )
 
 
-def test_int_division_try_composition():
-    out = _norm(translate("select try(a / b) from t", schema=_INTDIV_SCHEMA))
-    assert out == "select try_cast(try_divide(a, b) as bigint) from t"
+def test_int_division_try_composition(typed):
+    assert typed("select try(a / b) from idiv") == (
+        "select try_cast(try_divide(a, b) as bigint) from idiv"
+    )
+    assert typed("select try(x / b) from idiv") == (
+        "select try_divide(x, b) from idiv"
+    )
+    assert _norm(translate("select try(a / b) from t")) == (
+        "select try_divide(a, b) from t"
+    )
 
 
-def test_int_division_refusals_and_lenient_mode():
-    # unresolvable operand → loud refusal naming the expression
-    with pytest.raises(ValueError, match="cannot resolve the operand types"):
-        translate("select a / mystery from t", schema=_INTDIV_SCHEMA)
-    with pytest.raises(ValueError, match="cannot resolve"):
-        translate("select (select max(a) from t) / 2", schema=_INTDIV_SCHEMA)
-    with pytest.raises(ValueError, match="cannot resolve"):
-        translate("select s / a from t", schema=_INTDIV_SCHEMA)
-    # ambiguous column name (conflicting classes across views) refuses
-    with pytest.raises(ValueError, match="cannot resolve"):
-        translate("select a / c from t", schema={"a": "bigint", "c": "ambig"})
+def test_int_division_refusals_and_lenient_mode(typed):
+    """An operand Spark cannot resolve raises Spark's own error, never a
+    guess; a probe Spark rejects while the text itself analyzes refuses;
+    translate() alone keeps Spark's `/`."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+        typed("select a / mystery from idiv")
+    with pytest.raises(ValueError, match="cannot type the operands"):
+        typed("select interval '1' day / a from idiv")
+    # a STRING operand refuses, as Presto's varchar / integer does (Spark
+    # would cast it); a written cast types as its target
+    with pytest.raises(ValueError, match="cannot type the operands"):
+        typed("select s / a from idiv")
+    with pytest.raises(ValueError, match="cannot type the operands"):
+        typed("select try(s / a) from idiv")
+    assert typed("select cast(s as bigint) / a from idiv") == (
+        "select cast(s as bigint) div a from idiv"
+    )
     # schema-free translate keeps the legacy pass-through untouched
     assert _norm(translate("select a / b from t")) == "select a / b from t"
+
+
+def test_int_division_inside_values(spark, typed):
+    """Spark evaluates a VALUES list while parsing it, so no node of the
+    statement's probe is left for its `/` or sign(): a second probe types
+    them, and an outer division keeps its own type.  Answers equal
+    DuckDB's (`//` where Presto truncates)."""
+    import duckdb
+
+    assert typed("values (1, 7 / 2)") == "values (1, 7 div 2)"
+    assert typed(
+        "select * from (values (7 / 2, 1.0 / 2), (3, 4)) v(x, y)"
+    ) == "select * from (values (7 div 2, 1.0 / 2), (3, 4)) v(x, y)"
+    assert typed("select x from (values (sign(-3))) v(x)") == (
+        "select x from (values (cast(sign(-3) as bigint))) v(x)"
+    )
+    con = duckdb.connect()
+    got = presto_sql(spark, "select x from (values (7 / 2)) v(x)").collect()
+    want = con.sql("select x from (values (7 // 2)) v(x)").fetchall()
+    assert [r.x for r in got] == [w[0] for w in want] == [3]
+    got = presto_sql(
+        spark, "select 1.0 / (select x from (values (7 / 2)) v(x)) as q"
+    ).collect()[0].q
+    want = con.sql(
+        "select 1.0 / (select x from (values (7 // 2)) v(x))"
+    ).fetchall()[0][0]
+    assert float(got) == pytest.approx(want, rel=1e-6)
+    con.close()
+
+
+def test_int_division_replaced_by_its_selected_twin(typed):
+    """An ORDER BY or HAVING term equal to a selected one is replaced by
+    a reference to it during analysis: it takes the type of its twin
+    with the same text, and a twin in another query block does not
+    count."""
+    assert typed(
+        "select a / 2 as h from idiv group by a / 2 having a / 2 > 0 "
+        "order by a / 2"
+    ) == (
+        "select a div 2 as h from idiv group by a div 2 having a div 2 > 0 "
+        "order by a div 2"
+    )
+    assert typed("select sign(a) from idiv order by sign(a)") == (
+        "select cast(sign(a) as bigint) from idiv "
+        "order by cast(sign(a) as bigint)"
+    )
+    assert typed(
+        "select sum(a) / 2 from idiv order by sum(a) / 2, "
+        "(select sum(a) / 2 from (select x as a from idiv) v)"
+    ) == (
+        "select sum(a) div 2 from idiv order by sum(a) div 2, "
+        "(select sum(a) / 2 from (select x as a from idiv) v)"
+    )
+    # a twin spelled differently is not found: refused, not guessed
+    with pytest.raises(ValueError, match="keeps no node"):
+        typed("select sum(a) / 2 from idiv order by sum(a)/2")
 
 
 def test_exec_int_division_matches_presto_semantics(spark):
@@ -1714,9 +1824,6 @@ def test_exec_int_division_matches_presto_semantics(spark):
     spark.createDataFrame(
         [(-7, 2), (7, 2), (-9, -4), (5, 0)], "pa long, pb long"
     ).createOrReplaceTempView("intdiv_exec_probe")
-    from sparketl import dialect as _d
-
-    _d.clear_schema_cache()
     rows = presto_sql(
         spark,
         """
@@ -1729,6 +1836,79 @@ def test_exec_int_division_matches_presto_semantics(spark):
     assert got[(7, 2)] == (3, 3)
     assert got[(-9, -4)] == (-4, 2)
     assert got[(5, 0)] == (2, None)   # TRY: NULL on zero-divide
+
+
+def test_typing_follows_an_externally_replaced_view(spark):
+    """A temp view replaced outside the engine (same name, INT column
+    now DOUBLE) types its `/` by the new schema at the next call, with
+    no cache to clear; both answers equal DuckDB's (`//` where Presto
+    truncates)."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.sql("create table t_repl as select * from (values (-7), (-1), (0), (5), (9)) v(a)")
+    q = "select a / 2 as h from t_repl order by a"
+    spark.createDataFrame(
+        con.sql("select cast(a as int) as a from t_repl").df(), "a int"
+    ).createOrReplaceTempView("t_repl")
+    got = [r.h for r in presto_sql(spark, q).collect()]
+    assert got == [r[0] for r in con.sql("select a // 2 from t_repl order by a").fetchall()]
+    assert got[0] == -3
+    con.sql("create or replace table t_repl as select cast(a as double) as a from t_repl")
+    spark.createDataFrame(
+        con.sql("select a from t_repl").df(), "a double"
+    ).createOrReplaceTempView("t_repl")
+    got = [r.h for r in presto_sql(spark, q).collect()]
+    assert got == [r[0] for r in con.sql("select a / 2 from t_repl order by a").fetchall()]
+    assert got[0] == -3.5
+    con.close()
+
+
+def test_one_column_name_typed_per_view(spark):
+    """`amt` is INT in one view and DOUBLE in another: each `/` is typed
+    by the view it reads, also both in one statement; answers equal
+    DuckDB's (`//` where Presto truncates)."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.sql("create table amt_int as select * from (values (-7), (3), (8)) v(amt)")
+    con.sql("create table amt_dbl as select cast(amt as double) as amt from amt_int")
+    for name, ddl in (("amt_int", "amt int"), ("amt_dbl", "amt double")):
+        spark.createDataFrame(
+            con.sql(f"select * from {name}").df(), ddl
+        ).createOrReplaceTempView(name)
+    for name, op in (("amt_int", "//"), ("amt_dbl", "/")):
+        got = presto_sql(
+            spark, f"select amt / 2 as h from {name} order by amt"
+        ).collect()
+        want = con.sql(f"select amt {op} 2 from {name} order by amt").fetchall()
+        assert [r.h for r in got] == [r[0] for r in want]
+    got = presto_sql(
+        spark,
+        "select i.amt / 2 as hi, d.amt / 2 as hd from amt_int i "
+        "join amt_dbl d on i.amt = d.amt order by i.amt",
+    ).collect()
+    want = con.sql(
+        "select i.amt // 2, d.amt / 2 from amt_int i "
+        "join amt_dbl d on i.amt = d.amt order by i.amt"
+    ).fetchall()
+    assert [tuple(r) for r in got] == want
+    assert got[0].hi == -3 and got[0].hd == -3.5
+    con.close()
+
+
+def test_translator_divisions_stay_fractional(typed):
+    """The `/` that translate() itself emits (to_unixtime, skewness,
+    kurtosis) divide DOUBLEs: typing leaves every one of them `/`, even
+    over integer arguments."""
+    for q in (
+        "select to_unixtime(cast('2024-01-01' as timestamp)) from idiv",
+        "select skewness(b), kurtosis(b) from idiv",
+        "select skewness(a) / 2, kurtosis(a) / 2 from idiv",
+    ):
+        untyped = _norm(translate(q))
+        assert untyped.count("/") >= 1
+        assert typed(q) == untyped
 
 
 # ---------------------------------------------------------------------------
@@ -1817,23 +1997,23 @@ def test_reduce_agg_guard_fires_on_unbounded_group(spark):
     assert ok.collect()[0].fold == 45.0
 
 
-def test_round11_review_guards():
-    # shadowed alias: a derived column re-typed under a catalog name
-    # must NOT resolve from the catalog (would silently div a double)
-    with pytest.raises(ValueError, match="cannot resolve"):
-        translate(
-            "select l_q / 2 from (select cast(l_q as double) as l_q from t)",
-            schema={"l_q": "bigint"},
-        )
-    # lambda parameters shadow too — element types are unknowable
-    with pytest.raises(ValueError, match="cannot resolve"):
-        translate(
-            "select transform(arr, x -> x / 2) from t",
-            schema={"x": "bigint"},
-        )
-    # TRY must not narrow: an operand carrying div passes through loudly
-    out = translate("select try(a / b + 1) from t", schema={"a": "bigint", "b": "int"})
-    assert "try(a div b + 1)" in " ".join(out.split())
+def test_round11_review_guards(typed):
+    from pyspark.errors import AnalysisException
+
+    # a derived column re-typed under a catalog name types by the
+    # definition the query reads (here DOUBLE): no div
+    assert " div " not in typed(
+        "select a / 2 from (select cast(a as double) as a from idiv)"
+    )
+    # a lambda parameter types by its array's elements, shadowing the
+    # same-named DOUBLE column
+    assert typed("select transform(arr, x -> x / 2) from idiv") == (
+        "select transform(arr, x -> x div 2) from idiv"
+    )
+    # TRY must not narrow: a compound body passes through loudly
+    assert "try(a / b + 1)" in _norm(translate("select try(a / b + 1) from t"))
+    with pytest.raises(AnalysisException):
+        typed("select try(a / b + 1) from idiv")
     # windowed skewness/kurtosis/reduce_agg refuse with the documented
     # message, not a parse error
     for fn in ("skewness(x)", "kurtosis(x)",
@@ -1852,9 +2032,6 @@ def test_exec_small_group_moments_are_null(spark):
         [("a", 1.0), ("a", 2.0), ("b", 1.0), ("b", 2.0), ("b", 5.0)],
         "g string, x double",
     ).createOrReplaceTempView("smallmom_probe")
-    from sparketl import dialect as _d
-
-    _d.clear_schema_cache()
     got = {
         r.g: (r.s, r.k)
         for r in presto_sql(
@@ -1915,9 +2092,6 @@ def test_exec_skip_to_var_error_and_results(spark):
            [(2, i, s) for i, s in enumerate("ABBC")]
     spark.createDataFrame(rows, "u long, pos long, sym string") \
         .createOrReplaceTempView("skipvar_probe")
-    from sparketl import dialect as _d
-
-    _d.clear_schema_cache()
     text = """
         select u, s_pos, e_pos from skipvar_probe match_recognize (
             partition by u order by pos asc
@@ -1976,9 +2150,6 @@ def test_exec_array_agg_order_by_null_convention(spark):
         [(1, 10, "a"), (2, None, "b"), (3, 5, "c"), (4, 7, None)],
         "id int, k int, v string",
     ).createOrReplaceTempView("aao_probe")
-    from sparketl import dialect as _d
-
-    _d.clear_schema_cache()
     row = presto_sql(
         spark,
         """
@@ -2008,9 +2179,6 @@ def test_minmax_by_n_rewrites_and_exec(spark):
         [(1, 10.0, "a"), (2, None, "nullkey"), (3, 5.0, "c"), (4, 7.0, "d")],
         "id int, y double, v string",
     ).createOrReplaceTempView("mbn_probe")
-    from sparketl import dialect as _d
-
-    _d.clear_schema_cache()
     row = presto_sql(
         spark,
         "select concat_ws('|', min_by(v, y, 2)) as lo2, "
@@ -2033,9 +2201,6 @@ def test_skip_to_var_guard_survives_projection_pruning(spark):
         [(1, i, s) for i, s in enumerate("ABCAC")],
         "u long, pos long, sym string",
     ).createOrReplaceTempView("skipvar_prune_probe")
-    from sparketl import dialect as _d
-
-    _d.clear_schema_cache()
     # project ONLY e_pos — the guarded s_pos measure is pruned away
     with pytest.raises(Exception, match="SKIP TO B failed"):
         presto_sql(
@@ -2090,27 +2255,31 @@ def test_windowed_compound_aggregate_forms_relocate_over():
 # ---------------------------------------------------------------------------
 
 
-def test_sign_int_classified_casts_to_bigint():
-    def tr(q):
-        return _norm(translate(q, schema=_INTDIV_SCHEMA))
+def test_sign_int_classified_casts_to_bigint(typed):
+    from pyspark.errors import AnalysisException
 
-    # int-classified argument: Presto sign(bigint) → bigint, Spark
-    # sign() → DOUBLE, so the front door casts back
-    assert tr("select sign(a) from t") == (
-        "select cast(sign(a) as bigint) from t"
+    tr = typed
+    # integral argument: Presto sign(bigint) → bigint, Spark sign() →
+    # DOUBLE, so the front door casts back
+    assert tr("select sign(a) from idiv") == (
+        "select cast(sign(a) as bigint) from idiv"
     )
-    assert tr("select sign(a) / 2 from t") == (
-        "select cast(sign(a) as bigint) div 2 from t"
+    assert tr("select sign(a) / 2 from idiv") == (
+        "select cast(sign(a) as bigint) div 2 from idiv"
     )
-    assert tr("select sign(a + b * 2) / 2 from t") == (
-        "select cast(sign(a + b * 2) as bigint) div 2 from t"
+    assert tr("select sign(a + b * 2) / 2 from idiv") == (
+        "select cast(sign(a + b * 2) as bigint) div 2 from idiv"
     )
     # fractional argument: Spark's double return already matches Presto
-    assert tr("select sign(x) from t") == "select sign(x) from t"
-    assert "/" in tr("select sign(x) / 2.0 from t")
-    # unresolvable argument: sign left alone; a `/` over it refuses
-    with pytest.raises(ValueError, match="cannot resolve"):
-        translate("select sign(mystery) / 2 from t", schema=_INTDIV_SCHEMA)
+    assert tr("select sign(x) from idiv") == "select sign(x) from idiv"
+    assert "/" in tr("select sign(x) / 2.0 from idiv")
+    # unresolvable argument: Spark's own error
+    with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+        tr("select sign(mystery) / 2 from idiv")
+    # the sign( that truncate() emits is Spark's: never re-typed
+    assert tr("select truncate(a) / 2 from idiv") == (
+        "select (sign(a) * floor(abs(a))) / 2 from idiv"
+    )
     # schema-free legacy translate keeps the pass-through
     assert _norm(translate("select sign(a) from t")) == (
         "select sign(a) from t"
@@ -2162,9 +2331,6 @@ def test_exec_sign_and_extract_match_presto(spark):
         [(-7, "2024-01-06 10:30:45.5"), (4, "2024-01-08 00:00:59.999")],
         "pv long, pts string",
     ).createOrReplaceTempView("sign_extract_probe")
-    from sparketl import dialect as _d
-
-    _d.clear_schema_cache()
     q = """
         select pv, sign(pv) as s, sign(pv) / 2 as sh,
                extract(dow from cast(pts as timestamp)) as dw,
@@ -2230,81 +2396,56 @@ def test_permute_past_last_refuses_with_operator_pointer():
     assert "__mr_s0" in out  # the lead-window rewrite fired
 
 
-def test_int_division_alias_class_narrowing():
-    """ADVICE r11 narrowing: a redefined name whose candidate meanings
-    (catalog column + every `AS name` definition) AGREE on a class is
-    resolved instead of refused; disagreement still refuses, and the
-    message NAMES the two-faced alias so the fix is obvious."""
-    # same-name rename: both meanings of `a` are integral → translates
-    out = translate("select a / 2 as a from t", schema={"a": "bigint"})
-    assert "a div 2" in " ".join(out.split())
-    # alias defined from an aggregate — no catalog entry needed
-    out = translate(
-        "select x / cnt from (select x, count(*) as cnt from t group by x)",
-        schema={"x": "bigint"},
+def test_int_division_alias_class_narrowing(typed):
+    """A redefined name types by the definition each `/` reads."""
+    # same-name rename of an integral column
+    assert "a div 2" in typed("select a / 2 as a from idiv")
+    # alias defined from an aggregate
+    assert "b div cnt" in typed(
+        "select b / cnt from (select b, count(*) as cnt from idiv group by b)"
     )
-    assert "x div cnt" in " ".join(out.split())
     # a fractional alias makes the division non-integer: no rewrite
-    out = translate(
-        "select tot / n from (select sum(v) as tot, count(*) as n from t)",
-        schema={"v": "double"},
+    assert " div " not in typed(
+        "select tot / n from (select sum(x) as tot, count(*) as n from idiv)"
     )
-    assert "div" not in out
-    # disagreeing meanings refuse, naming the alias
-    with pytest.raises(ValueError, match=r"\(re\)defined"):
-        translate(
-            "select a / 2 from (select cast(a as double) as a from t)",
-            schema={"a": "bigint"},
-        )
-    # a refusal NOT caused by redefinition carries no alias note
-    try:
-        translate("select a / mystery from t", schema={"a": "bigint"})
-    except ValueError as e:
-        assert "(re)defined" not in str(e)
+    # both meanings of `a` in one statement, each in its own scope
+    assert typed(
+        "select a / 2 as h, (select max(a) / 2 from "
+        "(select cast(a as double) as a from idiv)) as g from idiv"
+    ) == (
+        "select a div 2 as h, (select max(a) / 2 from "
+        "(select cast(a as double) as a from idiv)) as g from idiv"
+    )
 
 
-def test_int_division_setop_scope_refuses():
-    """ADVICE r12: an alias defined inside a set-operation scope
-    describes only ONE branch — the other branch may supply the column
-    positionally with no alias (bigint UNION ALL double unifies to
-    double in Trino), so trusting the harvested branch would silently
-    truncate.  Any alias whose scope carries a same-depth
-    UNION/INTERSECT/EXCEPT is ambiguous; strict mode refuses."""
-    with pytest.raises(ValueError, match="cannot resolve"):
-        translate(
-            "select x / 2 from (select count(*) as x from a "
-            "union all select price from b)",
-            schema={"price": "double"},
-        )
-    # ... even when the aliased branch is textually LAST
-    with pytest.raises(ValueError, match="cannot resolve"):
-        translate(
-            "select x / 2 from (select price from b "
-            "union all select count(*) as x from a)",
-            schema={"price": "double"},
-        )
-    # INTERSECT / EXCEPT poison identically
-    for op in ("intersect", "except"):
-        with pytest.raises(ValueError, match="cannot resolve"):
-            translate(
-                f"select x / 2 from (select count(*) as x from a "
-                f"{op} select price from b)",
-                schema={"price": "double"},
-            )
-    # a set-op one level DEEPER does not poison the outer alias
-    out = translate(
+def test_int_division_setop_scope_unifies(typed):
+    """A set operation's column has the type its branches unify to
+    (bigint UNION ALL double is double, as in Trino), whichever branch
+    carries the alias."""
+    for q in (
+        "select x / 2 from (select count(*) as x from idiv "
+        "union all select x from idiv)",
+        "select x / 2 from (select x from idiv "
+        "union all select count(*) as x from idiv)",
+        "select x / 2 from (select count(*) as x from idiv "
+        "intersect select x from idiv)",
+        "select x / 2 from (select count(*) as x from idiv "
+        "except select x from idiv)",
+    ):
+        assert " div " not in typed(q), q
+    assert "c div 2" in typed(
+        "select c / 2 from (select count(*) as c from idiv "
+        "union all select a from idiv)"
+    )
+    # a set-op one level DEEPER or in a sibling leaves `cnt` integral
+    assert "cnt div 2" in typed(
         "select cnt / 2 from (select count(*) as cnt from "
-        "(select 1 as k union all select 2 as k) u)",
-        schema={},
+        "(select 1 as k union all select 2.5 as k) u)"
     )
-    assert "cnt div 2" in " ".join(out.split())
-    # and a sibling subquery's set-op does not leak into this scope
-    out = translate(
-        "select cnt / 2 from (select count(*) as cnt from t) a join "
-        "(select 1 as k union all select 2 as k) b on true",
-        schema={},
+    assert "cnt div 2" in typed(
+        "select cnt / 2 from (select count(*) as cnt from idiv) a join "
+        "(select 1 as k union all select 2.5 as k) b on true"
     )
-    assert "cnt div 2" in " ".join(out.split())
 
 
 def test_mr_define_assertion_mode_fires_on_overlap(spark):
@@ -2319,7 +2460,6 @@ def test_mr_define_assertion_mode_fires_on_overlap(spark):
     ).createOrReplaceTempView("mr_assert_probe")
     from sparketl import dialect as _d
 
-    _d.clear_schema_cache()
     q = """
         select user_id, v_pos from mr_assert_probe match_recognize (
             partition by user_id order by pos asc

@@ -32,7 +32,6 @@ def wh(spark, tmp_path):
         ],
         "k long, g string, v double",
     ).createOrReplaceTempView("dml_fx")
-    dialect.clear_schema_cache()
     yield str(tmp_path / "wh")
 
 
@@ -177,7 +176,6 @@ def test_merge_clause_order_and_guard(spark, wh):
         [(1, 5.0), (3, -1.0), (9, 90.0), (10, 100.0)],
         "sk long, sv double",
     ).createOrReplaceTempView("t_m_feed")
-    dialect.clear_schema_cache()
     n = dialect.sql(
         spark,
         """
@@ -199,7 +197,6 @@ def test_merge_clause_order_and_guard(spark, wh):
     spark.createDataFrame(
         [(1, 1.0), (1, 2.0)], "sk long, sv double"
     ).createOrReplaceTempView("t_m_dup")
-    dialect.clear_schema_cache()
     with pytest.raises(ValueError, match="more than one source row"):
         dialect.sql(
             spark,
@@ -1098,6 +1095,40 @@ def test_execute_immediate_and_explain_dml_refusal(spark, wh):
         dialect.sql(spark, "explain delete from t_ei where k = 2")
 
 
+def test_merge_divisions_typed_by_their_clause_frame(spark, wh):
+    """A MERGE fragment's `/` is typed against the columns its clause
+    reads: WHEN MATCHED sees target and source, NOT MATCHED INSERT the
+    source only.  `v` is DOUBLE in the target and BIGINT in the source,
+    so each clause's `v / 2` has its own type."""
+    dialect.sql(spark, "create table t_mdiv as select k, v from dml_fx")
+    spark.createDataFrame(
+        [(1, 7), (9, -7)], "sk long, v long"
+    ).createOrReplaceTempView("t_mdiv_src")
+    dialect.sql(
+        spark,
+        """
+        merge into t_mdiv as t using t_mdiv_src as s on t.k = s.sk
+        when matched then update set v = t.v / 4 + s.v / 2
+        when not matched then insert (k, v) values (s.sk, v / 2)
+        """,
+    )
+    got = {r[0]: r[1] for r in _state(spark, "t_mdiv")}
+    assert got[1] == 10.0 / 4 + 3   # 7 / 2 truncates, 10.0 / 4 does not
+    assert got[9] == -3.0           # the source's bigint: toward zero
+    assert got[2] == 20.0
+
+
+def test_insert_values_division_typed(spark, wh):
+    """INSERT ... VALUES: Spark evaluates the list while parsing it, and
+    its `/` is still typed as Presto's — 7 / 2 stores 3.0 in a DOUBLE
+    column, 7.0 / 2 stores 3.5."""
+    dialect.sql(spark, "create table t_ival as select k, v from dml_fx")
+    dialect.sql(spark, "insert into t_ival values (6, 7 / 2), (7, 7.0 / 2)")
+    got = {r[0]: r[1] for r in _state(spark, "t_ival")}
+    assert got[6] == 3.0
+    assert got[7] == 3.5
+
+
 def test_review3_view_alter_guards(spark, wh):
     """Round-12 review: (a) ALTER DROP/RENAME COLUMN under a dependent
     view refuses (a half-applied ALTER would break the view); (b) a
@@ -1129,12 +1160,10 @@ def test_review3_view_alter_guards(spark, wh):
 
     with pytest.raises(AnalysisException):
         dialect.sql(spark, "select * from v_rv").collect()
-    # unrelated DML proceeds, also after the `/` classing re-reads every
-    # schema (the broken view's columns stay pinned in the catalog)
-    dialect.clear_schema_cache()
+    # unrelated DML proceeds while the broken view stays in the catalog
     dialect.sql(spark, "create table t_rv2 as select 1 as one")
     assert dialect.sql(spark, "select * from t_rv2").count() == 1
-    # Presto integer division: the `/` classing still sees `one` as int
+    # Presto integer division: the typing probe still sees `one` as int
     got = dialect.sql(spark, "select one / 2 as h from t_rv2").collect()
     assert got[0].h == 0
     dialect.sql(spark, "drop view v_rv")
@@ -1362,7 +1391,7 @@ def test_concurrent_dml_catalog_listing(spark, wh):
         )
         dialect.sql(spark, f"insert into {t} select k + 10, v from dml_fx")
         dialect.sql(spark, "show tables").collect()
-        # schema-classed strict division forces _catalog_column_classes
+        # a `/` makes each SELECT analyze its typing probe
         n = dialect.sql(
             spark, f"select sum(k / 2) as s from {t}"
         ).collect()[0][0]
@@ -1533,81 +1562,6 @@ def test_alter_view_rename_and_namespace_statements(spark, wh):
     }
     with pytest.raises(ValueError, match="re-running"):
         dialect.sql(spark, "refresh materialized view mv")
-
-
-def test_scphema_cache_push_and_discovery(spark, wh):
-    """Round 13 push-based classing cache: engine mutations keep the
-    int-division classing current WITHOUT catalog listings or schema
-    re-reads — pushes on create/refresh/alter, evictions on
-    drop/rename — while the cheap name-set probe still auto-discovers
-    external temp views (no clear_schema_cache call needed for a NEW
-    external name; in-place replaces keep the documented clear
-    contract)."""
-    # engine CTAS pushes the new table's schema: its bigint column
-    # narrows a division immediately (no full clear in between)
-    dialect.sql(
-        spark,
-        "create table t_scp as select k as big_sc_col, v from dml_fx",
-    )
-    out = dialect.translate(
-        "select big_sc_col / 2 from t_scp",
-        schema=dialect._catalog_column_classes(spark),
-    )
-    assert "div" in out
-    # ALTER ADD COLUMN re-pushes the grown schema
-    dialect.sql(spark, "alter table t_scp add column added_sc bigint")
-    cls = dialect._catalog_column_classes(spark)
-    assert cls.get("added_sc") == "int"
-    # DROP evicts: the column class disappears without a full clear
-    dialect.sql(spark, "drop table t_scp")
-    cls = dialect._catalog_column_classes(spark)
-    assert "big_sc_col" not in cls
-    # a NEW external temp view is auto-discovered by the name-set
-    # probe — no clear_schema_cache call required
-    spark.createDataFrame([(1,)], "ext_scp_col long").createOrReplaceTempView(
-        "t_scpp_ext"
-    )
-    cls = dialect._catalog_column_classes(spark)
-    assert cls.get("ext_scp_col") == "int"
-    # an external DROP is reconciled by the same probe
-    spark.catalog.dropTempView("t_scpp_ext")
-    cls = dialect._catalog_column_classes(spark)
-    assert "ext_scp_col" not in cls
-    # ALTER TABLE RENAME evicts the old name and pushes the new one
-    dialect.sql(spark, "create table t_scpp_a as select k as ren_sc from dml_fx")
-    dialect.sql(spark, "alter table t_scpp_a rename to t_scpp_b")
-    cls = dialect._catalog_column_classes(spark)
-    assert cls.get("ren_sc") == "int"
-    fields = session.state(spark, "schema_fields")
-    assert "t_scpp_a" not in fields and "t_scpp_b" in fields
-    dialect.sql(spark, "drop table t_scpp_b")
-
-
-def test_schema_cache_probe_eviction_self_heals_external_replace(spark, wh):
-    """ADVICE r13: an externally REPLACED same-name view (invisible to
-    the name-set probe at replace time) must self-heal at the next
-    name-set change — probe-origin cache entries are evicted and
-    re-read, so the stale class cannot outlive the next external
-    create/drop.  Engine-pushed entries survive the eviction."""
-    spark.createDataFrame([(1,)], "heal_col long").createOrReplaceTempView(
-        "t_heal_ext"
-    )
-    cls = dialect._catalog_column_classes(spark)
-    assert cls.get("heal_col") == "int"
-    # in-place external replace: same name, column goes fractional —
-    # invisible right now (name set unchanged), per the documented
-    # clear_schema_cache contract
-    spark.createDataFrame(
-        [(1.5,)], "heal_col double"
-    ).createOrReplaceTempView("t_heal_ext")
-    assert dialect._catalog_column_classes(spark).get("heal_col") == "int"
-    # ANY later name-set change re-reads probe-origin schemas
-    spark.createDataFrame([(1,)], "other_col long").createOrReplaceTempView(
-        "t_heal_trigger"
-    )
-    assert dialect._catalog_column_classes(spark).get("heal_col") == "frac"
-    spark.catalog.dropTempView("t_heal_ext")
-    spark.catalog.dropTempView("t_heal_trigger")
 
 
 def test_flat_view_follows_fixture_reload(spark, wh):
@@ -1793,7 +1747,7 @@ def test_schema_namespace_lifecycle(spark, wh):
 def test_schema_namespace_partitioned_and_classing(spark, wh):
     """Qualified PARTITIONED tables: partition-last rule (Trino hive
     parity), pruned copy-on-write via per-partition catalog locations, and
-    the `/` classing probe seeing qualified columns."""
+    a `/` over qualified columns typed integral."""
     dialect.sql(spark, "drop schema if exists nsp cascade")
     dialect.sql(spark, "create schema nsp")
     with pytest.raises(ValueError, match="LAST"):
@@ -1815,7 +1769,7 @@ def test_schema_namespace_partitioned_and_classing(spark, wh):
     assert dialect.sql(
         spark, "select count(*) as c from nsp.p where g = 'c'"
     ).collect()[0].c == 2
-    # qualified columns participate in int-division classing
+    # a qualified column types its `/` like any other
     assert dialect.sql(
         spark, "select k / 2 as h from nsp.p where k = 7"
     ).collect()[0].h == 3

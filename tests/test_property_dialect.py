@@ -235,7 +235,6 @@ def oba_env(spark):
     spark.createDataFrame(
         _OBA_ROWS, "id long, k1 int, k2 int"
     ).createOrReplaceTempView("oba_probe")
-    dialect.clear_schema_cache()
     con = duckdb.connect()
     con.sql(
         "create table oba_probe as select * from (values "

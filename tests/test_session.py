@@ -282,6 +282,10 @@ def test_cds_archive_recorded_then_used(cds_cache):
     assert second["SUM"] == "45"
     assert not glob.glob(os.path.join(_cds_dir(cache), "*.part"))
     assert not glob.glob(os.path.join(_cds_dir(cache), "*.lock"))
+    # the recording's own log outlives the session that used the archive
+    # (which truncated <key>.log when it opened it)
+    (record_log,) = glob.glob(os.path.join(_cds_dir(cache), "*.record.log"))
+    assert os.path.getsize(record_log) > 0
 
 
 def test_cds_truncated_part_is_not_promoted(cds_cache, tmp_path):
