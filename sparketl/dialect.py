@@ -12,7 +12,9 @@ pins) and leaves everything else alone, so the output is plain Spark
 SQL handed to ``spark.sql()``.  It is a *surface* translator driven by
 a literal-safe tokenizer, not a full parser: every rewrite operates
 outside string literals/comments and balances parentheses when it has
-to read arguments.
+to read arguments.  Clause-level constructs go through an ordered list
+of passes; function calls go through one inside-out scan over a table
+of call rules (``_CALLS``), whose output is never read again.
 
 Rewrite inventory (each has a unit test in tests/test_dialect.py):
 
@@ -42,7 +44,7 @@ split(s, d[, n])             split(s, regex-escaped d[, n])  (Presto delim
                                                          literal, Spark regex)
 strpos(s, sub)               instr(s, sub)
 starts_with(s, p)            startswith(s, p)
-levenshtein_distance         levenshtein
+levenshtein_distance(a, b)   levenshtein(a, b)
 format(f, ...)               format_string(f, ...)
 json_extract_scalar(j, p)    get_json_object(j, p)
 json_extract(j, p)           get_json_object(j, p)
@@ -53,9 +55,8 @@ element_at(c, i)             try_element_at(c, i)       (Presto NULL o.o.b.;
 zip(a, b)                    arrays_zip(a, b)
 arbitrary(x)                 any_value(x)
 approx_distinct(x)           approx_count_distinct(x)
-reduce(a, s0, m [, f])       aggregate(a, s0, m [, f])
-bitwise_and/or/xor(a, b)     (a & b) / (a | b) / (a ^ b)
-random()                     rand()
+bitwise_and(a, b)            (a & b)  (+ bitwise_or(a, b) → (a | b),
+                              bitwise_xor(a, b) → (a ^ b))
 random(n) / random(m, n)     cast(floor(rand()*span) as bigint) [+ m]
 TRY(cast(x as t))            try_cast(x as t)
 TRY(a op b), op in + - * /   try_add/subtract/multiply/divide(a, b)
@@ -63,9 +64,10 @@ TRY(a op b), op in + - * /   try_add/subtract/multiply/divide(a, b)
                               other TRY shapes untouched → loud)
 TRY(try_*(...))              try_*(...)                 (already NULL-safe)
 truncate(x)                  (sign(x) * floor(abs(x)))  (toward zero, double)
-any_match(a, f)              exists(a, f)               (+ all_match→forall,
-                                                         none_match→
-                                                         (not exists(...)))
+any_match(a, f)              exists(a, f)               (+ all_match(a, f)
+                                                         → forall(a, f),
+                                                         none_match(a, f) →
+                                                         (not exists(a, f)))
 ngrams(a, n)                 transform(sequence(1, ...), i -> slice(a, i, n))
                                                         (array<array<T>>;
                                                          n > |a| → [a]; NB a
@@ -81,10 +83,13 @@ repeat(x, n)                 UNTRANSLATED, documented divergence: Presto's
                              both readings).  Spark's string semantics win;
                              Presto pipelines should write array_repeat,
                              which Spark accepts natively.
-url_extract_host(u)          parse_url(u, 'HOST')       (+ path/protocol/
-                                                         query/fragment→REF;
-                                                         _parameter(u,k) →
-                                                         parse_url(u,'QUERY',k);
+url_extract_host(u)          parse_url(u, 'HOST')       (+ url_extract_path(u),
+                                                         url_extract_protocol(u),
+                                                         url_extract_query(u),
+                                                         url_extract_fragment(u)
+                                                         →REF;
+                                                         url_extract_parameter(u,k)
+                                                         → parse_url(u,'QUERY',k);
                                                          _port: no parse_url
                                                          part → untouched,
                                                          loud.  url_encode/
@@ -164,7 +169,6 @@ from_unixtime(e[, z|h, m])   timestamp_seconds(e); zone form wraps in
                              offset folds int literals to 'GMT±hh:mm',
                              RAISES for runtime offsets
 last_day_of_month(d)         last_day(d)
-current_timezone()           'UTC' (SESSION_CONFS pins the session zone)
 regexp_split(s, p)           split(s, p)  (both Java-regex; the pattern
                              stays RAW — only literal-delimiter split()
                              gets regex-escaped)
@@ -182,8 +186,8 @@ array_agg(x ORDER BY k...)   transform(array_sort(collect_list(
                              directions / explicit NULLS clauses
                              RAISE; KEEPS null values, unlike the
                              unordered collect_list map)
-min_by/max_by(x, y, n)       sorted-struct slice (null-y filtered,
-                             ties ordered by value; 2-arg native)
+min_by(x, y, n) /            sorted-struct slice (null-y filtered,
+max_by(x, y, n)              ties ordered by value; 2-arg native)
 skewness(x)                  sample-corrected G1 from Spark's population
                              skewness: g1·sqrt(n(n-1))/(n-2) — Presto/
                              Trino/DuckDB all return the SAMPLE
@@ -205,12 +209,15 @@ hamming_distance(s1, s2)     zip_with over character splits under an
                              equal-length raise_error guard (Presto
                              errors there too); UTF-16 residue: astral
                              code points count as two positions
-word_stem / normalize /      RAISE the documented refusal (no sound
-cosine_similarity            Spark composition: no stemmer, no Unicode
+word_stem(s) / normalize(s)  RAISE the documented refusal (no sound
+/ cosine_similarity(x, y)    Spark composition: no stemmer, no Unicode
                              normalizer, sparse-MAP cosine needs
                              per-row Python — llm_ann covers dense)
 "ident"                      `ident`                    (Spark double-quote
                                                          is a string literal)
+ltrim(s, c) / rtrim(s, c)    trim(leading|trailing c from s)  (Spark's
+                              two-argument forms take (c, s))
+MAP(keys, values)            map_from_arrays(keys, values)
 varchar (bare, in casts)     string                     (Spark VARCHAR needs
                                                          a length parameter)
 varbinary                    binary
@@ -225,10 +232,11 @@ interval literals, abs/ceil/floor/round/power/sqrt/exp/ln/log2/log10/
 log(b,x)/mod/sign/greatest/least/width_bucket/trig, cardinality,
 array_position, array_distinct, array_intersect/union/except,
 array_sort, array_min/max, array_join, slice, sequence, flatten,
-transform, filter, reduce (Spark accepts ``reduce`` as an
-``aggregate`` alias 3.5+), arrays_overlap, map_keys/values,
-map_concat, map_filter, transform_keys/values, map_from_entries,
-map_entries, try_cast, CASE, lambdas ``x -> f(x)``.
+transform, filter, reduce(a, s0, m [, f]) (Spark's ``aggregate``
+alias), arrays_overlap, map_keys/values, map_concat, map_filter,
+transform_keys/values, map_from_entries, map_entries, try_cast, CASE,
+lambdas ``x -> f(x)``, random() (DOUBLE in [0, 1)) and
+current_timezone() (the session zone: UTC under SESSION_CONFS).
 
 UNNEST is fully handled (see ``_rewrite_unnest``): single-array, map,
 multi-array, and WITH ORDINALITY over each — except ORDINALITY over
@@ -282,57 +290,6 @@ from sparketl.session import local_frame
 _TIME_UNITS = {
     "year", "quarter", "month", "week", "day", "hour",
     "minute", "second", "millisecond", "microsecond",
-}
-
-#: plain name→name rewrites: NAME( → REPL( .  Word boundaries make the
-#: rules order-independent ('_' is a word char, so ``json_extract``
-#: cannot bite ``json_extract_scalar``, ``format`` cannot bite
-#: ``format_datetime`` or ``date_format``, ``week`` cannot bite
-#: ``weekofyear``).
-_SIMPLE_FN: dict[str, str] = {
-    "strpos": "instr",
-    "starts_with": "startswith",
-    "levenshtein_distance": "levenshtein",
-    "format": "format_string",
-    "format_datetime": "date_format",
-    "parse_datetime": "to_timestamp",
-    "json_extract_scalar": "get_json_object",
-    "json_extract": "get_json_object",
-    "json_format": "to_json",
-    "contains": "array_contains",
-    "element_at": "try_element_at",
-    "zip": "arrays_zip",
-    "arbitrary": "any_value",
-    "approx_distinct": "approx_count_distinct",
-    "is_nan": "isnan",
-    "day_of_month": "dayofmonth",
-    "day_of_year": "dayofyear",
-    "doy": "dayofyear",
-    "week_of_year": "weekofyear",
-    "week": "weekofyear",
-    "set_agg": "collect_set",
-    # Presto codepoint(c) requires EXACTLY one char and returns its
-    # code point; Spark ascii(s) takes the FIRST char of any string —
-    # a superset that agrees on every input Presto accepts
-    "codepoint": "ascii",
-    # Presto's month-end function, same semantics (DATE in, DATE out)
-    "last_day_of_month": "last_day",
-    # Presto regexp_split(s, pattern) ≡ Spark split(s, pattern): BOTH
-    # take a Java regex (unlike Presto's literal-delimiter split(),
-    # which the translator regex-escapes — see _split_fn); raw-literal
-    # backslash doubling in _unmask keeps the pattern bytes intact
-    "regexp_split": "split",
-}
-
-#: zero-argument constant functions — replacement built per translate()
-#: call so injected literals go through the _inject_lit sentinel pool
-#: (ADVICE r10: no raw quoted literals in masked text)
-_CONST_FN = {
-    "infinity": lambda lits: f"cast({_inject_lit(lits, 'Infinity')} as double)",
-    "nan": lambda lits: f"cast({_inject_lit(lits, 'NaN')} as double)",
-    # the engine pins spark.sql.session.timeZone=UTC (SESSION_CONFS),
-    # so Presto's session-zone accessor is a constant here
-    "current_timezone": lambda lits: _inject_lit(lits, "UTC"),
 }
 
 _STR_SENTINEL = "\x00{}\x00"
@@ -412,8 +369,8 @@ def _inject_lit(lits: list[str], value: str) -> str:
     into masked text break the masked-text-has-no-literals invariant —
     the quote-blind scanners (_split_args, _match_paren,
     _rewrite_subscripts) would mis-parse any future literal containing
-    ',', '(' or '['.  Every injected literal goes through here, same
-    convention as _mysql_datetime_fns).  Quotes are doubled: _unmask
+    ',', '(' or '['.  Every injected literal goes through here).
+    Quotes are doubled: _unmask
     re-emits the stored text verbatim between quotes, and Spark's
     parser reads '' as one quote."""
     lits.append("'" + value.replace("'", "''") + "'")
@@ -467,35 +424,13 @@ def _java_regex_escape(s: str) -> str:
     return "".join("\\" + c if c in _REGEX_META else c for c in s)
 
 
-def _rewrite_calls(masked: str, name: str, make_repl) -> str:
-    """Left-to-right scan for NAME( ... ) calls; ``make_repl(args) ->
-    str | None`` builds the replacement for the whole call (None =
-    leave untouched).  The scan re-searches after every edit and
-    resumes *inside* the match, so nested calls (in arguments or in
-    replacements) are found on later iterations and no cached offsets
-    go stale."""
-    pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-    pos = 0
-    while True:
-        m = pat.search(masked, pos)
-        if not m:
-            return masked
-        cp = _match_paren(masked, m.end() - 1)
-        repl = make_repl(_split_args(masked[m.end() : cp]))
-        if repl is None:
-            pos = m.end()  # step past 'name(' — still scans the args
-            continue
-        masked = masked[: m.start()] + repl + masked[cp + 1 :]
-        pos = m.start() + 1
-
-
-def _unit_fn(spark_name: str, lits: list[str]):
+def _unit_fn(spark_name: str):
     """date_diff('unit', a, b) → timestampdiff(UNIT, a, b); same shape
     for date_add → timestampadd.  Only fires when the first argument is
     a string literal naming a known unit — other arities/forms (e.g.
     Spark's own 2-arg date_add) pass through untouched."""
 
-    def make(args: list[str]) -> str | None:
+    def make(args: list[str], lits: list[str]) -> str | None:
         if len(args) != 3:
             return None
         unit = _lit_value(lits, args[0])
@@ -506,7 +441,7 @@ def _unit_fn(spark_name: str, lits: list[str]):
     return make
 
 
-def _extract_fn(args: list[str]) -> str | None:
+def _extract_fn(args: list[str], lits: list[str]) -> str | None:
     """Presto ``extract(FIELD FROM x)`` fields where Spark's extract
     silently diverges or errors (each probed live, round 12):
 
@@ -520,15 +455,12 @@ def _extract_fn(args: list[str]) -> str | None:
       the decimal→bigint cast truncates toward zero, matching Presto
       on timestamps AND on intervals (second() would reject an
       interval operand that native extract handles — round-12 review).
-      Emitted via the __sparketl_xsec placeholder: _rewrite_calls
-      re-scans its own replacement, so a direct extract( would recurse;
-      the placeholder expands in translate()'s tail.
     - YOW / YEAR_OF_WEEK: Spark spells the field YEAROFWEEK; the two
-      Presto spellings error.  (The replacement re-matches this
-      rewriter; the canonical spelling maps to None and is left.)
+      Presto spellings error.
 
     All other fields (YEAR..MINUTE, QUARTER, WEEK, DOY, ...) agree and
-    pass through.
+    pass through.  The call scan (``_scan``) hands over ``x`` already
+    translated and never scans the emitted ``extract(`` again.
     """
     if len(args) != 1:
         return None
@@ -541,7 +473,7 @@ def _extract_fn(args: list[str]) -> str | None:
     if field in ("dow", "day_of_week"):
         return f"(weekday({operand}) + 1)"
     if field == "second":
-        return f"__sparketl_xsec({operand})"
+        return f"cast(extract(second from {operand}) as bigint)"
     if field in ("yow", "year_of_week"):
         return f"extract(YEAROFWEEK from {operand})"
     return None
@@ -596,7 +528,7 @@ def _top_level_arith_ops(expr: str) -> list[tuple[int, str]]:
     return ops
 
 
-def _try_fn(args: list[str]) -> str | None:
+def _try_fn(args: list[str], lits: list[str]) -> str | None:
     """Presto TRY(expr) — NULL instead of an error — for the shapes
     Spark's try-family covers EXACTLY: TRY(cast(x as t)) → try_cast, a
     single binary + - * / over paren-free operands (column refs /
@@ -660,7 +592,7 @@ def _top_level_order_by(text: str) -> "re.Match | None":
     )
 
 
-def _array_agg_parts(args: list[str]):
+def _array_agg_parts(args: list[str], lits: list[str]):
     """Presto ``array_agg(x ORDER BY k1 [ASC|DESC] [NULLS FIRST|LAST],
     ...)`` — Spark has no within-aggregate ORDER BY, so the ordered
     form composes as sort-then-project over a collected struct array.
@@ -805,7 +737,7 @@ def _minmax_by_n_parts(which: str):
     keys to a column first).  2-arg forms pass through (native
     Spark)."""
 
-    def make(args: list[str]):
+    def make(args: list[str], lits: list[str]):
         if len(args) != 3:
             return None
         x, y, n = args
@@ -942,9 +874,6 @@ def _expand_window_inheritance(masked: str) -> str:
             and fm.group(1).lower() not in _WINDOW_SPEC_LEADS
             and fm.end() < len(body)  # bare `over (w)` parses natively
         ):
-            # reuse the one specs resolution computed above —
-            # _inherit_window_spec would re-walk every definition per
-            # OVER body (round-12 second review)
             base = specs.get(fm.group(1).lower())
             if base is None:
                 raise ValueError(
@@ -975,112 +904,9 @@ def _expand_window_inheritance(masked: str) -> str:
     return masked
 
 
-def _inherit_window_spec(masked: str, over: str) -> str:
-    """Expand a window-spec body whose FIRST token is a window-name
-    reference (``OVER (w ORDER BY ...)`` — Trino window inheritance,
-    which Spark's OVER ( ... ) grammar does not accept) into the fully
-    inline form.  Bodies already leading with a spec keyword (or empty
-    ``OVER ()``) pass through unchanged; an unresolvable reference
-    refuses loudly rather than emitting SQL Spark will reject."""
-    fm = re.match(r"\s*([A-Za-z_]\w*)\b", over)
-    if not fm or fm.group(1).lower() in _WINDOW_SPEC_LEADS:
-        return over
-    base = _named_window_specs(masked).get(fm.group(1).lower())
-    if base is None:
-        raise ValueError(
-            f"dialect: window inheritance from '{fm.group(1)}' cannot "
-            "be resolved — the named window is undefined, defined more "
-            "than once in the statement, or inherits through a cycle; "
-            "inline the window definition"
-        )
-    return f"{base} {over[fm.end():].lstrip()}".strip()
-
-
-def _rewrite_agg_over_calls(masked: str, name: str, parts_fn) -> str:
-    """Like _rewrite_calls, but for aggregate rewrites that compose a
-    POST-PROCESSING expression around a bare aggregate: ``parts_fn
-    (args) -> None | (agg_sql, wrap)``.  A bare call becomes
-    ``wrap(agg_sql)``; a call followed by ``OVER (w)`` moves the window
-    clause ONTO the aggregate — ``wrap(agg_sql + " over (w)")`` — which
-    is exactly the windowed semantics (the frame feeds collect_list;
-    the sort/slice/project runs per output row).  FILTER / IGNORE
-    NULLS between the call and OVER refuses loudly (Spark supports
-    neither on window aggregates)."""
-    pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-    pos = 0
-    while True:
-        m = pat.search(masked, pos)
-        if not m:
-            return masked
-        cp = _match_paren(masked, m.end() - 1)
-        parts = parts_fn(_split_args(masked[m.end() : cp]))
-        if parts is None:
-            pos = m.end()
-            continue
-        agg, wrap = parts
-        k = cp + 1
-        while k < len(masked) and masked[k].isspace():
-            k += 1
-        post = _POSTFIX_CLAUSE_RE.match(masked, k)
-        if post is None:
-            om = re.match(
-                r"((?:ignore|respect)\s+nulls\s+)?over\s+([A-Za-z_]\w*)\b",
-                masked[k:],
-                re.IGNORECASE,
-            )
-            if om:
-                if om.group(1):
-                    raise ValueError(
-                        f"dialect: {name}(...) IGNORE/RESPECT NULLS OVER "
-                        "is refused — Spark's collect_list-based rewrite "
-                        "has no null-skipping mode"
-                    )
-                # OVER <named window>: the rewrite relocates the window
-                # clause onto the collect_list, which needs the inline
-                # spec — resolve it from the statement's WINDOW clause
-                # and splice it in, then reprocess this same call.
-                spec = _named_window_specs(masked).get(om.group(2).lower())
-                if spec is None:
-                    raise ValueError(
-                        f"dialect: this {name}(...) OVER {om.group(2)} "
-                        "cannot be rewritten — the named window is "
-                        "undefined, defined more than once in the "
-                        "statement, or inherits through a cycle; inline "
-                        "the window definition"
-                    )
-                masked = (
-                    masked[: k + om.start(2)]
-                    + f"({spec})"
-                    + masked[k + om.end(2) :]
-                )
-                continue
-        if post and post.group(1).lower() == "over":
-            if post.group(0).lower().lstrip().startswith(("ignore", "respect")):
-                raise ValueError(
-                    f"dialect: {name}(...) IGNORE/RESPECT NULLS OVER is "
-                    "refused — Spark's collect_list-based rewrite has "
-                    "no null-skipping mode"
-                )
-            ocp = _match_paren(masked, post.end() - 1)
-            over = _inherit_window_spec(masked, masked[post.end() : ocp])
-            repl = wrap(f"{agg} over ({over})")
-            masked = masked[: m.start()] + repl + masked[ocp + 1 :]
-        elif post:
-            raise ValueError(
-                f"dialect: this {name}(...) form with a FILTER clause "
-                "is refused — Spark cannot attach FILTER to the "
-                "collect_list the rewrite builds; filter in a subquery "
-                "first"
-            )
-        else:
-            repl = wrap(agg)
-            masked = masked[: m.start()] + repl + masked[cp + 1 :]
-        pos = m.start() + 1
-
-
-def _random_fn(args: list[str]) -> str | None:
-    """Presto random(): 0-arg → rand() double; random(n) → uniform
-    bigint in [0, n); random(m, n) → uniform bigint in [m, n).  The
+def _random_fn(args: list[str], lits: list[str]) -> str | None:
+    """Presto random(n) → uniform bigint in [0, n); random(m, n) →
+    uniform bigint in [m, n) (0-arg random() is Spark's too).  The
     integer forms keep Presto's half-open-range contract via
     floor(rand()*span) clamped to span-1 with least(): for spans near
     2^53 double rounding can make floor(rand()*span) == span, which
@@ -1095,8 +921,6 @@ def _random_fn(args: list[str]) -> str | None:
     hoist them to a column first.  Results are BIGINT (Presto returns
     the argument's integer type — callers needing INT cast
     explicitly)."""
-    if len(args) == 0:
-        return "rand()"
     if len(args) == 1:
         n = args[0]
         return (
@@ -1129,7 +953,7 @@ _DURATION_SECONDS = {
 _DURATION_RE = re.compile(r"(\d+(?:\.\d+)?)\s*(ns|us|ms|s|m|h|d)")
 
 
-def _parse_duration_fn(lits: list[str]):
+def _parse_duration(args: list[str], lits: list[str]) -> str | None:
     """Presto ``parse_duration('5.5m')`` → ``make_dt_interval(0, 0, 0,
     330.000)`` — Spark has no unit-suffix duration parser, so the
     translator folds the LITERAL at translate time (Decimal
@@ -1141,30 +965,27 @@ def _parse_duration_fn(lits: list[str]):
     with a message that never names the fix."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    def make(args: list[str]) -> str | None:
-        if len(args) != 1:
-            return None
-        val = _lit_value(lits, args[0])
-        if val is None:
-            raise ValueError(
-                "dialect: parse_duration() translates only for a string-"
-                f"literal argument (got {args[0].strip()!r}); Spark has no "
-                "row-level duration parser — precompute seconds and use "
-                "make_dt_interval(0, 0, 0, seconds) instead"
-            )
-        m = _DURATION_RE.fullmatch(val.strip())
-        if m is None:
-            raise ValueError(
-                f"dialect: parse_duration({val!r}): not a valid Presto "
-                "duration literal (expected '<number> <unit>', unit in "
-                "ns|us|ms|s|m|h|d)"
-            )
-        secs = (
-            Decimal(m.group(1)) * Decimal(_DURATION_SECONDS[m.group(2)])
-        ).quantize(Decimal("0.001"), rounding=ROUND_HALF_UP)
-        return f"make_dt_interval(0, 0, 0, {secs})"
-
-    return make
+    if len(args) != 1:
+        return None
+    val = _lit_value(lits, args[0])
+    if val is None:
+        raise ValueError(
+            "dialect: parse_duration() translates only for a string-"
+            f"literal argument (got {args[0].strip()!r}); Spark has no "
+            "row-level duration parser — precompute seconds and use "
+            "make_dt_interval(0, 0, 0, seconds) instead"
+        )
+    m = _DURATION_RE.fullmatch(val.strip())
+    if m is None:
+        raise ValueError(
+            f"dialect: parse_duration({val!r}): not a valid Presto "
+            "duration literal (expected '<number> <unit>', unit in "
+            "ns|us|ms|s|m|h|d)"
+        )
+    secs = (
+        Decimal(m.group(1)) * Decimal(_DURATION_SECONDS[m.group(2)])
+    ).quantize(Decimal("0.001"), rounding=ROUND_HALF_UP)
+    return f"make_dt_interval(0, 0, 0, {secs})"
 
 
 #: MySQL datetime format specifiers (Presto date_format/date_parse) →
@@ -1253,82 +1074,61 @@ def _mysql_to_java(fmt: str) -> str:
     return "".join(out)
 
 
-def _mysql_datetime_fns(lits: list[str]):
-    """Presto ``date_format(x, '%Y-%m-%d')`` / ``date_parse(s, ...)``:
-    MySQL %-patterns, while Spark's same-named ``date_format`` takes
-    Java patterns — the same call text silently renders garbage ('%Y'
-    is a literal-percent + week-year + ...).  A LITERAL pattern
+def _date_format(args: list[str], lits: list[str]) -> str | None:
+    """Presto ``date_format(x, '%Y-%m-%d')`` (and ``date_parse``, below)
+    takes MySQL %-patterns, while Spark's same-named ``date_format``
+    takes Java patterns — the same call text silently renders garbage
+    ('%Y' is a literal-percent + week-year + ...).  A LITERAL pattern
     containing '%' is translated specifier-by-specifier (refusing the
-    ones without exact equivalents); a date_format literal WITHOUT '%'
-    raises the documented refusal (in genuine Presto text it means
-    literal output, which Spark's Java reading would silently mangle —
-    ADVICE r10; format_datetime is the Java-pattern front-door path),
-    a non-literal pattern passes through (documented divergence — the
-    translator cannot tell MySQL from Java there), and date_parse
-    always requires the
-    translation (Spark has no such function, so an untranslatable
-    shape raises the documented refusal rather than an unresolved-
-    function error)."""
+    ones without exact equivalents) and injected as a literal sentinel
+    (``_inject_lit``); a literal WITHOUT '%' raises the documented
+    refusal (in genuine Presto text it means literal output, which
+    Spark's Java reading would silently mangle — ADVICE r10;
+    format_datetime is the Java-pattern front-door path), and a
+    non-literal pattern passes through (documented divergence — the
+    translator cannot tell MySQL from Java there)."""
+    if len(args) != 2:
+        return None
+    val = _lit_value(lits, args[1])
+    if val is None:
+        return None
+    if "%" not in val:
+        raise ValueError(
+            "dialect: date_format with a '%'-free literal pattern "
+            f"({val!r}) is refused — Presto renders it as LITERAL "
+            "text while Spark would read Java specifiers; use "
+            "format_datetime(x, javaPattern) for Java patterns, or "
+            "a MySQL %-pattern for Presto semantics"
+        )
+    return f"date_format({args[0]}, {_inject_lit(lits, _mysql_to_java(val))})"
 
-    def _sentinel(java: str) -> str:
-        # inject the translated pattern as a SENTINEL, never a raw
-        # quoted literal (review r10): raw quotes in the masked text
-        # violate the masked-text-has-no-literals invariant — a
-        # pattern like '%Y[%m]' would reach _rewrite_subscripts as
-        # yyyy[MM] and come out try_element_at(yyyy, MM).  Same
-        # mechanism as _split_fn; Spark parses the '' quote doubling
-        # (execution-verified).
-        lits.append("'" + java.replace("'", "''") + "'")
-        return _STR_SENTINEL.format(len(lits) - 1)
 
-    def fmt_make(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        val = _lit_value(lits, args[1])
-        if val is None:
-            return None  # dynamic pattern: untouched (documented
-            # divergence — the engine cannot tell MySQL from Java here)
-        if "%" not in val:
-            # In genuine Presto text, EVERY character of a '%'-free
-            # pattern is literal output ('Y-D' renders "Y-D"), while
-            # Spark's same-named function would read it as Java
-            # specifiers (week-year etc.) — a silent-garbage class the
-            # old pass-through allowed (ADVICE r10).  Refuse with the
-            # sanctioned spelling: format_datetime IS the Java-pattern
-            # front-door path (it maps to Spark date_format verbatim).
-            raise ValueError(
-                "dialect: date_format with a '%'-free literal pattern "
-                f"({val!r}) is refused — Presto renders it as LITERAL "
-                "text while Spark would read Java specifiers; use "
-                "format_datetime(x, javaPattern) for Java patterns, or "
-                "a MySQL %-pattern for Presto semantics"
-            )
-        return f"date_format({args[0]}, {_sentinel(_mysql_to_java(val))})"
-
-    def parse_make(args: list[str]) -> str | None:
-        if len(args) != 2:
-            return None
-        val = _lit_value(lits, args[1])
-        if val is None:
-            raise ValueError(
-                "dialect: date_parse() translates only for a string-"
-                f"literal MySQL pattern (got {args[1].strip()!r}); Spark "
-                "has no MySQL-pattern parser — use to_timestamp with a "
-                "Java pattern for dynamic formats"
-            )
-        if re.search(r"%y", val.replace("%%", "")):
-            # PARSE-direction pivot divergence (review r10): Spark
-            # resolves two-digit years to [2000, 2099], MySQL/Presto
-            # pivot around 1970 — date_parse('75', '%y') would shift a
-            # century silently.  The FORMAT direction is unaffected.
-            raise ValueError(
-                "dialect: date_parse with %y is refused — Spark's "
-                "two-digit-year pivot ([2000, 2099]) differs from "
-                "Presto's 1970-based pivot; use %Y with 4-digit years"
-            )
-        return f"to_timestamp({args[0]}, {_sentinel(_mysql_to_java(val))})"
-
-    return fmt_make, parse_make
+def _date_parse(args: list[str], lits: list[str]) -> str | None:
+    """Presto ``date_parse(s, '%d/%m/%Y')`` → ``to_timestamp`` with the
+    pattern translated as in ``_date_format``.  Spark has no such
+    function, so an untranslatable shape raises the documented refusal
+    rather than an unresolved-function error."""
+    if len(args) != 2:
+        return None
+    val = _lit_value(lits, args[1])
+    if val is None:
+        raise ValueError(
+            "dialect: date_parse() translates only for a string-"
+            f"literal MySQL pattern (got {args[1].strip()!r}); Spark "
+            "has no MySQL-pattern parser — use to_timestamp with a "
+            "Java pattern for dynamic formats"
+        )
+    if re.search(r"%y", val.replace("%%", "")):
+        # PARSE-direction pivot divergence (review r10): Spark
+        # resolves two-digit years to [2000, 2099], MySQL/Presto
+        # pivot around 1970 — date_parse('75', '%y') would shift a
+        # century silently.  The FORMAT direction is unaffected.
+        raise ValueError(
+            "dialect: date_parse with %y is refused — Spark's "
+            "two-digit-year pivot ([2000, 2099]) differs from "
+            "Presto's 1970-based pivot; use %Y with 4-digit years"
+        )
+    return f"to_timestamp({args[0]}, {_inject_lit(lits, _mysql_to_java(val))})"
 
 
 _ATZ_RE = re.compile(r"\bat\s+time\s+zone\b", re.IGNORECASE)
@@ -1396,12 +1196,16 @@ def _rewrite_at_time_zone(masked: str) -> str:
         # Presto text cannot itself contain from_utc_timestamp (not a
         # Presto function), so a base of that exact shape is always
         # this loop's own output: unwrap it and re-render the original
-        # instant at the new zone.
-        chain = re.match(r"from_utc_timestamp\s*\(", base)
+        # instant at the new zone.  Presto's zoned from_unixtime(e, z)
+        # (or (e, h, m)) is the instant e rendered at a zone the same
+        # way: it re-renders from from_unixtime(e).
+        chain = re.match(r"(from_utc_timestamp|(?i:from_unixtime))\s*\(", base)
         if chain and _match_paren(base, chain.end() - 1) == len(base) - 1:
-            inner_args = _split_args(base[chain.end() : -1])
-            if len(inner_args) == 2:
-                base = inner_args[0]
+            inner = _split_args(base[chain.end() : -1])
+            if chain.group(1) == "from_utc_timestamp" and len(inner) == 2:
+                base = inner[0]
+            elif chain.group(1) != "from_utc_timestamp" and len(inner) in (2, 3):
+                base = f"from_unixtime({inner[0]})"
         zend = m.end() + zm.end()
         masked = (
             masked[:start]
@@ -1410,24 +1214,18 @@ def _rewrite_at_time_zone(masked: str) -> str:
         )
 
 
-def _split_fn(lits: list[str]):
+def _split_fn(args: list[str], lits: list[str]) -> str | None:
     """Presto split(s, delim[, limit]) — delim is a LITERAL; Spark's is
     a Java regex.  Literal delimiters are regex-escaped; non-literal
     delimiter expressions get \\Q..\\E regex quoting."""
-
-    def make(args: list[str]) -> str | None:
-        if len(args) not in (2, 3):
-            return None
-        d = _lit_value(lits, args[1])
-        if d is not None:
-            esc = _java_regex_escape(d)
-            lits.append("'" + esc.replace("'", "''") + "'")
-            args = [args[0], _STR_SENTINEL.format(len(lits) - 1), *args[2:]]
-        else:
-            args = [args[0], f"concat('\\\\Q', {args[1]}, '\\\\E')", *args[2:]]
-        return "split(" + ", ".join(args) + ")"
-
-    return make
+    if len(args) not in (2, 3):
+        return None
+    d = _lit_value(lits, args[1])
+    if d is not None:
+        delim = _inject_lit(lits, _java_regex_escape(d))
+    else:
+        delim = f"concat('\\\\Q', {args[1]}, '\\\\E')"
+    return "split(" + ", ".join([args[0], delim, *args[2:]]) + ")"
 
 
 _UNNEST_RE = re.compile(r"(?:cross\s+join|,)\s*unnest\s*\(", re.IGNORECASE)
@@ -2457,14 +2255,6 @@ def _rewrite_array_literals(masked: str) -> str:
         pos = m.start() + len("array(")
 
 
-def _map_ctor(args: list[str]) -> str | None:
-    """Presto ``MAP(keys_array, values_array)`` → Spark
-    ``map_from_arrays``.  (Presto has no interleaved k1,v1,… form, so
-    two args always mean the array-pair constructor; zero-arg
-    ``map()`` is already valid Spark.)"""
-    return f"map_from_arrays({args[0]}, {args[1]})" if len(args) == 2 else None
-
-
 def _subscript_base_start(masked: str, i: int) -> int | None:
     """For a '[' at ``i``, find where the subscripted base expression
     starts (identifier/dotted chain, call, or chained subscript), or
@@ -2488,6 +2278,10 @@ def _subscript_base_start(masked: str, i: int) -> int | None:
             j -= 1
         if depth != 0:
             return None
+        # a rewritten call may be spelled with a space before its '('
+        name = re.search(r"(\w+)\s*$", masked[:j])
+        if name and name.group(1).lower() in _CALLS:
+            j = name.end(1)
         j -= 1
         while j >= 0 and (masked[j].isalnum() or masked[j] in "_.\x00"):
             j -= 1
@@ -2505,8 +2299,10 @@ def _rewrite_subscripts(masked: str) -> str:
     arrays — the silent off-by-one is the worst porting bug this
     translator prevents.  try_element_at matches the translator's
     element_at policy (NULL on out-of-bounds/missing rather than the
-    ANSI error).  Runs LAST, after every other rule has consumed the
-    non-subscript brackets (ARRAY literals, UNNEST aliases)."""
+    ANSI error).  Runs after the clause passes that consume the other
+    brackets (ARRAY literals, UNNEST aliases) and before the call scan,
+    which rewrites the base and index like any other text (no call
+    rule emits a bracket)."""
     pos = 0
     while True:
         i = masked.find("[", pos)
@@ -3163,11 +2959,6 @@ def _rewrite_match_recognize(masked: str, lits: list[str]) -> str:
     return masked[: m.start()] + "from " + repl + masked[cp + 1 :]
 
 
-_POSTFIX_CLAUSE_RE = re.compile(
-    r"(?:(?:ignore|respect)\s+nulls\s+)?(over|filter)\s*\(", re.IGNORECASE
-)
-
-
 def _depths(expr: str) -> list[int]:
     """Paren/bracket nesting depth per char (delimiters count at the
     OUTER level, contents one deeper)."""
@@ -3322,47 +3113,6 @@ def _rewrite_mr_permute(
     return masked[: m.start()] + "from " + repl + masked[cp + 1 :]
 
 
-def _refuse_windowed_calls(masked: str, names: tuple[str, ...]) -> None:
-    """Raise the documented refusal when any of ``names`` is called
-    with an OVER clause AND the call shape is one this translator
-    rewrites into a compound expression — `(<compound>) over (...)` is
-    invalid Spark, so refusing here names the problem instead of a
-    parse error.  Shapes that pass through natively (2-arg
-    min_by/max_by, unordered array_agg) keep their windowed use."""
-    # (the r11 min_by/max_by/array_agg shape predicates left with
-    # their names in round 12 — _rewrite_agg_over_calls handles those
-    # forms now; every remaining refused name is rewritten at ANY arity)
-    rewritten_shape: dict = {}
-    for name in names:
-        pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-        pos = 0
-        while True:
-            m = pat.search(masked, pos)
-            if not m:
-                break
-            cp = _match_paren(masked, m.end() - 1)
-            pred = rewritten_shape.get(name.lower())
-            if pred is not None and not pred(
-                _split_args(masked[m.end() : cp])
-            ):
-                pos = m.end()
-                continue
-            k = cp + 1
-            while k < len(masked) and masked[k].isspace():
-                k += 1
-            if masked[k : k + 4].lower() == "over" and not (
-                k + 4 < len(masked)
-                and (masked[k + 4].isalnum() or masked[k + 4] in "_$")
-            ):
-                raise ValueError(
-                    f"dialect: this {name}() form OVER (...) is refused "
-                    "— its Presto-to-Spark rewrite is a compound "
-                    "expression that cannot carry a window clause; "
-                    "pre-aggregate in a subquery or window manually"
-                )
-            pos = m.end()
-
-
 #: Opt-in runtime assertion for the MATCH_RECOGNIZE rewrites' one
 #: uncheckable precondition (ADVICE r11): the windowed formulations
 #: assume MUTUALLY-EXCLUSIVE defines — a row satisfying two predicates
@@ -3411,10 +3161,346 @@ def _mr_sym_case(preds: dict[str, str], order: list[str], lits: list[str]) -> st
     return f"case{guard}{body} else '.' end"
 
 
+def _shape(n: int, fmt: str):
+    """The rule of an ``n``-argument call whose Spark text is ``fmt``
+    with the arguments as {0}, {1}, ...; other arities stay untouched."""
+    return lambda a, lits: fmt.format(*a) if len(a) == n else None
+
+
+def _refused(name: str, why: str):
+    def refuse(_a, _lits):
+        raise ValueError(f"dialect: {name}() is refused — {why}")
+
+    return refuse
+
+
+def _from_unixtime(a: list[str], lits: list[str]) -> str | None:
+    """Presto from_unixtime is ARITY-overloaded (r10): 1-arg →
+    timestamp; (unixtime, zone) → instant rendered at the zone (the
+    same from_utc_timestamp treatment as AT TIME ZONE under the UTC
+    session); (unixtime, hours, minutes) fixed offset → folded to a
+    GMT±hh:mm zone when the offsets are int literals, documented
+    refusal otherwise (a runtime offset needs interval arithmetic the
+    caller should write explicitly)."""
+    if len(a) == 1:
+        return f"timestamp_seconds({a[0]})"
+    if len(a) == 2:
+        return f"from_utc_timestamp(timestamp_seconds({a[0]}), {a[1]})"
+    if len(a) != 3:
+        return None
+    hm = [re.fullmatch(r"([+-]?\d+)", x.strip()) for x in a[1:]]
+    if not all(hm):
+        raise ValueError(
+            "dialect: from_unixtime(unixtime, hours, minutes) "
+            "translates only for integer-literal offsets — add "
+            "the offset with interval arithmetic for runtime "
+            "values"
+        )
+    # Presto's offset is hours*60 + minutes TOTAL minutes (review r10:
+    # sign/abs per component renders (5, -30) as +05:30 where Presto
+    # means +04:30, and (0, 90) as the invalid GMT+00:90)
+    total = int(hm[0].group(1)) * 60 + int(hm[1].group(1))
+    sign = "-" if total < 0 else "+"
+    hh, mm = divmod(abs(total), 60)
+    return (
+        f"from_utc_timestamp(timestamp_seconds({a[0]}), "
+        f"'GMT{sign}{hh:02d}:{mm:02d}')"
+    )
+
+
+#: The call rules, keyed by the lower-cased Presto function name (the
+#: module docstring's inventory).  A rule is a Spark name (a rename that
+#: keeps the argument text as written) or ``rule(args, lits) -> Spark
+#: text | None`` (None leaves the call untouched; ``lits`` is the
+#: literal pool for ``_lit_value``/``_inject_lit``).  ``_scan`` applies
+#: them inside out: a rule sees its arguments already translated, and
+#: its output is final.  An aggregate whose Spark form wraps a bare
+#: aggregate returns ``(agg, wrap)`` so a window clause can move onto
+#: ``agg``; any other rewritten call followed by OVER refuses.
+_CALLS: dict[str, "str | Callable"] = {
+    # A user's sign(): Presto's keeps its argument's type (sign(bigint)
+    # is bigint), Spark's is always DOUBLE — marked for typing.
+    "sign": _shape(1, "__sparketl_sign({0})"),
+    # Presto has no interleaved k1, v1, ... form: two arguments are the
+    # array-pair constructor (zero-arg map() is already valid Spark)
+    "map": _shape(2, "map_from_arrays({0}, {1})"),
+    "date_diff": _unit_fn("timestampdiff"),
+    "date_add": _unit_fn("timestampadd"),
+    "split": _split_fn,
+    "day_of_week": _shape(1, "(weekday({0}) + 1)"),
+    "dow": _shape(1, "(weekday({0}) + 1)"),
+    "extract": _extract_fn,
+    "to_unixtime": _shape(1, "(cast(unix_micros({0}) as double) / 1000000.0)"),
+    "from_unixtime": _from_unixtime,
+    # reduce_agg(x, s0, input, combine) → the bounded sorted fold (round
+    # 11; rationale and memory bound at operators.aggregates.reduce_agg):
+    # Presto requires input/combine to be commutative-associative, so a
+    # sequential fold IS the reference semantics and combine is never
+    # needed; array_sort pins one fold order (Presto's is unspecified).
+    # collect_list materializes the group on one executor — this text
+    # form has no size guard, the operators helper adds one.
+    "reduce_agg": _shape(4, "aggregate(array_sort(collect_list({0})), {1}, {2})"),
+    # Presto/Trino skewness & kurtosis are the SAMPLE-corrected
+    # estimators while Spark's same-named aggregates are POPULATION
+    # moments (round 11 — formulas per Trino's docs, execution-pinned
+    # against DuckDB):
+    #   G1 = skewness_pop(x) * sqrt(n(n-1)) / (n-2)
+    #   G2 = ((n+1)*kurtosis_pop(x) + 6) * (n-1) / ((n-2)(n-3))
+    # x is inlined several times (the ngrams/random volatile-argument
+    # caveat).  Presto and DuckDB return NULL below n=3 / n=4, where the
+    # bare formula would divide by zero (Infinity under ANSI, silent).
+    "skewness": _shape(
+        1,
+        "(case when count({0}) >= 3 then skewness({0}) * sqrt(count({0}) * "
+        "(count({0}) - 1)) / (count({0}) - 2) end)",
+    ),
+    "kurtosis": _shape(
+        1,
+        "(case when count({0}) >= 4 then ((count({0}) + 1) * kurtosis({0}) "
+        "+ 6) * (count({0}) - 1) / ((count({0}) - 2) * (count({0}) - 3)) end)",
+    ),
+    # hamming_distance(s1, s2): differing positions of two EQUAL-LENGTH
+    # strings (an error otherwise, kept loud with raise_error), as a
+    # zip_with over the character splits; inputs are inlined twice.
+    # Java strings are UTF-16: an astral code point counts twice.
+    "hamming_distance": lambda a, lits: (
+        f"(case when length({a[0]}) <> length({a[1]}) then raise_error("
+        f"{_inject_lit(lits, 'hamming_distance: the input strings must have the same length')}"
+        f") else aggregate(zip_with("
+        f"split({a[0]}, {_inject_lit(lits, '')}), "
+        f"split({a[1]}, {_inject_lit(lits, '')}), "
+        f"(__hd_x, __hd_y) -> if(__hd_x = __hd_y, 0, 1)), "
+        f"cast(0 as bigint), (__hd_s, __hd_v) -> __hd_s + __hd_v) end)"
+    ) if len(a) == 2 else None,
+    # scalars with NO sound Spark composition: the documented refusal
+    # instead of Spark's unresolved-function error
+    "word_stem": _refused(
+        "word_stem", "Spark SQL has no Porter/Snowball stemmer; stem "
+        "driver-side or with a pandas UDF"
+    ),
+    "normalize": _refused(
+        "normalize", "Spark SQL has no NFC/NFD/NFKC/NFKD Unicode "
+        "normalizer; normalize driver-side or with a pandas UDF"
+    ),
+    "cosine_similarity": _refused(
+        "cosine_similarity", "Presto's cosine_similarity takes sparse MAP "
+        "vectors, which Spark SQL cannot fold without per-row Python; use "
+        "the engine's similarity operators (sparketl.operators.llm_ann) "
+        "for dense embeddings"
+    ),
+    "bitwise_and": _shape(2, "({0} & {1})"),
+    "bitwise_or": _shape(2, "({0} | {1})"),
+    "bitwise_xor": _shape(2, "({0} ^ {1})"),
+    # Presto/ANSI two-arg ltrim/rtrim(string, chars); Spark's two-arg
+    # form takes (trimStr, string), i.e. REVERSED (ltrim('xxabc','x') is
+    # '' on Spark) — so the unambiguous TRIM(LEADING/TRAILING ... FROM)
+    "ltrim": _shape(2, "trim(leading {1} from {0})"),
+    "rtrim": _shape(2, "trim(trailing {1} from {0})"),
+    # URL accessors → parse_url parts; url_extract_port has NO part
+    # keyword (Hive folds the port into AUTHORITY): untouched, loud
+    "url_extract_host": _shape(1, "parse_url({0}, 'HOST')"),
+    "url_extract_path": _shape(1, "parse_url({0}, 'PATH')"),
+    "url_extract_protocol": _shape(1, "parse_url({0}, 'PROTOCOL')"),
+    "url_extract_query": _shape(1, "parse_url({0}, 'QUERY')"),
+    "url_extract_fragment": _shape(1, "parse_url({0}, 'REF')"),
+    "url_extract_parameter": _shape(2, "parse_url({0}, 'QUERY', {1})"),
+    # ngrams(a, n): sliding windows from sequence + slice (n > |a|
+    # yields [a], the greatest(..., 1) floor).  The obscure lambda
+    # variable cannot shadow an enclosing user lambda's.
+    "ngrams": _shape(
+        2,
+        "transform(sequence(1, greatest(size({0}) - ({1}) + 1, 1)), "
+        "__ng_i -> slice({0}, __ng_i, {1}))",
+    ),
+    # array_histogram(a): distinct non-null keys, each counted by a
+    # filter scan (a inlined twice)
+    "array_histogram": _shape(
+        1,
+        "map_from_entries(transform("
+        "array_distinct(filter({0}, __ah_x -> __ah_x is not null)), "
+        "__ah_x -> struct(__ah_x, cast(size(filter({0}, "
+        "__ah_y -> __ah_y = __ah_x)) as bigint))))",
+    ),
+    "any_match": _shape(2, "exists({0}, {1})"),
+    "all_match": _shape(2, "forall({0}, {1})"),
+    "none_match": _shape(2, "(not exists({0}, {1}))"),
+    # map_agg: entry order is unspecified on both engines; duplicate and
+    # NULL keys raise on Spark where Presto keeps one / skips — loud
+    "map_agg": _shape(2, "map_from_entries(collect_list(struct({0}, {1})))"),
+    # approx_top_k and Presto's are both Space-Saving summaries: heavy
+    # hitter membership is the portable contract, counts are estimates
+    "approx_most_frequent": _shape(
+        3,
+        "map_from_entries(transform(approx_top_k({1}, {0}, {2}), "
+        "__amf -> struct(__amf.item, __amf.count)))",
+    ),
+    # Presto sign-extends to the stated width, so the cast is required
+    # (bit_count of an INT -1 counts 32 bits); other widths: untouched
+    "bit_count": lambda a, lits: (
+        f"bit_count(cast({a[0]} as bigint))"
+        if len(a) == 2 and a[1].strip() == "64" else None
+    ),
+    # Presto's right shift is LOGICAL (zero-fill); shiftright would
+    # sign-extend.  For shifts >= the operand width Presto returns 0 and
+    # the JVM wraps the amount — a residue that needs the operand type.
+    "bitwise_left_shift": _shape(2, "shiftleft({0}, {1})"),
+    "bitwise_right_shift": _shape(2, "shiftrightunsigned({0}, {1})"),
+    # with_timezone(ts, z) declares the naive ts to BE zone-z wall clock
+    # (the instant moves): rendered in the UTC session, to_utc_timestamp
+    "with_timezone": _shape(2, "to_utc_timestamp({0}, {1})"),
+    # Spark's ANSI cast parses the ISO 8601 surface Presto accepts
+    # (offsets normalize to the UTC session — the same instant)
+    "from_iso8601_timestamp": _shape(1, "cast({0} as timestamp)"),
+    "from_iso8601_date": _shape(1, "cast({0} as date)"),
+    "parse_duration": _parse_duration,
+    "date_format": _date_format,
+    "date_parse": _date_parse,
+    # to_iso8601 is TYPE-dependent in Presto (date → 'yyyy-MM-dd',
+    # timestamp → millis precision): branched on typeof() at runtime,
+    # both branches valid for either type
+    "to_iso8601": lambda a, lits: (
+        f"(case when typeof({a[0]}) = {_inject_lit(lits, 'date')} "
+        f"then date_format({a[0]}, {_inject_lit(lits, 'yyyy-MM-dd')}) "
+        f"else date_format({a[0]}, {_inject_lit(lits, _ISO_TS_PATTERN)}) "
+        f"end)"
+    ) if len(a) == 1 else None,
+    # conv() in SIGNED mode (negative base): unsigned reads '-101' as a
+    # 64-bit two's complement; Presto's digits are lowercase and
+    # from_base returns BIGINT
+    "to_base": _shape(2, "lower(conv({0}, 10, -({1})))"),
+    "from_base": _shape(2, "cast(conv({0}, {1}, -10) as bigint)"),
+    "array_agg": _array_agg_parts,
+    "min_by": _minmax_by_n_parts("min"),
+    "max_by": _minmax_by_n_parts("max"),
+    "random": _random_fn,
+    "truncate": _shape(1, "(sign({0}) * floor(abs({0})))"),
+    "infinity": lambda a, lits: (
+        None if a else f"cast({_inject_lit(lits, 'Infinity')} as double)"
+    ),
+    "nan": lambda a, lits: (
+        None if a else f"cast({_inject_lit(lits, 'NaN')} as double)"
+    ),
+    "strpos": "instr",
+    "starts_with": "startswith",
+    "levenshtein_distance": "levenshtein",
+    "format": "format_string",
+    # the Java-pattern path: Spark's date_format as written, never
+    # judged as a MySQL pattern
+    "format_datetime": "date_format",
+    "parse_datetime": "to_timestamp",
+    "json_extract_scalar": "get_json_object",
+    "json_extract": "get_json_object",
+    "json_format": "to_json",
+    "contains": "array_contains",
+    "element_at": "try_element_at",
+    "zip": "arrays_zip",
+    "arbitrary": "any_value",
+    "approx_distinct": "approx_count_distinct",
+    "is_nan": "isnan",
+    "day_of_month": "dayofmonth",
+    "day_of_year": "dayofyear",
+    "doy": "dayofyear",
+    "week_of_year": "weekofyear",
+    "week": "weekofyear",
+    "set_agg": "collect_set",
+    # Presto codepoint(c) requires EXACTLY one char; Spark ascii(s)
+    # takes the FIRST char of any string — a superset
+    "codepoint": "ascii",
+    "last_day_of_month": "last_day",
+    # both take a Java regex (unlike Presto's literal-delimiter split)
+    "regexp_split": "split",
+    "try": _try_fn,
+}
+
+#: a backticked identifier (copied as written), a call's name and its
+#: '(', or a bare parenthesis
+_SCAN_RE = re.compile(r"`[^`]*`|\b(\w+)\s*\(|[()]")
+#: what may follow an aggregate call: [IGNORE|RESPECT NULLS] then
+#: OVER (...), FILTER (...) or OVER <window name>
+_POSTFIX_RE = re.compile(
+    r"\s*((?:ignore|respect)\s+nulls\s+)?"
+    r"(?:(over|filter)\s*\(|over\s+([A-Za-z_]\w*)\b)",
+    re.IGNORECASE,
+)
+
+
+def _scan(
+    masked: str, lits: list[str], pos: int = 0, nested: bool = False
+) -> tuple[str, int]:
+    """Apply ``_CALLS`` to ``masked[pos:]`` in one left-to-right pass,
+    inside out: each call's argument text is scanned first, then its
+    rule runs on the split arguments, and the rule's output is never
+    scanned again.  A ``nested`` scan stops at the ')' that closes it.
+    Returns (rewritten text, index where the scan stopped).
+
+    An ``(agg, wrap)`` result becomes ``wrap(agg)``; a window clause
+    after the call moves onto ``agg`` — exactly the windowed semantics
+    (the frame feeds collect_list, the sort/slice/project runs per
+    output row) — and FILTER or IGNORE/RESPECT NULLS there refuse
+    (Spark supports neither on the collect_list).  Any other rewritten
+    call followed by OVER refuses: ``(<compound>) over (...)`` is not
+    Spark SQL."""
+    out = []
+    while m := _SCAN_RE.search(masked, pos):
+        out.append(masked[pos : m.start()])
+        pos, tok, name = m.end(), m.group(0), m.group(1)
+        if tok == ")" and nested:
+            return "".join(out), m.start()
+        if tok[0] in "`)":
+            out.append(tok)
+            continue
+        inner, cp = _scan(masked, lits, pos, True)
+        pos = cp + 1
+        rule = _CALLS.get(name.lower()) if name else None
+        if isinstance(rule, str):
+            out.append(f"{rule}({inner})")
+            continue
+        repl = rule(_split_args(inner), lits) if rule else None
+        if repl is None:
+            out.append(f"{tok}{inner})")
+            continue
+        post = _POSTFIX_RE.match(masked, pos)
+        kind = post and (post.group(2) or "over").lower()
+        if isinstance(repl, tuple):
+            agg, wrap = repl
+            if kind == "over" and post.group(1):
+                raise ValueError(
+                    f"dialect: {name}(...) IGNORE/RESPECT NULLS OVER is "
+                    "refused — Spark's collect_list-based rewrite has "
+                    "no null-skipping mode"
+                )
+            if kind == "filter":
+                raise ValueError(
+                    f"dialect: this {name}(...) form with a FILTER clause "
+                    "is refused — Spark cannot attach FILTER to the "
+                    "collect_list the rewrite builds; filter in a subquery "
+                    "first"
+                )
+            if kind and post.group(3):
+                agg, pos = f"{agg} over {post.group(3)}", post.end()
+            elif kind:
+                spec, cp = _scan(masked, lits, post.end(), True)
+                agg, pos = f"{agg} over ({spec})", cp + 1
+            repl = wrap(agg)
+        elif kind == "over":
+            raise ValueError(
+                f"dialect: this {name}() form OVER (...) is refused "
+                "— its Presto-to-Spark rewrite is a compound "
+                "expression that cannot carry a window clause; "
+                "pre-aggregate in a subquery or window manually"
+            )
+        out.append(repl)
+    if nested:
+        raise ValueError("unbalanced parentheses in SQL")
+    out.append(masked[pos:])
+    return "".join(out), len(masked)
+
+
 def _translate(presto_sql: str) -> tuple[str, str, "str | None"]:
     """Presto-dialect SQL → (untyped Spark text, marked text, typing
     probe) — see ``_translation``; the rewrites are the module
-    docstring's table."""
+    docstring's table: the clause passes below in order, then one
+    ``_scan`` of the call rules (``_CALLS``)."""
     masked, lits = _mask(presto_sql)
 
     # Trino catalog/default-schema table spellings (round 14, VERDICT
@@ -3442,14 +3528,6 @@ def _translate(presto_sql: str) -> tuple[str, str, "str | None"]:
             flags=re.IGNORECASE,
         )
 
-    # A user's sign(): Presto's keeps its argument's type (sign(bigint)
-    # is bigint), Spark's is always DOUBLE — marked for typing.  Marked
-    # first, so a sign( that a later rewrite emits (truncate) is Spark's.
-    masked = _rewrite_calls(
-        masked, "sign",
-        lambda a: f"__sparketl_sign({a[0]})" if len(a) == 1 else None,
-    )
-
     masked = _rewrite_match_recognize(masked, lits)
     masked = _rewrite_fetch_first(masked)
     # window inheritance expands BEFORE the exclusion rewrite so a
@@ -3467,375 +3545,8 @@ def _translate(presto_sql: str) -> tuple[str, str, "str | None"]:
     masked = _rewrite_row_constructor(masked)
     masked = _rewrite_unnest(masked)
     masked = _rewrite_array_literals(masked)
-    masked = _rewrite_calls(masked, "map", _map_ctor)
-    masked = _rewrite_calls(masked, "date_diff", _unit_fn("timestampdiff", lits))
-    masked = _rewrite_calls(masked, "date_add", _unit_fn("timestampadd", lits))
-    masked = _rewrite_calls(masked, "split", _split_fn(lits))
-    for presto_name in ("day_of_week", "dow"):
-        masked = _rewrite_calls(
-            masked, presto_name,
-            lambda a: f"(weekday({a[0]}) + 1)" if len(a) == 1 else None,
-        )
-    masked = _rewrite_calls(masked, "extract", _extract_fn)
-    masked = _rewrite_calls(
-        masked, "to_unixtime",
-        lambda a: f"(cast(unix_micros({a[0]}) as double) / 1000000.0)"
-        if len(a) == 1 else None,
-    )
-
-    # Presto from_unixtime is ARITY-overloaded (r10 — the old bare
-    # name-map broke the 2/3-arg forms): 1-arg → timestamp;
-    # (unixtime, zone) → instant rendered at the zone (the same
-    # from_utc_timestamp treatment as AT TIME ZONE under the UTC
-    # session); (unixtime, hours, minutes) fixed offset → folded to a
-    # GMT±hh:mm zone when the offsets are int literals, documented
-    # refusal otherwise (a runtime offset needs interval arithmetic
-    # the caller should write explicitly).
-    def _from_unixtime(a: list[str]) -> str | None:
-        if len(a) == 1:
-            return f"timestamp_seconds({a[0]})"
-        if len(a) == 2:
-            return f"from_utc_timestamp(timestamp_seconds({a[0]}), {a[1]})"
-        if len(a) == 3:
-            hm = re.fullmatch(r"([+-]?\d+)", a[1].strip()), re.fullmatch(
-                r"([+-]?\d+)", a[2].strip()
-            )
-            if not (hm[0] and hm[1]):
-                raise ValueError(
-                    "dialect: from_unixtime(unixtime, hours, minutes) "
-                    "translates only for integer-literal offsets — add "
-                    "the offset with interval arithmetic for runtime "
-                    "values"
-                )
-            # Presto's offset is hours*60 + minutes TOTAL minutes
-            # (review r10: sign/abs per component renders (5, -30) as
-            # +05:30 where Presto means +04:30, and (0, 90) as the
-            # invalid GMT+00:90)
-            total = int(hm[0].group(1)) * 60 + int(hm[1].group(1))
-            sign = "-" if total < 0 else "+"
-            hh, mm = divmod(abs(total), 60)
-            return (
-                f"from_utc_timestamp(timestamp_seconds({a[0]}), "
-                f"'GMT{sign}{hh:02d}:{mm:02d}')"
-            )
-        return None
-
-    masked = _rewrite_calls(masked, "from_unixtime", _from_unixtime)
-    # Presto reduce(arr, s0, merge, finish) IS Spark aggregate() — same
-    # argument shapes (3-arg form without finish included).  Arity-guarded
-    # like every other rewrite: any other reduce( shape passes through so
-    # Spark's error names the text the user actually wrote.
-    masked = _rewrite_calls(
-        masked, "reduce",
-        lambda a: f"aggregate({', '.join(a)})" if len(a) in (3, 4) else None,
-    )
-    # Presto reduce_agg(x, s0, input, combine) → the bounded sorted-fold
-    # composition (round 11, VERDICT r10 #3; rationale and the memory
-    # bound at sparketl/operators/aggregates.py reduce_agg()): Presto
-    # requires input/combine to be commutative-associative, so a
-    # sequential fold IS the reference semantics and combine is never
-    # needed; array_sort pins one fold order (Presto's is unspecified).
-    # DOCUMENTED BOUND: collect_list materializes the group on one
-    # executor — this text form carries no size guard, so unbounded
-    # groups OOM rather than refuse; the operators.aggregates.reduce_agg
-    # helper adds the loud raise_error guard.
-    # Windowed usage refuses loudly BEFORE any of these rewrites: the
-    # rewritten compound `(<expr>) over (...)` is a Spark parse error,
-    # and duplicating the window spec onto every sub-aggregate is a
-    # rewrite this translator does not attempt (round-11 review).
-    # min_by/max_by/array_agg left this list in round 12: their
-    # rewrites split into (bare aggregate, wrapper), so the OVER
-    # clause relocates onto the collect_list (_rewrite_agg_over_calls).
-    _refuse_windowed_calls(
-        masked,
-        ("skewness", "kurtosis", "reduce_agg"),
-    )
-    masked = _rewrite_calls(
-        masked, "reduce_agg",
-        lambda a: (
-            f"aggregate(array_sort(collect_list({a[0]})), {a[1]}, {a[2]})"
-        ) if len(a) == 4 else None,
-    )
-    # Presto/Trino skewness & kurtosis are the SAMPLE-corrected
-    # estimators while Spark's same-named aggregates are POPULATION
-    # moments (round 11, VERDICT r10 #4 — the convention trap; formulas
-    # per Trino's docs, execution-pinned against DuckDB which agrees):
-    #   G1 = skewness_pop(x) * sqrt(n(n-1)) / (n-2)
-    #   G2 = ((n+1)*kurtosis_pop(x) + 6) * (n-1) / ((n-2)(n-3))
-    # The argument is inlined several times (count(x) twice/thrice —
-    # the ngrams/random volatile-argument caveat); the inner call uses
-    # a placeholder name mapped back to Spark's aggregate AFTER the
-    # scan (the rewriter re-scans its own replacement text, so emitting
-    # `skewness(` directly would recurse).
-    # Small-group guards (round-11 review): Presto/Trino and DuckDB
-    # return NULL below n=3 (skewness) / n=4 (kurtosis) — probed live —
-    # while the bare corrected expression would divide by zero (double
-    # division: Infinity under ANSI, silent).
-    masked = _rewrite_calls(
-        masked, "skewness",
-        lambda a: (
-            f"(case when count({a[0]}) >= 3 then "
-            f"__sparketl_skew({a[0]}) * sqrt(count({a[0]}) * "
-            f"(count({a[0]}) - 1)) / (count({a[0]}) - 2) end)"
-        ) if len(a) == 1 else None,
-    )
-    masked = _rewrite_calls(
-        masked, "kurtosis",
-        lambda a: (
-            f"(case when count({a[0]}) >= 4 then "
-            f"((count({a[0]}) + 1) * __sparketl_kurt({a[0]}) + 6) * "
-            f"(count({a[0]}) - 1) / ((count({a[0]}) - 2) * "
-            f"(count({a[0]}) - 3)) end)"
-        ) if len(a) == 1 else None,
-    )
-    masked = re.sub(r"\b__sparketl_skew\s*\(", "skewness(", masked)
-    masked = re.sub(r"\b__sparketl_kurt\s*\(", "kurtosis(", masked)
-    # Presto hamming_distance(s1, s2): differing positions of two
-    # EQUAL-LENGTH strings (error otherwise — kept loud via
-    # raise_error).  Composed as a zip_with over the character splits;
-    # inputs are inlined twice (the volatile-argument caveat).
-    # Residual divergence: Java strings are UTF-16, so astral-plane
-    # code points split into surrogate pairs (two positions) where
-    # Presto counts one — BMP text is exact.
-    masked = _rewrite_calls(
-        masked, "hamming_distance",
-        lambda a: (
-            f"(case when length({a[0]}) <> length({a[1]}) then raise_error("
-            f"{_inject_lit(lits, 'hamming_distance: the input strings must have the same length')}"
-            f") else aggregate(zip_with("
-            f"split({a[0]}, {_inject_lit(lits, '')}), "
-            f"split({a[1]}, {_inject_lit(lits, '')}), "
-            f"(__hd_x, __hd_y) -> if(__hd_x = __hd_y, 0, 1)), "
-            f"cast(0 as bigint), (__hd_s, __hd_v) -> __hd_s + __hd_v) end)"
-        ) if len(a) == 2 else None,
-    )
-    # Straggler scalars with NO sound Spark composition (round 11,
-    # VERDICT r10 #5): refuse with the documented message instead of
-    # Spark's unresolved-function error (the parse_duration precedent).
-    for bad_name, why in (
-        ("word_stem", "Spark SQL has no Porter/Snowball stemmer; stem "
-                      "driver-side or with a pandas UDF"),
-        ("normalize", "Spark SQL has no NFC/NFD/NFKC/NFKD Unicode "
-                      "normalizer; normalize driver-side or with a "
-                      "pandas UDF"),
-        ("cosine_similarity", "Presto's cosine_similarity takes sparse "
-                              "MAP vectors, which Spark SQL cannot fold "
-                              "without per-row Python; use the engine's "
-                              "similarity operators (sparketl.operators."
-                              "llm_ann) for dense embeddings"),
-    ):
-        def _refuse(_args, _n=bad_name, _w=why):
-            raise ValueError(f"dialect: {_n}() is refused — {_w}")
-
-        masked = _rewrite_calls(masked, bad_name, _refuse)
-    # Presto's bitwise functions are Spark operators.
-    for bname, bop in (("bitwise_and", "&"), ("bitwise_or", "|"),
-                       ("bitwise_xor", "^")):
-        masked = _rewrite_calls(
-            masked, bname,
-            lambda a, _op=bop: f"({a[0]} {_op} {a[1]})" if len(a) == 2 else None,
-        )
-    # Presto/ANSI two-arg ltrim/rtrim(string, chars) — Spark's two-arg
-    # form takes (trimStr, string), i.e. REVERSED (verified live:
-    # Spark ltrim('xxabc','x') = '' but ltrim('x','xxabc') = 'abc').
-    # Rewrite to the unambiguous TRIM(LEADING/TRAILING chars FROM s).
-    # One-arg forms agree and pass through.
-    for tname, tdir in (("ltrim", "leading"), ("rtrim", "trailing")):
-        masked = _rewrite_calls(
-            masked, tname,
-            lambda a, _d=tdir: f"trim({_d} {a[1]} from {a[0]})"
-            if len(a) == 2 else None,
-        )
-    # Presto URL accessors → Spark/Hive parse_url parts.  Arity-guarded
-    # like every rewrite; url_extract_port has NO parse_url part
-    # keyword (Hive's parser folds the port into AUTHORITY), so it
-    # stays untouched → Spark raises loudly rather than guessing.
-    for uname, upart in (
-        ("url_extract_host", "HOST"),
-        ("url_extract_path", "PATH"),
-        ("url_extract_protocol", "PROTOCOL"),
-        ("url_extract_query", "QUERY"),
-        ("url_extract_fragment", "REF"),
-    ):
-        masked = _rewrite_calls(
-            masked, uname,
-            lambda a, _p=upart: f"parse_url({a[0]}, '{_p}')"
-            if len(a) == 1 else None,
-        )
-    masked = _rewrite_calls(
-        masked, "url_extract_parameter",
-        lambda a: f"parse_url({a[0]}, 'QUERY', {a[1]})"
-        if len(a) == 2 else None,
-    )
-    # Presto ngrams(a, n) — Spark has no native ngrams; the sliding
-    # windows compose from sequence + slice (returns array<array<T>>,
-    # Presto's shape; n > cardinality(a) yields [a] in Presto, matched
-    # by the greatest(..., 1) floor on the window count).
-    # The window-index lambda variable is deliberately obscure
-    # (__ng_i) so it cannot shadow a user lambda variable enclosing
-    # the call — `transform(m, i -> ngrams(i, 2))` must keep the outer
-    # `i` bound to the array, not to the window index.
-    masked = _rewrite_calls(
-        masked, "ngrams",
-        lambda a: (
-            f"transform(sequence(1, greatest(size({a[0]}) - ({a[1]}) + 1, 1)), "
-            f"__ng_i -> slice({a[0]}, __ng_i, {a[1]}))"
-        ) if len(a) == 2 else None,
-    )
-    # Trino array_histogram(a) → map<T, bigint> of non-null element
-    # counts (empty map when nothing counts).  Composed from HOFs:
-    # distinct non-null keys, each counted by a filter scan.  The
-    # array expression is inlined twice (the ngrams/random caveat —
-    # volatile arguments should be hoisted to a column first); lambda
-    # vars are obscure so an enclosing user lambda can't be shadowed.
-    masked = _rewrite_calls(
-        masked, "array_histogram",
-        lambda a: (
-            "map_from_entries(transform("
-            f"array_distinct(filter({a[0]}, __ah_x -> __ah_x is not null)), "
-            f"__ah_x -> struct(__ah_x, cast(size(filter({a[0]}, "
-            "__ah_y -> __ah_y = __ah_x)) as bigint))))"
-        ) if len(a) == 1 else None,
-    )
-    # Presto array-predicate lambdas → Spark HOFs (same lambda syntax).
-    masked = _rewrite_calls(
-        masked, "any_match",
-        lambda a: f"exists({a[0]}, {a[1]})" if len(a) == 2 else None,
-    )
-    masked = _rewrite_calls(
-        masked, "all_match",
-        lambda a: f"forall({a[0]}, {a[1]})" if len(a) == 2 else None,
-    )
-    masked = _rewrite_calls(
-        masked, "none_match",
-        lambda a: f"(not exists({a[0]}, {a[1]}))" if len(a) == 2 else None,
-    )
-    # Presto aggregate/bit surface (round 8, E2 faces for the
-    # map/array/approx families — tests/test_sql_front_door.py):
-    #   map_agg(k, v) → map_from_entries(collect_list(struct(k, v)));
-    #   entry order is collection order on both engines (unspecified),
-    #   so portable pipelines must sort map_entries before rendering —
-    #   exactly what the declared agg_map_agg face does.  Duplicate
-    #   keys raise under Spark's default mapKeyDedupPolicy where
-    #   Presto keeps an arbitrary value — loud beats silent.  NULL
-    #   keys diverge the same way: Presto map_agg SKIPS NULL-key rows,
-    #   the Spark form raises NULL_MAP_KEY — also loud; callers who
-    #   need Presto skip semantics filter `k IS NOT NULL` first.
-    masked = _rewrite_calls(
-        masked, "map_agg",
-        lambda a: f"map_from_entries(collect_list(struct({a[0]}, {a[1]})))"
-        if len(a) == 2 else None,
-    )
-    #   approx_most_frequent(k, v, cap) → a map built from Spark's
-    #   approx_top_k sketch (both are Space-Saving-family summaries;
-    #   the translated plan is deterministic on the same data, but the
-    #   two engines' error envelopes differ — membership of true
-    #   heavy hitters is the portable contract, counts are estimates).
-    masked = _rewrite_calls(
-        masked, "approx_most_frequent",
-        lambda a: (
-            f"map_from_entries(transform(approx_top_k({a[1]}, {a[0]}, {a[2]}), "
-            f"__amf -> struct(__amf.item, __amf.count)))"
-        ) if len(a) == 3 else None,
-    )
-    #   bit_count(x, 64) → bit_count(cast(x as bigint)): Presto's
-    #   second argument is the bit width and Presto sign-extends the
-    #   value to it, so the cast is REQUIRED — bare bit_count over an
-    #   INT column holding -1 would count 32 bits where Presto's
-    #   64-form counts 64 (round-8 review).  Other widths pass
-    #   through untouched and fail loudly.
-    masked = _rewrite_calls(
-        masked, "bit_count",
-        lambda a: f"bit_count(cast({a[0]} as bigint))"
-        if len(a) == 2 and a[1].strip() == "64" else None,
-    )
-    #   bitwise shifts: Presto's bitwise_right_shift is LOGICAL
-    #   (zero-fill) — Spark's shiftright sign-extends, so the rewrite
-    #   targets shiftrightunsigned (round-8 review caught the silent
-    #   negative-input divergence); left shifts agree bit-for-bit.
-    #   Residual documented divergence: for shift >= the value's bit
-    #   width Presto returns 0 while Spark wraps the shift amount mod
-    #   the width — inherent to the JVM operators, not maskable
-    #   without knowing the operand type.
-    for sname, sfn in (
-        ("bitwise_left_shift", "shiftleft"),
-        ("bitwise_right_shift", "shiftrightunsigned"),
-    ):
-        masked = _rewrite_calls(
-            masked, sname,
-            lambda a, _f=sfn: f"{_f}({a[0]}, {a[1]})" if len(a) == 2 else None,
-        )
-    # Presto datetime time-zone / ISO 8601 family (r9 verdict #1).
-    # with_timezone(ts, z) declares the naive ts to BE zone-z wall
-    # clock (the instant moves); under the UTC session that instant
-    # rendered in UTC is exactly to_utc_timestamp.  AT TIME ZONE is
-    # the converse (instant kept, wall clock moves) — see
-    # _rewrite_at_time_zone.
     masked = _rewrite_at_time_zone(masked)
-    masked = _rewrite_calls(
-        masked, "with_timezone",
-        lambda a: f"to_utc_timestamp({a[0]}, {a[1]})"
-        if len(a) == 2 else None,
-    )
-    # from_iso8601_timestamp/date: Spark's ANSI cast parses the full
-    # ISO 8601 surface Presto accepts ('T' separator, optional zone
-    # offset/Z normalized to the UTC session — same instant) plus a
-    # superset (space separator), the codepoint→ascii precedent.
-    masked = _rewrite_calls(
-        masked, "from_iso8601_timestamp",
-        lambda a: f"cast({a[0]} as timestamp)" if len(a) == 1 else None,
-    )
-    masked = _rewrite_calls(
-        masked, "from_iso8601_date",
-        lambda a: f"cast({a[0]} as date)" if len(a) == 1 else None,
-    )
-    # to_iso8601 is TYPE-dependent in Presto (date → 'yyyy-MM-dd',
-    # timestamp → 'yyyy-MM-ddTHH:mm:ss.SSS' at the engine's millis
-    # precision); a text translator can't see types, so the rewrite
-    # branches on typeof() at runtime — both branches are valid for
-    # either type, so analysis never fails.  timestamp-with-time-zone
-    # inputs (offset suffix) don't exist in Spark's type system; not
-    # reachable.
-    masked = _rewrite_calls(masked, "parse_duration", _parse_duration_fn(lits))
-    _df_make, _dp_make = _mysql_datetime_fns(lits)
-    masked = _rewrite_calls(masked, "date_format", _df_make)
-    masked = _rewrite_calls(masked, "date_parse", _dp_make)
-    # AFTER the MySQL-pattern pass on purpose: this rewrite EMITS
-    # date_format calls with translator-injected Java patterns
-    # (sentinels since ADVICE r10) — fmt_make would otherwise re-judge
-    # them as '%'-free Presto literals and refuse its own output.
-    masked = _rewrite_calls(
-        masked, "to_iso8601",
-        lambda a: (
-            f"(case when typeof({a[0]}) = {_inject_lit(lits, 'date')} "
-            f"then date_format({a[0]}, {_inject_lit(lits, 'yyyy-MM-dd')}) "
-            f"else date_format({a[0]}, {_inject_lit(lits, _ISO_TS_PATTERN)}) "
-            f"end)"
-        ) if len(a) == 1 else None,
-    )
-    # Presto radix conversions → Spark conv() in SIGNED mode (negative
-    # toBase — otherwise conv reads '-101' as unsigned 64-bit two's
-    # complement, a silent 1.8e19-sized divergence caught by the
-    # execution test): digits lowered to match Presto's to_base;
-    # from_base returns BIGINT in Presto, conv a string (cast pins it).
-    masked = _rewrite_calls(
-        masked, "to_base",
-        lambda a: f"lower(conv({a[0]}, 10, -({a[1]})))"
-        if len(a) == 2 else None,
-    )
-    masked = _rewrite_calls(
-        masked, "from_base",
-        lambda a: f"cast(conv({a[0]}, {a[1]}, -10) as bigint)"
-        if len(a) == 2 else None,
-    )
-    masked = _rewrite_agg_over_calls(masked, "array_agg", _array_agg_parts)
-    masked = _rewrite_agg_over_calls(masked, "min_by", _minmax_by_n_parts("min"))
-    masked = _rewrite_agg_over_calls(masked, "max_by", _minmax_by_n_parts("max"))
-    masked = _rewrite_calls(masked, "random", _random_fn)
-    masked = _rewrite_calls(
-        masked, "truncate",
-        lambda a: f"(sign({a[0]}) * floor(abs({a[0]})))" if len(a) == 1 else None,
-    )
+    masked = _rewrite_subscripts(masked)
     # Presto's unparameterized VARCHAR: Spark's parser rejects a bare
     # VARCHAR ("requires a length parameter") — map to STRING.
     # Parameterized varchar(n) is valid Spark and passes through.
@@ -3843,10 +3554,6 @@ def _translate(presto_sql: str) -> tuple[str, str, "str | None"]:
         r"\bvarchar\b(?!\s*\()", "string", masked, flags=re.IGNORECASE
     )
     masked = re.sub(r"\bvarbinary\b", "binary", masked, flags=re.IGNORECASE)
-    for name, make_const in _CONST_FN.items():
-        pat = rf"\b{name}\s*\(\s*\)"
-        if re.search(pat, masked, flags=re.IGNORECASE):
-            masked = re.sub(pat, make_const(lits), masked, flags=re.IGNORECASE)
     # Trino session accessors (round 14, with the USE/schema support):
     # NILADIC in Trino's grammar — current_schema maps to Spark's
     # current_schema() (the () is required there), current_catalog is
@@ -3865,21 +3572,7 @@ def _translate(presto_sql: str) -> tuple[str, str, "str | None"]:
         masked,
         flags=re.IGNORECASE,
     )
-    for name, repl in _SIMPLE_FN.items():
-        masked = re.sub(rf"\b{name}\s*\(", repl + "(", masked, flags=re.IGNORECASE)
-    masked = _rewrite_subscripts(masked)
-    # LAST: inner rewrites (element_at→try_element_at, subscripts) have
-    # already produced try_* calls that TRY() can simply unwrap.
-    masked = _rewrite_calls(masked, "try", _try_fn)
-    # extract(SECOND ...) placeholder (see _extract_fn): expanded after
-    # every other pass so the inner extract( is never re-scanned
-    masked = _rewrite_calls(
-        masked, "__sparketl_xsec",
-        lambda a: f"cast(extract(second from {a[0]}) as bigint)"
-        if len(a) == 1 else None,
-    )
-
-    return _translation(masked, lits)
+    return _translation(_scan(masked, lits)[0], lits)
 
 
 def translate(presto_sql: str) -> str:
@@ -3929,8 +3622,8 @@ def translate(presto_sql: str) -> str:
 # VALUES list while parsing or analyzing it, so its sites are claimed
 # by a second probe that reads the list as a SELECT of its rows, at
 # the same positions; an ORDER BY or HAVING term Spark replaced by a
-# reference to an equal selected one takes its same-text twin's
-# claims.  A site that no node claims, or whose operand Spark cast
+# reference to an equal selected one takes the claims of its twin, the
+# site whose parsed expression reads the same.  A site that no node claims, or whose operand Spark cast
 # implicitly from a STRING (Presto refuses varchar / integer; the cast
 # shares the site's span, where a written cast has its own), refuses:
 # a wrong guess is never made silently.
@@ -4108,14 +3801,15 @@ def _claims(
     of ``probe``; and the spans of the probe's VALUES lists.  A site
     whose node Spark replaced by a reference to an equal expression (an
     ORDER BY or HAVING term that is also selected) takes the claims of
-    the sites with the same text in its query block.  Over a frame,
+    the sites with the same parsed expression in its query block (the
+    parsed node's text, which keeps no spacing).  Over a frame,
     only the probe's own expression is walked."""
     parser = spark._jsparkSession.sessionState().sqlParser()  # noqa: SLF001
     if over is None:
         parsed = [(True, parser.parsePlan(probe))]
     else:
         parsed = [(False, parser.parseExpression(probe))]
-    where: dict = {}  # site → (scope, span) in the parsed probe
+    where: dict = {}  # site → (scope, span, node) in the parsed probe
     lists = []
     kinds = ("BINARY_ARITHMETIC", "LOCAL_RELATION")
     if any(site != "/" for site in sites.values()):
@@ -4136,8 +3830,8 @@ def _claims(
         else:
             continue
         if pos in sites:
-            where[pos] = (scope, span)
-    ops = {span: pos for pos, (_scope, span) in where.items()}
+            where[pos] = (scope, span, n)
+    ops = {span: pos for pos, (_scope, span, _node) in where.items()}
     if over is None:
         analyzed = [(True, _analyze(spark, parsed[0][1]))]
     else:
@@ -4156,11 +3850,12 @@ def _claims(
                 n.dataType().typeName() in _INTEGRAL,
                 _casts_string(n, span),
             ))
-    for pos, (scope, (start, stop)) in where.items():
-        if pos not in claims:
-            text = probe[start : stop + 1]
-            for twin, (tscope, (ts, te)) in where.items():
-                if twin in claims and tscope == scope and probe[ts : te + 1] == text:
+    unclaimed = [pos for pos in where if pos not in claims]
+    if unclaimed:
+        said = {pos: node.toString() for pos, (_, _, node) in where.items()}
+        for pos in unclaimed:
+            for twin, (scope, _, _) in where.items():
+                if twin in claims and scope == where[pos][0] and said[twin] == said[pos]:
                     claims.setdefault(pos, set()).update(claims[twin])
     return claims, lists
 

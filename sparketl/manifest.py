@@ -35,13 +35,17 @@ that merely opens a table never touches another's files.  A writer
 that dies mid-statement may leave a hidden ``_stage-*`` or unpublished
 ``_v`` directory behind; no version lists it, and a later statement
 that reuses the ``_v`` name replaces it.  Durability covers a process
-crash (nothing is fsynced); one session writes a table at a time, and
-a write from a handle older than the published version raises instead
-of publishing over it.
+crash (nothing is fsynced).  A writer holds an exclusive ``flock`` on
+``root/_lock`` from its version check through its publish, so writers
+of one table, in one process or several, take turns; a write from a
+handle older than the published version raises instead of publishing
+over it.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
 import shutil
@@ -115,16 +119,26 @@ def publish(v: Version) -> Version:
     return v
 
 
-def _check_current(v: Version) -> None:
-    """Refuse to write from a stale version: publishing over a newer
-    one would lose its update and delete directories it lists."""
-    cur = load(v.root)
-    if cur is None or cur.n != v.n:
-        raise RuntimeError(
-            f"table at {v.root} is at version {cur.n if cur else None}, "
-            f"not {v.n}: it was written through another name or process; "
-            "register it again before writing"
-        )
+@contextlib.contextmanager
+def _writing(v: Version):
+    """Hold the table's write lock and refuse to write from a stale
+    version: publishing over a newer one would lose its update and
+    delete directories it lists.  The lock file is opened per call —
+    flock excludes separate opens, threads of one process included."""
+    fd = os.open(os.path.join(v.root, "_lock"), os.O_RDWR | os.O_CREAT, 0o644)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        cur = load(v.root)
+        if cur is None or cur.n != v.n:
+            raise RuntimeError(
+                f"table at {v.root} is at version {cur.n if cur else None}, "
+                f"not {v.n}: another writer (name, thread or process) "
+                "published first; retry the statement, registering the "
+                "table again first if it was written under another name"
+            )
+        yield
+    finally:
+        os.close(fd)
 
 
 def _next(v: Version, dirs, retired, schema: StructType | None = None) -> Version:
@@ -308,16 +322,16 @@ def replace(
     whose values are in ``parts``, and of any partition ``df`` has rows
     for; ``parts=None`` (and every unpartitioned table) means the whole
     table.  ``df=None`` writes no rows."""
-    _check_current(v)
-    n = v.n + 1
-    new = _install(v, _stage(spark, v, df), n) if df is not None else []
-    if v.part_col is None or parts is None:
-        gone = list(v.dirs)
-    else:
-        keys = _part_keys(spark, v, parts) if parts else set()
-        keys |= {_pkey(d) for d in new}
-        gone = [d for d in v.dirs if _pkey(d) in keys]
-    return _next(v, [d for d in v.dirs if d not in gone] + new, gone, schema)
+    with _writing(v):
+        n = v.n + 1
+        new = _install(v, _stage(spark, v, df), n) if df is not None else []
+        if v.part_col is None or parts is None:
+            gone = list(v.dirs)
+        else:
+            keys = _part_keys(spark, v, parts) if parts else set()
+            keys |= {_pkey(d) for d in new}
+            gone = [d for d in v.dirs if _pkey(d) in keys]
+        return _next(v, [d for d in v.dirs if d not in gone] + new, gone, schema)
 
 
 def _link_all(src: str, dst: str) -> None:
@@ -331,28 +345,28 @@ def append(spark: SparkSession, v: Version, df: DataFrame) -> tuple[Version, int
     """INSERT: add ``df``'s rows without rewriting any.  Returns the new
     version and the row count (from the written footers); zero rows
     publishes nothing."""
-    _check_current(v)
-    stage = _stage(spark, v, df)
-    rows = _footer_rows(stage)
-    if rows == 0:
-        shutil.rmtree(stage)
-        return v, 0
-    n = v.n + 1
-    new = _install(v, stage, n)
-    live = {_pkey(d): d for d in v.dirs} if v.part_col else {}
-    gone = []
-    for d in new:
-        old = live.get(_pkey(d)) if v.part_col else (v.dirs[0] if v.dirs else None)
-        if old is not None:
-            _link_all(_path(v, old), _path(v, d))
-            gone.append(old)
-    return _next(v, [d for d in v.dirs if d not in gone] + new, gone), rows
+    with _writing(v):
+        stage = _stage(spark, v, df)
+        rows = _footer_rows(stage)
+        if rows == 0:
+            shutil.rmtree(stage)
+            return v, 0
+        n = v.n + 1
+        new = _install(v, stage, n)
+        live = {_pkey(d): d for d in v.dirs} if v.part_col else {}
+        gone = []
+        for d in new:
+            old = live.get(_pkey(d)) if v.part_col else (v.dirs[0] if v.dirs else None)
+            if old is not None:
+                _link_all(_path(v, old), _path(v, d))
+                gone.append(old)
+        return _next(v, [d for d in v.dirs if d not in gone] + new, gone), rows
 
 
 def set_schema(v: Version, schema: StructType) -> Version:
     """Publish the same directories under a new schema."""
-    _check_current(v)
-    return _next(v, v.dirs, (), schema)
+    with _writing(v):
+        return _next(v, v.dirs, (), schema)
 
 
 def drop(root: str) -> None:

@@ -917,7 +917,7 @@ def win_minmax_by_n(spark, sf_dir):
     ``max_by(x, y, n) OVER (frame)`` and WINDOWED ordered
     ``array_agg(x ORDER BY k) OVER (frame)`` — the forms round 11
     refused.  The dialect's parts-based rewrites now relocate the OVER
-    clause onto the bare collect_list (dialect._rewrite_agg_over_calls),
+    clause onto the bare collect_list (dialect._scan),
     so the frame feeds the collection and the sort/slice/project runs
     per output row.  The max_by sort key composes price*10 + linenumber
     — 3-arg min_by/max_by tie order is unspecified on every engine.

@@ -48,8 +48,14 @@ def test_day_of_week_iso():
 
 
 def test_day_name_family():
-    assert _norm(translate("select day_of_year(d), week(d)")) == (
-        "select dayofyear(d), weekofyear(d)"
+    assert _norm(
+        translate(
+            "select day_of_year(d), doy(d), day_of_month(d), week(d), "
+            "week_of_year(d)"
+        )
+    ) == (
+        "select dayofyear(d), dayofyear(d), dayofmonth(d), weekofyear(d), "
+        "weekofyear(d)"
     )
 
 
@@ -127,6 +133,23 @@ def test_constants_and_misc_names():
         "any_value(y), approx_count_distinct(z), array_contains(arr, 1), "
         "arrays_zip(a, b), levenshtein(s, t)"
     )
+
+
+def test_every_call_rule_is_in_the_docstring_inventory():
+    """The module docstring's inventory names every call the translator
+    rewrites, spelled as a Presto call."""
+    import re
+
+    from sparketl import dialect
+
+    doc = dialect.__doc__
+    inventory = doc[doc.index("Rewrite inventory") : doc.index("Already identical")]
+    missing = [
+        name
+        for name in dialect._CALLS
+        if not re.search(rf"(?<![\w.]){name}\(", inventory, re.IGNORECASE)
+    ]
+    assert not missing
 
 
 def test_double_quoted_identifiers_to_backticks():
@@ -899,6 +922,60 @@ def test_exec_truncate_and_unixtime(spark, duck):
     ]
 
 
+def test_exec_compositions_match_duckdb(spark, duck):
+    """Compositions of rewritten calls (each call's arguments are
+    translated before its own rule runs, and no output is translated
+    twice), and call names inside a literal or a quoted identifier,
+    which stay as written."""
+    import datetime
+
+    row = (
+        [1, 2, 3], "a.b.c", "2024-03-05", 1704067245.5,
+        datetime.datetime(2024, 3, 5, 10), 14, 11, 7, -5, 1,
+    )
+    spark.createDataFrame(
+        [row],
+        "a array<int>, s string, d string, e double, ts timestamp, "
+        "p bigint, q bigint, r bigint, x bigint, `sign(x)` int",
+    ).createOrReplaceTempView("comp_t")
+    duck.execute(
+        "create or replace temp table comp_t (a int[], s varchar, d varchar, "
+        "e double, ts timestamp, p bigint, q bigint, r bigint, x bigint, "
+        '"sign(x)" int)'
+    )
+    duck.execute("insert into comp_t values (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)", row)
+    q = """
+        select try(element_at(a, 9)) as oob, split(s, '.')[2] as part,
+               to_iso8601(date_parse(d, '%Y-%m-%d')) as iso,
+               extract(second from from_unixtime(e)) as sec,
+               format_datetime(ts, 'yyyy') as yr,
+               bitwise_and(bitwise_and(p, q), r) as bits,
+               truncate(sign(x)) as tsign,
+               'strpos(a, b)' as lit, "sign(x)"
+        from comp_t
+    """
+    assert "'strpos(a, b)' as lit, `sign(x)`" in translate(q)
+    got = presto_sql(spark, q).collect()
+    want = duck.execute(
+        """
+        select a[9], str_split(s, '.')[2],
+               strftime(strptime(d, '%Y-%m-%d'), '%Y-%m-%dT%H:%M:%S.%g'),
+               extract(second from epoch_ms(cast(e * 1000 as bigint))),
+               strftime(ts, '%Y'), (p & q) & r, trunc(sign(x)),
+               'strpos(a, b)', "sign(x)"
+        from comp_t
+        """
+    ).fetchall()
+    assert [tuple(r) for r in got] == want
+    sk = "select skewness(v) * 2 + 1 from (values (1.0), (2.0), (3.0), (10.0), (20.0)) t(v)"
+    assert presto_sql(spark, sk).collect()[0][0] == pytest.approx(
+        duck.execute(sk).fetchall()[0][0], rel=1e-12
+    )
+    df = presto_sql(spark, "select random() as r")
+    assert df.schema["r"].dataType.typeName() == "double"
+    assert 0 <= df.collect()[0].r < 1
+
+
 def test_exec_reduce_and_bitwise_match_duckdb(spark, duck):
     got = presto_sql(
         spark,
@@ -929,7 +1006,8 @@ def test_exec_reduce_and_bitwise_match_duckdb(spark, duck):
 
 def test_random_rewrites():
     out = translate("select random() as r, random(10) as ri, random(5, 8) as rmn")
-    assert "rand() as r" in out
+    # 0-arg random() is Spark's own (DOUBLE in [0, 1)): untouched
+    assert "select random() as r" in out
     # half-open [0, n): floor(rand()*n) clamped to n-1 via least() so
     # double rounding can never emit n itself
     assert (
@@ -1812,9 +1890,10 @@ def test_int_division_replaced_by_its_selected_twin(typed):
         "select sum(a) div 2 from idiv order by sum(a) div 2, "
         "(select sum(a) / 2 from (select x as a from idiv) v)"
     )
-    # a twin spelled differently is not found: refused, not guessed
-    with pytest.raises(ValueError, match="keeps no node"):
-        typed("select sum(a) / 2 from idiv order by sum(a)/2")
+    # a twin spelled differently is found by its parsed expression
+    assert typed("select sum(a) / 2 from idiv order by sum(a)/2") == (
+        "select sum(a) div 2 from idiv order by sum(a) div 2"
+    )
 
 
 def test_exec_int_division_matches_presto_semantics(spark):
@@ -2486,16 +2565,15 @@ def test_mr_define_assertion_mode_fires_on_overlap(spark):
         _d.set_mr_define_assertions(False)
 
 
-def test_named_window_inlines_on_rewritten_shapes():
-    """Round-12: OVER <named window> on a compound-aggregate rewrite is
-    resolved from the statement's WINDOW clause and relocated inline
-    (refusing was the round-12-review stopgap)."""
+def test_named_window_on_rewritten_shapes():
+    """OVER <named window> on a compound-aggregate rewrite moves onto the
+    bare collect_list by name: Spark resolves the name from the query
+    block's WINDOW clause (execution parity in the next tests)."""
     for fn in ("array_agg(x order by y)", "min_by(x, y, 3)"):
         out = translate(
             f"select {fn} over w from t window w as (partition by g)"
         )
-        assert "over (partition by g)" in out
-        assert "over w" not in out.replace("over w as", "")
+        assert "as __ob_v)) over w)" in out or "as __mb_v)) over w," in out
     # native shapes keep named-window use untouched
     out = translate(
         "select array_agg(x) over w from t window w as (partition by g)"
@@ -2503,29 +2581,43 @@ def test_named_window_inlines_on_rewritten_shapes():
     assert "array_agg(x) over w" in out
 
 
-def test_named_window_inheritance_and_refusals():
+def test_named_window_inheritance_and_refusals(spark, duck):
     """Trino window inheritance (`w2 AS (w1 ORDER BY ...)`, and the
-    inline `OVER (w1 ORDER BY ...)` form) expands to the full spec;
-    undefined, doubly-defined, or cyclic names refuse loudly."""
+    inline `OVER (w1 ORDER BY ...)` form) expands to the full spec; a
+    relocated window name is Spark's to resolve, so an undefined name
+    fails there and a name defined in two query blocks means the one of
+    its own block; cycles and IGNORE NULLS refuse."""
     out = translate(
         "select min_by(x, y, 3) over w2 from t "
         "window w1 as (partition by g), w2 as (w1 order by y)"
     )
-    assert "over (partition by g order by y)" in out
+    assert "over w2," in out and "w2 as (partition by g order by y)" in out
     out = translate(
         "select array_agg(x order by y) over (w1 order by y) from t "
         "window w1 as (partition by g)"
     )
     assert "over (partition by g order by y)" in out
-    with pytest.raises(ValueError, match="undefined"):
-        translate("select min_by(x, y, 3) over w9 from t")
-    with pytest.raises(ValueError, match="more than once"):
-        translate(
-            "select array_agg(x order by y) over w from "
-            "(select * from t window w as (order by y)) "
-            "window w as (partition by g)"
-        )
-    with pytest.raises(ValueError, match="cycle|more than once|undefined"):
+    rows = [(1, 2, 1), (2, 1, 1), (3, None, 1), (4, 5, 2)]
+    spark.createDataFrame(rows, "x int, y int, g int").createOrReplaceTempView(
+        "nwin_t"
+    )
+    with pytest.raises(Exception, match="(?i)w9"):
+        presto_sql(spark, "select min_by(x, y, 3) over w9 from nwin_t").collect()
+    got = presto_sql(
+        spark,
+        "select x, array_agg(x order by y) over w as arr from "
+        "(select * from nwin_t window w as (order by y)) "
+        "window w as (partition by g) order by x",
+    ).collect()
+    duck.execute("create or replace temp table nwin_t (x int, y int, g int)")
+    duck.executemany("insert into nwin_t values (?, ?, ?)", rows)
+    want = duck.execute(
+        "select x, list(x) over (partition by g order by y nulls last "
+        "rows between unbounded preceding and unbounded following) "
+        "from nwin_t order by x"
+    ).fetchall()
+    assert [(r.x, r.arr) for r in got] == [(x, list(a)) for x, a in want]
+    with pytest.raises(ValueError, match="cycl|more than once|undefined"):
         translate(
             "select min_by(x, y, 3) over w1 from t "
             "window w1 as (w2 order by y), w2 as (w1 partition by g)"

@@ -329,3 +329,32 @@ def test_concurrent_reader_sees_only_published_versions(spark, tmp_path):
     assert len(seen) >= 6, len(seen)
     assert len(set(published)) == len(published)  # each statement changed it
     assert set(seen) <= set(published), sorted(set(seen) - set(published))
+
+
+def test_concurrent_inserts_lose_no_acknowledged_statement(spark, tmp_path):
+    """Two threads on one session each run 15 INSERTs into a one-row
+    table: the table ends with one row per INSERT that returned, and
+    every INSERT that did not return raised the stale-version error."""
+    dml.set_base_dir(spark, str(tmp_path / "wh"))
+    dialect.sql(spark, "create table t_conc as select * from (values (0, 0)) as s(k, w)")
+    done: list[tuple] = []
+    errors: list[str] = []
+
+    def writer(w: int) -> None:
+        for k in range(1, 16):
+            try:
+                dialect.sql(spark, f"insert into t_conc values ({k}, {w})").collect()
+                done.append((k, w))
+            except Exception as e:  # noqa: BLE001 - a failed INSERT is the finding
+                errors.append(f"{type(e).__name__}: {str(e)[:300]}")
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in (1, 2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    got = sorted(tuple(r) for r in dialect.sql(spark, "select * from t_conc").collect())
+    assert got == sorted([(0, 0), *done])
+    assert len(done) + len(errors) == 30
+    assert all(e.startswith("RuntimeError") and ", not " in e for e in errors), errors[:3]
