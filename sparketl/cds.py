@@ -272,8 +272,8 @@ def start_driver(start: Callable[[str], SparkSession]) -> SparkSession:
         # the JVM writes the archive when it exits, after this process
         # may have gone: the lock names the JVM from here on
         jvm = SparkContext._jvm
-        pid = jvm.java.lang.ProcessHandle.current().pid()
-        class_path = jvm.java.lang.System.getProperty("java.class.path")
+        pid = getattr(jvm, "java.lang.ProcessHandle").current().pid()
+        class_path = getattr(jvm, "java.lang.System").getProperty("java.class.path")
         with contextlib.suppress(OSError):  # a full disk: the session is up all the same
             _write_lock(f"{stem}.lock", f"{pid}\n{class_path}")
     return result

@@ -56,6 +56,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from sparketl.tables import data_files, read_parquet
+
 MANIFEST = "_manifest"
 
 
@@ -75,10 +77,6 @@ class Version:
 
 def _path(v: "Version", d: str) -> str:
     return v.root if d == "." else os.path.join(v.root, d)
-
-
-def _hidden(name: str) -> bool:
-    return name.startswith(("_", "."))
 
 
 def _pkey(d: str) -> tuple[str, str]:
@@ -177,7 +175,7 @@ def adopt(spark: SparkSession, root: str, part_col: str | None = None) -> Versio
     v = load(root)
     if v is not None:
         return v
-    schema = spark.read.parquet(root).schema  # raises on an unreadable dir
+    schema = read_parquet(spark, root).schema  # raises on an unreadable dir
     if part_col:
         dirs = [
             e.name
@@ -203,6 +201,15 @@ def read(spark: SparkSession, table: Version | str) -> DataFrame:
     return df.select(*[f.name for f in v.schema.fields])
 
 
+def _catalog_utils(spark: SparkSession):
+    """Spark's ``ExternalCatalogUtils``, looked up by its full name in
+    one py4j round trip (a package walk makes one per dot)."""
+    return getattr(
+        spark._jvm,  # noqa: SLF001
+        "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils",
+    )
+
+
 def catalog_locations(
     spark: SparkSession, v: Version
 ) -> tuple[str, list[tuple[str | None, str]]]:
@@ -213,7 +220,7 @@ def catalog_locations(
     which reads as no rows."""
     if not v.part_col:
         return os.path.normpath(_path(v, v.dirs[0] if v.dirs else "_empty")), []
-    util = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils  # noqa: SLF001
+    util = _catalog_utils(spark)
     parts = []
     for d in v.dirs:
         val = util.unescapePathName(d.split("/", 1)[0].partition("=")[2])
@@ -253,20 +260,10 @@ def _install(v: Version, stage: str, n: int) -> list[str]:
     return out
 
 
-def _data_files(path: str):
-    """Data files under ``path`` the way Spark lists them: recursive,
-    skipping names that start with ``_`` or ``.``."""
-    for d, subdirs, files in os.walk(path):
-        subdirs[:] = [s for s in subdirs if not _hidden(s)]
-        for f in files:
-            if not _hidden(f):
-                yield os.path.join(d, f)
-
-
 def _footer_rows(path: str) -> int:
     import pyarrow.parquet as pq
 
-    return sum(pq.read_metadata(p).num_rows for p in _data_files(path))
+    return sum(pq.read_metadata(p).num_rows for p in data_files(path))
 
 
 def rows(v: Version) -> int:
@@ -310,7 +307,7 @@ def _part_keys(spark: SparkSession, v: Version, vals: set) -> set:
             .select(F.col(f.name).cast("string"))
             .collect()
         ]
-    util = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils  # noqa: SLF001
+    util = _catalog_utils(spark)
     return {_pkey(util.getPartitionPathString(f.name, s)) for s in strs}
 
 
@@ -335,7 +332,7 @@ def replace(
 
 
 def _link_all(src: str, dst: str) -> None:
-    for p in _data_files(src):
+    for p in data_files(src):
         to = os.path.join(dst, os.path.relpath(p, src))
         os.makedirs(os.path.dirname(to), exist_ok=True)
         os.link(p, to)
@@ -381,7 +378,7 @@ def files(v: Version) -> dict[str, tuple[int, int]]:
     for d in v.dirs:
         base = _path(v, d)
         part = d.split("/", 1)[0] if v.part_col and "=" in d else ""
-        for p in _data_files(base):
+        for p in data_files(base):
             st = os.stat(p)
             out[os.path.join(part, os.path.relpath(p, base))] = (st.st_size, st.st_mtime_ns)
     return out
@@ -395,6 +392,6 @@ def file_columns(v: Version) -> set[str]:
     return {
         c.lower()
         for d in v.dirs
-        for p in _data_files(_path(v, d))
+        for p in data_files(_path(v, d))
         for c in pq.read_schema(p).names
     }

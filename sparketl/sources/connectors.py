@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparketl.registry import query
-from sparketl.tables import table
+from sparketl.tables import read_parquet, table
 
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__)))), ".scratch")
@@ -242,7 +242,7 @@ def sink_parquet_partitioned(spark, sf_dir):
         .partitionBy("o_orderstatus")
         .parquet(path)
     )
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     # partition-pruned branch + remainder branch: both scans prune dirs
     pruned = back.where(F.col("o_orderstatus") == "F")
     rest = back.where(F.col("o_orderstatus") != "F")
@@ -380,7 +380,7 @@ def sink_partition_overwrite_dynamic(spark, sf_dir):
             .partitionBy("o_orderstatus")
             .parquet(path)
         )
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return back.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("n_orders"),
         F.round(
@@ -440,7 +440,7 @@ def sink_compacted_files(spark, sf_dir):
     )
     frag = _scratch_dir(sf_dir, "lineitem_fragmented")
     li.repartition(64).write.mode("overwrite").parquet(frag)
-    fragmented = spark.read.parquet(frag)
+    fragmented = read_parquet(spark, frag)
     n_bytes = sum(
         os.path.getsize(os.path.join(frag, f))
         for f in os.listdir(frag)
@@ -454,7 +454,7 @@ def sink_compacted_files(spark, sf_dir):
         .option("maxRecordsPerFile", 10_000_000)
         .parquet(compact)
     )
-    back = spark.read.parquet(compact)
+    back = read_parquet(spark, compact)
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n_lines"),
         F.round(

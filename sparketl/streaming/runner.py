@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from sparketl.tables import normalize_events_ts
+from sparketl.tables import normalize_events_ts, read_parquet
 
 SESSION_GAP_MIN = 30
 
@@ -61,10 +61,11 @@ def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """#128-134 ingestion: file-source readStream over the events
     landing directory, with the same ts normalization as the batch
     loader (sparketl.tables).  File streams require an explicit schema;
-    it is taken from a batch peek at the landing directory's footers so
-    the stream tracks whichever physical ts type the fixtures carry
-    (one driver-side metadata read, no data scan)."""
-    raw_schema = spark.read.parquet(events_dir).schema
+    ``read_parquet`` takes it from one file's footer, read on the driver
+    by Spark's own converter, so the stream tracks whichever physical
+    ts type the fixtures carry (one driver-side metadata read, no data
+    scan and no Spark job)."""
+    raw_schema = read_parquet(spark, events_dir).schema
     raw = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)

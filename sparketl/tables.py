@@ -1,7 +1,11 @@
 """Table catalog: load the ten fixture tables, normalize, register views.
 
 Presto resolves tables eagerly against connector metadata; our analogue
-is parquet's embedded schema — no inference (SURVEY.md §1.1).  Views are
+is parquet's embedded schema (SURVEY.md §1.1).  :func:`read_parquet`
+reads it from one file's footer on the driver and hands it to the
+reader, so opening a table runs no Spark job: a schema-less
+``spark.read.parquet`` infers the schema in a job of its own
+(``mergeSchemasInParallel``, ``mergeSchema`` off included).  Views are
 registered once per (session, sf_dir) and cached so a 100-query suite
 doesn't re-plan 1000 scans; DataFrames themselves stay lazy.
 
@@ -17,6 +21,9 @@ generates next.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +43,60 @@ TABLE_NAMES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips: ``.`` names, and ``_`` names
+    other than partition directories (``_col=value``)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def data_files(path: str):
+    """The data files Spark reads for ``path``: the file itself, or the
+    files under the directory, recursively, without hidden names."""
+    if os.path.isfile(path):
+        yield path
+    for d, subdirs, files in os.walk(path):
+        subdirs[:] = [s for s in subdirs if not _hidden(s)]
+        for f in files:
+            if not _hidden(f):
+                yield os.path.join(d, f)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    The data schema comes from the footer of the file Spark itself
+    would read it from (the first data file in path order; summary
+    files are not consulted), converted by Spark's own
+    ``ParquetToSparkSchemaConverter`` under the session's conf, so
+    ``nanosAsLong``, ``inferTimestampNTZ`` and ``binaryAsString`` apply
+    as they do to inference, and a Spark-written file's stored schema
+    wins as it does there.  Partition columns still come from Spark's
+    partition discovery, which a supplied data schema leaves as it is.
+    A path without a local data file (empty, a glob, another file
+    system) is left to Spark."""
+    first = min(data_files(path), default=None)
+    if first is None:
+        return spark.read.parquet(path)
+    jvm, st = spark._jvm, spark._jsparkSession.sessionState()  # noqa: SLF001
+    # one fully qualified lookup per class: a package walk
+    # (jvm.org.apache...) costs a py4j round trip per dot
+    pkg = "org.apache.spark.sql.execution.datasources.parquet."
+    p = getattr(jvm, "org.apache.hadoop.fs.Path")(os.path.abspath(first))
+    meta = getattr(jvm, "org.apache.parquet.hadoop.ParquetFileReader").readFooter(
+        st.newHadoopConf(),
+        p,
+        getattr(
+            jvm, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+        ).SKIP_ROW_GROUPS,
+    )
+    schema = getattr(jvm, pkg + "ParquetFileFormat").readSchemaFromFooter(
+        getattr(jvm, "org.apache.parquet.hadoop.Footer")(p, meta),
+        getattr(jvm, pkg + "ParquetToSparkSchemaConverter")(st.conf()),
+    )
+    schema = T.StructType.fromJson(json.loads(schema.json()))
+    return spark.read.schema(schema).parquet(path)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -85,7 +146,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     dfs: dict[str, DataFrame] = {}
     for name in TABLE_NAMES:
-        df = spark.read.parquet(f"{sf}/{name}.parquet")
+        df = read_parquet(spark, f"{sf}/{name}.parquet")
         if name == "events":
             df = normalize_events_ts(df)
         dfs[name] = df

@@ -108,6 +108,17 @@ def test_json_family():
 def test_element_at_try():
     out = translate("select element_at(a, 5), try_element_at(a, 5)")
     assert _norm(out) == "select try_element_at(a, 5), try_element_at(a, 5)"
+    # a subscript's base: a whole quoted name, a call spelled with a
+    # space before its '(', but never a keyword before a parenthesis
+    assert translate('select "quoted id"[2] from t') == (
+        "select try_element_at(`quoted id`, 2) from t"
+    )
+    assert translate("select upper (x)[1] from t") == (
+        "select try_element_at(upper (x), 1) from t"
+    )
+    assert translate("select a and (x)[1], f(y)[2] from t") == (
+        "select a and try_element_at((x), 1), try_element_at(f(y), 2) from t"
+    )
 
 
 def test_unixtime_round_trip():
@@ -796,8 +807,12 @@ def test_exec_subscript_one_based_matches_duckdb(spark, duck):
                split(o_orderpriority, '-')[2] as second_part,
                split(o_orderpriority, '-')[99] as oob,
                MAP(ARRAY['a', 'b'], ARRAY[o_orderkey, -1])['a'] as mval,
-               MAP(ARRAY['a'], ARRAY[o_orderkey])['missing'] as mmiss
-        from orders where o_orderkey < 64 order by o_orderkey
+               MAP(ARRAY['a'], ARRAY[o_orderkey])['missing'] as mmiss,
+               "quoted id"[2] as quoted,
+               reverse ("quoted id")[1] as spaced_call,
+               o_orderkey > 0 and ("quoted id")[1] = '1' as after_and
+        from (select *, split(o_orderpriority, '-') as "quoted id" from orders)
+        where o_orderkey < 64 order by o_orderkey
         """,
     ).collect()
     want = duck.execute(
@@ -807,13 +822,18 @@ def test_exec_subscript_one_based_matches_duckdb(spark, duck):
                string_split(o_orderpriority, '-')[2] as second_part,
                string_split(o_orderpriority, '-')[99] as oob,
                o_orderkey as mval,
-               NULL as mmiss
-        from orders where o_orderkey < 64 order by o_orderkey
+               NULL as mmiss,
+               "quoted id"[2] as quoted,
+               list_reverse("quoted id")[1] as spaced_call,
+               o_orderkey > 0 and ("quoted id")[1] = '1' as after_and
+        from (select *, string_split(o_orderpriority, '-') as "quoted id" from orders)
+        where o_orderkey < 64 order by o_orderkey
         """
     ).fetchall()
     assert len(got) > 0
     assert [
-        (r.o_orderkey, r.first_part, r.second_part, r.oob, r.mval, r.mmiss)
+        (r.o_orderkey, r.first_part, r.second_part, r.oob, r.mval, r.mmiss,
+         r.quoted, r.spaced_call, r.after_and)
         for r in got
     ] == [tuple(r) for r in want]
 
@@ -1480,6 +1500,21 @@ def test_timezone_iso_documented_refusals():
         translate("select parse_duration('five minutes') from t")
     with pytest.raises(ValueError, match="AT TIME ZONE"):
         translate("select a + b at time zone 1 from t")
+
+
+def test_refusal_quotes_literals_as_written():
+    # the message shows the argument's literal, not its masked sentinel
+    with pytest.raises(ValueError) as e:
+        translate("select date_parse(s, set_agg('x')) from t")
+    msg = str(e.value)
+    assert "'x'" in msg and "\x00" not in msg and "\\x00" not in msg
+    with pytest.raises(ValueError) as e:
+        translate(
+            "select sum(x) over (order by k groups between 1 preceding and "
+            "current row) from (select * from t) s join u on u.a = 'y'"
+        )
+    msg = str(e.value)
+    assert "'y'" in msg and "\x00" not in msg and "\\x00" not in msg
 
 
 def test_exec_timezone_iso_family(spark):

@@ -330,32 +330,32 @@ def test_stateful_sessionize_out_of_order_merge_keeps_open_end():
 def test_normalize_events_ts_handles_both_fixture_generations(spark, tmp_path):
     """The driver has shipped events.ts as TIMESTAMP(NANOS) (pre-r4,
     long-nanos under nanosAsLong) and as native timestamp[us] (r4).
-    normalize_events_ts must yield the identical session-tz TIMESTAMP
-    values for the same instants through either physical layout."""
+    Opened the loader's way, normalize_events_ts must yield the
+    identical session-tz TIMESTAMP values for the same instants through
+    either physical layout, and through plain int64 nanos."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sparketl.tables import normalize_events_ts
+    from sparketl.tables import normalize_events_ts, read_parquet
 
     us = [1_704_067_200_000_000, 1_704_067_260_123_456]  # 2024-01-01 UTC
-    ns_file = tmp_path / "ev_ns.parquet"
-    us_file = tmp_path / "ev_us.parquet"
-    pq.write_table(
-        pa.table({"ts": pa.array([u * 1000 for u in us], pa.int64())}), ns_file
-    )
-    pq.write_table(
-        pa.table({"ts": pa.array(us, pa.timestamp("us"))}), us_file
-    )
-
-    got_ns = [
-        r.ts for r in normalize_events_ts(spark.read.parquet(str(ns_file)))
-        .orderBy("ts").collect()
-    ]
-    got_us = [
-        r.ts for r in normalize_events_ts(spark.read.parquet(str(us_file)))
-        .orderBy("ts").collect()
-    ]
-    assert got_ns == got_us
+    files = {
+        "int64": pa.array([u * 1000 for u in us], pa.int64()),
+        "nanos": pa.array([u * 1000 for u in us], pa.timestamp("ns")),
+        "us": pa.array(us, pa.timestamp("us")),
+    }
+    got = {}
+    for kind, arr in files.items():
+        path = str(tmp_path / f"ev_{kind}.parquet")
+        pq.write_table(pa.table({"ts": arr}), path)
+        df = read_parquet(spark, path)
+        assert df.schema == spark.read.parquet(path).schema
+        if kind == "nanos":  # TIMESTAMP(NANOS) loads as bigint under nanosAsLong
+            assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+            assert dict(df.dtypes)["ts"] == "bigint"
+        got[kind] = [r.ts for r in normalize_events_ts(df).orderBy("ts").collect()]
+    got_ns, got_us = got["nanos"], got["us"]
+    assert got["int64"] == got_ns == got_us
     assert got_ns[0].isoformat() == "2024-01-01T00:00:00"
     assert got_ns[1].microsecond == 123456
 
