@@ -232,11 +232,10 @@ def main() -> None:
             walls = []
             metrics = None
             for p in range(passes):
-                # every pass pays every shared subtree exactly once
-                # (same contract as bench.py): the session's memos and
-                # cached frames.  Without this the min-of-passes for
-                # llm_dedup_components / the ivf family is a memo hit,
-                # not a standalone measurement.
+                # every pass pays every shared subtree exactly once:
+                # the session's memos and cached frames.  Without this
+                # the min-of-passes for llm_dedup_components / the ivf
+                # family is a memo hit, not a standalone measurement.
                 session.reset(spark)
                 spark.catalog.clearCache()
                 before = stage_totals(spark)

@@ -8,9 +8,14 @@ and verified; a JVM started from it maps them instead.
 One archive per host and install lives at
 ``$XDG_CACHE_HOME/sparketl/cds/<key>.jsa`` (default
 ``~/.cache/sparketl/cds/``), 130-210 MB each.  ``<key>`` hashes
-``java.home``, the JDK version, and the name, size and mtime of every
-jar under ``$SPARK_HOME/jars`` (stat only), so a new JDK or Spark
-install gets a new archive.  ``rm -rf ~/.cache/sparketl`` resets it.
+``java.home``, the JDK version, the Spark install's real path, the conf
+directory the JVM launches with (below), and the name, size and mtime
+of every jar under ``$SPARK_HOME/jars`` (stat only), so a new JDK or
+Spark install gets a new archive.  A JVM maps an archive only on the
+class path it was recorded under, and that class path starts with the
+conf directory: a cache copied under another ``XDG_CACHE_HOME`` holds
+an archive no JVM launched from the copy could map, so the copy
+records its own.  ``rm -rf ~/.cache/sparketl`` resets it.
 
 The archive's life:
 
@@ -93,9 +98,11 @@ def _java_home() -> str | None:
     return os.path.dirname(os.path.dirname(os.path.realpath(java))) if java else None
 
 
-def _key(java_home: str, spark_home: str) -> str:
-    """The archive's name: the JDK and every Spark jar, by stat."""
+def _key(java_home: str, spark_home: str, conf: str) -> str:
+    """The archive's name: the JDK, the Spark install and every jar in
+    it by stat, and ``conf``, the head of the launch class path."""
     h = hashlib.sha256(os.path.realpath(java_home).encode())
+    h.update(f"\0{os.path.realpath(spark_home)}\0{conf}".encode())
     with contextlib.suppress(FileNotFoundError):
         with open(os.path.join(java_home, "release")) as f:
             h.update(f.read().encode())  # JAVA_RUNTIME_VERSION and friends
@@ -216,7 +223,7 @@ def _plan() -> tuple[list[str], str, str, bool] | None:
     conf = os.path.join(cache, "conf")
     os.makedirs(cds, exist_ok=True)
     os.makedirs(conf, exist_ok=True)
-    stem = os.path.join(cds, _key(java_home, spark_home))
+    stem = os.path.join(cds, _key(java_home, spark_home, conf))
 
     def log(path: str) -> list[str]:
         return [f"-Xlog:cds*=warning:file={path}::filecount=0", "-Xlog:cds*=off:stdout"]

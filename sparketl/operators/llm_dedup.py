@@ -627,8 +627,7 @@ def llm_dedup_ngram_dfcap(spark, sf_dir):
     # 3x recompute landmine (SURVEY.md §8 #4), so keep it.  Pinned via
     # _pin(): a session keeps at most _PIN_KEEP live cache entries, so
     # repeated invocations in a long-lived session (pytest, a notebook)
-    # cannot leak blocks even if the caller never clearCache()s —
-    # bench.py's per-query clearCache remains a belt on top.  At 100 TB
+    # cannot leak blocks even if the caller never clearCache()s.  At 100 TB
     # the capped postings are the smallest corpus-scale intermediate in
     # this query; MEMORY_AND_DISK spills rather than OOMs if a cluster
     # can't hold them.

@@ -7,6 +7,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import subprocess
 import sys
 import textwrap
@@ -166,6 +167,14 @@ def _cds_dir(cache: str) -> str:
     return os.path.join(cache, "sparketl", "cds")
 
 
+def _stem(cache: str) -> str:
+    """The key's path stem that a start on the cache ``cache`` uses."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    conf = os.path.join(cache, "sparketl", "conf")
+    return os.path.join(_cds_dir(cache), cds._key(cds._java_home(), _find_spark_home(), conf))
+
+
 def _wait_for_recorder(cache: str) -> None:
     """Wait until the JVM named by the recording lock has exited (it
     writes the archive at exit, after its Python process is gone)."""
@@ -210,6 +219,11 @@ def test_cds_one_recorder_per_key(tmp_path, monkeypatch):
     options, conf, _, records = cds._plan()
     assert not records and f"-XX:SharedArchiveFile={stem}.jsa" in options
     assert os.listdir(conf) == []
+    # another cache launches with another conf dir heading the class path,
+    # where this key's archive would not map: it gets a key of its own
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "moved"))
+    _, _, other, _ = cds._plan()
+    assert os.path.basename(other) != os.path.basename(stem)
 
 
 def _gateway_exited():
@@ -288,12 +302,26 @@ def test_cds_archive_recorded_then_used(cds_cache):
     assert os.path.getsize(record_log) > 0
 
 
+def test_cds_copied_cache_records_its_own_archive(cds_cache, tmp_path):
+    """A copy of the cache under another ``XDG_CACHE_HOME`` launches with
+    another conf directory on the class path, where the copied archive
+    would not map: the start records an archive under its own key."""
+    cache, _, _ = cds_cache
+    moved = str(tmp_path / "moved")
+    shutil.copytree(os.path.join(cache, "sparketl"), os.path.join(moved, "sparketl"))
+    out = _cds_child(moved)
+    assert out["SUM"] == "45"
+    (arg,) = json.loads(out["ARGS"])
+    assert arg.startswith(f"-XX:ArchiveClassesAtExit={_stem(moved)}."), arg
+    _wait_for_recorder(moved)
+
+
 def test_cds_truncated_part_is_not_promoted(cds_cache, tmp_path):
     """A recorder that died mid-dump left a truncated archive: mapping
     it would abort the JVM, so the next start deletes it and starts."""
     good_cache, _, used = cds_cache
     (good,) = glob.glob(os.path.join(_cds_dir(good_cache), "*.jsa"))
-    stem = os.path.join(_cds_dir(str(tmp_path)), os.path.basename(good)[: -len(".jsa")])
+    stem = _stem(str(tmp_path))
     os.makedirs(os.path.dirname(stem))
     pid = _dead_pid()
     with open(good, "rb") as src, open(f"{stem}.{pid}.part", "wb") as dst:
