@@ -2444,10 +2444,12 @@ def _rewrite_match_recognize(masked: str, lits: list[str]) -> str:
     The __mr_* helper columns are stripped from the row star
     (``* except``), so ``select *`` sees Trino's schema.
 
-    REQUIREMENT the rewrite cannot check: the DEFINE predicates must
-    be mutually exclusive per row (symbol classification is
-    positional in full MATCH_RECOGNIZE; overlapping defines would
-    need a sequential matcher).  Everything else non-conforming —
+    REQUIREMENT checked at run time, not at translation: the DEFINE
+    predicates must be mutually exclusive per row (symbol
+    classification is positional in full MATCH_RECOGNIZE; overlapping
+    defines would need a sequential matcher), so a row satisfying
+    more than one raises (see _mr_sym_case).  Everything else
+    non-conforming —
     subquery base, repeated variables (A B* A would silently empty,
     so it refuses), duplicate DEFINEs, expression PARTITION BY keys,
     other patterns (A+, anchors, nested groups; PERMUTE translates
@@ -3015,8 +3017,8 @@ def _rewrite_mr_permute(
     defs: str,
     all_rows: bool,
     skip_next: bool,
-    skip_past: bool = False,
-    lits: list[str] | None = None,
+    skip_past: bool,
+    lits: list[str],
 ) -> str:
     """PATTERN (PERMUTE(V1, ..., Vk)) under AFTER MATCH SKIP TO NEXT
     ROW, ONE ROW PER MATCH (see the caller's branch comment for the
@@ -3110,7 +3112,7 @@ def _rewrite_mr_permute(
     if not measures:
         return masked
 
-    sym_case = _mr_sym_case(preds, vs, lits if lits is not None else [])
+    sym_case = _mr_sym_case(preds, vs, lits)
     w = f"over (partition by {part} order by {order})"
     lead_cols = ["__mr_sym as __mr_s0"] + [
         f"lead(__mr_sym, {i}) {w} as __mr_s{i}" for i in range(1, k)
@@ -3140,52 +3142,31 @@ def _rewrite_mr_permute(
     return masked[: m.start()] + "from " + repl + masked[cp + 1 :]
 
 
-#: Opt-in runtime assertion for the MATCH_RECOGNIZE rewrites' one
-#: uncheckable precondition (ADVICE r11): the windowed formulations
-#: assume MUTUALLY-EXCLUSIVE defines — a row satisfying two predicates
-#: silently pins to the first CASE branch where Trino's engine could
-#: map it to either variable (PERMUTE widens the exposure: its
-#: forced-mapping argument rests entirely on exclusivity).  With the
-#: flag on, the symbol classifier adds a leading branch that
-#: raise_error()s on any row satisfying more than one DEFINE, so
-#: overlapping defines fail LOUDLY on the data instead of mis-matching.
-#: The branch lives inside the __mr_sym CASE itself — a column every
-#: downstream step reads — so Catalyst cannot projection-prune the
-#: guard (the r11 measure-borne-guard lesson).  Off by default: the
-#: extra per-row predicate evaluations are pure overhead once a
-#: pipeline's defines are known-exclusive.
-MR_ASSERT_DEFINES = False
-
-
-def set_mr_define_assertions(enabled: bool) -> None:
-    """Toggle the overlapping-DEFINE runtime assertion (module-wide)."""
-    global MR_ASSERT_DEFINES
-    MR_ASSERT_DEFINES = bool(enabled)
-
-
 def _mr_sym_case(preds: dict[str, str], order: list[str], lits: list[str]) -> str:
     """The __mr_sym classifier CASE: first satisfied DEFINE wins, '.'
     sentinel otherwise (variables are \\w+, so '.' cannot collide).
-    Under MR_ASSERT_DEFINES a leading branch raises when a row
-    satisfies >1 define (NULL predicates count as unsatisfied — the
-    1/0 CASE sum is null-safe where a cast sum would go NULL).  The
-    message goes through _inject_lit — a raw quoted literal in masked
-    text would break every later quote-blind scanner (the ADVICE r10
-    invariant)."""
+
+    The windowed rewrites assume MUTUALLY-EXCLUSIVE defines: a row
+    satisfying two predicates would silently pin to the first branch
+    where Trino's engine could map it to either variable (PERMUTE's
+    forced-mapping argument rests entirely on exclusivity).  So a
+    leading branch raises when a row satisfies >1 define (NULL
+    predicates count as unsatisfied — the 1/0 CASE sum is null-safe
+    where a cast sum would go NULL).  The guard lives inside the
+    __mr_sym CASE itself — a column every downstream step reads — so
+    Catalyst cannot projection-prune it.  The message goes through
+    _inject_lit — a raw quoted literal in masked text would break
+    every later quote-blind scanner."""
+    tally = " + ".join(
+        f"(case when ({preds[v]}) then 1 else 0 end)" for v in order
+    )
+    msg = _inject_lit(
+        lits,
+        "row pattern: a row satisfies more than one DEFINE — "
+        "the windowed rewrite requires mutually-exclusive defines",
+    )
     body = "".join(f" when ({preds[v]}) then '{v}'" for v in order)
-    guard = ""
-    if MR_ASSERT_DEFINES:
-        tally = " + ".join(
-            f"(case when ({preds[v]}) then 1 else 0 end)" for v in order
-        )
-        msg = _inject_lit(
-            lits,
-            "match_recognize: a row satisfies more than one DEFINE — "
-            "the windowed rewrite requires mutually-exclusive defines "
-            "(see dialect.set_mr_define_assertions)",
-        )
-        guard = f" when ({tally}) > 1 then raise_error({msg})"
-    return f"case{guard}{body} else '.' end"
+    return f"case when ({tally}) > 1 then raise_error({msg}){body} else '.' end"
 
 
 def _shape(n: int, fmt: str):

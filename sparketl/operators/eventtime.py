@@ -126,8 +126,8 @@ def stream_session_window(spark, sf_dir):
     start/count set) and is what the streaming runner uses; the island
     form is used here because session_window emits no ordinal id.
     Hot-key note: a user owning millions of events serializes this
-    plan's per-user sort into one task — :func:`sessionize_chunked`
-    is the measured two-phase mitigation (SCALING.md 'window skew')."""
+    plan's per-user sort into one task; no query runs a chunked
+    two-phase plan (SCALING.md 'window skew' measured one)."""
     from pyspark.sql import Window
 
     ev = table(spark, sf_dir, "events")
@@ -474,106 +474,6 @@ def stream_stream_join(spark, sf_dir):
             ).alias("lag_us"),
         )
     )
-
-
-def sessionize_plain(ev, gap_min: int = 30):
-    """Reference gaps-and-islands sessionization (the
-    stream_session_window plan) over (user_id, ts): one window
-    partition per user.  Returns (user_id, session_start, session_end,
-    n_events) — ids omitted so the chunked variant below is
-    set-comparable."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts")
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap = F.expr(f"interval {gap_min} minute")
-    flagged = ev.select("user_id", "ts").withColumn(
-        "new_session",
-        F.when(
-            (F.col("ts") - F.lag("ts").over(w) > gap)
-            | F.lag("ts").over(w).isNull(),
-            1,
-        ).otherwise(0),
-    )
-    return (
-        flagged.withColumn("sid", F.sum("new_session").over(wrun))
-        .groupBy("user_id", "sid")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count("*").alias("n_events"),
-        )
-        .drop("sid")
-    )
-
-
-def sessionize_chunked(ev, gap_min: int = 30, chunk: str = "day"):
-    """Two-phase sessionization — the WINDOW-skew mitigation.
-
-    Join skew has AQE; window skew has nothing: `partitionBy(user)`
-    puts a hot key's entire timeline into ONE sort task, and no
-    runtime re-plan can split a window partition.  (Measured on the
-    skew corpus — one user owning 2.6M of 10M events — the plain
-    plan's hot task dominates its stage; see SCALING.md 'window
-    skew'.)  The classic fix is chunked prefix-scan:
-
-    1. sessionize within (user, date_trunc(chunk, ts)) — the hot
-       key's work splits across its chunks, every window partition
-       is bounded by one chunk's rows;
-    2. merge chunk-boundary sessions with gaps-and-islands over the
-       per-chunk SESSION rows (a session continues across midnight
-       iff next.start - prev.end <= gap; chains merge transitively
-       via the same cumsum trick) — this second window also
-       partitions by user, but its input is sessions, not events.
-
-    Exactly equal to :func:`sessionize_plain` by construction (a
-    split-at-boundary session is glued back iff the boundary gap is
-    within ``gap_min`` — the same predicate the plain plan applies
-    between consecutive events; tests/test_window_skew.py asserts
-    set-equality on the hot-key corpus).  Honest limit: the merge
-    layer's rows per key = that key's session count, so chunking
-    helps when sessions << events per hot key (bots/service accounts
-    — continuous activity, few sessions), and degenerates when every
-    event is its own session."""
-    from pyspark.sql import Window
-
-    gap = F.expr(f"interval {gap_min} minute")
-    w = Window.partitionBy("user_id", "chunk").orderBy("ts")
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    flagged = ev.select(
-        "user_id", "ts", F.date_trunc(chunk, "ts").alias("chunk")
-    ).withColumn(
-        "new_session",
-        F.when(
-            (F.col("ts") - F.lag("ts").over(w) > gap)
-            | F.lag("ts").over(w).isNull(),
-            1,
-        ).otherwise(0),
-    )
-    chunk_sessions = (
-        flagged.withColumn("sid", F.sum("new_session").over(wrun))
-        .groupBy("user_id", "chunk", "sid")
-        .agg(
-            F.min("ts").alias("s"),
-            F.max("ts").alias("e"),
-            F.count("*").alias("n"),
-        )
-    )
-    wm = Window.partitionBy("user_id").orderBy("s")
-    wmrun = wm.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    merged = chunk_sessions.withColumn(
-        "new_chain",
-        F.when(
-            (F.col("s") - F.lag("e").over(wm) > gap)
-            | F.lag("e").over(wm).isNull(),
-            1,
-        ).otherwise(0),
-    ).withColumn("chain", F.sum("new_chain").over(wmrun))
-    return merged.groupBy("user_id", "chain").agg(
-        F.min("s").alias("session_start"),
-        F.max("e").alias("session_end"),
-        F.sum("n").alias("n_events"),
-    ).drop("chain")
 
 
 @query(

@@ -82,10 +82,8 @@ from sparketl.operators.llm_ann import (  # noqa: F401
     _hyperplanes,
     _ivf_cos_topk,
     _multiprobe_oracle_sql,
-    _np_assign,
     _register_similarity_eval_and_quantize,
     _semdedup_drops,
-    ivf_search_frame,
     kmeans_train,
     llm_embed_cosine_neardup,
     llm_ivf_centroids,
@@ -98,7 +96,6 @@ from sparketl.operators.llm_ann import (  # noqa: F401
     llm_similarity_ann_lsh,
     llm_similarity_ann_multiprobe,
     llm_similarity_topk,
-    semantic_dedup_frame,
 )
 from sparketl.operators.llm_text import (  # noqa: F401
     _LANG_MARKERS,

@@ -51,61 +51,6 @@ def _assign_expr(cens_lit: str) -> str:
     )
 
 
-def _np_assign(df, cens, out_col: str = "cluster"):
-    """Vectorized nearest-centroid assignment (round 8, measured by
-    scripts/k_sweep.py): ``df`` must carry (vec_id, embedding); emits
-    (vec_id, embedding, norm2, <out_col>).
-
-    Why it exists: ``_assign_expr`` is a HOF over the literal codebook
-    — CodegenFallback, interpreted at ~k x 64 element-ops per row —
-    which is fine at the fixture's k=10 but DOMINATES at production
-    k ~ sqrt(n) (measured: k=141 at x10 put llm_ivf_search at 7.4 s
-    vs 1.2 s at k=10, and one Lloyd iteration at ~7 s).  This kernel
-    computes the identical assignment as a blocked numpy product.
-
-    Bit-exactness discipline (the _ivf_cos_topk contract):
-
-    * norm2 is the dim-ascending fold acc = acc + x_i * x_i with
-      float32 -> float64 conversion per element — the same IEEE
-      sequence _NORM2_S evaluates;
-    * squared-L2 to each centroid is the dim-ascending fold
-      acc = acc + (x_i - c_i)^2, identical to _L2_S;
-    * argmin ties break to the SMALLEST label: the centroid matrix is
-      laid out in ascending-label order and np.argmin returns the
-      first minimum — exactly _assign_expr's array_sort((d, l))[0].l.
-
-    scripts/k_sweep.py cross-validates the two paths: at k=10 the HOF
-    and numpy assignments produce checksum-identical frames.
-
-    Scale: one Arrow batch in, one out — a narrow map with no shuffle,
-    ~n*k*d fused multiply-adds in BLAS-speed numpy; the codebook rides
-    into the closure (k x 64 doubles, metadata-sized)."""
-    import numpy as np
-
-    labels = np.array([l for l, _ in sorted(cens)], dtype=np.int64)
-    cmat = np.array([v for _, v in sorted(cens)], dtype=np.float64)
-
-    def assign(batches):
-        for pdf in batches:
-            e = np.stack(pdf["embedding"].values).astype(np.float64)
-            n2 = np.zeros(len(e))
-            dist = np.zeros((len(e), len(cmat)))
-            for i in range(e.shape[1]):
-                col = e[:, i]
-                n2 = n2 + col * col
-                diff = col[:, None] - cmat[None, :, i]
-                dist = dist + diff * diff
-            out = pdf[["vec_id", "embedding"]].copy()
-            out["norm2"] = n2
-            out[out_col] = labels[np.argmin(dist, axis=1)]
-            yield out
-
-    return df.mapInPandas(
-        assign,
-        f"vec_id long, embedding array<float>, norm2 double, {out_col} int",
-    )
-
-
 @query(
     "llm_embed_cosine_neardup",
     oracle=f"""
@@ -244,15 +189,15 @@ def _topk_build(spark, sf_dir):
 # random-hyperplane LSH: 8 deterministic Rademacher (+1/-1) hyperplanes
 # derived from md5 — reproducible without RNG state, same trick as the
 # minhash seed family.
-def _hyperplanes(n_planes: int = 8, dim: int = 64) -> list[list[float]]:
+def _hyperplanes() -> list[list[float]]:
     import hashlib
 
     return [
         [
             1.0 if hashlib.md5(f"{p},{d}".encode()).digest()[0] & 1 else -1.0
-            for d in range(dim)
+            for d in range(64)
         ]
-        for p in range(n_planes)
+        for p in range(8)
     ]
 
 
@@ -317,15 +262,15 @@ def llm_similarity_ann_lsh(spark, sf_dir):
     )
 
 
-def _ann_lsh_build(spark, sf_dir):
-    from pyspark.sql import Window
-
+def _lsh_buckets(spark, sf_dir):
+    """(vec_id, embedding, norm2, bucket) for every embedding: the
+    8-bit bucket is the sign pattern of its dots with the 8
+    hyperplanes — shared by the single- and multi-probe LSH queries."""
     emb = table(spark, sf_dir, "embeddings")
-    planes = _hyperplanes()
     plane_lit = F.array(
-        *[F.array(*[F.lit(v) for v in p]) for p in planes]
+        *[F.array(*[F.lit(v) for v in p]) for p in _hyperplanes()]
     )
-    e = (
+    return (
         emb.select(
             "vec_id",
             "embedding",
@@ -342,6 +287,12 @@ def _ann_lsh_build(spark, sf_dir):
         )
         .drop("planes")
     )
+
+
+def _ann_lsh_build(spark, sf_dir):
+    from pyspark.sql import Window
+
+    e = _lsh_buckets(spark, sf_dir)
     q = e.where(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -697,17 +648,10 @@ def llm_ivf_search(spark, sf_dir):
     the corpus.  Search: equi-join on assigned cluster ~ n^2/k scored
     pairs instead of n^2; nprobe>1 (probing the next-nearest clusters
     too) generalizes by keeping rn <= nprobe assignments for the QUERY
-    side only.  k ~ sqrt(n) measured round 8 via scripts/k_sweep.py +
-    ivf_search_frame (SCALING.md 'k ~ sqrt(n)' table).
+    side only.  The argmin is an interpreted lambda, ~k x 64
+    element-ops per row: fine at the fixture's k=10, the dominant cost
+    at k ~ sqrt(n) (SCALING.md 'k ~ sqrt(n)' table).
     """
-    return ivf_search_frame(spark, sf_dir, _centroids(spark, sf_dir))
-
-
-def ivf_search_frame(spark, sf_dir, cens, np_assign: bool = False):
-    """Codebook-parameterized IVF search core (see llm_ivf_search;
-    scripts/k_sweep.py binds kmeans_train codebooks).  ``np_assign``
-    swaps the HOF argmin for :func:`_np_assign` — checksum-identical,
-    the scale path at production k ~ sqrt(n)."""
     from pyspark.sql import Window
 
     # _maybe_parallel: see the helper for the stress-run rationale.
@@ -718,18 +662,13 @@ def ivf_search_frame(spark, sf_dir, cens, np_assign: bool = False):
     # `assigned` feeds BOTH sides of the cluster self-join below, the
     # literal also halves the old per-side centroid-subtree recompute
     # — the exact plan the 100-TB claim requires.
-    if np_assign:
-        assigned = _np_assign(
-            emb.select("vec_id", "embedding"), cens, out_col="c_label"
-        )
-    else:
-        cens_lit = _cens_expr(cens)
-        assigned = emb.select(
-            "vec_id",
-            "embedding",
-            F.expr(_NORM2_S.format(a="embedding")).alias("norm2"),
-            F.expr(_assign_expr(cens_lit)).alias("c_label"),
-        )
+    cens_lit = _cens_expr(_centroids(spark, sf_dir))
+    assigned = emb.select(
+        "vec_id",
+        "embedding",
+        F.expr(_NORM2_S.format(a="embedding")).alias("norm2"),
+        F.expr(_assign_expr(cens_lit)).alias("c_label"),
+    )
     q = assigned.where(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -1284,40 +1223,12 @@ def llm_similarity_ann_multiprobe(spark, sf_dir):
     The 8-plane bucketing is the fixture-scale operating point; the
     production knob is planes ~ log2(n / target-occupancy), keeping
     bucket occupancy (and so per-query candidate volume) constant as
-    the corpus grows — measured by scripts/k_sweep.py's planes sweep
-    via :func:`multiprobe_frame` (SCALING.md 'planes ~ log n' row:
-    the x1->x10 wall ratio flattens 8.4 -> 3.5 at occupancy-
-    preserving plane counts — the residual is the query side's
-    (planes+1)-way probe fan-out, which grows with log n by design)."""
-    return multiprobe_frame(spark, sf_dir)
-
-
-def multiprobe_frame(spark, sf_dir, n_planes: int = 8):
-    """Plane-count-parameterized multiprobe core (the declared query
-    binds the fixture's 8 planes; scripts/k_sweep.py binds
-    occupancy-preserving log2(n/8) planes — identical plan)."""
+    the corpus grows (SCALING.md 'planes ~ log n' row: the x1->x10
+    wall ratio flattened 8.4 -> 3.5 at occupancy-preserving plane
+    counts)."""
     from pyspark.sql import Window
 
-    emb = table(spark, sf_dir, "embeddings")
-    planes = _hyperplanes(n_planes)
-    plane_lit = F.array(*[F.array(*[F.lit(v) for v in p]) for p in planes])
-    e = (
-        emb.select(
-            "vec_id",
-            "embedding",
-            F.expr(_NORM2_S.format(a="embedding")).alias("norm2"),
-            plane_lit.alias("planes"),
-        )
-        .withColumn(
-            "bucket",
-            F.expr(
-                f"aggregate(transform(sequence(0, {n_planes - 1}), p -> if("
-                + _DOT_S.format(a="element_at(planes, p + 1)", b="embedding")
-                + " > 0, shiftleft(1, p), 0)), 0, (s, x) -> s + x)"
-            ),
-        )
-        .drop("planes")
-    )
+    e = _lsh_buckets(spark, sf_dir)
     q = (
         e.where(F.col("vec_id") % 25 == 0)
         .select(
@@ -1328,7 +1239,7 @@ def multiprobe_frame(spark, sf_dir, n_planes: int = 8):
             F.explode(
                 F.expr(
                     "array(bucket, "
-                    + ", ".join(f"bucket ^ {1 << b}" for b in range(n_planes))
+                    + ", ".join(f"bucket ^ {1 << b}" for b in range(8))
                     + ")"
                 )
             ).alias("probe_bucket"),
@@ -1508,21 +1419,9 @@ def llm_semantic_dedup(spark, sf_dir):
     corpus (the codebook stays metadata-sized).  Assignment is a
     narrow map over the constant codebook; norms are computed once per
     vector (n, not n^2, folds); the drop aggregation is a map-side-
-    combinable min per duplicate.  At 100 TB the same plan runs with
-    IVF-trained centroids instead of label seeds — measured round 8:
-    scripts/k_sweep.py trains k ~ sqrt(n) codebooks via
-    kmeans_train(k=...) and re-runs THIS plan (semantic_dedup_frame)
-    at x10; see SCALING.md 'k ~ sqrt(n)' table for the block-cost
-    flattening vs the fixture-fixed k=10 codebook."""
-    return semantic_dedup_frame(spark, sf_dir, _centroids(spark, sf_dir))
-
-
-def semantic_dedup_frame(spark, sf_dir, cens, np_assign: bool = False):
-    """Codebook-parameterized SemDeDup core (the declared query binds
-    the per-label codebook; scripts/k_sweep.py binds kmeans_train
-    codebooks with k ~ sqrt(n) — identical plan either way).
-    ``np_assign`` swaps the HOF argmin for the :func:`_np_assign`
-    kernel — checksum-identical output, the scale path at large k."""
+    combinable min per duplicate.  The codebook is the per-label
+    one; a k ~ sqrt(n) codebook flattens the block cost but makes the
+    interpreted argmin dominate (SCALING.md 'k ~ sqrt(n)' table)."""
     # lo=0: downstream is the per-PAIR kernel — quadratic in the
     # partition's row count — so even the smallest fixture pays for
     # spreading (measured 2.3-3.5 s on the 1-2 partition scan vs
@@ -1534,18 +1433,15 @@ def semantic_dedup_frame(spark, sf_dir, cens, np_assign: bool = False):
     # the k x 64-literal argmin is the expensive narrow map (SCALING.md
     # IVF finding: ~1 ms/row), so pin it once instead of recomputing
     # the subtree per consumer (measured 3.3-3.5 s -> ~1 s at sf0.1).
-    if np_assign:
-        assigned = _pin(_np_assign(emb.select("vec_id", "embedding"), cens))
-    else:
-        cens_lit = _cens_expr(cens)
-        assigned = _pin(
-            emb.select(
-                "vec_id",
-                "embedding",
-                F.expr(_NORM2_S.format(a="embedding")).alias("norm2"),
-                F.expr(_assign_expr(cens_lit)).alias("cluster"),
-            )
+    cens_lit = _cens_expr(_centroids(spark, sf_dir))
+    assigned = _pin(
+        emb.select(
+            "vec_id",
+            "embedding",
+            F.expr(_NORM2_S.format(a="embedding")).alias("norm2"),
+            F.expr(_assign_expr(cens_lit)).alias("cluster"),
         )
+    )
     dropped = _semdedup_drops(assigned)
     # the drop list is duplicate-count-sized (hundreds of rows here;
     # at corpus scale it is the semantic-dup fraction, typically a few
@@ -1637,9 +1533,7 @@ def _semdedup_drops(assigned):
     )
 
 
-def kmeans_train(
-    spark, sf_dir, iters: int = 5, k: int | None = None, np_assign: bool = False
-):
+def kmeans_train(spark, sf_dir, iters: int = 5):
     """Drive Lloyd's algorithm to (at most) ``iters`` iterations —
     the multi-step consumer of the llm_kmeans_iterate plan, showing
     the iterative-algorithm pattern end-to-end: each iteration runs
@@ -1658,43 +1552,16 @@ def kmeans_train(
     the memoized list, and a caller mutating it (editing a
     centroid before re-inlining) would silently corrupt the session
     codebook every IVF/PQ declared query inlines from (round-7
-    review).
-
-    ``k`` (round 8): when given, seed with the first ``k`` corpus
-    vectors by vec_id (deterministic, rounded at 6 like every
-    codebook) instead of the per-label centroids — the production
-    path where k grows ~ sqrt(n) with the corpus while the codebook
-    stays metadata-sized (k x 64 doubles through the driver per
-    iteration).  Lloyd may empty a cluster; the codebook then simply
-    shrinks, which every argmin consumer handles."""
+    review).  Seeds are the per-label centroids; Lloyd may empty a
+    cluster, and the codebook then simply shrinks, which every argmin
+    consumer handles."""
     emb = _maybe_parallel(table(spark, sf_dir, "embeddings"), sf_dir)
-    if k is None:
-        cens = [(lbl, list(vec)) for lbl, vec in _centroids(spark, sf_dir)]
-    else:
-        seed = (
-            table(spark, sf_dir, "embeddings")
-            .orderBy("vec_id")
-            .limit(k)
-            .select("embedding")
-            .collect()
-        )
-        cens = [
-            (i, [round(float(x), 6) for x in r.embedding])
-            for i, r in enumerate(seed)
-        ]
+    cens = [(lbl, list(vec)) for lbl, vec in _centroids(spark, sf_dir)]
     for it in range(1, iters + 1):
-        if np_assign:
-            # the scale path at k ~ sqrt(n): HOF argmin interprets
-            # k x 64 element-ops per row per iteration (measured 21 s
-            # for 3 iterations at k=141/x10; numpy kernel: ~1 s)
-            assigned = _np_assign(
-                emb.select("vec_id", "embedding"), cens
-            ).select("embedding", "cluster")
-        else:
-            assigned = emb.select(
-                "embedding",
-                F.expr(_assign_expr(_cens_expr(cens))).alias("cluster"),
-            )
+        assigned = emb.select(
+            "embedding",
+            F.expr(_assign_expr(_cens_expr(cens))).alias("cluster"),
+        )
         new = (
             assigned.select(
                 "cluster", F.posexplode("embedding").alias("i0", "v")

@@ -130,37 +130,13 @@ def llm_dedup_minhash_lsh(spark, sf_dir):
     standard web-scale near-dedup plan (one shuffle to bucket, one to
     dedup pairs).  Signature computation is a single narrow map (no
     explode of shingles), so 100 TB of documents stream through
-    without intermediate blow-up.  Skewed buckets (boilerplate docs):
-    MEASURED on a 10%-one-template corpus (scripts/band_skew_stress.py,
-    SCALING.md r11 table) — AQE skew-join gives partial relief only
-    (input-byte detection cannot see output-side pair explosion), so
-    the operator exposes ``band_salt=G`` (minhash_lsh_pairs), which
-    splits each bucket's pair generation G ways deterministically:
-    max task write 27.0 → 9.5 MB and max task 3.8 → 1.5 s at G=8 on
-    the stress corpus, identical pairs.
+    without intermediate blow-up.  Skewed buckets (boilerplate docs)
+    put a hot bucket's all-pairs work on one task, and AQE's skew-join
+    relieves that only partly: it detects skew by INPUT bytes, while a
+    boilerplate bucket is ~10% of input rows yet ~99.9% of output
+    pairs (SCALING.md r11 band-skew table).
     """
     docs = table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs)
-
-
-def minhash_lsh_pairs(docs, confirm: bool = True, band_salt: int | None = None):
-    """The llm_dedup_minhash_lsh plan over any documents frame
-    (doc_id, text) — shared with scripts/band_skew_stress.py so the
-    band-skew stress measures EXACTLY the declared plan, not a copy.
-    ``confirm=False`` stops at the deduped candidate pairs (the band
-    self-join — the stage the skew stress isolates).
-
-    ``band_salt=G`` splits each band bucket's PAIR GENERATION G ways:
-    side A is tagged ``doc_id % G`` and side B replicated G times, so
-    the join key becomes (band_key, salt) and a hot bucket's all-pairs
-    workload lands on G tasks instead of one.  This is the mitigation
-    for OUTPUT-side (pair-explosion) skew, which AQE's skew-join can
-    only partially reach — AQE detects skew by a partition's INPUT
-    bytes and splits at mapper-block granularity, while a boilerplate
-    bucket is ~10% of input rows yet ~99.9% of output pairs (measured:
-    scripts/band_skew_stress.py; SCALING.md table).  Cost: G-fold
-    replication of the 16-byte band rows on one side — at 100 TB that
-    is G x keys, never G x corpus."""
     d = _parallel(docs.where(F.expr(f"size({_TOKS_S}) >= 2"))).select(
         "doc_id", F.expr(_SHINGLES_S).alias("sh")
     )
@@ -169,7 +145,7 @@ def minhash_lsh_pairs(docs, confirm: bool = True, band_salt: int | None = None):
     # (arrays are re-attached per unique pair afterwards) — at 100 TB
     # this is the difference between shuffling keys and shuffling the
     # corpus.
-    d = d.cache()  # reused 3x (bands, both jaccard sides); ~doc-count rows
+    d = _pin(d)  # reused 3x (bands, both jaccard sides); ~doc-count rows
     ex = d.select("doc_id", F.explode("sh").alias("s")).select(
         "doc_id",
         F.expr(_h_spark(repr("0"), "s")).alias("h1"),
@@ -194,41 +170,24 @@ def minhash_lsh_pairs(docs, confirm: bool = True, band_salt: int | None = None):
         )
         for b in range(_LSH_BANDS)
     ]
-    bands = (
+    # pinned: the pair generator self-joins this — without it the
+    # signature pipeline runs TWICE (once per join side)
+    bands = _pin(
         sig.select("doc_id", F.explode(F.array(*band_exprs)).alias("band_key"))
-        # cache: the pair generator self-joins this — without it the
-        # signature pipeline runs TWICE (once per join side)
-        .cache()
     )
-    if band_salt:
-        a_side = bands.withColumn(
-            "__bs", F.pmod(F.col("doc_id"), F.lit(band_salt))
-        )
-        b_side = bands.withColumn(
-            "__bs",
-            F.explode(F.array(*[F.lit(i) for i in range(band_salt)])),
-        )
-        join_cond = (
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.__bs") == F.col("b.__bs"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-        )
-    else:
-        a_side, b_side = bands, bands
-        join_cond = (F.col("a.band_key") == F.col("b.band_key")) & (
-            F.col("a.doc_id") < F.col("b.doc_id")
-        )
     cand = (
-        a_side.alias("a")
-        .join(b_side.alias("b"), join_cond)
+        bands.alias("a")
+        .join(
+            bands.alias("b"),
+            (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    if not confirm:
-        return cand
     x = d.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     y = d.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     jacc = F.round(

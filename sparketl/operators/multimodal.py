@@ -2,13 +2,12 @@
 
 Images/audio/video ride the pipeline as opaque ``BinaryType`` payloads
 with typed metadata; decode / feature-extract / resize / frame-sample
-run as Arrow-batched Pandas UDFs over ``mapInPandas``.  The actual
-codec step is STUBBED (no image/audio libraries in this container, per
-the brief): ``decode_image``/``decode_audio`` raise
-``NotImplementedError`` with the intended implementation documented,
-and the pipeline runs a deterministic fake extractor instead — so the
+run as Arrow-batched Pandas UDFs over ``mapInPandas``.  There is no
+codec step (no image/audio decoder is a dependency): the pipeline runs
+the deterministic :func:`fake_features` extractor in its place — so the
 Spark-side plumbing (schema, batching, partitioning, UDF signatures)
-is real and oracle-tested while the codec is swappable.
+is real and oracle-tested, and a real decoder would replace only that
+function (``PIL.Image.open`` / ``soundfile``), not the Spark plan.
 
 Scale: payload bytes never enter a shuffle — featurization is a narrow
 map directly over the scan, and only small typed features flow
@@ -30,22 +29,6 @@ from sparketl.tables import table
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes int, fake_width int, fake_height int, n_frames int"
 )
-
-
-def decode_image(payload: bytes) -> "object":
-    """Decode an image payload to HxWxC array.
-
-    STUB: would be ``PIL.Image.open(io.BytesIO(payload))`` /
-    ``cv2.imdecode`` — libraries not present in this container.  The
-    pipeline substitutes :func:`fake_features`; swapping the real
-    decoder in changes only this function, not the Spark plan.
-    """
-    raise NotImplementedError("image codecs unavailable in this container")
-
-
-def decode_audio(payload: bytes) -> "object":
-    """STUB, as :func:`decode_image` (``soundfile``/``torchaudio``)."""
-    raise NotImplementedError("audio codecs unavailable in this container")
 
 
 def fake_features(payload: bytes) -> tuple[int, int, int]:

@@ -8,9 +8,9 @@ the SparkSession and a dict of prior step results (DataFrames) and
 returns a DataFrame.  ``write`` terminals persist partitioned parquet.
 Laziness is preserved — composing steps only builds one Catalyst plan,
 so the optimizer sees THROUGH stage boundaries (filter pushdown across
-steps is free); only sinks and ``materialize=True`` force execution.
+steps is free); only sinks force execution.
 
-Scale: stages don't checkpoint by default (no gratuitous shuffle-file
+Scale: stages don't checkpoint (no gratuitous shuffle-file
 or disk barriers between transforms); a sink's ``partition_by``
 controls downstream pruning.
 """
@@ -29,7 +29,6 @@ StepFn = Callable[[SparkSession, dict[str, DataFrame]], DataFrame]
 class Step:
     name: str
     fn: StepFn
-    materialize: bool = False  # cache + count (barrier) — rarely wanted
 
 
 @dataclass
@@ -49,13 +48,13 @@ class Pipeline:
     steps: list[Step] = field(default_factory=list)
     sinks: list[Sink] = field(default_factory=list)
 
-    def step(self, name: str, *, materialize: bool = False):
+    def step(self, name: str):
         """Decorator: register a named transform step."""
 
         def deco(fn: StepFn) -> StepFn:
             if any(s.name == name for s in self.steps):
                 raise ValueError(f"duplicate step: {name}")
-            self.steps.append(Step(name, fn, materialize))
+            self.steps.append(Step(name, fn))
             return fn
 
         return deco
@@ -83,15 +82,11 @@ class Pipeline:
         self.sinks.append(Sink(step, path, partition_by, mode, fmt))
 
     def run(self, spark: SparkSession) -> dict[str, DataFrame]:
-        """Execute: build every step's DataFrame (lazy unless
-        materialized), then flush sinks.  Returns step results."""
+        """Execute: build every step's (lazy) DataFrame, then flush
+        sinks.  Returns step results."""
         ctx: dict[str, DataFrame] = {}
         for s in self.steps:
-            df = s.fn(spark, ctx)
-            if s.materialize:
-                df = df.cache()
-                df.count()
-            ctx[s.name] = df
+            ctx[s.name] = s.fn(spark, ctx)
         for sink in self.sinks:
             writer = ctx[sink.step].write.mode(sink.mode)
             if sink.partition_by:

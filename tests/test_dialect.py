@@ -2189,13 +2189,13 @@ def test_match_recognize_skip_to_var_translates():
             assert "raise_error" in out and "SKIP TO B failed" in out, mode
         else:
             assert out == base, mode  # C always present: no guard
-    # B+ cannot produce a B-less match: no guard, identical output
+    # B+ cannot produce a B-less match: no SKIP TO guard, identical output
     plus_base = translate(_MR_OK.replace("pattern (A B* C)",
                                          "pattern (A B+ C)"))
     out = translate(_MR_OK.replace(
         "pattern (A B* C)",
         "after match skip to first B pattern (A B+ C)"))
-    assert out == plus_base and "raise_error" not in out
+    assert out == plus_base and "SKIP TO B failed" not in out
 
 
 def test_exec_skip_to_var_error_and_results(spark):
@@ -2563,17 +2563,15 @@ def test_int_division_setop_scope_unifies(typed):
 
 
 def test_mr_define_assertion_mode_fires_on_overlap(spark):
-    """ADVICE r11: the opt-in MR_ASSERT_DEFINES mode raises at RUNTIME
-    when a row satisfies more than one DEFINE (the windowed rewrites'
-    uncheckable precondition), and is value-neutral on exclusive
-    defines.  The guard rides the __mr_sym CASE itself, so Catalyst
-    cannot projection-prune it."""
+    """MATCH_RECOGNIZE always checks the windowed rewrites' one
+    precondition: a row satisfying more than one DEFINE raises at
+    RUNTIME, while exclusive defines keep their matches.  The guard
+    rides the __mr_sym CASE itself, so Catalyst cannot projection-prune
+    it."""
     spark.createDataFrame(
         [(1, 1, 5), (1, 2, 10), (1, 3, 20)],
         "user_id long, pos long, amt long",
     ).createOrReplaceTempView("mr_assert_probe")
-    from sparketl import dialect as _d
-
     q = """
         select user_id, v_pos from mr_assert_probe match_recognize (
             partition by user_id order by pos asc
@@ -2583,21 +2581,13 @@ def test_mr_define_assertion_mode_fires_on_overlap(spark):
             define V as amt = 5, B as amt {b_op} 10, P as amt = 20
         )
     """
-    _d.set_mr_define_assertions(True)
-    try:
-        # exclusive defines: identical result to the unasserted run
-        ok = presto_sql(spark, q.format(b_op="=")).collect()
-        _d.set_mr_define_assertions(False)
-        base = presto_sql(spark, q.format(b_op="=")).collect()
-        assert sorted(map(tuple, ok)) == sorted(map(tuple, base)) == [(1, 1)]
-        _d.set_mr_define_assertions(True)
-        # B as amt <= 10 also matches the V row (amt=5): overlap
-        # (AQE may wrap the raise in STAGE_MATERIALIZATION failures —
-        # match on the message, not the exception class)
-        with pytest.raises(Exception, match="more than one DEFINE"):
-            presto_sql(spark, q.format(b_op="<=")).collect()
-    finally:
-        _d.set_mr_define_assertions(False)
+    got = presto_sql(spark, q.format(b_op="=")).collect()
+    assert sorted(map(tuple, got)) == [(1, 1)]
+    # B as amt <= 10 also matches the V row (amt=5): overlap
+    # (AQE may wrap the raise in STAGE_MATERIALIZATION failures —
+    # match on the message, not the exception class)
+    with pytest.raises(Exception, match="more than one DEFINE"):
+        presto_sql(spark, q.format(b_op="<=")).collect()
 
 
 def test_named_window_on_rewritten_shapes():

@@ -778,33 +778,3 @@ def test_quality_classifier_matches_python_model(spark, corpus_dir, docs):
         for r in llm_quality_classifier(spark, sf).collect()
     }
     assert got == model_quality_classifier(docs)
-
-
-def test_band_salt_preserves_candidate_pairs(spark):
-    """round 11 (VERDICT r10 #6): intra-bucket salting is a PHYSICAL
-    rewrite of the band self-join — same candidate pairs for any G,
-    including a boilerplate-heavy corpus (one template = 40% of docs
-    here, so hot buckets definitely exist)."""
-    from pyspark.sql import functions as F
-
-    from sparketl.operators.llm_dedup import minhash_lsh_pairs
-
-    template = "common boilerplate text repeated across many documents"
-    rows = [
-        (i, template + f" v{i}" if i < 20 else f"unique u{i} w{i * 7} q{i * 3} z{i}")
-        for i in range(50)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string").withColumn(
-        "n_chars", F.length("text")
-    )
-    base = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(docs, confirm=False).collect()
-    }
-    assert base, "vacuous: no candidate pairs generated"
-    for g in (2, 5):
-        salted = {
-            (r.doc_a, r.doc_b)
-            for r in minhash_lsh_pairs(docs, confirm=False, band_salt=g).collect()
-        }
-        assert salted == base, f"band_salt={g} changed the pair set"

@@ -21,7 +21,7 @@ from pyspark.errors import PySparkRuntimeError
 
 from sparketl import cds, session
 from sparketl.operators.llm_common import _PIN_KEEP, _pin
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_SMOKE_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -66,6 +66,20 @@ def test_pin_stays_bounded_under_threads(spark):
     finally:
         sys.setswitchinterval(old)
     assert len(session.memo(spark, "pins")) <= _PIN_KEEP
+
+
+def test_reset_unpersists_what_a_query_cached(spark):
+    from sparketl.operators.llm_dedup import llm_dedup_minhash_lsh
+
+    def persistent():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    session.reset(spark)
+    before = persistent()
+    assert llm_dedup_minhash_lsh(spark, SF_SMOKE_DIR).collect()
+    assert persistent() > before
+    session.reset(spark)
+    assert persistent() == before
 
 
 _RESTART = textwrap.dedent(
