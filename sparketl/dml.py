@@ -8,6 +8,18 @@ module parses that Trino statement-grammar subset and routes each
 statement to Spark DataFrame work whose every write goes through one
 on-disk format, the versioned parquet table of ``sparketl.manifest``.
 
+One ordered statement table at the end of this module decides which
+statement a text is: ``_FORMS``, then ``_REFUSALS``.  Each row is an
+anchored pattern over the masked text (comments stripped, literals
+pooled) whose named groups are its handler's keyword arguments.
+``execute`` matches once and calls that handler, ``is_dml`` accepts
+exactly the texts some row matches, and EXPLAIN ANALYZE takes its kind
+and target from the matched row.  A refused statement, or a known
+leader whose text fits none of its forms, matches a ``_REFUSALS`` row
+that raises its reason or its usage text.  Statement bodies keep their
+own parsers: MERGE's WHEN clauses, UPDATE's SET list, and CREATE
+TABLE's column definitions and WITH properties.
+
 Storage model
 =============
 DML targets are versioned parquet tables tracked in a per-session
@@ -43,7 +55,10 @@ through the engine's own DROP TABLE/VIEW paths.  ``CREATE VIEW s.v``
 creates a Spark CATALOG view; its body may reference only catalog
 objects — the flat namespace is session temp views, which a catalog
 view cannot capture — and its dependent tracking is lazy (a base drop
-breaks it at next read, Trino's own behavior).
+breaks it at next read, Trino's own behavior).  A flat (or
+``default.``) table or view may not take a fixture table's name
+(``tables.TABLE_NAMES``): ``load_tables`` points that flat view back at
+the fixture, and the next statement would publish the fixture's rows.
 
 ``CREATE [OR REPLACE] VIEW`` translates the body once and creates a
 Spark SQL view from it: a TEMPORARY view for a flat name, a catalog
@@ -113,9 +128,11 @@ from __future__ import annotations
 import os
 import re
 from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
 from sparketl import dialect as _d
 from sparketl import manifest as _m
@@ -183,10 +200,9 @@ def register_table(
     register/replace the same-named temp view over it): a table this
     engine wrote resumes from its manifest, a plain Spark-written
     directory becomes its version 1 in place."""
-    state(spark, "dml_tables")[name.lower()] = _Handle(
-        _m.adopt(spark, path, part_col)
-    )
-    _refresh(spark, name.lower())
+    name = _not_fixture(name.lower())
+    state(spark, "dml_tables")[name] = _Handle(_m.adopt(spark, path, part_col))
+    _refresh(spark, name)
 
 
 def table_path(spark: SparkSession, name: str) -> str:
@@ -221,17 +237,20 @@ def _resolve(spark: SparkSession, name: str) -> _Handle:
     return h
 
 
-def _unpin_if_fixture(spark: SparkSession, *names: str) -> None:
-    """A DML statement that registers/drops/renames a FLAT table or
-    view whose name collides with a fixture view is the only way the
-    fixture pins tracked by sparketl.tables can go stale — tell the
-    loader so its same-sf fast path (r16 floor fix) re-pins next call."""
+def _not_fixture(name: str) -> str:
+    """``name`` (canonical or lower-cased) for a table or view DML
+    creates or renames to: a flat or ``default.`` fixture table name
+    refuses, because ``tables.load_tables`` points that flat view back
+    at the fixture on its next call."""
     from sparketl.tables import TABLE_NAMES
 
-    for n in names:
-        if n and "." not in n and n.lower() in TABLE_NAMES:
-            state(spark, "view_pin").clear()
-            return
+    if name.removeprefix("default.") in TABLE_NAMES:
+        raise ValueError(
+            f"dml: '{name}' is a fixture table's name, and load_tables "
+            "points that flat view back at the fixture — use a "
+            f"schema-qualified name (CREATE SCHEMA s, then s.{name})"
+        )
+    return name
 
 
 def _refresh(spark: SparkSession, name: str) -> None:
@@ -242,7 +261,6 @@ def _refresh(spark: SparkSession, name: str) -> None:
     df = _m.read(spark, h.v)
     with CATALOG_LOCK:
         df.createOrReplaceTempView(name)
-    _unpin_if_fixture(spark, name)
 
 
 def _qparts(name: str) -> tuple[str, str]:
@@ -266,8 +284,6 @@ def _refresh_catalog_table(spark: SparkSession, name: str, h: _Handle) -> None:
     partition directory added with its own LOCATION — in-memory map
     updates, no filesystem listing.  The partition column is declared
     last (the catalog convention)."""
-    from pyspark.sql.types import StructType
-
     v = h.v
     part = v.part_col.lower() if v.part_col else None
     data_cols = [f for f in v.schema.fields if f.name.lower() != part]
@@ -303,20 +319,23 @@ def _refresh_catalog_table(spark: SparkSession, name: str, h: _Handle) -> None:
 # statement dispatch
 # ---------------------------------------------------------------------------
 
-_DML_LEAD = re.compile(
-    r"^\s*(insert|create|delete|update|merge|drop|truncate|alter|show"
-    r"|describe|desc|prepare|execute|deallocate|set|reset|use|analyze"
-    r"|comment|grant|revoke|call|start|commit|rollback"
-    r"|refresh\s+materialized)\b",
-    re.IGNORECASE,
-)
+def _statement(masked: str) -> "tuple[_Form, re.Match] | None":
+    """The first row of ``_FORMS`` + ``_REFUSALS`` the masked statement
+    matches (blanks and one trailing ';' cut), with its match."""
+    masked = masked.strip()
+    if masked.endswith(";"):
+        masked = masked[:-1].rstrip()
+    for form in _FORMS + _REFUSALS:
+        m = form.rx.match(masked)
+        if m:
+            return form, m
+    return None
 
 
 def is_dml(stmt: str) -> bool:
     """True when the statement leads with a DML/DDL keyword (after
     comment stripping) — `dialect.sql()` routes those here."""
-    masked, _ = _mask(stmt)
-    return _DML_LEAD.match(masked) is not None
+    return _statement(_mask(stmt)[0]) is not None
 
 
 def run_script(spark: SparkSession, script: str) -> DataFrame:
@@ -347,69 +366,17 @@ def execute(spark: SparkSession, stmt: str) -> DataFrame:
     ``(rows bigint)`` with the affected-row count (Trino's DML result
     shape)."""
     masked, lits = _mask(stmt)
-    masked = masked.strip()
-    if masked.endswith(";"):
-        masked = masked[:-1].rstrip()
-    kw = masked.split(None, 1)[0].lower() if masked else ""
-    handler = {
-        "insert": _insert,
-        "create": _create,
-        "delete": _delete,
-        "update": _update,
-        "merge": _merge,
-        "drop": _drop,
-        "truncate": _truncate,
-        "alter": _alter,
-        "show": _show,
-        "describe": _describe,
-        "desc": _describe,
-        "prepare": _prepare,
-        "execute": _execute,
-        "deallocate": _deallocate,
-        "use": _use,
-    }.get(kw)
-    if handler is None and kw in _SESSION_STMT_REFUSALS:
-        raise ValueError(_SESSION_STMT_REFUSALS[kw])
-    if handler is None:
+    hit = _statement(masked)
+    if hit is None:
+        kw = masked.split(None, 1)[0].lower() if masked.strip() else ""
         raise ValueError(
             f"dml: unsupported statement leader '{kw}' — supported: "
-            "INSERT INTO, CREATE TABLE [IF NOT EXISTS] (col type, ...) "
-            "| ... AS <query>, CREATE "
-            "[OR REPLACE] VIEW ... AS, DELETE FROM, UPDATE, MERGE INTO, "
-            "DROP TABLE, DROP VIEW, TRUNCATE TABLE, ALTER TABLE, "
-            "CREATE/DROP SCHEMA, USE, SHOW SCHEMAS/TABLES, SHOW "
-            "COLUMNS FROM, DESCRIBE (plus SELECT-shaped "
-            "queries through dialect.sql()); table names may be "
-            "[catalog.]schema.table-qualified"
+            + ", ".join(f.form for f in _FORMS)
+            + " (plus SELECT-shaped queries through dialect.sql()); "
+            "table names may be [catalog.]schema.table-qualified"
         )
-    return handler(spark, masked, lits)
-
-
-#: statement leaders with a WRITABLE TARGET whose live-file diff is
-#: the write-side story EXPLAIN ANALYZE reports
-_EA_TARGET_RES: "list[tuple[re.Pattern, str]]" = []
-
-
-def _ea_target_res():
-    if not _EA_TARGET_RES:
-        for pat, label in (
-            (r"^insert\s+into\s+({q})", "INSERT"),
-            (r"^delete\s+from\s+({q})", "DELETE"),
-            (r"^update\s+({q})", "UPDATE"),
-            (r"^merge\s+into\s+({q})", "MERGE"),
-            (
-                r"^create\s+table\s+(?:if\s+not\s+exists\s+)?({q})",
-                "CREATE TABLE",
-            ),
-            (r"^truncate\s+table\s+({q})", "TRUNCATE"),
-        ):
-            _EA_TARGET_RES.append(
-                (
-                    re.compile(pat.format(q=_QIDENT), re.IGNORECASE),
-                    label,
-                )
-            )
-    return _EA_TARGET_RES
+    form, m = hit
+    return form.handler(spark, lits, **m.groupdict())
 
 
 def explain_analyze(spark: SparkSession, stmt: str) -> DataFrame:
@@ -430,19 +397,16 @@ def explain_analyze(spark: SparkSession, stmt: str) -> DataFrame:
     rows only."""
     import time as _time
 
-    masked, _lits = _mask(stmt)
-    masked_s = masked.strip()
-    kind = masked_s.split(None, 1)[0].upper() if masked_s else "?"
+    masked = _mask(stmt)[0]
+    kind = masked.split(None, 1)[0].upper() if masked.strip() else "?"
     canon = None
-    for rx, label in _ea_target_res():
-        m = rx.match(masked_s)
-        if m:
-            kind = label
-            try:
-                canon = _canon(spark, m.group(1))
-            except ValueError:
-                canon = None  # execute() raises the proper refusal
-            break
+    form, m = _statement(masked) or (None, None)
+    if form is not None and form.label:
+        kind = form.label
+        try:
+            canon = _canon(spark, m["name"])
+        except ValueError:
+            canon = None  # execute() raises the proper refusal
     h_pre = state(spark, "dml_tables").get(canon) if canon else None
     pre = _m.files(h_pre.v) if h_pre else {}
     t0 = _time.perf_counter()
@@ -646,11 +610,6 @@ def _write_back(
 # INSERT INTO
 # ---------------------------------------------------------------------------
 
-_INSERT_RE = re.compile(
-    rf"^insert\s+into\s+({_QIDENT})\s*", re.IGNORECASE | re.DOTALL
-)
-
-
 def _match_scan(spark: SparkSession, name: str, pred: str | None):
     """The positive-match scan UPDATE and DELETE share: bare WHERE —
     semantically identical to ``(pred) IS TRUE`` for row selection
@@ -662,15 +621,10 @@ def _match_scan(spark: SparkSession, name: str, pred: str | None):
     return _d.sql(spark, f"select * from {name}{where}")
 
 
-def _insert(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    m = _INSERT_RE.match(masked)
-    if not m:
-        raise ValueError(
-            "dml: cannot parse INSERT — expected "
-            "INSERT INTO <table> [(col, ...)] <query>"
-        )
-    name = _canon(spark, m.group(1))
-    rest = masked[m.end() :].lstrip()
+def _insert(
+    spark: SparkSession, lits: list[str], name: str, rest: str
+) -> DataFrame:
+    name = _canon(spark, name)
     cols: list[str] | None = None
     if rest.startswith("("):
         cp = _match_paren(rest, 0)
@@ -733,26 +687,17 @@ def _insert(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
 # CREATE TABLE ... AS  /  DROP TABLE
 # ---------------------------------------------------------------------------
 
-_CTAS_RE = re.compile(
-    rf"^create\s+table\s+(if\s+not\s+exists\s+)?({_QIDENT})\s*",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
 def set_base_dir(spark: SparkSession, path: str) -> None:
-    """Session-scoped directory under which CTAS creates tables
-    (overrides the SPARK_GRAFT_DML_DIR env / warehouse default)."""
+    """Session-scoped directory under which CREATE TABLE places tables
+    (default: ``dml/`` under ``spark.sql.warehouse.dir``)."""
     state(spark, "dml_base_dir")["path"] = path
 
 
 def _dml_base_dir(spark: SparkSession) -> str:
-    base = state(spark, "dml_base_dir").get("path") or os.environ.get(
-        "SPARK_GRAFT_DML_DIR",
-        os.path.join(
-            spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-            .removeprefix("file:"),
-            "dml",
-        ),
+    base = state(spark, "dml_base_dir").get("path") or os.path.join(
+        spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+        .removeprefix("file:"),
+        "dml",
     )
     os.makedirs(base, exist_ok=True)
     return base
@@ -769,11 +714,6 @@ def _table_dir(spark: SparkSession, name: str) -> str:
         sch, tbl = _qparts(name)
         return os.path.join(base, f"{sch}.db", tbl)
     return os.path.join(base, name)
-
-
-_VIEW_RE = re.compile(
-    rf"^create\s+(or\s+replace\s+)?view\s+({_QIDENT})\s+as\b", re.IGNORECASE
-)
 
 
 def _define_view(
@@ -831,16 +771,19 @@ def _define_view(
 
 
 def _create_view(
-    spark: SparkSession, m: "re.Match", masked: str, lits: list[str]
+    spark: SparkSession,
+    lits: list[str],
+    or_replace: str | None,
+    name: str,
+    query: str,
 ) -> DataFrame:
     """Trino CREATE [OR REPLACE] VIEW through ``_define_view``.  A flat
     view may not shadow a table or a fixture view.  Its bases refuse
     DROP and the ALTERs that would break it while it exists
     (``_view_dependents``); a qualified view's dependents are LAZY — a
     base drop breaks it at its next read, Trino's own behavior."""
-    or_replace = m.group(1) is not None
-    name = _canon(spark, m.group(2))
-    query = _unmask_raw(masked[m.end() :], lits).strip()
+    name = _not_fixture(_canon(spark, name))
+    query = _unmask_raw(query, lits).strip()
     if is_dml(query):
         raise ValueError("dml: a view body must be a SELECT-shaped query")
     views = state(spark, "dml_views")
@@ -856,8 +799,7 @@ def _create_view(
                 "outside the DML catalog — shadowing it is refused; pick "
                 "another name"
             )
-    _define_view(spark, name, query, or_replace)
-    _unpin_if_fixture(spark, name)
+    _define_view(spark, name, query, or_replace is not None)
     views[name] = query
     return _rows_frame(spark, 0)
 
@@ -879,7 +821,11 @@ def _schema_name(raw: str) -> str:
 
 
 def _create_schema(
-    spark: SparkSession, if_not_exists: bool, raw: str, trailing: str
+    spark: SparkSession,
+    lits: list[str],
+    if_not_exists: str | None,
+    name: str,
+    props: str,
 ) -> DataFrame:
     """Trino CREATE SCHEMA [IF NOT EXISTS] (round 14, VERDICT r13 #2):
     a real namespace — Spark's session-scoped in-memory catalog
@@ -888,13 +834,13 @@ def _create_schema(
     references resolve natively.  WITH (location/authorization/...)
     properties refuse: the engine owns the layout
     (``<base>/<schema>.db/<table>``)."""
-    if trailing.strip():
+    if props:
         raise ValueError(
             "dml: CREATE SCHEMA properties are refused — the engine "
             "owns schema locations (<dml base dir>/<schema>.db); "
             "expected CREATE SCHEMA [IF NOT EXISTS] <name>"
         )
-    sch = _schema_name(raw)
+    sch = _schema_name(name)
     if sch == "default" or spark.catalog.databaseExists(sch):
         if if_not_exists:
             return _rows_frame(spark, 0)
@@ -933,14 +879,18 @@ def _catalog_schema_tables(spark: SparkSession, sch: str) -> list[str]:
 
 
 def _drop_schema(
-    spark: SparkSession, if_exists: bool, raw: str, mode: str
+    spark: SparkSession,
+    lits: list[str],
+    if_exists: str | None,
+    name: str,
+    mode: str | None,
 ) -> DataFrame:
     """Trino DROP SCHEMA [IF EXISTS] <s> [RESTRICT|CASCADE].  RESTRICT
     (the default) refuses while the schema holds tables — Trino's
     SCHEMA_NOT_EMPTY; CASCADE drops the schema's tables through the
     engine's own DROP TABLE path first (handle cleanup, dependent-view
     refusal, file deletion) and then the namespace."""
-    sch = _schema_name(raw)
+    sch = _schema_name(name)
     if sch == "default":
         raise ValueError("dml: the default schema cannot be dropped")
     if not spark.catalog.databaseExists(sch):
@@ -953,7 +903,7 @@ def _drop_schema(
     vmembers = sorted(
         n for n in state(spark, "dml_views") if n.startswith(f"{sch}.")
     )
-    if mode != "cascade":
+    if (mode or "").lower() != "cascade":
         # RESTRICT must also see objects registered in the schema
         # OUTSIDE the DML route (ADVICE r14 #4 — the engine registries
         # alone would let `drop database ... cascade` silently delete
@@ -990,9 +940,9 @@ def _drop_schema(
             + "; DROP those views first"
         )
     for n in vmembers:
-        _drop(spark, f"drop view {n}", [])
+        _drop_view(spark, lits, None, n)
     for n in members:
-        _drop(spark, f"drop table {n}", [])
+        _drop_table(spark, lits, None, n)
     if spark.catalog.currentDatabase().lower() == sch:
         spark.sql("use default")
     with CATALOG_LOCK:
@@ -1002,7 +952,7 @@ def _drop_schema(
     return _rows_frame(spark, 0)
 
 
-def _use(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
+def _use(spark: SparkSession, lits: list[str], name: str) -> DataFrame:
     """Trino USE [catalog.]<schema> (round 14): sets the CURRENT
     schema.  Unqualified names then resolve like Spark's analyzer:
     the flat (temp-view) namespace FIRST, then the current schema —
@@ -1011,10 +961,7 @@ def _use(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     order is kept identical between the DML route (_canon) and the
     SELECT route (Spark's own resolution) so the two can never
     disagree about which table a statement touched."""
-    m = re.match(rf"^use\s+({_QIDENT})\s*$", masked, re.IGNORECASE)
-    if not m:
-        raise ValueError("dml: expected USE [catalog.]<schema>")
-    sch = _schema_name(m.group(1))
+    sch = _schema_name(name)
     if not _schema_exists(spark, sch):
         raise ValueError(
             f"dml: schema '{sch}' does not exist — CREATE SCHEMA it "
@@ -1025,41 +972,14 @@ def _use(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     return _rows_frame(spark, 0)
 
 
-def _create(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    if re.match(r"^create\s+materialized\s+view\b", masked, re.IGNORECASE):
-        raise ValueError(
-            "dml: CREATE MATERIALIZED VIEW is refused — materialize "
-            "with CREATE TABLE ... AS <query> and refresh by "
-            "re-running it (plain parquet has no incremental refresh)"
-        )
-    sm = re.match(
-        rf"^create\s+(?:schema|database)\s+(if\s+not\s+exists\s+)?"
-        rf"({_QIDENT})\s*(.*)$",
-        masked,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if sm:
-        return _create_schema(
-            spark, sm.group(1) is not None, sm.group(2), sm.group(3)
-        )
-    if re.match(r"^create\s+(schema|database)\b", masked, re.IGNORECASE):
-        raise ValueError(
-            "dml: cannot parse CREATE SCHEMA — expected CREATE SCHEMA "
-            "[IF NOT EXISTS] <name>"
-        )
-    vm = _VIEW_RE.match(masked)
-    if vm:
-        return _create_view(spark, vm, masked, lits)
-    m = _CTAS_RE.match(masked)
-    if not m:
-        raise ValueError(
-            "dml: cannot parse CREATE — expected CREATE TABLE "
-            "[IF NOT EXISTS] <name> [WITH (...)] AS <query> or "
-            "CREATE [OR REPLACE] VIEW <name> AS <query>"
-        )
-    if_not_exists = m.group(1) is not None
-    name = _canon(spark, m.group(2))
-    rest = masked[m.end() :].lstrip()
+def _create_table(
+    spark: SparkSession,
+    lits: list[str],
+    if_not_exists: str | None,
+    name: str,
+    rest: str,
+) -> DataFrame:
+    name = _not_fixture(_canon(spark, name))
     col_defs: str | None = None
     if rest.startswith("("):
         cp = _match_paren(rest, 0)
@@ -1181,9 +1101,6 @@ def _create_declared(
     Scale: O(1) driver-side — a manifest with the schema and no data
     directory, no Spark job.
     """
-    from pyspark.sql.types import StructField, StructType
-    from pyspark.sql.types import _parse_datatype_string
-
     if name in state(spark, "dml_tables"):
         if if_not_exists:
             return _rows_frame(spark, 0)
@@ -1317,79 +1234,53 @@ def _parse_table_props(props_text: str, lits: list[str]) -> str | None:
     return part_col
 
 
-def _truncate(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
+def _truncate(spark: SparkSession, lits: list[str], name: str) -> DataFrame:
     """Trino TRUNCATE TABLE — delete all rows, keep the table: the next
     version lists no data directory."""
-    m = re.match(
-        rf"^truncate\s+table\s+({_QIDENT})\s*$", masked, re.IGNORECASE
-    )
-    if not m:
-        raise ValueError("dml: expected TRUNCATE TABLE <name>")
-    name = _canon(spark, m.group(1))
+    name = _canon(spark, name)
     h = _resolve(spark, name)
     h.v = _m.replace(spark, h.v, None)
     _refresh(spark, name)
     return _rows_frame(spark, 0)
 
 
-def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    sm = re.match(
-        rf"^drop\s+(?:schema|database)\s+(if\s+exists\s+)?({_QIDENT})"
-        r"\s*(restrict|cascade)?\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if sm:
-        return _drop_schema(
-            spark,
-            sm.group(1) is not None,
-            sm.group(2),
-            (sm.group(3) or "restrict").lower(),
-        )
-    if re.match(r"^drop\s+(schema|database)\b", masked, re.IGNORECASE):
-        raise ValueError(
-            "dml: cannot parse DROP SCHEMA — expected DROP SCHEMA "
-            "[IF EXISTS] <name> [RESTRICT|CASCADE]"
-        )
-    vm = re.match(
-        rf"^drop\s+view\s+(if\s+exists\s+)?({_QIDENT})\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if vm:
-        name = _canon_drop(spark, vm.group(2), vm.group(1) is not None)
-        if name is None:
-            return _rows_frame(spark, 0)
-        views = state(spark, "dml_views")
-        if name not in views:
-            if vm.group(1):
-                return _rows_frame(spark, 0)
-            raise ValueError(f"dml: '{name}' is not a DML-created view")
-        dep = _view_dependents(spark, name)
-        if dep:
-            raise ValueError(
-                f"dml: cannot DROP VIEW '{name}' — view(s) "
-                f"{', '.join(dep)} reference it; drop those first"
-            )
-        with CATALOG_LOCK:
-            if "." in name:
-                spark.sql(f"drop view if exists {_qident_sql(name)}")
-            else:
-                spark.catalog.dropTempView(name)
-        views.pop(name)
-        _unpin_if_fixture(spark, name)
+def _drop_object(spark: SparkSession, name: str, kind: str) -> None:
+    """Drop what Spark holds for the DML table or view ``name``: the
+    temp view of a flat name, the catalog ``kind`` ('table' or 'view')
+    of a qualified one."""
+    with CATALOG_LOCK:
+        if "." in name:
+            spark.sql(f"drop {kind} if exists {_qident_sql(name)}")
+        else:
+            spark.catalog.dropTempView(name)
+
+
+def _drop_view(
+    spark: SparkSession, lits: list[str], if_exists: str | None, name: str
+) -> DataFrame:
+    name = _canon_drop(spark, name, if_exists is not None)
+    if name is None:
         return _rows_frame(spark, 0)
-    m = re.match(
-        rf"^drop\s+table\s+(if\s+exists\s+)?({_QIDENT})\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if not m:
+    views = state(spark, "dml_views")
+    if name not in views:
+        if if_exists:
+            return _rows_frame(spark, 0)
+        raise ValueError(f"dml: '{name}' is not a DML-created view")
+    dep = _view_dependents(spark, name)
+    if dep:
         raise ValueError(
-            "dml: expected DROP TABLE [IF EXISTS] <name> or "
-            "DROP VIEW [IF EXISTS] <name>"
+            f"dml: cannot DROP VIEW '{name}' — view(s) "
+            f"{', '.join(dep)} reference it; drop those first"
         )
-    name = _canon_drop(spark, m.group(2), m.group(1) is not None)
+    _drop_object(spark, name, "view")
+    views.pop(name)
+    return _rows_frame(spark, 0)
+
+
+def _drop_table(
+    spark: SparkSession, lits: list[str], if_exists: str | None, name: str
+) -> DataFrame:
+    name = _canon_drop(spark, name, if_exists is not None)
     if name is None:
         return _rows_frame(spark, 0)
     if name in state(spark, "dml_tables"):
@@ -1401,15 +1292,10 @@ def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
             )
     h = state(spark, "dml_tables").pop(name, None)
     if h is None:
-        if m.group(1):
+        if if_exists:
             return _rows_frame(spark, 0)
         raise ValueError(f"dml: '{name}' is not a writable table")
-    with CATALOG_LOCK:
-        if "." in name:
-            spark.sql(f"drop table if exists {_qident_sql(name)}")
-        else:
-            spark.catalog.dropTempView(name)
-    _unpin_if_fixture(spark, name)
+    _drop_object(spark, name, "table")
     _m.drop(h.v.root)
     return _rows_frame(spark, 0)
 
@@ -1419,20 +1305,12 @@ def _drop(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _delete(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    m = re.match(
-        rf"^delete\s+from\s+({_QIDENT})\s*(?:where\b(.*))?$",
-        masked,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(
-            "dml: cannot parse DELETE — expected "
-            "DELETE FROM <table> [WHERE <predicate>]"
-        )
-    name = _canon(spark, m.group(1))
+def _delete(
+    spark: SparkSession, lits: list[str], name: str, pred: str | None
+) -> DataFrame:
+    name = _canon(spark, name)
     h = _resolve(spark, name)
-    pred = (m.group(2) or "").strip()
+    pred = (pred or "").strip()
     if not pred:
         # whole-table delete → a version with no data directory; the
         # count comes from the live files' footers, as CTAS and INSERT do
@@ -1463,20 +1341,11 @@ def _delete(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     return _rows_frame(spark, n)
 
 
-def _update(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    m = re.match(
-        rf"^update\s+({_QIDENT})\s+set\b(.*)$",
-        masked,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(
-            "dml: cannot parse UPDATE — expected "
-            "UPDATE <table> SET col = expr[, ...] [WHERE <predicate>]"
-        )
-    name = _canon(spark, m.group(1))
+def _update(
+    spark: SparkSession, lits: list[str], name: str, body: str
+) -> DataFrame:
+    name = _canon(spark, name)
     h = _resolve(spark, name)
-    body = m.group(2)
     # the WHERE splits at depth 0 only (a nested one belongs to a
     # subquery inside a SET expression)
     dep = _depths(body)
@@ -1551,25 +1420,18 @@ def _update(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
 # MERGE INTO
 # ---------------------------------------------------------------------------
 
-_MERGE_HEAD_RE = re.compile(
-    rf"^merge\s+into\s+({_QIDENT})(?:\s+(?:as\s+)?({_IDENT}))?\s+using\s+",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
-def _merge(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    m = _MERGE_HEAD_RE.match(masked)
-    if not m:
-        raise ValueError(
-            "dml: cannot parse MERGE — expected MERGE INTO <table> [AS "
-            "t] USING <table|(query)> [AS s] ON <cond> WHEN ..."
-        )
-    name = _canon(spark, m.group(1))
+def _merge(
+    spark: SparkSession,
+    lits: list[str],
+    name: str,
+    alias: str | None,
+    rest: str,
+) -> DataFrame:
+    name = _canon(spark, name)
     # an unaliased QUALIFIED target is referenced by its bare table
     # name in clause expressions (Trino resolution)
-    talias = (m.group(2) or name.rsplit(".", 1)[-1]).lower()
+    talias = (alias or name.rsplit(".", 1)[-1]).lower()
     h = _resolve(spark, name)
-    rest = masked[m.end() :].lstrip()
     # source: identifier or (subquery), optional alias
     if rest.startswith("("):
         cp = _match_paren(rest, 0)
@@ -1960,12 +1822,13 @@ def _spark_type_for(trino_type: str) -> str:
 
 
 def _alter_view_rename(
-    spark: SparkSession, name: str, new: str
+    spark: SparkSession, lits: list[str], name: str, new: str
 ) -> DataFrame:
     """Trino ALTER VIEW RENAME TO (round 13): catalog-only — the
     stored body moves to the new name and is re-created there; dependent
     views reference the OLD name in their body text, so the rename
     refuses while any exist (same guard as ALTER TABLE RENAME)."""
+    name, new = name.lower(), new.lower()
     views = state(spark, "dml_views")
     if name not in views:
         raise ValueError(
@@ -1983,7 +1846,7 @@ def _alter_view_rename(
     if (
         new in state(spark, "dml_tables")
         or new in views
-        or spark.catalog.tableExists(new)
+        or spark.catalog.tableExists(_not_fixture(new))
     ):
         raise ValueError(f"dml: '{new}' already exists")
     # create the new view BEFORE dropping the old one (ADVICE r13): a
@@ -1992,207 +1855,167 @@ def _alter_view_rename(
     # untouched
     _define_view(spark, new, views[name], or_replace=False)
     views[new] = views.pop(name)
-    with CATALOG_LOCK:
-        spark.catalog.dropTempView(name)
-    _unpin_if_fixture(spark, name, new)
+    _drop_object(spark, name, "view")
     return _rows_frame(spark, 0)
 
 
-def _alter(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    """Trino ALTER TABLE subset, each arm with the honest parquet cost:
+# Trino ALTER TABLE subset, each form with the honest parquet cost:
+#
+# - ``RENAME TO``: catalog-only (the backing directory keeps its
+#   original name — the handle carries the path).
+# - ``ADD COLUMN [IF NOT EXISTS] c type``: metadata-only — the next
+#   version publishes the grown schema over the same directories, and
+#   parquet readers null-fill columns absent from data files.
+#   Re-adding a name still present in the FILES (from an earlier DROP
+#   COLUMN) refuses: name-matched reads would resurrect the old values;
+#   CTAS-rewrite the table to really shed a column.
+# - ``DROP COLUMN [IF EXISTS] c``: metadata-only (the Hive-connector
+#   shape) — bytes stay in the files, reads prune the column.
+# - ``RENAME COLUMN a TO b``: full copy-on-write rewrite — parquet
+#   matches columns BY NAME, so a metadata rename would null out every
+#   existing row; the honest cost is a table rewrite, stated here
+#   rather than hidden.
 
-    - ``RENAME TO``: catalog-only (the backing directory keeps its
-      original name — the handle carries the path).
-    - ``ADD COLUMN [IF NOT EXISTS] c type``: metadata-only — the next
-      version publishes the grown schema over the same directories, and
-      parquet readers null-fill columns absent from
-      data files.  Re-adding a name still present in the FILES (from an
-      earlier DROP COLUMN) refuses: name-matched reads would resurrect
-      the old values; CTAS-rewrite the table to really shed a column.
-    - ``DROP COLUMN [IF EXISTS] c``: metadata-only (the Hive-connector
-      shape) — bytes stay in the files, reads prune the column.
-    - ``RENAME COLUMN a TO b``: full copy-on-write rewrite — parquet
-      matches columns BY NAME, so a metadata rename would null out
-      every existing row; the honest cost is a table rewrite, stated
-      here rather than hidden.
-    """
-    vm = re.match(
-        rf"^alter\s+view\s+({_IDENT})\s+rename\s+to\s+({_IDENT})\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if vm:
-        return _alter_view_rename(
-            spark, vm.group(1).lower(), vm.group(2).lower()
-        )
-    if re.match(r"^alter\s+view\b", masked, re.IGNORECASE):
-        raise ValueError(
-            "dml: only ALTER VIEW <name> RENAME TO <new> is supported "
-            "— change a view's body with CREATE OR REPLACE VIEW"
-        )
-    m = re.match(
-        rf"^alter\s+table\s+({_QIDENT})\s+(.*)$",
-        masked,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(
-            "dml: expected ALTER TABLE <name> <action> or ALTER VIEW "
-            "<name> RENAME TO <new>"
-        )
-    name = _canon(spark, m.group(1))
-    action = m.group(2).strip()
+
+def _alter_target(spark: SparkSession, raw: str):
+    """(canonical name, handle, pinned schema, lower-cased column
+    names) of an ALTER TABLE target."""
+    name = _canon(spark, raw)
     h = _resolve(spark, name)
-    schema = h.v.schema
-    cols = {f.name.lower() for f in schema.fields}
+    return name, h, h.v.schema, {f.name.lower() for f in h.v.schema.fields}
 
-    rm = re.match(rf"^rename\s+to\s+({_QIDENT})\s*$", action, re.IGNORECASE)
-    if rm:
-        new = _canon(spark, rm.group(1))
-        dep = _view_dependents(spark, name)
-        if dep:
-            raise ValueError(
-                f"dml: cannot rename '{name}' — view(s) {', '.join(dep)} "
-                "reference it; drop or redefine those first"
-            )
-        tables = state(spark, "dml_tables")
-        if new in tables or spark.catalog.tableExists(new):
-            raise ValueError(f"dml: '{new}' already exists")
-        tables[new] = tables.pop(name)
-        with CATALOG_LOCK:
-            if "." in name:
-                spark.sql(f"drop table if exists {_qident_sql(name)}")
-            else:
-                spark.catalog.dropTempView(name)
-        _unpin_if_fixture(spark, name)
-        _refresh(spark, new)
-        return _rows_frame(spark, 0)
 
-    am = re.match(
-        rf"^add\s+column\s+(if\s+not\s+exists\s+)?({_IDENT})\s+(.+)$",
-        action,
-        re.IGNORECASE | re.DOTALL,
+def _alter_rename(
+    spark: SparkSession, lits: list[str], name: str, new: str
+) -> DataFrame:
+    name, _, _, _ = _alter_target(spark, name)
+    new = _not_fixture(_canon(spark, new))
+    dep = _view_dependents(spark, name)
+    if dep:
+        raise ValueError(
+            f"dml: cannot rename '{name}' — view(s) {', '.join(dep)} "
+            "reference it; drop or redefine those first"
+        )
+    tables = state(spark, "dml_tables")
+    if new in tables or spark.catalog.tableExists(new):
+        raise ValueError(f"dml: '{new}' already exists")
+    tables[new] = tables.pop(name)
+    _drop_object(spark, name, "table")
+    _refresh(spark, new)
+    return _rows_frame(spark, 0)
+
+
+def _alter_add_column(
+    spark: SparkSession,
+    lits: list[str],
+    name: str,
+    if_not_exists: str | None,
+    col: str,
+    ctype: str,
+) -> DataFrame:
+    name, h, schema, cols = _alter_target(spark, name)
+    if col.lower() in cols:
+        if if_not_exists:
+            return _rows_frame(spark, 0)
+        raise ValueError(
+            f"dml: column '{col.lower()}' already exists in '{name}'"
+        )
+    # every live file's footer: a column present only in later part
+    # files counts too
+    if col.lower() in _m.file_columns(h.v):
+        raise ValueError(
+            f"dml: column '{col.lower()}' still exists in '{name}''s data "
+            "files (dropped earlier?) — re-adding it would resurrect "
+            "the old values; rewrite the table (CREATE TABLE ... AS) "
+            "to shed it first"
+        )
+    dtype = _parse_datatype_string(_spark_type_for(_unmask_raw(ctype, lits)))
+    h.v = _m.set_schema(
+        h.v, StructType(list(schema.fields) + [StructField(col, dtype, True)])
     )
-    if am:
-        col = am.group(2).lower()
-        if col in cols:
-            if am.group(1):
-                return _rows_frame(spark, 0)
-            raise ValueError(
-                f"dml: column '{col}' already exists in '{name}'"
-            )
-        # every live file's footer: a column present only in later
-        # part files counts too
-        if col in _m.file_columns(h.v):
-            raise ValueError(
-                f"dml: column '{col}' still exists in '{name}''s data "
-                "files (dropped earlier?) — re-adding it would resurrect "
-                "the old values; rewrite the table (CREATE TABLE ... AS) "
-                "to shed it first"
-            )
-        from pyspark.sql.types import StructField, StructType
-        from pyspark.sql.types import _parse_datatype_string
+    _refresh(spark, name)
+    return _rows_frame(spark, 0)
 
-        dtype = _parse_datatype_string(
-            _spark_type_for(_unmask_raw(am.group(3), lits))
-        )
-        h.v = _m.set_schema(
-            h.v,
-            StructType(
-                list(schema.fields) + [StructField(am.group(2), dtype, True)]
-            ),
-        )
-        _refresh(spark, name)
-        return _rows_frame(spark, 0)
 
-    dm = re.match(
-        rf"^drop\s+column\s+(if\s+exists\s+)?({_IDENT})\s*$",
-        action,
-        re.IGNORECASE,
+def _alter_drop_column(
+    spark: SparkSession,
+    lits: list[str],
+    name: str,
+    if_exists: str | None,
+    col: str,
+) -> DataFrame:
+    name, h, schema, cols = _alter_target(spark, name)
+    col = col.lower()
+    if col not in cols:
+        if if_exists:
+            return _rows_frame(spark, 0)
+        raise ValueError(f"dml: column '{col}' does not exist in '{name}'")
+    dep = _view_dependents(spark, name)
+    if dep:
+        # same invariant as DROP TABLE: a half-applied ALTER under a
+        # dependent view would break the view's next re-analysis
+        # (round-12 review)
+        raise ValueError(
+            f"dml: cannot DROP COLUMN on '{name}' — view(s) "
+            f"{', '.join(dep)} reference the table; drop or "
+            "redefine those first"
+        )
+    if h.part_col and col == h.part_col.lower():
+        raise ValueError(
+            f"dml: cannot drop '{col}' — it is the partition column "
+            "(the directory layout is keyed on it); CTAS-rewrite to "
+            "change partitioning"
+        )
+    if len(schema.fields) == 1:
+        raise ValueError("dml: cannot drop the only column")
+    h.v = _m.set_schema(
+        h.v, StructType([f for f in schema.fields if f.name.lower() != col])
     )
-    if dm:
-        col = dm.group(2).lower()
-        if col not in cols:
-            if dm.group(1):
-                return _rows_frame(spark, 0)
-            raise ValueError(f"dml: column '{col}' does not exist in '{name}'")
-        dep = _view_dependents(spark, name)
-        if dep:
-            # same invariant as DROP TABLE: a half-applied ALTER under
-            # a dependent view would break the view's next re-analysis
-            # (round-12 review)
-            raise ValueError(
-                f"dml: cannot DROP COLUMN on '{name}' — view(s) "
-                f"{', '.join(dep)} reference the table; drop or "
-                "redefine those first"
-            )
-        if h.part_col and col == h.part_col.lower():
-            raise ValueError(
-                f"dml: cannot drop '{col}' — it is the partition column "
-                "(the directory layout is keyed on it); CTAS-rewrite to "
-                "change partitioning"
-            )
-        if len(schema.fields) == 1:
-            raise ValueError("dml: cannot drop the only column")
-        from pyspark.sql.types import StructType
+    _refresh(spark, name)
+    return _rows_frame(spark, 0)
 
-        h.v = _m.set_schema(
-            h.v, StructType([f for f in schema.fields if f.name.lower() != col])
+
+def _alter_rename_column(
+    spark: SparkSession, lits: list[str], name: str, old: str, new: str
+) -> DataFrame:
+    name, h, schema, cols = _alter_target(spark, name)
+    old = old.lower()
+    if old not in cols:
+        raise ValueError(f"dml: column '{old}' does not exist in '{name}'")
+    if new.lower() in cols:
+        raise ValueError(
+            f"dml: column '{new.lower()}' already exists in '{name}'"
         )
-        _refresh(spark, name)
-        return _rows_frame(spark, 0)
-
-    rc = re.match(
-        rf"^rename\s+column\s+({_IDENT})\s+to\s+({_IDENT})\s*$",
-        action,
-        re.IGNORECASE,
+    dep = _view_dependents(spark, name)
+    if dep:
+        raise ValueError(
+            f"dml: cannot RENAME COLUMN on '{name}' — view(s) "
+            f"{', '.join(dep)} reference the table; drop or "
+            "redefine those first"
+        )
+    if h.part_col and old == h.part_col.lower():
+        raise ValueError(
+            f"dml: cannot rename partition column '{old}' — the "
+            "directory layout is keyed on it; CTAS-rewrite to change "
+            "partitioning"
+        )
+    actual_old = next(f.name for f in schema.fields if f.name.lower() == old)
+    df = spark.table(name).withColumnRenamed(actual_old, new)
+    h.v = _m.replace(
+        spark,
+        h.v,
+        df,
+        schema=StructType(
+            [
+                StructField(new, f.dataType, f.nullable)
+                if f.name.lower() == old
+                else f
+                for f in schema.fields
+            ]
+        ),
     )
-    if rc:
-        old, new = rc.group(1).lower(), rc.group(2).lower()
-        if old not in cols:
-            raise ValueError(f"dml: column '{old}' does not exist in '{name}'")
-        if new in cols:
-            raise ValueError(f"dml: column '{new}' already exists in '{name}'")
-        dep = _view_dependents(spark, name)
-        if dep:
-            raise ValueError(
-                f"dml: cannot RENAME COLUMN on '{name}' — view(s) "
-                f"{', '.join(dep)} reference the table; drop or "
-                "redefine those first"
-            )
-        if h.part_col and old == h.part_col.lower():
-            raise ValueError(
-                f"dml: cannot rename partition column '{old}' — the "
-                "directory layout is keyed on it; CTAS-rewrite to change "
-                "partitioning"
-            )
-        actual_old = next(
-            f.name for f in schema.fields if f.name.lower() == old
-        )
-        df = spark.table(name).withColumnRenamed(actual_old, rc.group(2))
-        from pyspark.sql.types import StructField, StructType
-
-        h.v = _m.replace(
-            spark,
-            h.v,
-            df,
-            schema=StructType(
-                [
-                    StructField(rc.group(2), f.dataType, f.nullable)
-                    if f.name.lower() == old
-                    else f
-                    for f in schema.fields
-                ]
-            ),
-        )
-        _refresh(spark, name)
-        return _rows_frame(spark, 0)
-
-    raise ValueError(
-        "dml: unsupported ALTER TABLE action — supported: RENAME TO, "
-        "ADD COLUMN [IF NOT EXISTS] <c> <type>, DROP COLUMN [IF EXISTS] "
-        "<c>, RENAME COLUMN <a> TO <b>"
-    )
+    _refresh(spark, name)
+    return _rows_frame(spark, 0)
 
 
 #: Spark simpleString -> Trino type name for SHOW COLUMNS / DESCRIBE.
@@ -2229,73 +2052,51 @@ def _columns_frame(spark: SparkSession, name: str) -> DataFrame:
     )
 
 
-def _show(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    if re.match(r"^show\s+schemas\s*$", masked, re.IGNORECASE):
-        # REAL namespace listing (round 14): the in-memory catalog's
-        # databases, Trino's one-column result shape
-        with CATALOG_LOCK:
-            names = sorted(d.name.lower() for d in spark.catalog.listDatabases())
-        return local_frame(spark, [(n,) for n in names], "schema string")
-    tm = re.match(
-        rf"^show\s+tables(?:\s+(?:from|in)\s+({_QIDENT}))?\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if tm:
-        if tm.group(1):
-            sch = _schema_name(tm.group(1))
-            if not _schema_exists(spark, sch):
-                raise ValueError(f"dml: schema '{sch}' does not exist")
-            if sch == "default":
-                with CATALOG_LOCK:
-                    names = sorted(
-                        t.name for t in spark.catalog.listTables()
-                    )
-            else:
-                names = sorted(
-                    n.rsplit(".", 1)[-1]
-                    for reg in (
-                        state(spark, "dml_tables"),
-                        state(spark, "dml_views"),
-                    )
-                    for n in reg
-                    if n.startswith(f"{sch}.")
-                )
-            return local_frame(spark, [(n,) for n in names], "table string")
+def _show_schemas(spark: SparkSession, lits: list[str]) -> DataFrame:
+    # REAL namespace listing (round 14): the in-memory catalog's
+    # databases, Trino's one-column result shape
+    with CATALOG_LOCK:
+        names = sorted(d.name.lower() for d in spark.catalog.listDatabases())
+    return local_frame(spark, [(n,) for n in names], "schema string")
+
+
+def _show_tables(
+    spark: SparkSession, lits: list[str], schema: str | None
+) -> DataFrame:
+    sch = _schema_name(schema) if schema else "default"
+    if not _schema_exists(spark, sch):
+        raise ValueError(f"dml: schema '{sch}' does not exist")
+    if sch == "default":
         # under CATALOG_LOCK: a listing raced by a mutation dies with
         # PARSE_EMPTY_STATEMENT (ADVICE r12)
         with CATALOG_LOCK:
             names = sorted(t.name for t in spark.catalog.listTables())
-        return local_frame(spark, [(n,) for n in names], "table string")
-    m = re.match(
-        rf"^show\s+columns\s+from\s+({_QIDENT})\s*$", masked, re.IGNORECASE
-    )
-    if m:
-        return _columns_frame(spark, _canon(spark, m.group(1)))
-    m = re.match(
-        rf"^show\s+create\s+(table|view)\s+({_QIDENT})\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if m:
-        return _show_create(
-            spark, m.group(1).lower(), _canon(spark, m.group(2))
+    else:
+        names = sorted(
+            n.rsplit(".", 1)[-1]
+            for reg in (state(spark, "dml_tables"), state(spark, "dml_views"))
+            for n in reg
+            if n.startswith(f"{sch}.")
         )
-    raise ValueError(
-        "dml: supported SHOW forms: SHOW SCHEMAS, SHOW TABLES, SHOW "
-        "COLUMNS FROM <table>, SHOW CREATE TABLE/VIEW <name> (Trino's "
-        "session/catalog SHOWs have no equivalent here)"
-    )
+    return local_frame(spark, [(n,) for n in names], "table string")
 
 
-def _show_create(spark: SparkSession, kind: str, name: str) -> DataFrame:
+def _describe(spark: SparkSession, lits: list[str], name: str) -> DataFrame:
+    """SHOW COLUMNS FROM and DESCRIBE of a table or view."""
+    return _columns_frame(spark, _canon(spark, name))
+
+
+def _show_create(
+    spark: SparkSession, lits: list[str], kind: str, name: str
+) -> DataFrame:
     """Trino SHOW CREATE TABLE/VIEW shape: one (create_statement) row.
     Views print their STORED Presto body;
     tables print a column-definition DDL reconstructed from the pinned
     schema plus the partitioned_by property — informational (this
     engine's CREATE TABLE is CTAS-only, stated in the emitted
     comment)."""
-    if kind == "view":
+    name = _canon(spark, name)
+    if kind.lower() == "view":
         vq = state(spark, "dml_views").get(name)
         if vq is None:
             raise ValueError(f"dml: '{name}' is not a DML-created view")
@@ -2323,27 +2124,8 @@ def _show_create(spark: SparkSession, kind: str, name: str) -> DataFrame:
     return local_frame(spark, [(stmt,)], "create_statement string")
 
 
-def _describe(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    dm = re.match(
-        rf"^desc(?:ribe)?\s+(input|output)\s+({_IDENT})\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if dm:
-        return _describe_prepared(
-            spark, dm.group(1).lower(), dm.group(2).lower()
-        )
-    m = re.match(rf"^desc(?:ribe)?\s+({_QIDENT})\s*$", masked, re.IGNORECASE)
-    if not m:
-        raise ValueError(
-            "dml: expected DESCRIBE <table> or DESCRIBE INPUT/OUTPUT "
-            "<prepared-statement>"
-        )
-    return _columns_frame(spark, _canon(spark, m.group(1)))
-
-
 def _describe_prepared(
-    spark: SparkSession, kind: str, name: str
+    spark: SparkSession, lits: list[str], kind: str, name: str
 ) -> DataFrame:
     """Trino ``DESCRIBE INPUT`` / ``DESCRIBE OUTPUT`` over a prepared
     statement (round 14).
@@ -2362,12 +2144,12 @@ def _describe_prepared(
     are engine-internal); aliased is true (every projected column).  A
     DML statement reports Trino's DML result shape — the single
     bigint 'rows' column — without running anything."""
-    stmt = state(spark, "dml_prepared").get(name)
+    stmt = state(spark, "dml_prepared").get(name.lower())
     if stmt is None:
-        raise ValueError(f"dml: no prepared statement '{name}'")
+        raise ValueError(f"dml: no prepared statement '{name.lower()}'")
     pmasked, plits = _mask(stmt)
     slots = [i for i, c in enumerate(pmasked) if c == "?"]
-    if kind == "input":
+    if kind.lower() == "input":
         return local_frame(
             spark,
             [(i, "unknown") for i in range(len(slots))],
@@ -2398,64 +2180,54 @@ def _describe_prepared(
 # PREPARE / EXECUTE / DEALLOCATE
 # ---------------------------------------------------------------------------
 
-def _prepare(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
+def _prepare(
+    spark: SparkSession, lits: list[str], name: str, stmt: str
+) -> DataFrame:
     """Trino ``PREPARE name FROM statement`` — stores the statement
     TEXT (re-translated at each EXECUTE, so it sees the table state of
     execution time, like views).  Validation is deferred to EXECUTE:
     the statement may carry ``?`` parameters that make it unanalyzable
     now, and a DML body must not run as a side effect of preparing."""
-    m = re.match(
-        rf"^prepare\s+({_IDENT})\s+from\s+(.+)$",
-        masked,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError("dml: expected PREPARE <name> FROM <statement>")
-    state(spark, "dml_prepared")[m.group(1).lower()] = _unmask_raw(
-        m.group(2), lits
-    ).strip()
+    state(spark, "dml_prepared")[name.lower()] = _unmask_raw(stmt, lits).strip()
     return _rows_frame(spark, 0)
 
 
-def _execute(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
-    """Trino ``EXECUTE name [USING v1, v2, ...]`` and ``EXECUTE
-    IMMEDIATE '<statement>' [USING ...]`` — positional ``?`` parameters
-    in the prepared/immediate text are replaced by the USING values
-    (each spliced parenthesized, scanned on masked text so a ``?``
-    inside a string literal is never a parameter)."""
-    im = re.match(
-        "^execute\\s+immediate\\s+(\x00\\d+\x00)\\s*(?:\\busing\\b(.*))?$",
-        masked,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if im:
-        lit = _unmask_raw(im.group(1), lits).strip()
-        # the statement arrives as a Trino string literal: strip the
-        # quotes and undo '' escaping
-        stmt = lit[1:-1].replace("''", "'")
-        name = "<immediate>"
-        using_text = im.group(2)
-    else:
-        m = re.match(
-            rf"^execute\s+({_IDENT})\s*(?:\busing\b(.*))?$",
-            masked,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(
-                "dml: expected EXECUTE <name> [USING <value>, ...] or "
-                "EXECUTE IMMEDIATE '<statement>' [USING ...]"
-            )
-        name = m.group(1).lower()
-        stmt = state(spark, "dml_prepared").get(name)
-        if stmt is None:
-            raise ValueError(f"dml: no prepared statement '{name}'")
-        using_text = m.group(2)
+def _execute_immediate(
+    spark: SparkSession, lits: list[str], lit: str, using: str | None
+) -> DataFrame:
+    """Trino ``EXECUTE IMMEDIATE '<statement>' [USING ...]``: the
+    statement arrives as a Trino string literal, so the quotes are
+    stripped and '' escaping undone."""
+    stmt = _unmask_raw(lit, lits).strip()[1:-1].replace("''", "'")
+    return _run_prepared(spark, lits, "<immediate>", stmt, using)
+
+
+def _execute(
+    spark: SparkSession, lits: list[str], name: str, using: str | None
+) -> DataFrame:
+    """Trino ``EXECUTE name [USING v1, v2, ...]``."""
+    stmt = state(spark, "dml_prepared").get(name.lower())
+    if stmt is None:
+        raise ValueError(f"dml: no prepared statement '{name.lower()}'")
+    return _run_prepared(spark, lits, name.lower(), stmt, using)
+
+
+def _run_prepared(
+    spark: SparkSession,
+    lits: list[str],
+    name: str,
+    stmt: str,
+    using: str | None,
+) -> DataFrame:
+    """Positional ``?`` parameters in the prepared/immediate text are
+    replaced by the USING values (each spliced parenthesized, scanned on
+    masked text so a ``?`` inside a string literal is never a
+    parameter)."""
     pmasked, plits = _mask(stmt)
     slots = [i for i, c in enumerate(pmasked) if c == "?"]
     args = (
-        [_unmask_raw(a, lits) for a in _split_args(using_text)]
-        if using_text and using_text.strip()
+        [_unmask_raw(a, lits) for a in _split_args(using)]
+        if using and using.strip()
         else []
     )
     if len(slots) != len(args):
@@ -2468,56 +2240,161 @@ def _execute(spark: SparkSession, masked: str, lits: list[str]) -> DataFrame:
     return _d.sql(spark, _unmask_raw(pmasked, plits))
 
 
-def _deallocate(
-    spark: SparkSession, masked: str, lits: list[str]
-) -> DataFrame:
-    m = re.match(
-        rf"^deallocate\s+(?:prepare\s+)?({_IDENT})\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError("dml: expected DEALLOCATE [PREPARE] <name>")
-    name = m.group(1).lower()
+def _deallocate(spark: SparkSession, lits: list[str], name: str) -> DataFrame:
+    name = name.lower()
     if state(spark, "dml_prepared").pop(name, None) is None:
         raise ValueError(f"dml: no prepared statement '{name}'")
     return _rows_frame(spark, 0)
 
 
-#: Trino session/catalog statements an ETL script may lead with that
-#: have NO equivalent here — each refuses with statement-specific
-#: guidance instead of the generic unsupported-leader error, so a
-#: pasted script fails on its FIRST line with an actionable message.
-_SESSION_STMT_REFUSALS = {
-    "set": (
-        "dml: SET SESSION is refused — there is no Trino session here; "
-        "set the matching Spark conf on the SparkSession "
-        "(spark.conf.set) before calling dialect.sql()"
-    ),
-    "reset": (
-        "dml: RESET SESSION is refused — use spark.conf.unset on the "
-        "matching Spark conf"
-    ),
-    "analyze": (
-        "dml: ANALYZE is refused — Spark computes statistics at read "
-        "time (AQE) and parquet footers carry min/max; there is no "
-        "stats store to populate"
-    ),
+# ---------------------------------------------------------------------------
+# the statement table
+# ---------------------------------------------------------------------------
+
+
+class _Form(NamedTuple):
+    form: str  # as the unknown-leader error lists it
+    rx: re.Pattern  # anchored; its named groups are the handler's kwargs
+    handler: Callable[..., DataFrame]  # handler(spark, lits, **groups)
+    label: str | None = None  # EXPLAIN ANALYZE's kind of a row-writing form
+
+
+def _rows(*rows: tuple) -> list[_Form]:
+    return [_Form(f, re.compile(p, re.I | re.S), *rest) for f, p, *rest in rows]
+
+
+def _refuse(message: str) -> Callable[..., DataFrame]:
+    def refuse(spark: SparkSession, lits: list[str], **_: str) -> DataFrame:
+        raise ValueError(message)
+
+    return refuse
+
+
+_I, _N = _IDENT, rf"(?P<name>{_QIDENT})"
+_IE = r"(?P<if_exists>if\s+exists\s+)?"
+_INE = r"(?P<if_not_exists>if\s+not\s+exists\s+)?"
+_ALTER = rf"alter\s+table\s+{_N}\s+"
+
+#: Every statement form ``execute`` runs, tried in order against the
+#: masked statement (blanks and a trailing ';' cut): the one place the
+#: front door tells statements apart.  ``is_dml`` and EXPLAIN ANALYZE
+#: read it too.
+_FORMS = _rows(
+    ("INSERT INTO", rf"insert\s+into\s+{_N}\s*(?P<rest>.*)", _insert, "INSERT"),
+    ("CREATE SCHEMA", rf"create\s+(?:schema|database)\s+{_INE}{_N}\s*(?P<props>.*)",
+     _create_schema),
+    ("CREATE [OR REPLACE] VIEW",
+     rf"create\s+(?P<or_replace>or\s+replace\s+)?view\s+{_N}\s+as\b(?P<query>.*)",
+     _create_view),
+    ("CREATE TABLE", rf"create\s+table\s+{_INE}{_N}\s*(?P<rest>.*)", _create_table,
+     "CREATE TABLE"),
+    ("DELETE FROM", rf"delete\s+from\s+{_N}\s*(?:where\b(?P<pred>.*))?$", _delete,
+     "DELETE"),
+    ("UPDATE", rf"update\s+{_N}\s+set\b(?P<body>.*)", _update, "UPDATE"),
+    ("MERGE INTO",
+     rf"merge\s+into\s+{_N}(?:\s+(?:as\s+)?(?P<alias>{_I}))?\s+using\s+(?P<rest>.*)",
+     _merge, "MERGE"),
+    ("DROP SCHEMA",
+     rf"drop\s+(?:schema|database)\s+{_IE}{_N}\s*(?P<mode>restrict|cascade)?\s*$",
+     _drop_schema),
+    ("DROP VIEW", rf"drop\s+view\s+{_IE}{_N}\s*$", _drop_view),
+    ("DROP TABLE", rf"drop\s+table\s+{_IE}{_N}\s*$", _drop_table),
+    ("TRUNCATE TABLE", rf"truncate\s+table\s+{_N}\s*$", _truncate, "TRUNCATE"),
+    ("ALTER VIEW RENAME TO",
+     rf"alter\s+view\s+(?P<name>{_I})\s+rename\s+to\s+(?P<new>{_I})\s*$",
+     _alter_view_rename),
+    ("ALTER TABLE RENAME TO", rf"{_ALTER}rename\s+to\s+(?P<new>{_QIDENT})\s*$",
+     _alter_rename),
+    ("ALTER TABLE ADD COLUMN",
+     rf"{_ALTER}add\s+column\s+{_INE}(?P<col>{_I})\s+(?P<ctype>.+)", _alter_add_column),
+    ("ALTER TABLE DROP COLUMN", rf"{_ALTER}drop\s+column\s+{_IE}(?P<col>{_I})\s*$",
+     _alter_drop_column),
+    ("ALTER TABLE RENAME COLUMN",
+     rf"{_ALTER}rename\s+column\s+(?P<old>{_I})\s+to\s+(?P<new>{_I})\s*$",
+     _alter_rename_column),
+    ("USE", rf"use\s+{_N}\s*$", _use),
+    ("SHOW SCHEMAS", r"show\s+schemas\s*$", _show_schemas),
+    ("SHOW TABLES", rf"show\s+tables(?:\s+(?:from|in)\s+(?P<schema>{_QIDENT}))?\s*$",
+     _show_tables),
+    ("SHOW COLUMNS FROM", rf"show\s+columns\s+from\s+{_N}\s*$", _describe),
+    ("SHOW CREATE TABLE|VIEW", rf"show\s+create\s+(?P<kind>table|view)\s+{_N}\s*$",
+     _show_create),
+    ("DESCRIBE INPUT|OUTPUT",
+     rf"desc(?:ribe)?\s+(?P<kind>input|output)\s+(?P<name>{_I})\s*$",
+     _describe_prepared),
+    ("DESCRIBE", rf"desc(?:ribe)?\s+{_N}\s*$", _describe),
+    ("PREPARE", rf"prepare\s+(?P<name>{_I})\s+from\s+(?P<stmt>.+)", _prepare),
+    ("EXECUTE IMMEDIATE",
+     rf"execute\s+immediate\s+(?P<lit>{_SENT_RE.pattern})"
+     r"\s*(?:\busing\b(?P<using>.*))?$",
+     _execute_immediate),
+    ("EXECUTE", rf"execute\s+(?P<name>{_I})\s*(?:\busing\b(?P<using>.*))?$", _execute),
+    ("DEALLOCATE", rf"deallocate\s+(?:prepare\s+)?(?P<name>{_I})\s*$", _deallocate),
+)
+
+#: Tried after ``_FORMS``: head -> message of the statements refused
+#: here, and one bare leader row per leader that raises its usage text,
+#: so ``is_dml`` accepts exactly the leaders ``execute`` answers for.
+_REFUSALS = _rows(*((msg, rf"(?:{head})\b", _refuse(msg)) for head, msg in {
+    r"create\s+materialized\s+view": "dml: CREATE MATERIALIZED VIEW is refused — "
+    "materialize with CREATE TABLE ... AS <query> and refresh by re-running it "
+    "(plain parquet has no incremental refresh)",
+    r"create\s+(?:schema|database)": "dml: cannot parse CREATE SCHEMA — expected "
+    "CREATE SCHEMA [IF NOT EXISTS] <name>",
+    "create": "dml: cannot parse CREATE — expected CREATE TABLE [IF NOT EXISTS] "
+    "<name> [WITH (...)] AS <query> or CREATE [OR REPLACE] VIEW <name> AS <query>",
+    "insert": "dml: cannot parse INSERT — expected INSERT INTO <table> [(col, ...)] "
+    "<query>",
+    "delete": "dml: cannot parse DELETE — expected DELETE FROM <table> "
+    "[WHERE <predicate>]",
+    "update": "dml: cannot parse UPDATE — expected UPDATE <table> SET "
+    "col = expr[, ...] [WHERE <predicate>]",
+    "merge": "dml: cannot parse MERGE — expected MERGE INTO <table> [AS t] USING "
+    "<table|(query)> [AS s] ON <cond> WHEN ...",
+    r"drop\s+(?:schema|database)": "dml: cannot parse DROP SCHEMA — expected DROP "
+    "SCHEMA [IF EXISTS] <name> [RESTRICT|CASCADE]",
+    "drop": "dml: expected DROP TABLE [IF EXISTS] <name> or DROP VIEW [IF EXISTS] "
+    "<name>",
+    "truncate": "dml: expected TRUNCATE TABLE <name>",
+    r"alter\s+view": "dml: only ALTER VIEW <name> RENAME TO <new> is supported — "
+    "change a view's body with CREATE OR REPLACE VIEW",
+    rf"alter\s+table\s+{_QIDENT}(?=\s)": "dml: unsupported ALTER TABLE action — "
+    "supported: RENAME TO, ADD COLUMN [IF NOT EXISTS] <c> <type>, DROP COLUMN "
+    "[IF EXISTS] <c>, RENAME COLUMN <a> TO <b>",
+    "alter": "dml: expected ALTER TABLE <name> <action> or ALTER VIEW <name> "
+    "RENAME TO <new>",
+    "use": "dml: expected USE [catalog.]<schema>",
+    "show": "dml: supported SHOW forms: SHOW SCHEMAS, SHOW TABLES, SHOW COLUMNS "
+    "FROM <table>, SHOW CREATE TABLE/VIEW <name> (Trino's session/catalog SHOWs "
+    "have no equivalent here)",
+    r"desc(?:ribe)?": "dml: expected DESCRIBE <table> or DESCRIBE INPUT/OUTPUT "
+    "<prepared-statement>",
+    "prepare": "dml: expected PREPARE <name> FROM <statement>",
+    "execute": "dml: expected EXECUTE <name> [USING <value>, ...] or EXECUTE "
+    "IMMEDIATE '<statement>' [USING ...]",
+    "deallocate": "dml: expected DEALLOCATE [PREPARE] <name>",
+    # Trino session/catalog statements an ETL script may lead with that
+    # have no equivalent here: a pasted script fails on its first line
+    # with an actionable message
+    "set": "dml: SET SESSION is refused — there is no Trino session here; set the "
+    "matching Spark conf on the SparkSession (spark.conf.set) before calling "
+    "dialect.sql()",
+    "reset": "dml: RESET SESSION is refused — use spark.conf.unset on the matching "
+    "Spark conf",
+    "analyze": "dml: ANALYZE is refused — Spark computes statistics at read time "
+    "(AQE) and parquet footers carry min/max; there is no stats store to populate",
     "comment": "dml: COMMENT ON is refused — no persistent catalog",
     "grant": "dml: GRANT is refused — no access-control catalog here",
     "revoke": "dml: REVOKE is refused — no access-control catalog here",
     "call": "dml: CALL is refused — no stored procedures",
-    "refresh": (
-        "dml: REFRESH MATERIALIZED VIEW is refused — there are no "
-        "materialized views here (CREATE MATERIALIZED VIEW refuses "
-        "too); materialize with CREATE TABLE ... AS and refresh by "
-        "re-running it"
-    ),
-    "start": (
-        "dml: START TRANSACTION is refused — parquet copy-on-write "
-        "statements are atomic per statement, not transactional; "
-        "Trino's hive connector refuses multi-statement writes too"
-    ),
-    "commit": "dml: COMMIT is refused — no transaction in progress (see START TRANSACTION)",
-    "rollback": "dml: ROLLBACK is refused — no transaction in progress (see START TRANSACTION)",
-}
+    r"refresh\s+materialized": "dml: REFRESH MATERIALIZED VIEW is refused — there "
+    "are no materialized views here (CREATE MATERIALIZED VIEW refuses too); "
+    "materialize with CREATE TABLE ... AS and refresh by re-running it",
+    "start": "dml: START TRANSACTION is refused — parquet copy-on-write statements "
+    "are atomic per statement, not transactional; Trino's hive connector refuses "
+    "multi-statement writes too",
+    "commit": "dml: COMMIT is refused — no transaction in progress (see START "
+    "TRANSACTION)",
+    "rollback": "dml: ROLLBACK is refused — no transaction in progress (see START "
+    "TRANSACTION)",
+}.items()))

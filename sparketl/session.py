@@ -151,16 +151,6 @@ SESSION_CONFS: dict[str, str] = {
 #: throughput).
 LOCAL_BUILD_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # concurrent bench/pipeline submission: round-robin task slots
-    # between jobs instead of FIFO head-of-line blocking.  The
-    # allocation file is REQUIRED: FAIR mode alone leaves the default
-    # pool itself FIFO and one wide stage starves everything else.
-    "spark.scheduler.mode": "FAIR",
-    "spark.scheduler.allocation.file": os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "conf",
-        "fairscheduler.xml",
-    ),
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     # A 130-query suite generates thousands of janino/whole-stage-codegen

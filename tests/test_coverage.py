@@ -26,3 +26,21 @@ def test_oracle_coverage_is_broad():
         "math_random_seeded",
         "sample_bernoulli",
     }, f"unexpected rows-only queries: {rows_only}"
+
+
+def test_queries_md_matches_its_generator():
+    """QUERIES.md is generated (scripts/gen_catalog.py); a query added,
+    renamed or re-described without regenerating it fails here."""
+    import importlib.util
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "gen_catalog", os.path.join(repo, "scripts", "gen_catalog.py")
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    with open(os.path.join(repo, "QUERIES.md")) as f:
+        assert f.read() == gen.catalog_text(), (
+            "QUERIES.md is stale: run python scripts/gen_catalog.py"
+        )

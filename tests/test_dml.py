@@ -307,6 +307,88 @@ def test_explain_analyze_runs_and_annotates(spark, wh):
     dialect.sql(spark, "drop table t_ea")
 
 
+#: every statement leader the front door answers for, a refused one
+#: included
+_LEADERS = [
+    "insert", "create", "delete", "update", "merge", "drop", "truncate",
+    "alter", "show", "describe", "desc", "prepare", "execute", "deallocate",
+    "use", "set", "reset", "analyze", "comment", "grant", "revoke", "call",
+    "start", "commit", "rollback", "refresh materialized",
+]
+
+
+def test_is_dml_and_execute_agree():
+    """``is_dml`` and ``execute`` read one statement table: a text
+    ``is_dml`` accepts reaches a form, its leader's usage text or a
+    refusal, never the unsupported-leader error, and a text it rejects
+    gets exactly that error.  No session is passed, so a text that
+    reaches a handler fails there without touching a catalog."""
+
+    def error(stmt):
+        try:
+            dml.execute(None, stmt)
+        except Exception as e:  # noqa: BLE001 - any error but the leader's
+            return str(e)
+        raise AssertionError(f"{stmt!r} ran without a session")
+
+    heads = ["", "  ", "-- note\n", "/* note */ ", "\n"]
+    tails = [
+        "", ";", " ¤", " x", " x y z", " table", " table x", " into x",
+        " (x)", " view x", " schema", " if exists", " column c to d",
+    ]
+    for lead in _LEADERS + [w.upper() for w in _LEADERS]:
+        for head in heads:
+            for tail in tails:
+                stmt = head + lead + tail
+                assert dml.is_dml(stmt), stmt
+                assert "unsupported statement leader" not in error(stmt), stmt
+    for stmt in [
+        "select 1", "with t as (select 1) select * from t", "values (1)",
+        "table t", "refresh table t", "inserts into t", "descr t",
+        "creates table t", "(select 1)", "", "-- only a comment",
+    ]:
+        assert not dml.is_dml(stmt), stmt
+        msg = error(stmt)
+        assert "unsupported statement leader" in msg, stmt
+        # the error lists the table's forms
+        assert "INSERT INTO" in msg and "ALTER TABLE RENAME COLUMN" in msg
+
+
+def test_fixture_table_names_refused(spark, wh, tmp_path):
+    """A flat DML table or view named like a fixture table would be
+    pointed back at the fixture by the next ``load_tables``, and the
+    next statement would publish the fixture's rows into it: every way
+    DML names a table or view refuses such a name, and a
+    schema-qualified one works."""
+    for stmt in [
+        "create table orders as select o_orderkey, o_totalprice "
+        "from orders where o_orderkey < 100",
+        "create table default.orders as select 1 as k",
+        "create table if not exists lineitem (a bigint)",
+        "create view nation as select 1 as k",
+        "create or replace view default.region as select 1 as k",
+    ]:
+        with pytest.raises(ValueError, match="fixture table's name"):
+            dialect.sql(spark, stmt)
+    dialect.sql(spark, "create table t_fxn as select k from dml_fx")
+    dialect.sql(spark, "create view v_fxn as select k from t_fxn")
+    for stmt in [
+        "alter table t_fxn rename to orders",
+        "alter table t_fxn rename to default.part",
+        "alter view v_fxn rename to customer",
+    ]:
+        with pytest.raises(ValueError, match="fixture table's name"):
+            dialect.sql(spark, stmt)
+    with pytest.raises(ValueError, match="fixture table's name"):
+        dml.register_table(spark, "supplier", str(tmp_path / "nowhere"))
+    dialect.sql(spark, "create schema fxs")
+    dialect.sql(spark, "create table fxs.orders as select k from t_fxn")
+    assert dialect.sql(spark, "select count(*) from fxs.orders").collect()[0][0] == 5
+    dialect.sql(spark, "drop schema fxs cascade")
+    dialect.sql(spark, "drop view v_fxn")
+    dialect.sql(spark, "drop table t_fxn")
+
+
 def test_unsupported_statements_refuse(spark, wh):
     with pytest.raises(ValueError, match="cannot parse CREATE TABLE"):
         # bare CREATE TABLE with neither column defs nor AS
